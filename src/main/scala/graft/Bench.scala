@@ -26,13 +26,15 @@ object Bench {
     * smaller one disarms the guard silently. The driver's artifacts
     * hold the bench's JSON line ESCAPED inside a `"tail"` string
     * (`\"q33\":38.7`), so the regex accepts an optional backslash
-    * before each quote; it also reads the bare form the bench itself
-    * emits. min-over-rounds means past contention spikes never poison
+    * before each quote and optional whitespace after the colon; it
+    * also reads the bare form the bench itself emits and the
+    * artifacts' pretty-printed `"parsed"` block (`"q01": 1.0`).
+    * min-over-rounds means past contention spikes never poison
     * the bar. Extracted for the unit gate — a silently-empty history
     * would disable the guard without failing anything. */
   private[graft] def benchHistory(dir: java.io.File,
                                   sfName: String): Map[String, Double] = {
-    val rx = """\\?"(q\d+)[A-Za-z0-9_]*\\?":([0-9]+\.?[0-9]*)""".r
+    val rx = """\\?"(q\d+)[A-Za-z0-9_]*\\?":\s*([0-9]+\.?[0-9]*)""".r
     val files = Option(dir.listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(_.getName.matches("BENCH_r\\d+\\.json"))

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.llm.Dedup
 
 /** Diagnostic: candidate-pair volume per SimHash geometry — the number
   * the banded self-join must hamming-verify, i.e. the Σ C(bucket,2) term
@@ -26,25 +28,20 @@ object CandidateProbe {
       .select(col("doc_id"), col("text"))
     val n = docs.count()
 
-    def candidates(sig: DataFrame, slices: Seq[Column]): Long =
-      sig.select(posexplode(array(slices: _*)).as(Seq("_band", "_slice")))
+    // Band slices come from the join itself, so the counts printed here
+    // are the candidates simhashNearDups would verify.
+    def candidates(bits: Int): Long =
+      Dedup.simhash(docs, "doc_id", "text", bits)
+        .localCheckpoint(true)
+        .select(posexplode(array(Dedup.simhashBandSlices(bits, bands = 4): _*))
+          .as(Seq("_band", "_slice")))
         .groupBy(col("_band"), col("_slice"))
         .agg(count(lit(1)).as("c"))
         .agg(sum(expr("c * (c - 1) div 2"))).head().getLong(0)
 
-    val s64 = graft.llm.Dedup.simhash64(docs, "doc_id", "text")
-      .localCheckpoint(true)
-    val c64 = candidates(s64, (0 until 4).map(b =>
-      shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL))))
-    println(s"CANDS simhash64_16bit docs=$n candidates=$c64")
-
-    val s128 = graft.llm.Dedup.simhash128(docs, "doc_id", "text")
-      .localCheckpoint(true)
-    val c128 = candidates(s128, (0 until 4).map { b =>
-      val src = if (b < 2) col("sim_hi") else col("sim_lo")
-      shiftright(src, (b % 2) * 32).bitwiseAND(lit(0xFFFFFFFFL))
-    })
-    println(s"CANDS simhash128_32bit docs=$n candidates=$c128")
+    for (bits <- Seq(64, 128))
+      println(s"CANDS simhash${bits}_${bits / 4}bit docs=$n " +
+        s"candidates=${candidates(bits)}")
     spark.stop()
   }
 }

@@ -70,13 +70,7 @@ object Exact {
   /** Order-independent sum of a double column, returned as double. */
   def dsum(c: Column, scale: Int = 2): Column = sum(dec(c, scale)).cast("double")
 
-  /** Exact average (decimal sum / count), returned as double. */
-  def davg(c: Column, scale: Int = 2): Column =
-    (sum(dec(c, scale)) / count(c)).cast("double")
-
   /** DuckDB-side rendering of the same computation, e.g. dsumSql("l_quantity"). */
   def dsumSql(expr: String, scale: Int = 2): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,$scale))) AS DOUBLE)"
-  def davgSql(expr: String, scale: Int = 2): String =
-    s"CAST(SUM(CAST($expr AS DECIMAL(18,$scale))) / COUNT($expr) AS DOUBLE)"
 }

@@ -23,9 +23,6 @@ object Scalars {
       "§" -> "paragraf")
       .foldLeft(c) { case (acc, (from, to)) => replace(acc, lit(from), lit(to)) }
 
-  /** F2: keyword min-length guard (DcatAp11ToCkanBatch.java:327-330). */
-  def keywordOk(c: Column): Column = length(c) >= 2
-
   /** F3: CKAN organization-name slug (DcatAp11ToCkanBatch.java:273-277):
     * Unicode NFD decompose → drop everything outside Basic Latin (kills
     * combining marks AND untransliterable chars) → space/dot → `-` →

@@ -1700,9 +1700,20 @@ object Sparql {
     */
   def select(triples: DataFrame, query: String): DataFrame = {
     val q = parse(query)
+    val (dflt, named) = triplesScope(q, triples)
+    compileQuery(q, dflt, named)
+  }
+
+  /** How a query's (default graph, named graphs) come from its input. */
+  private type Scope = Query => (DataFrame, DataFrame)
+
+  /** A triples input is the default graph alone: no named graphs, and
+    * a FROM/FROM NAMED clause is an error (it needs a dataset). */
+  private def triplesScope(q: Query, triples: DataFrame)
+      : (DataFrame, DataFrame) = {
     require(q.from.isEmpty && q.fromNamed.isEmpty,
       "FROM/FROM NAMED need a dataset — use selectDataset")
-    compileQuery(q, triples, noNamed(triples))
+    (triples, noNamed(triples))
   }
 
   /** Compile + run over an RDF DATASET: `dataset` is the canonical
@@ -1722,6 +1733,14 @@ object Sparql {
     * empty, and vice versa). */
   def selectDataset(dataset: DataFrame, query: String): DataFrame = {
     val q = parse(query)
+    val (dflt, named) = datasetScope(q, dataset)
+    compileQuery(q, dflt, named)
+  }
+
+  /** [[selectDataset]]'s (default graph, named graphs) for `q`, scoped
+    * by its dataset clause per SPARQL 1.1 §13.2. */
+  private def datasetScope(q: Query, dataset: DataFrame)
+      : (DataFrame, DataFrame) = {
     val hasClause = q.from.nonEmpty || q.fromNamed.nonEmpty
     val dflt =
       if (!hasClause) dataset.filter(col("g").isNull).drop("g")
@@ -1744,7 +1763,7 @@ object Sparql {
       else if (q.fromNamed.nonEmpty)
         dataset.filter(col("g").isin(q.fromNamed: _*))
       else dataset.where(lit(false))
-    compileQuery(q, dflt, named)
+    (dflt, named)
   }
 
   /** The empty named-graph store for single-graph entry points: GRAPH
@@ -3549,18 +3568,13 @@ object Sparql {
   // literal, matching CONSTRUCT's rule; aggregate aliases are plain
   // literals.
 
-  /** A quad store's (default graph, named graphs) split — the
-    * dataset-layout rule in ONE place for the serializer twins. */
-  private def splitDataset(dataset: DataFrame): (DataFrame, DataFrame) =
-    (dataset.filter(col("g").isNull).drop("g"),
-      dataset.filter(col("g").isNotNull))
-
   /** Solutions with metadata + ordered projected names + per-name
-    * no-meta default (true = IRI). */
-  private def metaSolutions(query: String, dflt: DataFrame,
-                            named: DataFrame)
+    * no-meta default (true = IRI). `scope` yields the query's (default
+    * graph, named graphs): [[triplesScope]] or [[datasetScope]]. */
+  private def metaSolutions(query: String, scope: Scope)
       : (Seq[(String, Boolean)], DataFrame) = {
     val q = parse(query)
+    val (dflt, named) = scope(q)
     val sol = compileQuery(q, dflt, named, None, keepMeta = true)
     val names: Seq[(String, Boolean)] =
       if (q.star) sol.columns.toSeq.filterNot(isHidden).map(_ -> true)
@@ -3593,15 +3607,14 @@ object Sparql {
   /** TSV results (terms in N-Triples syntax, unbound = empty field).
     * Returns (header line `?a\t?b`, one `line` per solution). */
   def selectTsv(triples: DataFrame, query: String): (String, DataFrame) =
-    tsvOf(query, triples, noNamed(triples))
+    tsvOf(query, triplesScope(_, triples))
 
-  /** [[selectTsv]] over a dataset ([[selectDataset]]'s layout). */
+  /** [[selectTsv]] over a dataset, scoped as in [[selectDataset]]. */
   def selectTsvDataset(dataset: DataFrame, query: String): (String, DataFrame) =
-    { val (d, n) = splitDataset(dataset); tsvOf(query, d, n) }
+    tsvOf(query, datasetScope(_, dataset))
 
-  private def tsvOf(query: String, dflt: DataFrame,
-                    named: DataFrame): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, dflt, named)
+  private def tsvOf(query: String, scope: Scope): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, scope)
     val fields = names.map { case (v, d) =>
       val (isIri, lang, dt) = termParts(sol, v, d)
       when(col(v).isNull, lit(""))
@@ -3615,15 +3628,14 @@ object Sparql {
     * quoting/lang/datatype markers — RFC 4180 field quoting; unbound =
     * empty field). Returns (header line, one `line` per solution). */
   def selectCsv(triples: DataFrame, query: String): (String, DataFrame) =
-    csvOf(query, triples, noNamed(triples))
+    csvOf(query, triplesScope(_, triples))
 
-  /** [[selectCsv]] over a dataset ([[selectDataset]]'s layout). */
+  /** [[selectCsv]] over a dataset, scoped as in [[selectDataset]]. */
   def selectCsvDataset(dataset: DataFrame, query: String): (String, DataFrame) =
-    { val (d, n) = splitDataset(dataset); csvOf(query, d, n) }
+    csvOf(query, datasetScope(_, dataset))
 
-  private def csvOf(query: String, dflt: DataFrame,
-                    named: DataFrame): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, dflt, named)
+  private def csvOf(query: String, scope: Scope): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, scope)
     def rfc4180(c: Column): Column =
       when(c.rlike("[,\"\n\r]"),
         concat(lit("\""), replace(c, lit("\""), lit("\"\"")), lit("\"")))
@@ -3645,13 +3657,13 @@ object Sparql {
     * are omitted from their binding object per the spec. */
   def selectJsonBindings(triples: DataFrame, query: String)
       : (String, DataFrame) =
-    jsonOf(query, triples, noNamed(triples))
+    jsonOf(query, triplesScope(_, triples))
 
-  /** [[selectJsonBindings]] over a dataset ([[selectDataset]]'s
-    * layout). */
+  /** [[selectJsonBindings]] over a dataset, scoped as in
+    * [[selectDataset]]. */
   def selectJsonBindingsDataset(dataset: DataFrame, query: String)
       : (String, DataFrame) =
-    { val (d, n) = splitDataset(dataset); jsonOf(query, d, n) }
+    jsonOf(query, datasetScope(_, dataset))
 
   /** XML results (sparql11-results-xml): (the document's prolog +
     * `<head>` + `<results>` opener, one `<result>` element per
@@ -3659,16 +3671,15 @@ object Sparql {
     * constant, kept out so a billion-solution result stays
     * line-framed. Unbound variables omit their binding element. */
   def selectXml(triples: DataFrame, query: String): (String, DataFrame) =
-    xmlOf(query, triples, noNamed(triples))
+    xmlOf(query, triplesScope(_, triples))
 
-  /** [[selectXml]] over a dataset ([[selectDataset]]'s layout). */
+  /** [[selectXml]] over a dataset, scoped as in [[selectDataset]]. */
   def selectXmlDataset(dataset: DataFrame, query: String)
       : (String, DataFrame) =
-    { val (d, n) = splitDataset(dataset); xmlOf(query, d, n) }
+    xmlOf(query, datasetScope(_, dataset))
 
-  private def xmlOf(query: String, dflt: DataFrame,
-                    named: DataFrame): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, dflt, named)
+  private def xmlOf(query: String, scope: Scope): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, scope)
     // XML escape: & first (it would re-escape the others), then < >
     // for content, plus " for the attribute positions.
     def xesc(c: Column): Column =
@@ -3697,9 +3708,8 @@ object Sparql {
       lit("<result>") +: fields :+ lit("</result>"): _*).as("line")))
   }
 
-  private def jsonOf(query: String, dflt: DataFrame,
-                     named: DataFrame): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, dflt, named)
+  private def jsonOf(query: String, scope: Scope): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, scope)
     val head = "{\"head\":{\"vars\":[" +
       names.map("\"" + _._1 + "\"").mkString(",") + "]},"
     val fields = names.map { case (v, d) =>

@@ -1271,193 +1271,119 @@ object Dedup {
     minhashNearDups(reps, idCol, textCol, threshold, maxBucketSize)
   }
 
-  /** 32-bit SimHash, one codegen'd wide aggregate: per token hash (first
-    * 8 hex digits of md5, so the DuckDB oracle agrees bit-for-bit), the 32
-    * bit votes are 32 conditional sums in a single groupBy with map-side
-    * combine — no 32× bit explode and no second aggregation (the explode
-    * form shuffled 32 rows per token; identical integers either way).
+  /** Signature word columns of a `bits`-wide [[simhash]]: one BIGINT
+    * `simhash` at 32 and 64 bits; at 128, `sim_hi` (md5 hex digits
+    * 1-16) and `sim_lo` (digits 17-32).
     */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = TextAnalysis.fanOutIfNarrow(
+  private[graft] def simhashWords(bits: Int): Seq[String] = {
+    require(Set(32, 64, 128)(bits),
+      s"SimHash width must be 32, 64 or 128 (got $bits)")
+    if (bits == 128) Seq("sim_hi", "sim_lo") else Seq("simhash")
+  }
+
+  /** SimHash signature, `bits` ∈ {32, 64, 128} wide, in one codegen'd
+    * wide aggregate. Each token hashes to the first bits/4 hex digits of
+    * its md5, carried in the [[simhashWords]] BIGINTs; each word is
+    * built from 8-digit chunks as (acc << 32) | chunk, the signed-long
+    * bit pattern of the unsigned value. Any engine with md5 + 128-bit
+    * integer arithmetic (DuckDB HUGEINT, Spark, Postgres numeric)
+    * reproduces the signature bit for bit, which is what lets the
+    * DuckDB oracle hash-compare every width. The `bits` votes are
+    * conditional sums in a single groupBy with map-side combine — no
+    * per-bit explode and no second aggregation.
+    *
+    * Width is bucket geometry for [[simhashNearDups]]: with 4 bands,
+    * 32 bits gives 8-bit slices (2⁸ buckets/band, measured superlinear
+    * at 10⁶ documents in SCALE.md), 64 bits gives 16-bit slices (chance
+    * collisions start to pay in the third data decade, ~5M documents)
+    * and 128 bits gives 32-bit slices, so bucket occupancy stays O(1)
+    * past 10⁸ documents.
+    */
+  def simhash(docs: DataFrame, idCol: String, textCol: String,
+              bits: Int): DataFrame = {
+    val words = simhashWords(bits)
+    val widths = words.indices.map(w => math.min(64, bits - 64 * w))
+    val hashed = TextAnalysis.fanOutIfNarrow(
         docs.select(col(idCol).as("_id"), col(textCol).as("_text")),
         col("_id"))
       .select(col("_id"), explode(TextAnalysis.tokens(col("_text"))).as("_t"))
-      .withColumn("_h", conv(substring(md5(col("_t")), 1, 8), 16, 10).cast("long"))
-    val votes = (0 until 32).map(b =>
-      sum(shiftright(col("_h"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"_v$b"))
-    tok.groupBy(col("_id")).agg(votes.head, votes.tail: _*)
-      .select(col("_id").as(idCol),
-        (0 until 32).map(b =>
-          when(col(s"_v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
+      .withColumn("_m", md5(col("_t")))
+      .select(col("_id") +: words.indices.map(w =>
+        (0 until widths(w) / 32).map(c =>
+          conv(substring(col("_m"), 16 * w + 8 * c + 1, 8), 16, 10)
+            .cast("long"))
+          .reduce((acc, chunk) => shiftleft(acc, 32).bitwiseOR(chunk))
+          .as(s"_h$w")): _*)
+    val votes = for (w <- words.indices; b <- 0 until widths(w)) yield
+      sum(shiftright(col(s"_h$w"), b).bitwiseAND(lit(1L)) * 2 - 1)
+        .as(s"_v${w}_$b")
+    hashed.groupBy(col("_id")).agg(votes.head, votes.tail: _*)
+      .select(col("_id").as(idCol) +: words.indices.map(w =>
+        (0 until widths(w)).map(b =>
+          when(col(s"_v${w}_$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_ bitwiseOR _).as(words(w))): _*)
   }
 
   /** SimHash near-duplicate pairs: (d1, d2, hamming) with d1 < d2 and
-    * hamming(simhash(d1), simhash(d2)) <= maxHamming.
+    * hamming(simhash(d1), simhash(d2)) <= maxHamming over a `bits`-wide
+    * signature.
     *
     * Candidates come from a banded self-join, not an all-pairs join: the
-    * 32-bit signature splits into `bands` equal bit-slices and only docs
+    * signature splits into `bands` equal bit-slices and only docs
     * sharing at least one slice meet. By pigeonhole, a pair within
     * maxHamming <= bands-1 flipped bits leaves >= 1 band untouched, so for
     * maxHamming < bands recall is EXACT (not probabilistic like MinHash
     * banding) — which is what lets the all-pairs-hamming DuckDB oracle
-    * hash-compare the result. At scale the shuffle carries one
-    * (band, slice, id, sig) row per doc per band — 4 rows/doc — and the
-    * join key (band, slice) distributes over 4 * 2^8 buckets; natural-text
-    * signatures spread well, and the signature rides along so the verify
-    * filter needs no second join back to the signature table.
+    * hash-compare the result. The shuffle carries one row per doc per
+    * band, and the signature rides along so the verify filter needs no
+    * second join back to the signature table.
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, bands: Int = 4): DataFrame =
+                      bits: Int, maxHamming: Int = 3,
+                      bands: Int = 4): DataFrame =
     // Signature table is computed once (one shuffle) and materialized so
     // the self-join below doesn't re-run the token aggregate twice.
-    simhashNearDupsOf(simhash(docs, idCol, textCol).cutLineageEager(),
-      idCol, maxHamming, bands)
+    simhashNearDupsOf(simhash(docs, idCol, textCol, bits).cutLineageEager(),
+      idCol, bits, maxHamming, bands)
 
-  /** 64-bit SimHash signature — the PRODUCTION geometry the 32-bit
-    * oracle-verifiable [[simhash]] documents: with 4 bands the slices are
-    * 16-bit, so each band spreads over 2¹⁶ buckets instead of 2⁸ and
-    * Σ bucket² stays sub-quadratic at ~10⁶+ documents (the 100× probe
-    * measured the 8-bit-slice demo going superlinear exactly there).
-    * Token hashes are the first 16 hex digits of md5 assembled from two
-    * 32-bit halves (shiftleft(hi,32)|lo — the signed-long bit pattern of
-    * the unsigned 64-bit value), the same engine-portable device
-    * [[simhash]] uses at 8 digits: any engine with md5 + 128-bit integer
-    * arithmetic (DuckDB HUGEINT, Spark, Postgres numeric) reproduces the
-    * signature bit-for-bit, which is what lets the driver hash-compare
-    * the production geometry instead of trusting its own tests. Bit votes
-    * and banding are identical in shape to the 32-bit pipeline.
+  /** The `bands` slice columns of a `bits`-wide signature table: band b
+    * is the (b % perWord)-th bits/bands-bit slice of word b / perWord.
+    * Slices must divide a 64-bit word evenly, so none straddles two words.
     */
-  def simhash64(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = TextAnalysis.fanOutIfNarrow(
-        docs.select(col(idCol).as("_id"), col(textCol).as("_text")),
-        col("_id"))
-      .select(col("_id"), explode(TextAnalysis.tokens(col("_text"))).as("_t"))
-      .withColumn("_m", md5(col("_t")))
-      .withColumn("_h",
-        shiftleft(conv(substring(col("_m"), 1, 8), 16, 10).cast("long"), 32)
-          .bitwiseOR(conv(substring(col("_m"), 9, 8), 16, 10).cast("long")))
-      .drop("_m")
-    val votes = (0 until 64).map(b =>
-      sum(shiftright(col("_h"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"_v$b"))
-    tok.groupBy(col("_id")).agg(votes.head, votes.tail: _*)
-      .select(col("_id").as(idCol),
-        (0 until 64).map(b =>
-          when(col(s"_v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ bitwiseOR _).as("simhash"))
+  private[graft] def simhashBandSlices(bits: Int, bands: Int): Seq[Column] = {
+    val words = simhashWords(bits)
+    require(bits % bands == 0 && 64 % (bits / bands) == 0,
+      s"bands must split $bits bits into slices dividing a 64-bit word (got $bands)")
+    val width = bits / bands
+    val perWord = 64 / width
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    (0 until bands).map(b =>
+      shiftright(col(words(b / perWord)), (b % perWord) * width)
+        .bitwiseAND(lit(mask)))
   }
 
-  /** 64-bit banded near-dup pairs: same pigeonhole-exact recall contract
-    * as [[simhashNearDups]] (maxHamming < bands), production bucket
-    * geometry. Returns (d1, d2, hamming).
-    */
-  def simhashNearDups64(docs: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int = 3, bands: Int = 4): DataFrame =
-    simhashNearDupsOf(simhash64(docs, idCol, textCol).cutLineageEager(),
-      idCol, maxHamming, bands, widthBits = 64)
-
-  /** 128-bit SimHash signature — the FULL per-token md5 width, carried as
-    * two BIGINT halves (`sim_hi` = hex digits 1-16, `sim_lo` = 17-32).
-    * This is the geometry the three-decade probe motivates: the 64-bit
-    * form's 2¹⁶ buckets/band start paying the Σ bucket² chance-collision
-    * term in their third data decade (SCALE.md, ~5M docs); at 128 bits a
-    * 4-band split gives 32-bit slices (2³² buckets/band), so bucket
-    * occupancy stays O(1) past 10⁸ documents and only genuinely
-    * near-identical docs ever share a candidate bucket. Same relational
-    * shape as [[simhash64]] — one token explode, one doc-keyed aggregate
-    * with twice the vote columns; everything stays in whole-stage codegen.
-    */
-  def simhash128(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    def half(m: Column, off: Int): Column =
-      shiftleft(conv(substring(m, off, 8), 16, 10).cast("long"), 32)
-        .bitwiseOR(conv(substring(m, off + 8, 8), 16, 10).cast("long"))
-    val tok = TextAnalysis.fanOutIfNarrow(
-        docs.select(col(idCol).as("_id"), col(textCol).as("_text")),
-        col("_id"))
-      .select(col("_id"), explode(TextAnalysis.tokens(col("_text"))).as("_t"))
-      .withColumn("_m", md5(col("_t")))
-      .withColumn("_h1", half(col("_m"), 1))
-      .withColumn("_h2", half(col("_m"), 17))
-      .drop("_m")
-    def votes(h: String, tag: String): Seq[Column] = (0 until 64).map(b =>
-      sum(shiftright(col(h), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"_$tag$b"))
-    def fold(tag: String): Column = (0 until 64).map(b =>
-      when(col(s"_$tag$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ bitwiseOR _)
-    val vs = votes("_h1", "a") ++ votes("_h2", "b")
-    tok.groupBy(col("_id")).agg(vs.head, vs.tail: _*)
-      .select(col("_id").as(idCol),
-        fold("a").as("sim_hi"), fold("b").as("sim_lo"))
-  }
-
-  /** Banded near-dup pairs over the [[simhash128]] signature: the
-    * pigeonhole-exact recall contract of [[simhashNearDups]] (maxHamming
-    * < bands guarantees every qualifying pair shares a band slice), with
-    * hamming summed across the two halves. Returns (d1, d2, hamming) —
-    * identical output contract to the 32/64-bit forms, so callers
-    * (connected components, component-best) swap geometries freely.
-    */
-  def simhashNearDups128(docs: DataFrame, idCol: String, textCol: String,
-                         maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    require(maxHamming < bands,
-      s"recall guarantee needs maxHamming < bands ($maxHamming >= $bands)")
-    require(128 % bands == 0 && 128 / bands <= 64 && 64 % (128 / bands) == 0,
-      s"bands must split two 64-bit halves evenly (got $bands)")
-    val bits = 128 / bands
-    val mask = if (bits == 64) -1L else (1L << bits) - 1
-    val perHalf = 64 / bits
-    val sig = simhash128(docs, idCol, textCol).cutLineageEager()
-    val banded = sig.select(col(idCol).as("_id"),
-      col("sim_hi").as("_x1"), col("sim_lo").as("_x2"),
-      explode(array((0 until bands).map { b =>
-        val src = if (b < perHalf) col("sim_hi") else col("sim_lo")
-        struct(lit(b).as("band"),
-          shiftright(src, (b % perHalf) * bits).bitwiseAND(lit(mask))
-            .as("slice"))
-      }: _*)).as("_b"))
-      .select(col("_id"), col("_x1"), col("_x2"),
-        col("_b.band").as("_band"), col("_b.slice").as("_slice"))
-    val l = banded.select(col("_band"), col("_slice"),
-      col("_id").as("d1"), col("_x1").as("_l1"), col("_x2").as("_l2"))
-    val r = banded.select(col("_band"), col("_slice"),
-      col("_id").as("d2"), col("_x1").as("_r1"), col("_x2").as("_r2"))
-    l.join(r, Seq("_band", "_slice"))
-      .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        (bit_count(col("_l1").bitwiseXOR(col("_r1"))) +
-          bit_count(col("_l2").bitwiseXOR(col("_r2")))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** Banded hamming join over an existing (idCol, simhash) signature
-    * table — the lazy candidate-generation lineage (tests audit its plan
-    * shape; [[simhashNearDups]] is the materializing entry point).
+  /** Banded hamming join over an existing `bits`-wide [[simhash]]
+    * signature table — the lazy candidate-generation lineage (tests audit
+    * its plan shape; [[simhashNearDups]] is the materializing entry
+    * point). Hamming is summed over the signature words.
     */
   private[graft] def simhashNearDupsOf(sig: DataFrame, idCol: String,
-                                       maxHamming: Int, bands: Int,
-                                       widthBits: Int = 32): DataFrame = {
+                                       bits: Int, maxHamming: Int,
+                                       bands: Int): DataFrame = {
     require(maxHamming < bands,
       s"recall guarantee needs maxHamming < bands ($maxHamming >= $bands)")
-    require(widthBits % bands == 0,
-      s"bands must divide $widthBits (got $bands)")
-    val bits = widthBits / bands
-    val mask = (1L << bits) - 1
-    val banded = sig.select(col(idCol).as("_id"), col("simhash").as("_sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("simhash"), b * bits).bitwiseAND(lit(mask))
-            .as("slice"))): _*)).as("_b"))
-      .select(col("_id"), col("_sig"),
-        col("_b.band").as("_band"), col("_b.slice").as("_slice"))
-    val l = banded.select(col("_band"), col("_slice"),
-      col("_id").as("d1"), col("_sig").as("_s1"))
-    val r = banded.select(col("_band"), col("_slice"),
-      col("_id").as("d2"), col("_sig").as("_s2"))
-    l.join(r, Seq("_band", "_slice"))
+    val words = simhashWords(bits)
+    val banded = sig.select(col(idCol).as("_id") +: words.map(col) :+
+      posexplode(array(simhashBandSlices(bits, bands): _*))
+        .as(Seq("_band", "_slice")): _*)
+    def side(id: String, tag: String): DataFrame =
+      banded.select(col("_band") +: col("_slice") +: col("_id").as(id) +:
+        words.map(w => col(w).as(tag + w)): _*)
+    side("d1", "_l").join(side("d2", "_r"), Seq("_band", "_slice"))
       .filter(col("d1") < col("d2"))
       .select(col("d1"), col("d2"),
-        bit_count(col("_s1").bitwiseXOR(col("_s2"))).as("hamming"))
+        words.map(w => bit_count(col("_l" + w).bitwiseXOR(col("_r" + w))))
+          .reduce(_ + _).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }

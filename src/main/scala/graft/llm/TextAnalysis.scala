@@ -223,7 +223,8 @@ object TextAnalysis {
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
   /** Document fingerprint: md5 of the normalized text (cross-engine
-    * deterministic; a rolling-hash variant lives in Dedup.simhash).
+    * deterministic) — the exact-duplicate key; near duplicates use
+    * Dedup.simhash's per-token md5 signature.
     */
   def fingerprint(c: Column): Column = md5(normalize(c))
 }

@@ -223,7 +223,7 @@ object LlmQueries {
 
     // 32-bit SimHash signature per document (relational pipeline).
     "q34_simhash" -> { (s, dir) =>
-      Dedup.simhash(t(s, dir, "documents"), "doc_id", "text")
+      Dedup.simhash(t(s, dir, "documents"), "doc_id", "text", bits = 32)
     },
 
     // n-gram Jaccard similarity as a first-class scorer (the exact measure
@@ -279,17 +279,17 @@ object LlmQueries {
       Dedup.dedupPipeline(d.unionByName(dups), "doc_id", "text")
     },
 
-    // SimHash near-dup pairs via a 4×8-bit banded self-join — recall for
-    // hamming <= 3 is EXACT by pigeonhole (see Dedup.simhashNearDups), so
-    // the all-pairs-hamming DuckDB oracle hash-compares cleanly. The
-    // corpus gets exact copies (hamming 0) of every 20th doc AND
-    // one-token-appended copies of every (20th+10) doc, whose hamming is
-    // small but text-dependent — the gate is value-sensitive, not just
-    // membership-sensitive.
+    // 32-bit SimHash near-dup pairs via a 4×8-bit banded self-join —
+    // recall for hamming <= 3 is EXACT by pigeonhole (see
+    // Dedup.simhashNearDups), so the all-pairs-hamming DuckDB oracle
+    // hash-compares cleanly. The corpus gets exact copies (hamming 0)
+    // of every 20th doc AND one-token-appended copies of every (20th+10)
+    // doc, whose hamming is small but text-dependent — the gate is
+    // value-sensitive, not just membership-sensitive.
     "q51_simhash_neardup" -> { (s, dir) =>
       Dedup.simhashNearDups(dupInjectedCorpus(
         t(s, dir, "documents").select(col("doc_id"), col("text"))),
-        "doc_id", "text")
+        "doc_id", "text", bits = 32)
     },
 
     // Deterministic stratified downsampling — rebalance the language mix
@@ -323,7 +323,7 @@ object LlmQueries {
     "q55_dedup_components" -> { (s, dir) =>
       val corpus = dupInjectedCorpus(
         t(s, dir, "documents").select(col("doc_id"), col("text")))
-      val pairs = Dedup.simhashNearDups64(corpus, "doc_id", "text")
+      val pairs = Dedup.simhashNearDups(corpus, "doc_id", "text", bits = 64)
       Dedup.connectedComponents(pairs, "d1", "d2",
         corpus.select(col("doc_id")), "doc_id")
     },
@@ -515,9 +515,9 @@ object LlmQueries {
     // join's pigeonhole recall (hamming <= 3 < 4 bands) keeps the
     // all-pairs oracle fair, exactly as for 32-bit q51.
     "q70_simhash64_neardup" -> { (s, dir) =>
-      Dedup.simhashNearDups64(dupInjectedCorpus(
+      Dedup.simhashNearDups(dupInjectedCorpus(
         t(s, dir, "documents").select(col("doc_id"), col("text"))),
-        "doc_id", "text")
+        "doc_id", "text", bits = 64)
     },
 
     // Exact per-language length quantiles by deterministic rank
@@ -642,7 +642,7 @@ object LlmQueries {
     "q73_component_best" -> { (s, dir) =>
       val corpus = dupInjectedCorpus(
         t(s, dir, "documents").select(col("doc_id"), col("text")))
-      val pairs = Dedup.simhashNearDups64(corpus, "doc_id", "text")
+      val pairs = Dedup.simhashNearDups(corpus, "doc_id", "text", bits = 64)
       val comps = Dedup.connectedComponents(pairs, "d1", "d2",
         corpus.select(col("doc_id")), "doc_id")
       val members = comps.join(
@@ -796,9 +796,9 @@ object LlmQueries {
     // 2¹⁶ buckets starting to pay chance collisions in decade three).
     // Same dup-injected corpus and output contract as q70.
     "q81_simhash128_neardup" -> { (s, dir) =>
-      Dedup.simhashNearDups128(dupInjectedCorpus(
+      Dedup.simhashNearDups(dupInjectedCorpus(
         t(s, dir, "documents").select(col("doc_id"), col("text"))),
-        "doc_id", "text")
+        "doc_id", "text", bits = 128)
     },
 
     // ANN recall audit: the IVF index (q44's exact configuration) scored
@@ -1289,7 +1289,7 @@ object LlmQueries {
     "q132_dedup_weights" -> { (s, dir) =>
       val corpus = dupInjectedCorpus(
         t(s, dir, "documents").select(col("doc_id"), col("text")))
-      val pairs = Dedup.simhashNearDups64(corpus, "doc_id", "text")
+      val pairs = Dedup.simhashNearDups(corpus, "doc_id", "text", bits = 64)
       // The label table forks to two consumers (the cluster-size
       // aggregate and the weight join); one spillable cut here means
       // both read one materialized label scan instead of re-running
@@ -1772,12 +1772,6 @@ object LlmQueries {
   private def swList(lang: String): String =
     TA.stopwords(lang).map(w => s"'$w'").mkString("[", ",", "]")
 
-  /** Shared DuckDB oracle fragments mirroring [[dupInjectedCorpus]] and
-    * `Dedup.simhash64` — ONE copy of the dup-injected corpus CTE, the
-    * 64-bit md5/HUGEINT signature chain, and the connected-components
-    * label CTE, composed by the q55/q70/q73 oracles below so the three
-    * gates can never diverge from each other.
-    */
   /** q197's one-shot count-min replay — the 4×256 sketch rebuilt with
     * the same per-row md5 salts, cell counts, and min-of-d estimates.
     * Shared verbatim by q203: count-min merge closure makes the
@@ -1838,6 +1832,12 @@ object LlmQueries {
        |FROM probed p LEFT JOIN members m USING (c_custkey)""".stripMargin
   }
 
+  /** Shared DuckDB oracle fragments mirroring [[dupInjectedCorpus]] and
+    * 64-bit `Dedup.simhash` — ONE copy of the dup-injected corpus CTE,
+    * the 64-bit md5/HUGEINT signature chain, and the connected-components
+    * label CTE, composed by the q55/q70/q73 oracles below so the three
+    * gates can never diverge from each other.
+    */
   private val dupCorpusSql: String =
     """corpus AS (
       |  SELECT doc_id, text FROM documents

@@ -40,6 +40,20 @@ class BenchGuardSpec extends AnyFunSuite {
       // Bare (unescaped) bench output form.
       write(d, "BENCH_r16.json",
         """{"queries":{"q33":2.5,"q187":2.4},"sf":"/root/testdata/sf0.1"}""")
+      // The artifact's pretty-printed "parsed" block: a space after
+      // each colon, one entry per line.
+      write(d, "BENCH_r19.json",
+        """{
+          |  "n": 19,
+          |  "parsed": {
+          |    "metric": "total",
+          |    "queries": {
+          |      "q01": 1.0,
+          |      "q200": 3.6
+          |    },
+          |    "sf": "/data/sf0.1"
+          |  }
+          |}""".stripMargin)
       // A DIFFERENT scale factor's round — its (tiny) values must not
       // poison the sf0.1 bars; note sf0.01 ⊅ "/sf0.1".
       write(d, "BENCH_r15.json",
@@ -51,6 +65,8 @@ class BenchGuardSpec extends AnyFunSuite {
       assert(h.get("q187").contains(2.4), h)  // min(9.8, 2.8, 2.4)
       assert(h.get("q60").contains(4.4), h)
       assert(h.get("q34").contains(0.7), h)
+      assert(h.get("q01").contains(1.0), h)
+      assert(h.get("q200").contains(3.6), h)
       // The truncated "33\":38.7" fragment must not mint a bogus id.
       assert(!h.contains("q3") || h("q3") > 0, h)
       // The sf0.01 view sees ONLY its own round.

@@ -82,7 +82,7 @@ class LlmSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again!"),
       (3L, "completely different content about spark query engines at scale"))
       .toDF("doc_id", "text")
-    val sig = Dedup.simhash(docs, "doc_id", "text")
+    val sig = Dedup.simhash(docs, "doc_id", "text", bits = 32)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(hamming(sig(1L), sig(2L)) < hamming(sig(1L), sig(3L)),
@@ -566,27 +566,32 @@ class LlmSpec extends SparkSpec {
   test("simhash near-dup: banded join (no all-pairs) and EXACT recall" +
     " vs brute-force hamming over the signatures") {
     val docs = graft.Tables.t(spark, sf, "documents")
-    val sig = Dedup.simhash(docs, "doc_id", "text")
-    val lazyPairs = Dedup.simhashNearDupsOf(sig, "doc_id",
-      maxHamming = 3, bands = 4)
-    val plan = lazyPairs.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), s"all-pairs join:\n$plan")
-    // Brute-force ground truth from the collected signatures: the banded
-    // join must find EVERY pair at hamming <= 3 (pigeonhole: 4 bands,
-    // <= 3 flipped bits => >= 1 untouched band), with the right distances.
-    val sigs = sig.collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash"))
-    val expected = (for {
-      (d1, s1) <- sigs; (d2, s2) <- sigs if d1 < d2
-      h = java.lang.Long.bitCount(s1 ^ s2) if h <= 3
-    } yield (d1, d2, h)).toSet
-    val got = lazyPairs.collect()
-      .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"),
-        r.getAs[Int]("hamming"))).toSet
-    assert(got == expected,
-      s"missing=${expected -- got} spurious=${got -- expected}")
-    assert(expected.nonEmpty || sigs.length < 2)
+    for (bits <- Seq(32, 64, 128)) {
+      val sig = Dedup.simhash(docs, "doc_id", "text", bits)
+      val lazyPairs = Dedup.simhashNearDupsOf(sig, "doc_id", bits,
+        maxHamming = 3, bands = 4)
+      val plan = lazyPairs.queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), s"all-pairs join:\n$plan")
+      // Brute-force ground truth from the collected signatures: the
+      // banded join must find EVERY pair at hamming <= 3 (pigeonhole: 4
+      // bands, <= 3 flipped bits => >= 1 untouched band), with the right
+      // distances — at 128 bits summed across both signature words.
+      val words = Dedup.simhashWords(bits)
+      val sigs = sig.collect()
+        .map(r => r.getAs[Long]("doc_id") -> words.map(w => r.getAs[Long](w)))
+      val expected = (for {
+        (d1, s1) <- sigs; (d2, s2) <- sigs if d1 < d2
+        h = s1.zip(s2).map { case (a, b) => java.lang.Long.bitCount(a ^ b) }
+          .sum if h <= 3
+      } yield (d1, d2, h)).toSet
+      val got = lazyPairs.collect()
+        .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"),
+          r.getAs[Int]("hamming"))).toSet
+      assert(got == expected,
+        s"$bits bits: missing=${expected -- got} spurious=${got -- expected}")
+      assert(expected.nonEmpty || sigs.length < 2)
+    }
   }
 
   test("stratified sample: deterministic, boundary-exact, map-only") {
@@ -1496,43 +1501,36 @@ class LlmSpec extends SparkSpec {
     assert(again == m, "k-means assignment not deterministic across runs")
   }
 
-  test("simhash64: exact copies at hamming 0, pigeonhole recall holds") {
+  // Plants an exact copy of every tenth document and checks the width's
+  // near-dup join: every copy pairs with its original at hamming 0
+  // (identical token multiset → identical signature; the banded join's
+  // recall for hamming <= 3 < 4 bands is exact by pigeonhole), and every
+  // reported pair satisfies the contract with d1 < d2.
+  private def checkExactCopies(bits: Int): Unit = {
     val docs = graft.Tables.t(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val copies = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    val pairs = Dedup.simhashNearDups64(docs.unionByName(copies),
-      "doc_id", "text").collect()
+    val pairs = Dedup.simhashNearDups(docs.unionByName(copies),
+      "doc_id", "text", bits).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    // Every planted exact copy must pair with its original at hamming 0
-    // (identical token multiset → identical 64-bit signature; the banded
-    // join's recall for hamming <= 3 < 4 bands is exact by pigeonhole).
     val planted = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id")).collect().map(_.getLong(0))
     planted.foreach { id =>
       assert(pairs.exists(p => p._1 == id && p._2 == id + 1000000 && p._3 == 0),
-        s"exact copy of $id not found at hamming 0")
+        s"$bits bits: exact copy of $id not found at hamming 0")
     }
     pairs.foreach(p => assert(p._1 < p._2 && p._3 <= 3))
   }
 
+  test("simhash64: exact copies at hamming 0, pigeonhole recall holds") {
+    checkExactCopies(64)
+  }
+
   test("simhash128: exact copies at hamming 0, pairs agree with 64-bit on copies") {
-    val docs = graft.Tables.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val copies = docs.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    val pairs = Dedup.simhashNearDups128(docs.unionByName(copies),
-      "doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    val planted = docs.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id")).collect().map(_.getLong(0))
-    planted.foreach { id =>
-      assert(pairs.exists(p => p._1 == id && p._2 == id + 1000000 && p._3 == 0),
-        s"exact copy of $id not found at hamming 0")
-    }
     // hamming over 128 bits is a FINER resolution than 64: every reported
-    // pair still satisfies the contract, and d1 < d2 ordering holds.
-    pairs.foreach(p => assert(p._1 < p._2 && p._3 <= 3))
+    // pair still satisfies the contract.
+    checkExactCopies(128)
   }
 
   test("sketch cardinality: HLL estimate within documented error of exact") {

@@ -128,6 +128,23 @@ class SparqlResultsSpec extends SparkSpec {
       Set("""{"v":{"type":"literal","value":"named","xml:lang":"en"}}"""))
   }
 
+  test("dataset twins honour FROM: only the FROM graph's rows become " +
+    "the default graph; the triples-only form rejects the clause") {
+    import scala.jdk.CollectionConverters._
+    val quadSchema = StructType(StructField("g", StringType) +: tripleSchema.fields)
+    val ds = spark.createDataFrame(Seq(
+      Row(null, "urn:s/0", "urn:p/v", "dflt", false, null, null),
+      Row("urn:g/1", "urn:s/1", "urn:p/v", "one", false, null, null),
+      Row("urn:g/2", "urn:s/2", "urn:p/v", "two", false, null, null)).asJava,
+      quadSchema)
+    val q = "SELECT ?s ?v FROM <urn:g/1> WHERE { ?s <urn:p/v> ?v . }"
+    val (_, tsv) = Sparql.selectTsvDataset(ds, q)
+    assert(tsv.collect().map(_.getString(0)).toSet ==
+      Set("<urn:s/1>\t\"one\""))
+    intercept[IllegalArgumentException](
+      Sparql.selectTsv(ds.filter("g IS NULL").drop("g"), q))
+  }
+
   test("DISTINCT under kept metadata compares TERMS: same lexical form " +
     "with different lang tags stays two solutions") {
     val graph = g(
