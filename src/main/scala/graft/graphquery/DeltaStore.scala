@@ -319,7 +319,7 @@ object DeltaStore {
     }
 
   /** Current store contents (the read surface — feed it to
-    * [[Sparql.selectDataset]] / [[Sparql.constructDataset]] etc.). */
+    * [[Sparql.select]] / [[Sparql.construct]] etc. as a quad input). */
   def serve(spark: SparkSession, dir: String): DataFrame =
     folded(spark, dir)
 

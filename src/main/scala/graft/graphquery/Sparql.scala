@@ -643,6 +643,26 @@ object Sparql {
       GraphXfer(kind, src, dst, silent)
     }
 
+    /** Dataset clause (SPARQL 1.1 §13.2): (FROM graphs, FROM NAMED
+      * graphs). FROM merges the listed graphs into the query's default
+      * graph; FROM NAMED restricts the graphs GRAPH can see. Present at
+      * all → the clause REPLACES the supplied dataset (no FROM NAMED
+      * with a FROM = empty named set, and vice versa). */
+    def parseDatasetClause(): (Seq[String], Seq[String]) = {
+      val fromB = Seq.newBuilder[String]
+      val fromNamedB = Seq.newBuilder[String]
+      while (tryWord("FROM")) {
+        val named = tryWord("NAMED")
+        val iri = next() match {
+          case TIri(i) => i
+          case p: TPName => expand(p)
+          case other => sys.error(s"expected <iri> after FROM, got $other")
+        }
+        if (named) fromNamedB += iri else fromB += iri
+      }
+      (fromB.result(), fromNamedB.result())
+    }
+
     /** DESCRIBE: explicit IRIs and/or variables, optional dataset
       * clause, optional WHERE group (required when variables appear —
       * it is what binds them). */
@@ -658,20 +678,10 @@ object Sparql {
         case Some(TVar(v)) => next(); vars += v
         case _ => more = false
       }
-      val fromB = Seq.newBuilder[String]
-      val fromNamedB = Seq.newBuilder[String]
-      while (tryWord("FROM")) {
-        val named = tryWord("NAMED")
-        val iri = next() match {
-          case TIri(i) => i
-          case p: TPName => expand(p)
-          case other => sys.error(s"expected <iri> after FROM, got $other")
-        }
-        if (named) fromNamedB += iri else fromB += iri
-      }
+      val (from, fromNamed) = parseDatasetClause()
       val where = if (tryWord("WHERE")) parseGroup() else Nil
       val q = DescribeQuery(iris.result(), vars.result(),
-        fromB.result(), fromNamedB.result(), where)
+        from, fromNamed, where)
       require(q.iris.nonEmpty || q.vars.nonEmpty,
         "DESCRIBE needs at least one IRI or variable")
       require(q.vars.isEmpty || q.where.nonEmpty,
@@ -822,22 +832,7 @@ object Sparql {
           }
         case _ => done = true
       }
-      // Dataset clause (SPARQL 1.1 §13.2): FROM merges the listed
-      // graphs into the query's default graph; FROM NAMED restricts
-      // the graphs GRAPH can see. Present at all → the clause REPLACES
-      // the supplied dataset (no FROM NAMED with a FROM = empty named
-      // set, and vice versa).
-      val fromB = Seq.newBuilder[String]
-      val fromNamedB = Seq.newBuilder[String]
-      while (tryWord("FROM")) {
-        val named = tryWord("NAMED")
-        val iri = next() match {
-          case TIri(i) => i
-          case p: TPName => expand(p)
-          case other => sys.error(s"expected <iri> after FROM, got $other")
-        }
-        if (named) fromNamedB += iri else fromB += iri
-      }
+      val (from, fromNamed) = parseDatasetClause()
       eatWord("WHERE")
       val whereRaw = parseGroup()
       var groupBy = Seq.empty[String]
@@ -929,7 +924,7 @@ object Sparql {
         }
       val q = Query(distinct, star, projFinal,
         whereRaw ++ ctxBinds, groupBy, limit,
-        orderBy, offset, having, fromB.result(), fromNamedB.result(),
+        orderBy, offset, having, from, fromNamed,
         postValues)
       ctxBinds = savedCtx._1; ctxAggs = savedCtx._2
       ctxN = savedCtx._3; ctxInHaving = savedCtx._4
@@ -1696,75 +1691,64 @@ object Sparql {
   private def isHidden(c: String) = c.startsWith("_") || isMeta(c)
 
   /** Compile + run: returns a DataFrame with one column per projected
-    * variable. `triples` must carry the canonical schema.
-    */
-  def select(triples: DataFrame, query: String): DataFrame = {
-    val q = parse(query)
-    val (dflt, named) = triplesScope(q, triples)
-    compileQuery(q, dflt, named)
-  }
-
-  /** How a query's (default graph, named graphs) come from its input. */
-  private type Scope = Query => (DataFrame, DataFrame)
-
-  /** A triples input is the default graph alone: no named graphs, and
-    * a FROM/FROM NAMED clause is an error (it needs a dataset). */
-  private def triplesScope(q: Query, triples: DataFrame)
-      : (DataFrame, DataFrame) = {
-    require(q.from.isEmpty && q.fromNamed.isEmpty,
-      "FROM/FROM NAMED need a dataset — use selectDataset")
-    (triples, noNamed(triples))
-  }
-
-  /** Compile + run over an RDF DATASET: `dataset` is the canonical
-    * triple schema plus a `g` column naming each row's graph (null =
-    * the default graph) — exactly [[Bgp.dataset]]'s layout. This is
-    * the reference's per-query dataset construction
+    * variable. `data` is either the canonical triple schema (one
+    * default graph, no named graphs) or an RDF DATASET: the triple
+    * schema plus a `g` column naming each row's graph (null = the
+    * default graph), exactly [[Bgp.dataset]]'s layout. The dataset form
+    * is the reference's per-query dataset construction
     * (DcatAp11ToCkanBatch.java:631,647 `dataset.addDefaultGraph(...)`
-    * over the Metadata/Codelists SingleGraphDataUnits) expressed as
-    * the standard FROM/FROM NAMED clause over one column. Graph
+    * over the Metadata/Codelists SingleGraphDataUnits) expressed as the
+    * standard FROM/FROM NAMED clause over one column ([[scope]]). Graph
     * membership stays a pushable column filter end to end:
     * `GRAPH <iri>` compiles to `g = iri` (partition-prunable when the
-    * store partitions by `g`), `GRAPH ?g` binds `g` as an ordinary
-    * variable column, and a FROM/FROM NAMED clause REPLACES the
-    * dataset per SPARQL 1.1 §13.2 (FROM graphs merge into the default
-    * graph; only FROM NAMED graphs stay visible to GRAPH — with a
-    * dataset clause present but no FROM NAMED, the named set is
-    * empty, and vice versa). */
-  def selectDataset(dataset: DataFrame, query: String): DataFrame = {
+    * store partitions by `g`) and `GRAPH ?g` binds `g` as an ordinary
+    * variable column. */
+  def select(data: DataFrame, query: String): DataFrame = {
     val q = parse(query)
-    val (dflt, named) = datasetScope(q, dataset)
+    val (dflt, named) = scope(q.from, q.fromNamed, data)
     compileQuery(q, dflt, named)
   }
 
-  /** [[selectDataset]]'s (default graph, named graphs) for `q`, scoped
-    * by its dataset clause per SPARQL 1.1 §13.2. */
-  private def datasetScope(q: Query, dataset: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val hasClause = q.from.nonEmpty || q.fromNamed.nonEmpty
-    val dflt =
-      if (!hasClause) dataset.filter(col("g").isNull).drop("g")
-      else if (q.from.nonEmpty) {
-        val merged = dataset.filter(col("g").isin(q.from: _*)).drop("g")
-        // SPARQL 1.1 §13.2: the default graph is the RDF MERGE of the
-        // FROM graphs. For GROUND triples merge = set union, so a
-        // triple present in two of them (or a graph listed twice)
-        // contributes ONE row. Strictly, RDF merge also standardizes
-        // BLANK NODES apart per source graph; this store keeps terms
-        // as opaque strings, so identical `_:` labels from different
-        // FROM graphs unify instead. Ground-triples (or per-graph
-        // unique blank labels, which any skolemizing loader produces)
-        // is the documented assumption. A single FROM graph is a set
-        // already; keep its plan distinct-free.
-        if (q.from.distinct.size > 1) merged.distinct() else merged
-      } else dataset.where(lit(false)).drop("g")
-    val named =
-      if (!hasClause) dataset.filter(col("g").isNotNull)
-      else if (q.fromNamed.nonEmpty)
-        dataset.filter(col("g").isin(q.fromNamed: _*))
-      else dataset.where(lit(false))
-    (dflt, named)
-  }
+  /** A query's (default graph, named graphs) from its input, whose
+    * schema says which layout it is: only the quad layout has a `g`
+    * column. A triples input is the default graph alone: no named
+    * graphs, and a dataset clause is an error. A quad input is scoped
+    * by the dataset clause per SPARQL 1.1 §13.2: with no clause the
+    * input's own default/named split stands; a clause REPLACES the
+    * dataset (FROM graphs merge into the default graph; only FROM NAMED
+    * graphs stay visible to GRAPH — with a clause present but no FROM
+    * NAMED, the named set is empty, and vice versa). */
+  private def scope(from: Seq[String], fromNamed: Seq[String],
+                    data: DataFrame): (DataFrame, DataFrame) =
+    if (!data.columns.contains("g")) {
+      require(from.isEmpty && fromNamed.isEmpty,
+        "FROM/FROM NAMED need a quad input (Bgp.dataset's layout, with a g column)")
+      (data, noNamed(data))
+    } else {
+      val hasClause = from.nonEmpty || fromNamed.nonEmpty
+      val dflt =
+        if (!hasClause) data.filter(col("g").isNull).drop("g")
+        else if (from.nonEmpty) {
+          val merged = data.filter(col("g").isin(from: _*)).drop("g")
+          // SPARQL 1.1 §13.2: the default graph is the RDF MERGE of the
+          // FROM graphs. For GROUND triples merge = set union, so a
+          // triple present in two of them (or a graph listed twice)
+          // contributes ONE row. Strictly, RDF merge also standardizes
+          // BLANK NODES apart per source graph; this store keeps terms
+          // as opaque strings, so identical `_:` labels from different
+          // FROM graphs unify instead. Ground-triples (or per-graph
+          // unique blank labels, which any skolemizing loader produces)
+          // is the documented assumption. A single FROM graph is a set
+          // already; keep its plan distinct-free.
+          if (from.distinct.size > 1) merged.distinct() else merged
+        } else data.where(lit(false)).drop("g")
+      val named =
+        if (!hasClause) data.filter(col("g").isNotNull)
+        else if (fromNamed.nonEmpty)
+          data.filter(col("g").isin(fromNamed: _*))
+        else data.where(lit(false))
+      (dflt, named)
+    }
 
   /** The empty named-graph store for single-graph entry points: GRAPH
     * over it matches nothing (the spec's behavior for a dataset with
@@ -1779,44 +1763,49 @@ object Sparql {
   /** SPARQL ASK: does the pattern match at all? Compiles the group to
     * the same join plan SELECT would build and probes it with
     * `limit(1)` — one short-circuiting job, no full materialization.
-    * Driver-scalar by design, like [[scalar]]. */
-  def ask(triples: DataFrame, query: String): Boolean =
-    !compileGroup(new P(tokenize(query)).parseAskWhere(), triples,
-        noNamed(triples))
-      .limit(1).isEmpty
-
-  /** [[ask]] over a dataset ([[selectDataset]]'s layout): GRAPH
-    * patterns see the named graphs, bare patterns the default graph. */
-  def askDataset(dataset: DataFrame, query: String): Boolean =
-    !compileGroup(new P(tokenize(query)).parseAskWhere(),
-        dataset.filter(col("g").isNull).drop("g"),
-        dataset.filter(col("g").isNotNull))
-      .limit(1).isEmpty
+    * Driver-scalar by design, like [[scalar]]. Over a quad input, GRAPH
+    * patterns see the named graphs and bare patterns the default
+    * graph. */
+  def ask(data: DataFrame, query: String): Boolean = {
+    val where = new P(tokenize(query)).parseAskWhere()
+    val (dflt, named) = scope(Nil, Nil, data)
+    !compileGroup(where, dflt, named).limit(1).isEmpty
+  }
 
   /** SPARQL DESCRIBE <iri>…: the concise bounded description SPARQL
     * engines conventionally return — every triple whose subject OR
-    * (IRI-)object is a listed resource — as a canonical-schema triples
-    * DF. One pushed-down disjunction filter over the scan; set
-    * semantics via distinct. */
-  def describe(triples: DataFrame, query: String): DataFrame = {
+    * (IRI-)object is a listed resource. One pushed-down disjunction
+    * filter over the scan; set semantics via distinct. A triples input
+    * describes to a canonical-schema triples DF. A quad input describes
+    * across the query's scoped dataset ([[scope]]) and returns QUADS,
+    * so graph provenance survives (render with
+    * [[graft.rdf.NTriples.quadLine]]): default-graph and FROM-merged
+    * rows under g = null, named-graph rows under their own names (with
+    * no clause, every named graph of the input). */
+  def describe(data: DataFrame, query: String): DataFrame = {
     val d = new P(tokenize(query)).parseDescribe()
-    require(d.from.isEmpty && d.fromNamed.isEmpty,
-      "dataset clauses need describeDataset (a quad store)")
+    val (dflt, named) = scope(d.from, d.fromNamed, data)
+    val quads = data.columns.contains("g")
+    val rows =
+      if (quads) dflt.withColumn("g", lit(null).cast("string"))
+        .unionByName(named)
+      else dflt
     val body = if (d.vars.isEmpty) {
       // IRI-only fast path: the resource set is a statement-sized
       // literal list — pushed isin filters, no join.
-      triples.filter(col("s").isin(d.iris: _*) ||
+      rows.filter(col("s").isin(d.iris: _*) ||
         (col("oIsIri") && col("o").isin(d.iris: _*)))
     } else {
       // Variable DESCRIBE (SPARQL 1.1 §16.4.3): the WHERE solutions'
-      // IRI bindings are the resource set — kept DISTRIBUTED (two
-      // semi-joins), never collected, since a pattern can bind
-      // corpus-scale many resources.
-      val rs = describeResources(d, triples, noNamed(triples))
-      semiDescribe(triples, rs)
+      // IRI bindings (bare patterns = default graph, GRAPH = the named
+      // set) are the resource set — kept DISTRIBUTED (two semi-joins),
+      // never collected, since a pattern can bind corpus-scale many
+      // resources — and describe across that same scope.
+      semiDescribe(rows, describeResources(d, dflt, named))
     }
-    body.select(col("s"), col("p"), col("o"), col("oIsIri"),
-        col("oLang"), col("oDatatype"))
+    // One distinct realizes both RDF set semantics and the FROM merge
+    // (merged rows all carry g = null, so duplicates collapse there).
+    body.select((if (quads) QuadCols else QuadCols.tail).map(col): _*)
       .distinct()
   }
 
@@ -1852,55 +1841,6 @@ object Sparql {
       .unionByName(rows.filter(col("oIsIri"))
         .join(rs, rows("o") === rs("_r"), "left_semi"))
 
-  /** [[describe]] over a dataset ([[selectDataset]]'s quad layout) —
-    * the fourth dataset twin alongside select/ask/construct: the
-    * concise bounded description of the named IRIs (outbound triples
-    * plus inbound IRI edges), drawn from the query's dataset and
-    * returned as QUADS (a `g` column, null for default-graph rows) so
-    * graph provenance survives — render with
-    * [[graft.rdf.NTriples.quadLine]]. Dataset clause per SPARQL 1.1
-    * §13.2: FROM graphs merge into the output's DEFAULT graph (their
-    * rows describe under g = null; ground-triples merge caveat as
-    * [[selectDataset]]), FROM NAMED graphs contribute under their own
-    * names, and with NO clause the supplied dataset stands (default
-    * rows plus every named graph — a description spanning graphs keeps
-    * each triple under the graph that asserts it). Graph scoping stays
-    * a pushed `g` filter — partition-prunable over a g-partitioned
-    * store, like every other dataset entry point. */
-  def describeDataset(dataset: DataFrame, query: String): DataFrame = {
-    val d = new P(tokenize(query)).parseDescribe()
-    val hasClause = d.from.nonEmpty || d.fromNamed.nonEmpty
-    val nullG = lit(null).cast("string")
-    val dflt =
-      if (!hasClause) dataset.filter(col("g").isNull)
-      else if (d.from.nonEmpty)
-        dataset.filter(col("g").isin(d.from: _*))
-          .withColumn("g", nullG)
-      else dataset.where(lit(false))
-    val named =
-      if (!hasClause) dataset.filter(col("g").isNotNull)
-      else if (d.fromNamed.nonEmpty)
-        dataset.filter(col("g").isin(d.fromNamed: _*))
-      else dataset.where(lit(false))
-    val scoped = dflt.unionByName(named)
-    val body = if (d.vars.isEmpty) {
-      scoped.filter(col("s").isin(d.iris: _*) ||
-        (col("oIsIri") && col("o").isin(d.iris: _*)))
-    } else {
-      // Variable DESCRIBE over the dataset: the WHERE evaluates
-      // against the clause-scoped dataset (bare patterns = default
-      // graph, GRAPH = the named set), then the bound resources
-      // describe across that same scope.
-      val rs = describeResources(d, dflt.drop("g"), named)
-      semiDescribe(scoped, rs)
-    }
-    // One distinct realizes both RDF set semantics and the FROM merge
-    // (merged rows all carry g = null, so duplicates collapse there).
-    body.select(col("g"), col("s"), col("p"), col("o"), col("oIsIri"),
-        col("oLang"), col("oDatatype"))
-      .distinct()
-  }
-
   // ------------------------------------------------------------- UPDATE
 
   private[graphquery] val QuadCols =
@@ -1918,8 +1858,8 @@ object Sparql {
     new P(tokenize(text)).parseUpdateOps()
 
   /** Minimal SPARQL UPDATE (SPARQL 1.1 Update §3.1) against a parquet
-    * QUAD STORE in [[selectDataset]]'s layout (g null = default graph)
-    * — the mutation surface the read-side dataset twins invite:
+    * QUAD STORE in [[Bgp.dataset]]'s layout (g null = default graph)
+    * — the mutation surface the read-side quad inputs invite:
     *
     *  - `INSERT DATA { triples [GRAPH <iri> { triples }] }` — ground
     *    quads union in under RDF set semantics (already-present quads
@@ -1927,7 +1867,7 @@ object Sparql {
     *  - `DELETE DATA { … }` — ground quads anti-join out; absent quads
     *    no-op per the spec.
     *  - `DELETE WHERE { quad patterns }` — the pattern is both WHERE
-    *    and template: solutions compile through the [[selectDataset]]
+    *    and template: solutions compile through the [[select]]
     *    machinery (GRAPH <iri>/GRAPH ?g scoping included), each quad
     *    pattern instantiates per solution exactly like CONSTRUCT, and
     *    the instantiated quads anti-join out of the store.
@@ -2236,11 +2176,6 @@ object Sparql {
     }
   }
 
-  /** DELETE WHERE's doomed-quad set: compile the pattern against the
-    * store's default/named split (the [[selectDataset]] machinery —
-    * GRAPH ?g binds, GRAPH <iri> prunes), then instantiate every quad
-    * pattern per solution exactly like a CONSTRUCT template, with the
-    * graph slot from the pattern's context (bare = default graph). */
   /** DELETE WHERE's quad patterns with their graph contexts — also the
     * STRUCTURAL validator [[update]] runs before its first commit
     * (throws on non-quad patterns and path predicates). */
@@ -2275,29 +2210,18 @@ object Sparql {
                                withGraph: Option[String] = None): DataFrame = {
     val quadPats = quadTemplate(tpl)
     // USING / USING NAMED build the dataset the WHERE matches against
-    // (FROM / FROM NAMED §13.2 replacement semantics — same merge +
-    // ground-triples caveat as selectDataset); absent, the WHERE sees
-    // the store's own default/named split — except under WITH, whose
-    // graph substitutes for the default graph on the WHERE side (a
-    // USING clause overrides WITH for the WHERE, per §3.1.3). The
+    // exactly as FROM / FROM NAMED do ([[scope]]); absent, the WHERE
+    // sees the store's own default/named split — except under WITH,
+    // whose graph substitutes for the default graph on the WHERE side
+    // (a USING clause overrides WITH for the WHERE, per §3.1.3). The
     // TEMPLATE always applies to the store, with WITH's graph as the
     // bare template quads' destination.
-    val hasClause = using.nonEmpty || usingNamed.nonEmpty
-    val dfltView =
-      if (hasClause) {
-        if (using.nonEmpty) {
-          val merged = store.filter(col("g").isin(using: _*)).drop("g")
-          if (using.distinct.size > 1) merged.distinct() else merged
-        } else store.where(lit(false)).drop("g")
-      } else withGraph match {
-        case Some(wg) => store.filter(col("g") <=> lit(wg)).drop("g")
-        case None => store.filter(col("g").isNull).drop("g")
-      }
-    val namedView =
-      if (!hasClause) store.filter(col("g").isNotNull)
-      else if (usingNamed.nonEmpty)
-        store.filter(col("g").isin(usingNamed: _*))
-      else store.where(lit(false))
+    val (scoped, namedView) = scope(using, usingNamed, store)
+    val dfltView = withGraph match {
+      case Some(wg) if using.isEmpty && usingNamed.isEmpty =>
+        store.filter(col("g") <=> lit(wg)).drop("g")
+      case _ => scoped
+    }
     val sol = compileGroup(where, dfltView, namedView)
     val cols = sol.columns.toSet
     val nullStr = lit(null).cast("string")
@@ -2374,19 +2298,18 @@ object Sparql {
     * the hidden metadata; subject- and predicate-bound variables are
     * IRIs by the RDF data model. A VALUES/BIND-introduced variable with
     * no metadata constructs as a plain literal.
+    *
+    * Over a quad input, GRAPH patterns in the WHERE clause see the
+    * named graphs and bare patterns the default graph; the template
+    * still instantiates plain triples (render a dataset with
+    * [[graft.rdf.NTriples.quadLine]] instead when the GRAPH provenance
+    * must survive serialization).
     */
-  def construct(triples: DataFrame, query: String): DataFrame =
-    compileConstruct(parseConstruct(query), triples, noNamed(triples))
-
-  /** [[construct]] over a dataset ([[selectDataset]]'s layout): GRAPH
-    * patterns in the WHERE clause see the named graphs, bare patterns
-    * the default graph; the template still instantiates plain triples
-    * (render a dataset with [[graft.rdf.NTriples.quadLine]] instead
-    * when the GRAPH provenance must survive serialization). */
-  def constructDataset(dataset: DataFrame, query: String): DataFrame =
-    compileConstruct(parseConstruct(query),
-      dataset.filter(col("g").isNull).drop("g"),
-      dataset.filter(col("g").isNotNull))
+  def construct(data: DataFrame, query: String): DataFrame = {
+    val cq = parseConstruct(query)
+    val (dflt, named) = scope(Nil, Nil, data)
+    compileConstruct(cq, dflt, named)
+  }
 
   private def compileConstruct(cq: ConstructQuery, triples: DataFrame,
                                named: DataFrame): DataFrame = {
@@ -3569,12 +3492,12 @@ object Sparql {
   // literals.
 
   /** Solutions with metadata + ordered projected names + per-name
-    * no-meta default (true = IRI). `scope` yields the query's (default
-    * graph, named graphs): [[triplesScope]] or [[datasetScope]]. */
-  private def metaSolutions(query: String, scope: Scope)
+    * no-meta default (true = IRI), over `data` scoped as in
+    * [[select]]. */
+  private def metaSolutions(query: String, data: DataFrame)
       : (Seq[(String, Boolean)], DataFrame) = {
     val q = parse(query)
-    val (dflt, named) = scope(q)
+    val (dflt, named) = scope(q.from, q.fromNamed, data)
     val sol = compileQuery(q, dflt, named, None, keepMeta = true)
     val names: Seq[(String, Boolean)] =
       if (q.star) sol.columns.toSeq.filterNot(isHidden).map(_ -> true)
@@ -3606,15 +3529,8 @@ object Sparql {
 
   /** TSV results (terms in N-Triples syntax, unbound = empty field).
     * Returns (header line `?a\t?b`, one `line` per solution). */
-  def selectTsv(triples: DataFrame, query: String): (String, DataFrame) =
-    tsvOf(query, triplesScope(_, triples))
-
-  /** [[selectTsv]] over a dataset, scoped as in [[selectDataset]]. */
-  def selectTsvDataset(dataset: DataFrame, query: String): (String, DataFrame) =
-    tsvOf(query, datasetScope(_, dataset))
-
-  private def tsvOf(query: String, scope: Scope): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, scope)
+  def selectTsv(data: DataFrame, query: String): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, data)
     val fields = names.map { case (v, d) =>
       val (isIri, lang, dt) = termParts(sol, v, d)
       when(col(v).isNull, lit(""))
@@ -3627,15 +3543,8 @@ object Sparql {
   /** CSV results (plain lexical forms — IRIs bare, literals without
     * quoting/lang/datatype markers — RFC 4180 field quoting; unbound =
     * empty field). Returns (header line, one `line` per solution). */
-  def selectCsv(triples: DataFrame, query: String): (String, DataFrame) =
-    csvOf(query, triplesScope(_, triples))
-
-  /** [[selectCsv]] over a dataset, scoped as in [[selectDataset]]. */
-  def selectCsvDataset(dataset: DataFrame, query: String): (String, DataFrame) =
-    csvOf(query, datasetScope(_, dataset))
-
-  private def csvOf(query: String, scope: Scope): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, scope)
+  def selectCsv(data: DataFrame, query: String): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, data)
     def rfc4180(c: Column): Column =
       when(c.rlike("[,\"\n\r]"),
         concat(lit("\""), replace(c, lit("\""), lit("\"\"")), lit("\"")))
@@ -3655,31 +3564,31 @@ object Sparql {
     * kept as line-framed pieces so a billion-solution result streams
     * instead of building one driver-side document. Unbound variables
     * are omitted from their binding object per the spec. */
-  def selectJsonBindings(triples: DataFrame, query: String)
-      : (String, DataFrame) =
-    jsonOf(query, triplesScope(_, triples))
-
-  /** [[selectJsonBindings]] over a dataset, scoped as in
-    * [[selectDataset]]. */
-  def selectJsonBindingsDataset(dataset: DataFrame, query: String)
-      : (String, DataFrame) =
-    jsonOf(query, datasetScope(_, dataset))
+  def selectJsonBindings(data: DataFrame, query: String)
+      : (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, data)
+    val head = "{\"head\":{\"vars\":[" +
+      names.map("\"" + _._1 + "\"").mkString(",") + "]},"
+    val fields = names.map { case (v, d) =>
+      val (isIri, lang, dt) = termParts(sol, v, d)
+      when(col(v).isNotNull, struct(
+        when(isIri, lit("uri")).otherwise(lit("literal")).as("type"),
+        col(v).cast("string").as("value"),
+        when(!isIri, lang).otherwise(lit(null).cast("string"))
+          .as("xml:lang"),
+        when(!isIri, dt).otherwise(lit(null).cast("string"))
+          .as("datatype"))).as(v)
+    }
+    (head, sol.select(to_json(struct(fields: _*)).as("line")))
+  }
 
   /** XML results (sparql11-results-xml): (the document's prolog +
     * `<head>` + `<results>` opener, one `<result>` element per
     * solution). Close the document with `</results></sparql>` — a
     * constant, kept out so a billion-solution result stays
     * line-framed. Unbound variables omit their binding element. */
-  def selectXml(triples: DataFrame, query: String): (String, DataFrame) =
-    xmlOf(query, triplesScope(_, triples))
-
-  /** [[selectXml]] over a dataset, scoped as in [[selectDataset]]. */
-  def selectXmlDataset(dataset: DataFrame, query: String)
-      : (String, DataFrame) =
-    xmlOf(query, datasetScope(_, dataset))
-
-  private def xmlOf(query: String, scope: Scope): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, scope)
+  def selectXml(data: DataFrame, query: String): (String, DataFrame) = {
+    val (names, sol) = metaSolutions(query, data)
     // XML escape: & first (it would re-escape the others), then < >
     // for content, plus " for the attribute positions.
     def xesc(c: Column): Column =
@@ -3706,22 +3615,5 @@ object Sparql {
     }
     (head, sol.select(concat(
       lit("<result>") +: fields :+ lit("</result>"): _*).as("line")))
-  }
-
-  private def jsonOf(query: String, scope: Scope): (String, DataFrame) = {
-    val (names, sol) = metaSolutions(query, scope)
-    val head = "{\"head\":{\"vars\":[" +
-      names.map("\"" + _._1 + "\"").mkString(",") + "]},"
-    val fields = names.map { case (v, d) =>
-      val (isIri, lang, dt) = termParts(sol, v, d)
-      when(col(v).isNotNull, struct(
-        when(isIri, lit("uri")).otherwise(lit("literal")).as("type"),
-        col(v).cast("string").as("value"),
-        when(!isIri, lang).otherwise(lit(null).cast("string"))
-          .as("xml:lang"),
-        when(!isIri, dt).otherwise(lit(null).cast("string"))
-          .as("datatype"))).as(v)
-    }
-    (head, sol.select(to_json(struct(fields: _*)).as("line")))
   }
 }

@@ -80,17 +80,6 @@ object LlmQueries {
     })
   }
 
-  /** Dup-injected corpus shared by the SimHash-family gates (q51, q55,
-    * q70, q73): every 20th doc gains an exact copy (+1000000), every
-    * 20th+10 a one-token perturbation (+2000000). One definition so the
-    * four gates (and their oracles' `corpus` CTE) can never diverge.
-    */
-  /** q218/q238 share ONE persisted IVF+PQ index per data dir, built
-    * once per session behind a dir-keyed marker (the q187 discipline —
-    * bench rows measure SERVING; a fresh JVM re-signs over stale
-    * files; two data dirs never share an index). Both queries' DuckDB
-    * oracles hardcode exactly these parameters (%64 coarse seeds, %8
-    * PQ seeds, m=8, trainCap 256), so the build lives in one place. */
   /** Data-dir fingerprint for per-session index paths/markers (the
     * q187/q218 build-if-absent discipline): two data dirs never share
     * an index, and a fresh JVM (empty in-memory catalog) re-signs over
@@ -100,6 +89,12 @@ object LlmQueries {
       .digest(dir.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(6)
 
+  /** q218/q238 share ONE persisted IVF+PQ index per data dir, built
+    * once per session behind a dir-keyed marker (the q187 discipline —
+    * bench rows measure SERVING; a fresh JVM re-signs over stale
+    * files; two data dirs never share an index). Both queries' DuckDB
+    * oracles hardcode exactly these parameters (%64 coarse seeds, %8
+    * PQ seeds, m=8, trainCap 256), so the build lives in one place. */
   private def ivfPqIndexFor(s: SparkSession, dir: String): String = {
     val key = dirKey(dir)
     val idx = s.conf.get("spark.sql.warehouse.dir")
@@ -114,6 +109,11 @@ object LlmQueries {
     idx
   }
 
+  /** Dup-injected corpus shared by the SimHash-family gates (q51, q55,
+    * q70, q73): every 20th doc gains an exact copy (+1000000), every
+    * 20th+10 a one-token perturbation (+2000000). One definition so the
+    * four gates (and their oracles' `corpus` CTE) can never diverge.
+    */
   private def dupInjectedCorpus(d: DataFrame): DataFrame = {
     val exact = d.filter(col("doc_id") % 20 === 0)
       .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
@@ -212,9 +212,7 @@ object LlmQueries {
     // stale index, and a fresh JVM (empty in-memory catalog) always
     // re-signs over the old files.
     "q187_neardup_indexed" -> { (s, dir) =>
-      val prefix = "q187idx_" + java.security.MessageDigest
-        .getInstance("MD5").digest(dir.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(6)
+      val prefix = "q187idx_" + dirKey(dir)
       if (!s.catalog.tableExists(s"${prefix}_bands"))
         Dedup.writeDedupIndex(t(s, dir, "documents"), "doc_id", "text",
           prefix)
@@ -1566,9 +1564,7 @@ object LlmQueries {
     "q231_bpe_indexed" -> { (s, dir) =>
       import s.implicits._
       val d = t(s, dir, "documents")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(6)
+      val key = dirKey(dir)
       val idx = s.conf.get("spark.sql.warehouse.dir")
         .stripSuffix("/") + s"/q231_bpe_$key"
       val marker = s"q231bpe_$key"

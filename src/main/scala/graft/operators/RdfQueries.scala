@@ -705,7 +705,7 @@ object RdfQueries {
       val ds = Bgp.dataset(
         "urn:graph/geo" -> G.geo(s, dir),
         "urn:graph/cust" -> G.customers(s, dir))
-      val g = graft.graphquery.Sparql.constructDataset(ds,
+      val g = graft.graphquery.Sparql.construct(ds,
         """CONSTRUCT { ?s <urn:p/homeRegion> ?reg . }
           |WHERE {
           |  GRAPH <urn:graph/cust> { ?s <urn:p/inNation> ?n . }
@@ -740,7 +740,7 @@ object RdfQueries {
       val ds = Bgp.dataset(
         "urn:graph/geo" -> G.geo(s, dir),
         "urn:graph/cust" -> G.customers(s, dir))
-      graft.graphquery.Sparql.selectDataset(ds,
+      graft.graphquery.Sparql.select(ds,
         """SELECT ?g ?s ?nation ?nname ?reg
           |FROM <urn:graph/geo>
           |FROM NAMED <urn:graph/cust>
@@ -776,7 +776,7 @@ object RdfQueries {
       val ds = Bgp.dataset(
         "urn:graph/half" -> forest(2),
         "urn:graph/third" -> forest(3))
-      graft.graphquery.Sparql.selectDataset(ds,
+      graft.graphquery.Sparql.select(ds,
         """SELECT ?g ?s ?anc WHERE {
           |  GRAPH ?g { ?s <urn:p/parent>+ ?anc . }
           |}""".stripMargin)
@@ -823,7 +823,7 @@ object RdfQueries {
       val ds = Bgp.dataset(
         "urn:graph/geo" -> G.geo(s, dir),
         "urn:graph/cust" -> G.customers(s, dir))
-      graft.graphquery.Sparql.describeDataset(ds,
+      graft.graphquery.Sparql.describe(ds,
         """DESCRIBE ?n
           |FROM NAMED <urn:graph/geo> FROM NAMED <urn:graph/cust>
           |WHERE {
@@ -980,7 +980,7 @@ object RdfQueries {
                |""".stripMargin.getBytes(
               java.nio.charset.StandardCharsets.UTF_8))
         }
-      graft.graphquery.Sparql.selectDataset(
+      graft.graphquery.Sparql.select(
         graft.rdf.Turtle.readMany(s, s"$root/docs"),
         """SELECT ?g ?s ?name ?ord WHERE {
           |  GRAPH ?g { ?s <urn:p/name> ?name .

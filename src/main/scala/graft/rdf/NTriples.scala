@@ -50,7 +50,7 @@ object NTriples {
     concat(line(s, p, o, oIsIri, oLang, oDatatype), lit("\r\n"))
 
   /** One N-Quads line (RDF 1.1 N-Quads) — the DATASET sink matching
-    * [[graft.graphquery.Sparql.selectDataset]]'s input layout: the
+    * [[graft.graphquery.Sparql.select]]'s quad input layout: the
     * triple statement with the graph label before the terminator; a
     * null `g` (default-graph row) renders as a plain N-Triples
     * statement, per the spec's optional graph slot. Same codegen'd

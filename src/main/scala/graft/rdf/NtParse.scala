@@ -34,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Blank-node labels are SKOLEMIZED under a caller-supplied IRI
   * prefix (`_:b7` → `<prefix>b7`, file-scoped labels — the same
   * assumption every skolemizing loader in this repo makes; the
-  * [[graft.graphquery.Sparql.selectDataset]] store schema has no
+  * [[graft.graphquery.Sparql.select]] quad schema has no
   * bnode term kind). Malformed statements return null — the Column
   * wrappers in [[NTriples]] turn that into a loud error (strict) or
   * a dropped line (lenient). Blank/comment-only lines are filtered

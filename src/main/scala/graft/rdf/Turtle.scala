@@ -467,7 +467,7 @@ object Turtle {
     * Returns the QUAD schema with `g` = the document's path RELATIVE
     * to the input root (for a flat directory that is just the file
     * name): each document lands in its own named graph, so the result
-    * feeds [[graft.graphquery.Sparql.selectDataset]] /
+    * feeds [[graft.graphquery.Sparql.select]] /
     * provenance-keeping sinks directly. The relative path — not the
     * bare basename — is the key so two `a.ttl` files in different
     * subdirectories stay distinct graphs; it is still deterministic

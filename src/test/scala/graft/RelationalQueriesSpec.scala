@@ -350,33 +350,75 @@ class RelationalQueriesSpec extends SparkSpec {
     assert(got.values.sum <= 3000000000L)
   }
 
-  test("pagerank: reliable-checkpoint escape hatch produces identical ranks") {
-    import spark.implicits._
-    // With a checkpoint dir set on the context, every iterative operator's
-    // lineage cut switches from executor-local blocks to RELIABLE
-    // checkpoint files (graft.Checkpoints) — the cluster fault-tolerance
-    // form. Results must be bit-identical to the local form.
-    val edges = Seq(("A", "B"), ("A", "C"), ("B", "A")).toDF("src", "dst")
+  /** Runs `body` with a checkpoint dir set on the context: every
+    * iterative operator's lineage cut then switches from executor-local
+    * blocks to RELIABLE checkpoint files (graft.Checkpoints) — the
+    * cluster fault-tolerance form. Asserts that files were actually
+    * written, then clears the dir so later suites keep the default
+    * local form. */
+  private def withReliableCheckpoints[A](body: => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val sc = spark.sparkContext
     sc.setCheckpointDir(dir)
     try {
-      val got = graft.graphquery.Graph.pageRank(edges, "src", "dst",
-          iters = 2)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got == Map("A" -> 638750000L, "B" -> 575000000L,
-        "C" -> 575000000L), s"got $got")
+      val result = body
       // The reliable path actually ran: checkpoint files exist.
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "no reliable checkpoint files written")
+      result
     } finally {
-      // Clear the dir so later suites keep the default local form.
       val f = sc.getClass.getDeclaredField("checkpointDir")
       f.setAccessible(true)
       f.set(sc, None)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  test("pagerank: reliable-checkpoint escape hatch produces identical ranks") {
+    import spark.implicits._
+    // Results must be bit-identical to the local form.
+    val edges = Seq(("A", "B"), ("A", "C"), ("B", "A")).toDF("src", "dst")
+    val got = withReliableCheckpoints {
+      graft.graphquery.Graph.pageRank(edges, "src", "dst", iters = 2)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    assert(got == Map("A" -> 638750000L, "B" -> 575000000L,
+      "C" -> 575000000L), s"got $got")
+  }
+
+  test("observed fixpoints (pathPlus, bfsHops, connectedComponents): " +
+    "reliable checkpoints give the local-checkpoint results") {
+    import spark.implicits._
+    // Each of these loops reads its convergence scalar from `observe`
+    // metrics on the round's eager cut (Checkpoints.cutEagerObserved);
+    // under reliable `checkpoint(eager = true)` the metrics must arrive
+    // the same, or a loop stops early or late.
+    val chain = (0 until 9).map(i => (s"n$i", "urn:p/next", s"n${i + 1}"))
+    val parents = (chain :+ (("n9", "urn:p/next", "n5"))).toDF("s", "p", "o")
+    val hops = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+      ("d", "e"), ("e", "f"), ("x", "y")).toDF("s", "d")
+    val pairs = Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L),
+      (14L, 15L), (20L, 21L), (21L, 22L), (22L, 20L)).toDF("d1", "d2")
+    val nodes = (Seq(30L) ++ (10L to 15L) ++ (20L to 22L)).toDF("doc_id")
+    def run() = (
+      graft.graphquery.Bgp.pathPlus(parents, "urn:p/next", "anc")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet,
+      graft.graphquery.Graph.bfsHops(hops, "s", "d", "a")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+      graft.llm.Dedup.connectedComponents(pairs, "d1", "d2", nodes, "doc_id")
+        .collect().map(r => r.getAs[Long]("doc_id") ->
+          r.getAs[Long]("component_id")).toMap)
+    val local = run()
+    // A 10-node chain closing into a 5-cycle: 9+8+…+5 chain pairs plus
+    // 5×5 cycle pairs = 35 + 25 — several doubling rounds.
+    assert(local._1.size == 60, s"pathPlus: ${local._1.size} pairs")
+    assert(local._2 == Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 3L,
+      "e" -> 4L, "f" -> 5L), s"bfsHops: ${local._2}")
+    assert(local._3 == ((10L to 15L).map(_ -> 10L) ++
+      (20L to 22L).map(_ -> 20L) ++ Seq(30L -> 30L)).toMap,
+      s"connectedComponents: ${local._3}")
+    assert(withReliableCheckpoints(run()) == local)
   }
 
   test("range join by bucket agrees with brute force on random intervals") {

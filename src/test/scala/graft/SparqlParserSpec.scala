@@ -975,7 +975,7 @@ class SparqlParserSpec extends SparkSpec {
     assert(q.from == Seq("urn:gr/1") && q.fromNamed == Seq("urn:gr/2"))
     assert(q.where.collect {
       case Sparql.GraphPat(Sparql.V("g"), inner) => inner.length }.head == 1)
-    def vals(sql: String) = Sparql.selectDataset(ds, sql).collect()
+    def vals(sql: String) = Sparql.select(ds, sql).collect()
       .map(_.toSeq.mkString(",")).toSet
     // No dataset clause: the default graph is the g-null rows only.
     assert(vals("SELECT ?x WHERE { <urn:i/a> <urn:p/k> ?x }") ==
@@ -1007,7 +1007,7 @@ class SparqlParserSpec extends SparkSpec {
       Set("urn:gr/2,two"))
     // Multi-graph FROM is the RDF MERGE — a set: the triple present in
     // BOTH graphs contributes ONE solution, not two.
-    assert(Sparql.selectDataset(ds,
+    assert(Sparql.select(ds,
       """SELECT ?x FROM <urn:gr/1> FROM <urn:gr/2>
         |WHERE { <urn:i/a> <urn:p/m> ?x }""".stripMargin)
       .collect().length == 1,
@@ -1024,7 +1024,7 @@ class SparqlParserSpec extends SparkSpec {
       .withColumn("oIsIri", lit(true))
       .withColumn("oLang", lit(null).cast("string"))
       .withColumn("oDatatype", lit(null).cast("string"))
-    def hvals(sql: String) = Sparql.selectDataset(hier, sql).collect()
+    def hvals(sql: String) = Sparql.select(hier, sql).collect()
       .map(_.toSeq.mkString(",")).toSet
     assert(hvals(
       "SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <urn:p/x>+ ?o } }") == Set(
@@ -1047,13 +1047,13 @@ class SparqlParserSpec extends SparkSpec {
     // GRAPH <iri> keeps its pre-filtered closure path.
     assert(hvals("SELECT ?o WHERE { GRAPH <urn:h/1> { " +
       "<urn:i/a> <urn:p/x>+ ?o } }") == Set("urn:i/b", "urn:i/c"))
-    // askDataset: GRAPH sees the named graphs, bare patterns the
+    // ask over a dataset: GRAPH sees the named graphs, bare patterns the
     // default graph — and the probe short-circuits like ask.
-    assert(Sparql.askDataset(ds,
+    assert(Sparql.ask(ds,
       "ASK { GRAPH <urn:gr/2> { <urn:i/a> <urn:p/k> ?x } }"))
-    assert(!Sparql.askDataset(ds,
+    assert(!Sparql.ask(ds,
       "ASK { GRAPH <urn:gr/2> { <urn:i/a> <urn:p/l> ?x } }"))
-    assert(Sparql.askDataset(ds, "ASK { <urn:i/a> <urn:p/k> ?x }"))
+    assert(Sparql.ask(ds, "ASK { <urn:i/a> <urn:p/k> ?x }"))
     // The at-scale contract: over a g-PARTITIONED store, GRAPH <iri>
     // reaches the scan as a partition filter — one named graph's
     // directory is read, not the dataset.
@@ -1061,7 +1061,7 @@ class SparqlParserSpec extends SparkSpec {
     try {
       ds.write.partitionBy("g").parquet(s"$dir/quads")
       val stored = spark.read.parquet(s"$dir/quads")
-      val scoped = Sparql.selectDataset(stored,
+      val scoped = Sparql.select(stored,
         "SELECT ?x WHERE { GRAPH <urn:gr/1> { <urn:i/a> <urn:p/k> ?x } }")
       assert(scoped.collect().map(_.getString(0)).toSet == Set("one"))
       val plan = scoped.queryExecution.executedPlan.toString
@@ -1086,7 +1086,7 @@ class SparqlParserSpec extends SparkSpec {
       .withColumn("oIsIri", col("o").startsWith("urn:i/"))
       .withColumn("oLang", lit(null).cast("string"))
       .withColumn("oDatatype", lit(null).cast("string"))
-    def rows(q: String) = Sparql.describeDataset(ds, q).collect()
+    def rows(q: String) = Sparql.describe(ds, q).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3))).toSet
     // No clause: the whole dataset contributes — the subject's
@@ -1168,7 +1168,7 @@ class SparqlParserSpec extends SparkSpec {
     "template with GRAPH ?g binding the doomed quads' graph slot") {
     val dir = java.nio.file.Files.createTempDirectory("sparqlupd")
       .toString + "/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s ?p ?o WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -1236,7 +1236,7 @@ class SparqlParserSpec extends SparkSpec {
     "first, INSERT-only and DELETE-only forms work") {
     val dir = java.nio.file.Files.createTempDirectory("sparqlmod")
       .toString + "/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s ?p ?o WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -1322,7 +1322,7 @@ class SparqlParserSpec extends SparkSpec {
     "clause's (replacement semantics), templates still hit the store") {
     val root = java.nio.file.Files.createTempDirectory("sparqlusing")
     val dir = s"$root/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s ?p WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -1368,7 +1368,7 @@ class SparqlParserSpec extends SparkSpec {
     "reject WITH") {
     val root = java.nio.file.Files.createTempDirectory("sparqlwith")
     val dir = s"$root/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s ?p WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -1416,7 +1416,7 @@ class SparqlParserSpec extends SparkSpec {
     "store; INTO GRAPH rehomes; SILENT turns a missing doc into a no-op") {
     val root = java.nio.file.Files.createTempDirectory("sparqlload")
     val dir = s"$root/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s ?p ?o WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -1457,7 +1457,7 @@ class SparqlParserSpec extends SparkSpec {
       java.nio.file.Files.write(docB, java.util.Arrays.asList(
         "_:b1 <urn:p/bn> \"b\" ."))
       Sparql.update(spark, dir, s"LOAD <file:$docA> ; LOAD <file:$docB>")
-      val bnSubjects = Sparql.selectDataset(spark.read.parquet(dir),
+      val bnSubjects = Sparql.select(spark.read.parquet(dir),
         "SELECT ?s WHERE { ?s <urn:p/bn> ?o . }")
         .collect().map(_.getString(0)).toSet
       assert(bnSubjects.size == 2,
@@ -1473,7 +1473,7 @@ class SparqlParserSpec extends SparkSpec {
     "absent-graph and already-exists error contracts, SILENT") {
     val root = java.nio.file.Files.createTempDirectory("sparqlclear")
     val dir = s"$root/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -1517,7 +1517,7 @@ class SparqlParserSpec extends SparkSpec {
     "absent-source error contract") {
     val root = java.nio.file.Files.createTempDirectory("sparqlxfer")
     val dir = s"$root/quads"
-    def all() = Sparql.selectDataset(
+    def all() = Sparql.select(
       spark.read.parquet(dir),
       "SELECT ?g ?s ?o WHERE { { ?s ?p ?o } UNION " +
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
@@ -2048,7 +2048,7 @@ class SparqlParserSpec extends SparkSpec {
         false, null, null),
       org.apache.spark.sql.Row(null, "urn:s/4", "urn:p/n", "7",
         false, null, null)).asJava, quadSchema)
-    val got = Sparql.selectDataset(ds,
+    val got = Sparql.select(ds,
       """SELECT ?g ?s ?d WHERE {
         |  GRAPH ?g { ?s <urn:p/n> ?n .
         |             FILTER(?n * 2 >= 8)

@@ -119,11 +119,11 @@ class SparqlResultsSpec extends SparkSpec {
       Row("urn:d/1", "urn:s/1", "urn:p/v", "named", false, "en", null)).asJava,
       quadSchema)
     val q = """SELECT ?v WHERE { GRAPH <urn:d/1> { ?s <urn:p/v> ?v . } }"""
-    val (_, tsv) = Sparql.selectTsvDataset(ds, q)
+    val (_, tsv) = Sparql.selectTsv(ds, q)
     assert(tsv.collect().map(_.getString(0)).toSet == Set("\"named\"@en"))
-    val (_, csv) = Sparql.selectCsvDataset(ds, q)
+    val (_, csv) = Sparql.selectCsv(ds, q)
     assert(csv.collect().map(_.getString(0)).toSet == Set("named"))
-    val (_, json) = Sparql.selectJsonBindingsDataset(ds, q)
+    val (_, json) = Sparql.selectJsonBindings(ds, q)
     assert(json.collect().map(_.getString(0)).toSet ==
       Set("""{"v":{"type":"literal","value":"named","xml:lang":"en"}}"""))
   }
@@ -138,11 +138,14 @@ class SparqlResultsSpec extends SparkSpec {
       Row("urn:g/2", "urn:s/2", "urn:p/v", "two", false, null, null)).asJava,
       quadSchema)
     val q = "SELECT ?s ?v FROM <urn:g/1> WHERE { ?s <urn:p/v> ?v . }"
-    val (_, tsv) = Sparql.selectTsvDataset(ds, q)
+    val (_, tsv) = Sparql.selectTsv(ds, q)
     assert(tsv.collect().map(_.getString(0)).toSet ==
       Set("<urn:s/1>\t\"one\""))
     intercept[IllegalArgumentException](
       Sparql.selectTsv(ds.filter("g IS NULL").drop("g"), q))
+    intercept[IllegalArgumentException](
+      Sparql.describe(ds.filter("g IS NULL").drop("g"),
+        "DESCRIBE <urn:s/1> FROM <urn:g/1>"))
   }
 
   test("DISTINCT under kept metadata compares TERMS: same lexical form " +
