@@ -1,12 +1,19 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.storage.StorageLevel
 
-/** Lineage cut for iterative fixpoints (PageRank/label-prop/k-core in
-  * `graphquery.Graph`, connected components in `llm.Dedup`, k-means/PQ
-  * in `llm.Similarity`): every round must materialize its state, or the
-  * plan grows one join+aggregate per round and the optimizer re-walks
-  * the whole history each time.
+/** Lineage cut for iterative fixpoints: the property-path closure in
+  * `graphquery.Bgp`, PageRank/label-prop/k-core/BFS in
+  * `graphquery.Graph`, connected components in `llm.Dedup`,
+  * k-means/PQ in `llm.Similarity`. Every round must materialize its
+  * state, or the plan grows one join+aggregate per round and the
+  * optimizer re-walks the whole history each time. The DataFrame forms
+  * (`cut*`, `cutEagerObserved`) serve the DataFrame loops; the RDD form
+  * `cutEagerCounted` serves the closure, which is held as a
+  * co-partitioned pair RDD so a round is one job.
   *
   * Default is `localCheckpoint` — executor-local blocks, free of a
   * distributed filesystem, exactly right on local[n] and fine on a
@@ -15,21 +22,39 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * kills the job instead of recomputing (the lineage was cut). The
   * escape hatch is the session's own checkpoint dir: call
   * `spark.sparkContext.setCheckpointDir(<reliable path>)` and every
-  * iterative operator here switches to RELIABLE `checkpoint()` — state
-  * written to that directory, lost-executor recovery re-reads it. One
-  * knob, no per-operator plumbing, and the operators stay
-  * bit-identical either way (both forms materialize the same rows; the
-  * sbt gate runs PageRank both ways and compares).
+  * iterative operator here, DataFrame and RDD forms alike, switches to
+  * RELIABLE `checkpoint()` — state written to that directory,
+  * lost-executor recovery re-reads it. One knob, no per-operator
+  * plumbing, and the operators stay bit-identical either way (both
+  * forms materialize the same rows; the sbt gate runs PageRank and the
+  * fixpoint loops both ways and compares).
   *
   * Cost note for the reliable form: `Dataset.checkpoint` computes the
-  * plan once more when writing the files — on a real cluster prefer a
-  * fast DFS path and expect roughly 2× the per-round cost of the
-  * local form. That is the standard Spark trade, not a property of
+  * plan once more when writing the files (`cutEagerCounted` persists
+  * first, so its write re-reads blocks instead) — on a real cluster
+  * prefer a fast DFS path and expect roughly 2× the per-round cost of
+  * the local form. That is the standard Spark trade, not a property of
   * these operators.
   */
 object Checkpoints {
+  private def reliable(sc: SparkContext): Boolean =
+    sc.getCheckpointDir.isDefined
   private def reliable(df: DataFrame): Boolean =
-    df.sparkSession.sparkContext.getCheckpointDir.isDefined
+    reliable(df.sparkSession.sparkContext)
+
+  /** Eager cut of an RDD, returned with its row count: the count is
+    * both the round's convergence scalar and the action that
+    * materializes the cut, so a round costs one job. Local:
+    * `localCheckpoint()` then `count()`. Reliable: `persist`,
+    * `checkpoint()` then `count()` — the file write reads the persisted
+    * blocks instead of computing the round again. */
+  def cutEagerCounted[T](rdd: RDD[T]): (RDD[T], Long) = {
+    if (reliable(rdd.sparkContext)) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    (rdd, rdd.count())
+  }
 
   /** Lazy lineage cut: materialized by the first action that touches it. */
   def cut(df: DataFrame): DataFrame =
@@ -52,11 +77,11 @@ object Checkpoints {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Eager cut with convergence metrics riding the SAME job: the
-    * fixpoint loops (pointer-doubling closures, connected components,
-    * BFS frontiers) need one driver-side scalar per round — label sum,
-    * row count — both as the convergence test and as the checkpoint
-    * materializer. Running `df.count()` after a lazy cut costs a whole
-    * extra query execution per round (its own AQE planning + jobs);
+    * DataFrame fixpoint loops (connected components, BFS frontiers)
+    * need one driver-side scalar per round — label sum, row count —
+    * both as the convergence test and as the checkpoint materializer.
+    * Running `df.count()` after a lazy cut costs a whole extra query
+    * execution per round (its own AQE planning + jobs);
     * `Dataset.observe` computes the aggregates inside the checkpoint's
     * own materializing job and the listener hands them back when that
     * job completes — one execution per round, not two. Returns the cut

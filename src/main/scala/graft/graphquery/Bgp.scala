@@ -1,7 +1,11 @@
 package graft.graphquery
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import graft.Checkpoints
 
 /** Basic-graph-pattern combinators over the canonical triples DataFrame
   * (s, p, o, oIsIri, oLang, oDatatype) — the SPARQL-subset "engine"
@@ -120,20 +124,15 @@ object Bgp {
 
   /** Transitive path p+ : all (s, o) with a directed p-path of length ≥ 1
     * — the SPARQL property-path operator Spark has no built-in for, as a
-    * distributed fixpoint.
+    * distributed fixpoint ([[pathPlusEdges]] over the p edges).
     *
     * Strategy: pointer doubling (path-doubling), not per-hop BFS — each
     * round joins the closure-so-far with itself, so paths up to length 2ᵏ
     * exist after k rounds and a depth-d graph closes in O(log d) rounds
-    * instead of O(d). On a cluster each round is one self-join shuffle on
-    * the join key + a distinct; driver-side work is one scalar per round
-    * (the fixpoint test). Each round's count rides the round's OWN eager
-    * checkpoint via `observe` ([[graft.Checkpoints.cutEagerObserved]]) —
-    * one query execution per round, not a checkpoint execution plus a
-    * separate count execution — cutting the exponentially-growing
-    * lineage while feeding the next join from the persisted blocks.
-    * Cycles converge (the closure is a finite set); `maxRounds` (2^20-
-    * length paths at the default) bounds the degenerate case.
+    * instead of O(d). Each round is ONE Spark job; the driver's work per
+    * round is the job's row count (the fixpoint test). Cycles converge
+    * (the closure is a finite set); `maxRounds` (2^20-length paths at the
+    * default) bounds the degenerate case.
     */
   def pathPlus(t: DataFrame, p: String, as: String,
                maxRounds: Int = 20): DataFrame =
@@ -143,45 +142,99 @@ object Bgp {
   /** The pointer-doubling fixpoint over an ARBITRARY (s, o) edge set —
     * what lets GROUPED property paths close: `(p/q)+` is this fixpoint
     * over the composite p⨝q relation, `(p|q)+` over the unioned edge
-    * sets. Same O(log depth) round structure and lazy-checkpoint
-    * discipline as the single-predicate form (which now delegates
-    * here).
+    * sets, and [[pathPlus]] over one predicate's edges.
     *
-    * `keyCols` PARTITIONS the closure: each round's self-join equates
-    * the key columns alongside the o=s hop, so paths never cross a key
-    * boundary and the result keeps the keys. This is what makes
-    * closures inside `GRAPH ?g` per-graph (key = the g column — the
-    * fixpoint runs independently in every named graph WITHOUT
-    * enumerating graphs driver-side: one keyed self-join per round,
-    * all graphs at once, skew handled by AQE like any other composite
-    * join key). Empty keys = the plain single-relation closure. */
+    * The closure is a pair RDD of plain strings, ((k, s), o),
+    * hash-partitioned by source with `spark.sql.shuffle.partitions`
+    * partitions. A round is one job of three stages: (1) shuffle the
+    * closure by its object, the middle node; (2) join it with the
+    * closure itself — already partitioned by source, so that side is a
+    * narrow dependency — and shuffle the new pairs by source; (3) union
+    * closure and new pairs partition by partition (co-partitioned, so
+    * no shuffle), dedupe each partition in a hash set, and cut the
+    * lineage with [[graft.Checkpoints.cutEagerCounted]], whose `count()`
+    * is the convergence scalar — the count is the job's own action, so
+    * no `observe` metric and no second execution is needed. Round 0 is
+    * one job over the input edges: shuffle by source, dedupe, cut. (A
+    * DataFrame join→union→distinct round runs as 3–5 jobs, because
+    * adaptive execution submits each query stage as its own job.)
+    *
+    * `keyCols` PARTITIONS the closure: the join key is (k, node), so
+    * paths never cross a key boundary and the result keeps the keys.
+    * This makes closures inside `GRAPH ?g` per-graph (key = the g
+    * column): the fixpoint runs in every named graph at once, without
+    * enumerating graphs driver-side. Empty keys = the plain
+    * single-relation closure.
+    *
+    * Nulls behave as under an `===` join: a row with a null key or term
+    * stays in the closure (deduplicated, nulls equal) but never matches
+    * a join key. Every key column and `s`/`o` must be a string column;
+    * the result has the input's `keyCols ++ (s, o)` schema. */
   def pathPlusEdges(edges: DataFrame, maxRounds: Int = 20,
                     keyCols: Seq[String] = Nil): DataFrame = {
-    val out = keyCols ++ Seq("s", "o")
-    def cutCounted(df: DataFrame): (DataFrame, Long) = {
-      val (cut, m) = graft.Checkpoints.cutEagerObserved(
-        df, count(lit(1)).as("n"))
-      (cut, m("n").asInstanceOf[Long])
-    }
-    var (acc, size) = cutCounted(edges.select(out.map(col): _*).distinct())
+    val in = edges.select((keyCols ++ Seq("s", "o")).map(col): _*)
+    require(in.schema.forall(_.dataType == StringType),
+      s"pathPlusEdges needs string columns, got ${in.schema.simpleString}")
+    val nk = keyCols.size
+    val part = new HashPartitioner(
+      in.sparkSession.sessionState.conf.numShufflePartitions)
+    def dedupe(pairs: RDD[((String, String), String)]) =
+      pairs.mapPartitions({ it =>
+        val seen = new java.util.HashSet[((String, String), String)]
+        it.filter(seen.add)
+      }, preservesPartitioning = true)
+    var (acc, size) = Checkpoints.cutEagerCounted(dedupe(in.rdd
+      .map(r => ((packKey(r, nk), r.getString(nk)), r.getString(nk + 1)))
+      .partitionBy(part)))
     var rounds = 0
     var fixed = size == 0
     while (!fixed && rounds < maxRounds) {
-      val right = acc.select(keyCols.map(k => col(k).as(s"_k$k")) ++
-        Seq(col("s").as("_m"), col("o").as("_o2")): _*)
-      val cond = keyCols.foldLeft(col("o") === col("_m")) {
-        (c, k) => c && col(k) === col(s"_k$k")
-      }
-      val doubled = acc.join(right, cond)
-        .select(keyCols.map(col) ++ Seq(col("s"), col("_o2").as("o")): _*)
-      val (acc2, n) = cutCounted(acc.unionByName(doubled).distinct())
-      acc = acc2
+      val left = acc.filter { case ((k, _), o) => o != null && keyOk(k, nk) }
+        .map { case ((k, s), o) => ((k, o), s) }
+      val right = acc.filter { case ((k, s), _) => s != null && keyOk(k, nk) }
+      val doubled = left.join(right, part)
+        .map { case ((k, _), (s, o)) => ((k, s), o) }
+        .partitionBy(part)
+      val (next, n) = Checkpoints.cutEagerCounted(dedupe(acc.union(doubled)))
+      acc.unpersist(blocking = false)
+      acc = next
       fixed = n == size
       size = n
       rounds += 1
     }
-    acc.select(out.map(col): _*)
+    // A partial closure looks final to every caller; pointer doubling
+    // makes maxRounds=20 ample (2^20-length paths), so say so loudly.
+    if (!fixed)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"pathPlusEdges did not converge within $maxRounds rounds; " +
+          "the closure may be partial")
+    in.sparkSession.createDataFrame(acc.map { case ((k, s), o) =>
+      Row.fromSeq(unpackKey(k, nk) ++ Seq(s, o))
+    }, in.schema)
   }
+
+  /** The key columns of a closure row as one string: each value
+    * length-prefixed (`3:abc`), a null as `-1:`; "" without keys. */
+  private def packKey(r: Row, n: Int): String = {
+    val b = new StringBuilder
+    for (i <- 0 until n)
+      if (r.isNullAt(i)) b.append("-1:")
+      else b.append(r.getString(i).length).append(':').append(r.getString(i))
+    b.toString
+  }
+
+  private def unpackKey(k: String, n: Int): Seq[String] = {
+    var at = 0
+    Seq.fill(n) {
+      val colon = k.indexOf(':', at)
+      val len = k.substring(at, colon).toInt
+      at = colon + 1 + math.max(len, 0)
+      if (len < 0) null else k.substring(colon + 1, at)
+    }
+  }
+
+  private def keyOk(k: String, n: Int): Boolean =
+    !unpackKey(k, n).contains(null)
 
   /** FILTER NOT EXISTS {?s <p> ?anything} as a left-anti join. */
   def notExists(left: DataFrame, t: DataFrame, p: String): DataFrame = {

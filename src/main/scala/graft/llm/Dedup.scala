@@ -562,9 +562,11 @@ object Dedup {
     * localCheckpoint'ed lazily and materialized by the fixpoint
     * aggregate (labels only ever decrease, so the label SUM strictly
     * decreases until converged — summed as decimal(38,0) so arbitrary
-    * 64-bit ids can't overflow the test). Same per-round cost class as
-    * [[graft.graphquery.Bgp.pathPlus]]: one edge-key shuffle + one
-    * self-join + one aggregate.
+    * 64-bit ids can't overflow the test). Per round: one edge-key
+    * shuffle + one self-join + one aggregate, run as one query execution
+    * whose adaptive stages are separate jobs (unlike
+    * [[graft.graphquery.Bgp.pathPlusEdges]], whose pair-RDD rounds are
+    * one job each).
     *
     * `edges` rows are (srcCol, dstCol) pairs in either orientation;
     * `nodes` is the universe (isolated nodes keep their own id).

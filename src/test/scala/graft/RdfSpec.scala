@@ -127,6 +127,35 @@ class RdfSpec extends SparkSpec {
     assert(Bgp.pathPlus(chain, "urn:p/absent", "anc").count() == 0)
   }
 
+  test("pathPlusEdges keyed by g: no path crosses graphs; null keys " +
+    "and null terms stay in the closure but never join") {
+    val schema = StructType(Seq(StructField("g", StringType),
+      StructField("s", StringType), StructField("o", StringType)))
+    // g1 and g2 share node names: merged, g1's a→b and g2's b→d would
+    // give (a, d), g2's c→a and g1's a→b would give (c, b).
+    val edges = spark.createDataFrame(Seq(
+      Row("g1", "a", "b"), Row("g1", "b", "c"), Row("g1", "c", null),
+      Row("g1", "a", "b"),
+      Row("g2", "c", "a"), Row("g2", "b", "d"), Row("g2", null, "c"),
+      Row(null, "a", "b"), Row(null, "b", "e"), Row(null, "a", "b")
+    ).asJava, schema)
+    val closure = Bgp.pathPlusEdges(edges, keyCols = Seq("g"))
+    assert(closure.schema == schema)
+    val got = closure.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    // A null o still extends leftward (b→c→null gives (b, null)), a
+    // null s rightward (null→c→a gives (null, a)); the null-g rows are
+    // deduplicated but never chain into (null, a, e).
+    val expected = Set[(String, String, String)](
+      ("g1", "a", "b"), ("g1", "b", "c"), ("g1", "c", null),
+      ("g1", "a", "c"), ("g1", "b", null), ("g1", "a", null),
+      ("g2", "c", "a"), ("g2", "b", "d"), ("g2", null, "c"),
+      ("g2", null, "a"),
+      (null, "a", "b"), (null, "b", "e"))
+    assert(got.length == expected.size, got.toSeq)
+    assert(got.toSet == expected)
+  }
+
   test("pathStar adds the zero-length pairs; pathSeq chains n hops") {
     val g = triples(
       ("a", "urn:p/n", "b", true, null, null),

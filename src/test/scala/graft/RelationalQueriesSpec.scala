@@ -387,15 +387,24 @@ class RelationalQueriesSpec extends SparkSpec {
       "C" -> 575000000L), s"got $got")
   }
 
+  /** A 10-node chain closing into a 5-cycle: its closure has 9+8+…+5
+    * chain pairs plus 5×5 cycle pairs = 35 + 25, after several doubling
+    * rounds. */
+  private def chainIntoCycle = {
+    import spark.implicits._
+    val chain = (0 until 9).map(i => (s"n$i", "urn:p/next", s"n${i + 1}"))
+    (chain :+ (("n9", "urn:p/next", "n5"))).toDF("s", "p", "o")
+  }
+
   test("observed fixpoints (pathPlus, bfsHops, connectedComponents): " +
     "reliable checkpoints give the local-checkpoint results") {
     import spark.implicits._
-    // Each of these loops reads its convergence scalar from `observe`
-    // metrics on the round's eager cut (Checkpoints.cutEagerObserved);
-    // under reliable `checkpoint(eager = true)` the metrics must arrive
-    // the same, or a loop stops early or late.
-    val chain = (0 until 9).map(i => (s"n$i", "urn:p/next", s"n${i + 1}"))
-    val parents = (chain :+ (("n9", "urn:p/next", "n5"))).toDF("s", "p", "o")
+    // Each of these loops reads its convergence scalar from its round's
+    // eager cut — the row count of the closure's RDD cut
+    // (Checkpoints.cutEagerCounted), `observe` metrics for the other two
+    // (Checkpoints.cutEagerObserved). Under reliable checkpoints the
+    // scalar must come out the same, or a loop stops early or late.
+    val parents = chainIntoCycle
     val hops = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
       ("d", "e"), ("e", "f"), ("x", "y")).toDF("s", "d")
     val pairs = Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L),
@@ -410,8 +419,6 @@ class RelationalQueriesSpec extends SparkSpec {
         .collect().map(r => r.getAs[Long]("doc_id") ->
           r.getAs[Long]("component_id")).toMap)
     val local = run()
-    // A 10-node chain closing into a 5-cycle: 9+8+…+5 chain pairs plus
-    // 5×5 cycle pairs = 35 + 25 — several doubling rounds.
     assert(local._1.size == 60, s"pathPlus: ${local._1.size} pairs")
     assert(local._2 == Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 3L,
       "e" -> 4L, "f" -> 5L), s"bfsHops: ${local._2}")
@@ -419,6 +426,21 @@ class RelationalQueriesSpec extends SparkSpec {
       (20L to 22L).map(_ -> 20L) ++ Seq(30L -> 30L)).toMap,
       s"connectedComponents: ${local._3}")
     assert(withReliableCheckpoints(run()) == local)
+  }
+
+  test("pathPlus gives the same closure at 1, 4 and 7 shuffle partitions") {
+    // The closure's partition count follows spark.sql.shuffle.partitions.
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      val closures = Seq(1, 4, 7).map { n =>
+        spark.conf.set(key, n.toString)
+        graft.graphquery.Bgp.pathPlus(chainIntoCycle, "urn:p/next", "anc")
+          .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      }
+      assert(closures.head.size == 60, s"${closures.head.size} pairs")
+      assert(closures.forall(_ == closures.head))
+    } finally spark.conf.set(key, saved)
   }
 
   test("range join by bucket agrees with brute force on random intervals") {
