@@ -429,14 +429,19 @@ class RelationalQueriesSpec extends SparkSpec {
   }
 
   test("pathPlus gives the same closure at 1, 4 and 7 shuffle partitions") {
-    // The closure's partition count follows spark.sql.shuffle.partitions.
+    // The closure's partition count follows its row count, capped by
+    // spark.sql.shuffle.partitions. At eight rows per partition this
+    // closure goes from the input's partitions to 2, then 4 (up to the
+    // cap), so the rounds that re-partition it run too.
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
+    val edges = chainIntoCycle.select("s", "o")
     try {
-      val closures = Seq(1, 4, 7).map { n =>
+      val closures = Seq(1, 4, 7).flatMap { n =>
         spark.conf.set(key, n.toString)
-        graft.graphquery.Bgp.pathPlus(chainIntoCycle, "urn:p/next", "anc")
-          .collect().map(r => (r.getString(0), r.getString(1))).toSet
+        Seq(graft.graphquery.Bgp.pathPlus(chainIntoCycle, "urn:p/next", "anc"),
+          graft.graphquery.Bgp.pointerDoubling(edges, 20, Nil, 8))
+          .map(_.collect().map(r => (r.getString(0), r.getString(1))).toSet)
       }
       assert(closures.head.size == 60, s"${closures.head.size} pairs")
       assert(closures.forall(_ == closures.head))
