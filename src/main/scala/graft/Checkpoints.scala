@@ -12,8 +12,10 @@ import org.apache.spark.storage.StorageLevel
   * state, or the plan grows one join+aggregate per round and the
   * optimizer re-walks the whole history each time. The DataFrame forms
   * (`cut*`, `cutEagerObserved`) serve the DataFrame loops; the RDD form
-  * `cutEagerCounted` serves the closure, which is held as a
-  * co-partitioned pair RDD so a round is one job.
+  * `cutEagerCounted` serves the closure's round 0 and, above one
+  * partition's rows, its rounds, held as a co-partitioned pair RDD so a
+  * round is one job (a smaller closure finishes on the driver, with no
+  * cut after round 0).
   *
   * Default is `localCheckpoint` — executor-local blocks, free of a
   * distributed filesystem, exactly right on local[n] and fine on a

@@ -34,8 +34,10 @@ object JobProbe {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        val name = j.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n'))
-          .getOrElse("?")
+        // The result stage has the job's highest stage id and carries
+        // the action's call site (`count`, `collect`, `save`).
+        val name = j.stageInfos.maxByOption(_.stageId)
+          .map(_.name.takeWhile(_ != '\n')).getOrElse("?")
         jobStartNs.put(j.jobId, (System.nanoTime(), name))
       }
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd)

@@ -5,6 +5,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.Checkpoints
 
 /** Basic-graph-pattern combinators over the canonical triples DataFrame
@@ -129,7 +131,9 @@ object Bgp {
     * Strategy: pointer doubling (path-doubling), not per-hop BFS — each
     * round joins the closure-so-far with itself, so paths up to length 2ᵏ
     * exist after k rounds and a depth-d graph closes in O(log d) rounds
-    * instead of O(d). Each round is ONE Spark job; the driver's work per
+    * instead of O(d). A closure within one partition's rows (10,000)
+    * is collected once and finishes on the driver with no further job;
+    * above that each round is ONE Spark job, and the driver's work per
     * round is the job's row count (the fixpoint test). Cycles converge
     * (the closure is a finite set); `maxRounds` (2^20-length paths at the
     * default) bounds the degenerate case.
@@ -159,6 +163,19 @@ object Bgp {
     * because adaptive execution submits each query stage as its own
     * job.)
     *
+    * Driver finish: when round 0's count shows at most one partition's
+    * rows (the 10,000-row step below), the closure is collected, and
+    * the remaining rounds run on the driver over an in-memory set —
+    * closure ∪ closure⨝closure, deduplicated — with the RDD round's
+    * null rules, fixpoint test and `maxRounds` counter. A driver round
+    * that would grow the set past the step is dropped, and the last
+    * complete round is handed back to the RDD loop, which goes on with
+    * the same counter; so driver memory stays within one partition's
+    * rows, and the result is row-identical to the all-RDD run, whether
+    * it converged or stopped at `maxRounds`. The choice rests on the
+    * row count only, never on the partition count, so it does not
+    * depend on `local[n]` or `spark.sql.shuffle.partitions`.
+    *
     * The partition count follows the closure's size: one partition per
     * 10,000 rows, in power-of-two steps, capped by
     * `spark.sql.shuffle.partitions`, the default parallelism and, in
@@ -177,15 +194,19 @@ object Bgp {
     * Nulls behave as under an `===` join: a row with a null key or term
     * stays in the closure (deduplicated, nulls equal) but never matches
     * a join key. The key column and `s`/`o` must be string columns; the
-    * result has the input's `keyCols ++ (s, o)` schema. It is RDD-backed
-    * and so carries no size statistics: a join on it plans as a shuffle
-    * join, which adaptive execution can turn into a broadcast once the
-    * closure's shuffle reports its size. */
+    * result has the input's `keyCols ++ (s, o)` schema. A closure that
+    * finished on the driver is a local relation, whose exact size the
+    * optimizer sees (a join on it can plan as a broadcast). Only a
+    * closure above the step is RDD-backed and carries no size
+    * statistics: a join on it plans as a shuffle join, which adaptive
+    * execution can turn into a broadcast once the closure's shuffle
+    * reports its size. */
   def pathPlusEdges(edges: DataFrame, maxRounds: Int = 20,
                     keyCols: Seq[String] = Nil): DataFrame =
     pointerDoubling(edges, maxRounds, keyCols, rowsPerPartition = 10000)
 
-  private type ClosurePair = ((String, String, String), Null)
+  private type ClosureRow = (String, String, String)
+  private type ClosurePair = (ClosureRow, Null)
 
   /** Places a closure pair (k, s, o) by (k, s) and a join key (k, n) by
     * itself, so the closure is co-partitioned with joins on its source. */
@@ -206,7 +227,8 @@ object Bgp {
   }
 
   /** [[pathPlusEdges]] with its partition-size step as a parameter, so a
-    * test can step a small closure through several partition counts. */
+    * test can step a small closure through several partition counts and
+    * across the driver finish. */
   private[graft] def pointerDoubling(edges: DataFrame, maxRounds: Int,
       keyCols: Seq[String], rowsPerPartition: Long): DataFrame = {
     require(keyCols.size <= 1,
@@ -236,9 +258,17 @@ object Bgp {
       if (keyed) ((r.getString(0), r.getString(1), r.getString(2)), null)
       else (("", r.getString(0), r.getString(1)), null): ClosurePair
     }.partitionBy(part), part))
-    var rounds = 0
-    var fixed = size == 0
-    while (!fixed && rounds < maxRounds) {
+    // A closure only grows, so only round 0 can find it within one
+    // partition's rows: it then finishes on the driver, until a round
+    // would outgrow the step and hands its input back to the RDD loop.
+    var local =
+      if (size > rowsPerPartition) None
+      else {
+        val rows = mutable.HashSet.from(acc.keys.collect())
+        acc.unpersist(blocking = false)
+        Some(rows)
+      }
+    def rddRound(): Long = {
       part = sizedFor(size)
       val cur = acc.partitionBy(part) // a no-op unless the step changed
       val left = cur.flatMap { case ((k, s, o), _) =>
@@ -253,6 +283,19 @@ object Bgp {
         dedupe(cur.union(doubled), part))
       acc.unpersist(blocking = false)
       acc = next
+      n
+    }
+    var rounds = 0
+    var fixed = size == 0
+    while (!fixed && rounds < maxRounds) {
+      val doubled = local.flatMap(doubleOnDriver(_, rowsPerPartition))
+      for (rows <- local if doubled.isEmpty) // outgrew the step: hand back
+        acc = sc.parallelize(rows.toSeq.map(r => (r, null): ClosurePair), 1)
+      local = doubled
+      val n = doubled match {
+        case Some(rows) => rows.size.toLong
+        case None => rddRound()
+      }
       fixed = n == size
       size = n
       rounds += 1
@@ -263,9 +306,31 @@ object Bgp {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"pathPlusEdges did not converge within $maxRounds rounds; " +
           "the closure may be partial")
-    spark.createDataFrame(acc.map { case ((k, s, o), _) =>
-      if (keyed) Row(k, s, o) else Row(s, o)
-    }, in.schema)
+    val toRow = (t: ClosureRow) =>
+      if (keyed) Row(t._1, t._2, t._3) else Row(t._2, t._3)
+    local match {
+      case Some(rows) =>
+        spark.createDataFrame(rows.toSeq.map(toRow).asJava, in.schema)
+      case None => spark.createDataFrame(acc.keys.map(toRow), in.schema)
+    }
+  }
+
+  /** One doubling round on the driver, under the RDD round's null rules:
+    * closure ∪ closure⨝closure, or None as soon as the set passes
+    * `limit` rows — the partial round is dropped, so the caller hands
+    * the last complete round to the RDD loop. */
+  private def doubleOnDriver(cur: collection.Set[ClosureRow], limit: Long)
+      : Option[mutable.HashSet[ClosureRow]] = {
+    val bySource = cur.toSeq.collect {
+      case (k, s, o) if k != null && s != null => ((k, s), o)
+    }.groupMap(_._1)(_._2)
+    val next = mutable.HashSet.from(cur)
+    val grown = for {
+      (k, s, o) <- cur.iterator if k != null && o != null
+      o2 <- bySource.getOrElse((k, o), Nil)
+    } yield (k, s, o2)
+    while (grown.hasNext && next.size <= limit) next += grown.next()
+    if (next.size <= limit) Some(next) else None
   }
 
   /** FILTER NOT EXISTS {?s <p> ?anything} as a left-anti join. */
@@ -306,7 +371,6 @@ object Bgp {
     */
   def values(spark: SparkSession, left: DataFrame, cols: Seq[String],
              rows: Seq[Seq[String]]): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val schema = org.apache.spark.sql.types.StructType(
       cols.map(c => org.apache.spark.sql.types.StructField(s"_v_$c",
         org.apache.spark.sql.types.StringType)))

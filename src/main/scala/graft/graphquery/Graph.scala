@@ -296,22 +296,6 @@ object Graph {
     labels
   }
 
-  /** Single-source BFS hop distances (directed): frontier expansion in
-    * the Pregel shape — per round the current frontier joins the
-    * src-partitioned edge list, newly-reached nodes (anti-join against
-    * the visited set) become the next frontier at `dist + 1`, until the
-    * frontier empties or `maxIters` rounds. Distances are exact BIGINT
-    * hop counts; unreachable nodes are absent (a LEFT join from the
-    * node table adds them as nulls if a caller wants that shape).
-    *
-    * Scale shape: edges are deduped, hash-partitioned on src and
-    * materialized ONCE (localCheckpoint) — each round exchanges only
-    * the frontier (≤ |V| rows); rounds are bounded by the graph's
-    * diameter from the source (the `maxIters` cap guards adversarial
-    * chains), and the driver sees one scalar `isEmpty` per round,
-    * never data. The visited set is re-checkpointed per round to cap
-    * lineage, exactly the [[kCore]]/connected-components discipline.
-    */
   /** Weighted single-source shortest paths by `rounds` SYNCHRONIZED
     * Bellman-Ford relaxations: after round r, `dist(v)` is exactly the
     * cheapest path of ≤ r edges — deterministic whether or not the
@@ -344,6 +328,22 @@ object Graph {
     dist
   }
 
+  /** Single-source BFS hop distances (directed): frontier expansion in
+    * the Pregel shape — per round the current frontier joins the
+    * src-partitioned edge list, newly-reached nodes (anti-join against
+    * the visited set) become the next frontier at `dist + 1`, until the
+    * frontier empties or `maxIters` rounds. Distances are exact BIGINT
+    * hop counts; unreachable nodes are absent (a LEFT join from the
+    * node table adds them as nulls if a caller wants that shape).
+    *
+    * Scale shape: edges are deduped, hash-partitioned on src and
+    * materialized ONCE (localCheckpoint) — each round exchanges only
+    * the frontier (≤ |V| rows); rounds are bounded by the graph's
+    * diameter from the source (the `maxIters` cap guards adversarial
+    * chains), and the driver sees one scalar per round (the
+    * frontier's row count), never data. The visited set is re-checkpointed per round to cap
+    * lineage, exactly the [[kCore]]/connected-components discipline.
+    */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               source: String, maxIters: Int = 20): DataFrame = {
     require(maxIters >= 1)

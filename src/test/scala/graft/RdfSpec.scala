@@ -139,9 +139,13 @@ class RdfSpec extends SparkSpec {
       Row("g2", "c", "a"), Row("g2", "b", "d"), Row("g2", null, "c"),
       Row(null, "a", "b"), Row(null, "b", "e"), Row(null, "a", "b")
     ).asJava, schema)
+    // This closure finishes on the driver; at one row per partition the
+    // same rules run in the RDD loop.
     val closure = Bgp.pathPlusEdges(edges, keyCols = Seq("g"))
     assert(closure.schema == schema)
     val got = closure.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    val distributed = Bgp.pointerDoubling(edges, 20, Seq("g"), 1).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     // A null o still extends leftward (b→c→null gives (b, null)), a
     // null s rightward (null→c→a gives (null, a)); the null-g rows are
@@ -154,6 +158,8 @@ class RdfSpec extends SparkSpec {
       (null, "a", "b"), (null, "b", "e"))
     assert(got.length == expected.size, got.toSeq)
     assert(got.toSet == expected)
+    assert(distributed.length == expected.size, distributed.toSeq)
+    assert(distributed.toSet == expected)
   }
 
   test("pathStar adds the zero-length pairs; pathSeq chains n hops") {

@@ -404,22 +404,30 @@ class RelationalQueriesSpec extends SparkSpec {
     // (Checkpoints.cutEagerCounted), `observe` metrics for the other two
     // (Checkpoints.cutEagerObserved). Under reliable checkpoints the
     // scalar must come out the same, or a loop stops early or late.
+    // This 60-pair closure finishes on the driver after round 0, so
+    // pointerDoubling at 8 rows per partition runs every round as an
+    // RDD cut, and at 16 the closure is handed back after its round 0.
     val parents = chainIntoCycle
+    val edges = parents.select("s", "o")
+    def closure(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
     val hops = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
       ("d", "e"), ("e", "f"), ("x", "y")).toDF("s", "d")
     val pairs = Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L),
       (14L, 15L), (20L, 21L), (21L, 22L), (22L, 20L)).toDF("d1", "d2")
     val nodes = (Seq(30L) ++ (10L to 15L) ++ (20L to 22L)).toDF("doc_id")
     def run() = (
-      graft.graphquery.Bgp.pathPlus(parents, "urn:p/next", "anc")
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet,
+      closure(graft.graphquery.Bgp.pathPlus(parents, "urn:p/next", "anc")),
       graft.graphquery.Graph.bfsHops(hops, "s", "d", "a")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
       graft.llm.Dedup.connectedComponents(pairs, "d1", "d2", nodes, "doc_id")
         .collect().map(r => r.getAs[Long]("doc_id") ->
-          r.getAs[Long]("component_id")).toMap)
+          r.getAs[Long]("component_id")).toMap,
+      closure(graft.graphquery.Bgp.pointerDoubling(edges, 20, Nil, 8)),
+      closure(graft.graphquery.Bgp.pointerDoubling(edges, 20, Nil, 16)))
     val local = run()
     assert(local._1.size == 60, s"pathPlus: ${local._1.size} pairs")
+    assert(local._4 == local._1 && local._5 == local._1)
     assert(local._2 == Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 3L,
       "e" -> 4L, "f" -> 5L), s"bfsHops: ${local._2}")
     assert(local._3 == ((10L to 15L).map(_ -> 10L) ++
@@ -446,6 +454,25 @@ class RelationalQueriesSpec extends SparkSpec {
       assert(closures.head.size == 60, s"${closures.head.size} pairs")
       assert(closures.forall(_ == closures.head))
     } finally spark.conf.set(key, saved)
+  }
+
+  test("pointerDoubling: the RDD loop, the driver finish and its hand-back " +
+    "give the same closure at every maxRounds") {
+    // At 8 rows per partition every round runs as an RDD job; at 16 the
+    // 10 input rows are collected after round 0, and round 1 (20 pairs)
+    // outgrows the step on the driver and is handed back to the RDD
+    // loop; at 10000 the closure finishes on the driver. A truncated
+    // closure must be the same set on every path.
+    val edges = chainIntoCycle.select("s", "o")
+    for ((maxRounds, pairs) <- Seq(1 -> 20, 2 -> 40, 20 -> 60)) {
+      val closures = Seq(8L, 16L, 10000L).map { step =>
+        graft.graphquery.Bgp.pointerDoubling(edges, maxRounds, Nil, step)
+          .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      }
+      assert(closures.head.size == pairs,
+        s"maxRounds $maxRounds: ${closures.head.size} pairs")
+      assert(closures.forall(_ == closures.head), s"maxRounds $maxRounds")
+    }
   }
 
   test("range join by bucket agrees with brute force on random intervals") {
