@@ -1623,9 +1623,8 @@ object LlmQueries {
           "user_id", "event_type", 64, kmvDir)
         Corpus.mergeKmvIndex(evk.filter($"event_id" % 2 =!= 0),
           "user_id", "event_type", 64, kmvDir)
-        RelationalQueries.writeHistIndex(
-          RelationalQueries.eventValueBins(ev.filter($"event_id" % 2 === 0)),
-          histDir)
+        RelationalQueries.eventValueBins(ev.filter($"event_id" % 2 === 0))
+          .write.mode("overwrite").parquet(histDir)
         RelationalQueries.mergeHistIndex(
           RelationalQueries.eventValueBins(ev.filter($"event_id" % 2 =!= 0)),
           histDir)

@@ -1456,7 +1456,8 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
       val idx = s.conf.get("spark.sql.warehouse.dir")
         .stripSuffix("/") + "/q191_hist"
-      writeHistIndex(eventValueBins(ev.filter($"event_id" % 2 === 0)), idx)
+      eventValueBins(ev.filter($"event_id" % 2 === 0))
+        .write.mode("overwrite").parquet(idx)
       mergeHistIndex(eventValueBins(ev.filter($"event_id" % 2 =!= 0)), idx)
       histQuantileReport(s.read.parquet(idx))
     },
@@ -1476,20 +1477,13 @@ object RelationalQueries {
         .select($"event_id", (dec($"value") * 100).cast("long").as("_cents"))
       val idx = s.conf.get("spark.sql.warehouse.dir")
         .stripSuffix("/") + "/q206_qsk"
-      writeQuantileIndex(
-        quantileSketch(ev.filter($"event_id" % 2 === 0), "event_id",
-          "_cents"), idx)
-      mergeQuantileIndex(
-        quantileSketch(ev.filter($"event_id" % 2 =!= 0), "event_id",
-          "_cents"), idx)
-      quantileSketchReport(s.read.parquet(idx))
+      quantileSketch(ev.filter($"event_id" % 2 === 0), Nil, "event_id",
+        "_cents").write.mode("overwrite").parquet(idx)
+      mergeQuantileIndex(quantileSketch(ev.filter($"event_id" % 2 =!= 0),
+        Nil, "event_id", "_cents"), Nil, idx)
+      quantileReport(s.read.parquet(idx), Nil)
     },
 
-    // Quantile-normalized value feature: every event gets its
-    // percentile rank from the q206-family sketch WITHOUT any global
-    // sort or percent_rank window — one broadcast summary row + a
-    // map-only array lookup per event. Oracle replays sketch AND
-    // per-row cumulative rank digit for digit.
     // q213's percentile feature PER KEY: each event_type's sketch packs
     // into its own binary-search timeline, rows attach by a keyed
     // equi-join — per-language/per-service normalization with no
@@ -1499,8 +1493,9 @@ object RelationalQueries {
       import s.implicits._
       val ev = t(s, dir, "events").select($"event_id", $"event_type",
         (dec($"value") * 100).cast("long").as("cents"))
-      quantileNormalizeByKey(ev, "event_type", "cents",
-        quantileSketchByKey(ev, "event_type", "event_id", "cents"))
+      val keys = Seq("event_type")
+      quantileNormalize(ev, keys, "cents",
+        quantileSketch(ev, keys, "event_id", "cents"))
         .select($"event_id", $"event_type", $"cents", $"rank_ppm")
     },
 
@@ -1527,17 +1522,23 @@ object RelationalQueries {
       val ev = t(s, dir, "events").select($"event_id", $"event_type",
         (dec($"value") * 100).cast("long").as("cents"))
       winsorizeByKey(ev, "event_type", "cents",
-        quantileSketchByKey(ev, "event_type", "event_id", "cents"),
+        quantileSketch(ev, Seq("event_type"), "event_id", "cents"),
         lowPct = 5, highPct = 95)
         .select($"event_id", $"event_type", $"cents", $"lo_v", $"hi_v",
           $"clipped")
     },
 
+    // Quantile-normalized value feature: every event gets its
+    // percentile rank from the q206-family sketch WITHOUT any global
+    // sort or percent_rank window — one broadcast summary row + a
+    // map-only array lookup per event. Oracle replays sketch AND
+    // per-row cumulative rank digit for digit.
     "q213_quantile_normalize" -> { (s, dir) =>
       import s.implicits._
       val ev = t(s, dir, "events")
         .select($"event_id", (dec($"value") * 100).cast("long").as("cents"))
-      quantileNormalize(ev, "cents", quantileSketch(ev, "event_id", "cents"))
+      quantileNormalize(ev, Nil, "cents",
+        quantileSketch(ev, Nil, "event_id", "cents"))
         .select($"event_id", $"cents", $"rank_ppm")
     },
 
@@ -1552,13 +1553,12 @@ object RelationalQueries {
         (dec($"value") * 100).cast("long").as("_cents"))
       val idx = s.conf.get("spark.sql.warehouse.dir")
         .stripSuffix("/") + "/q214_qsk"
-      writeQuantileIndex(
-        quantileSketchByKey(ev.filter($"event_id" % 2 === 0),
-          "event_type", "event_id", "_cents"), idx)
-      mergeQuantileIndexByKey(
-        quantileSketchByKey(ev.filter($"event_id" % 2 =!= 0),
-          "event_type", "event_id", "_cents"), "event_type", idx)
-      quantileReportByKey(s.read.parquet(idx), "event_type")
+      val keys = Seq("event_type")
+      quantileSketch(ev.filter($"event_id" % 2 === 0), keys, "event_id",
+        "_cents").write.mode("overwrite").parquet(idx)
+      mergeQuantileIndex(quantileSketch(ev.filter($"event_id" % 2 =!= 0),
+        keys, "event_id", "_cents"), keys, idx)
+      quantileReport(s.read.parquet(idx), keys)
     },
 
     // Robust per-key anomaly flags: sketch-served median + MAD per
@@ -1581,23 +1581,16 @@ object RelationalQueries {
       .select(expr("_cents div 100").as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("n"))
 
-  /** The q176 percentile report over a (bin, n) histogram: cumulative
-    * window over ≤|bins| rows + one scalar broadcast; p50/p90/p99 as the
-    * first bin whose cumulative count crosses the ceil threshold. */
-  private[operators] def histQuantileReport(counts: DataFrame): DataFrame = {
-    val wc = Window.orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nTot = counts.agg(sum(col("n")).as("_n"))
-    counts.withColumn("cum", sum(col("n")).over(wc))
-      .crossJoin(broadcast(nTot))
-      .agg(first(col("_n")).as("n_events"),
-        min(when(col("cum") * 100L >= col("_n") * 50L, col("bin") * 100L))
-          .as("p50_cents"),
-        min(when(col("cum") * 100L >= col("_n") * 90L, col("bin") * 100L))
-          .as("p90_cents"),
-        min(when(col("cum") * 100L >= col("_n") * 99L, col("bin") * 100L))
-          .as("p99_cents"))
-  }
+  /** The q176 percentile report over a (bin, n) histogram: the
+    * [[percentilePicks]] crossing over (bin·100 as v, n as w) — a
+    * cumulative window over ≤|bins| rows + one scalar broadcast;
+    * p50/p90/p99 as the first bin whose cumulative count crosses the
+    * ceil threshold. */
+  private[operators] def histQuantileReport(counts: DataFrame): DataFrame =
+    percentilePicks(
+      counts.select((col("bin") * 100L).as("v"), col("n").as("w")), Nil,
+      Some("n_events"), "p50_cents" -> 50, "p90_cents" -> 90,
+      "p99_cents" -> 99)
 
   /** Gap-fill + forward fill over a (key, day, value) event set: one
     * daily aggregation of the input, a bounded per-key [min, max]
@@ -1623,12 +1616,6 @@ object RelationalQueries {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .drop("_day_cents")
   }
-
-  /** Persist a (bin, n) histogram as a parquet table — the sign-once
-    * index form for distributions (dashboard quantiles, KS drift): the
-    * stored table is ≤|bins| rows at any corpus size. */
-  def writeHistIndex(bins: DataFrame, dir: String): Unit =
-    bins.write.mode("overwrite").parquet(dir)
 
   /** Merge a new batch's (bin, n) histogram into a stored index: bin
     * counts ADD, so unlike a sketch the merge is EXACT — the merged
@@ -1661,98 +1648,88 @@ object RelationalQueries {
     * total rank error is ≤ Σ_b step_b ≤ buckets + N/capacity
     * (sbt-asserted against exact percentiles).
     *
-    * The sketch is a weighted-value bag (v, w): MERGE = bag union
+    * `keys` groups the sketch: the bucket window partitions by (keys…,
+    * bucket), so ONE pass builds one (keys…, v, w) summary per key,
+    * compacted key-parallel, ≤ |keys|·buckets·capacity rows — the "p99
+    * latency per service / tokens per language" serving table with NO
+    * per-key sort of the fact stream. Rank bound, merge law and
+    * determinism hold key by key. `Nil` is the global sketch, a (v, w)
+    * bag; every operator of this family takes the same `keys`.
+    *
+    * The sketch is a weighted-value bag: MERGE = bag union per key
     * (errors add — the mergeability law of every GK-family summary),
     * replayed exactly by the oracle; [[compactQuantileSketch]] bounds
     * the stored size when batches accumulate. Scale shape: one
     * bucket-keyed window shuffle over the corpus — the same cost class
     * as any keyed aggregation; everything downstream is summary-sized.
     */
-  def quantileSketch(df: DataFrame, idCol: String, valueCol: String,
-                     buckets: Int = 16, capacity: Int = 64): DataFrame = {
-    val perBk = Window.partitionBy(col("_bk"))
+  def quantileSketch(df: DataFrame, keys: Seq[String], idCol: String,
+                     valueCol: String, buckets: Int = 16,
+                     capacity: Int = 64): DataFrame = {
+    val perBk = Window.partitionBy(keys.map(col) :+ col("_bk"): _*)
     val w = perBk.orderBy(col(valueCol), col(idCol))
-    df.select(col(idCol), col(valueCol))
+    df.select((keys :+ idCol :+ valueCol).map(col): _*)
       .withColumn("_bk",
         graft.llm.Corpus.hashU32(col(idCol), "qk:") % buckets)
       .withColumn("_rn", row_number().over(w).cast("long"))
       .withColumn("_nb", count(lit(1)).over(perBk))
       .withColumn("_step", expr(s"(_nb + ${capacity - 1}) div $capacity"))
       .filter(expr("(_rn - 1) % _step = 0"))
-      .select(col(valueCol).as("v"),
-        least(col("_step"), col("_nb") - col("_rn") + 1L).as("w"))
+      .select(keys.map(col) :+ col(valueCol).as("v") :+
+        least(col("_step"), col("_nb") - col("_rn") + 1L).as("w"): _*)
   }
 
-  /** p50/p90/p99 + total from a (v, w) quantile sketch: the
-    * [[histQuantileReport]] cumulative-crossing pick over the
-    * summary-sized weighted bag. */
-  def quantileSketchReport(sketch: DataFrame): DataFrame = {
-    val byV = sketch.groupBy(col("v")).agg(sum(col("w")).as("w"))
-    val wc = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nTot = byV.agg(sum(col("w")).as("_n"))
-    byV.withColumn("cum", sum(col("w")).over(wc))
-      .crossJoin(broadcast(nTot))
-      .agg(first(col("_n")).as("n_total"),
-        min(when(col("cum") * 100L >= col("_n") * 50L, col("v")))
-          .as("p50_v"),
-        min(when(col("cum") * 100L >= col("_n") * 90L, col("v")))
-          .as("p90_v"),
-        min(when(col("cum") * 100L >= col("_n") * 99L, col("v")))
-          .as("p99_v"))
+  /** A (keys…, v, w) sketch with equal values collapsed per key by
+    * weight addition — harmless to ranks, and the bag union that
+    * merges sketches. */
+  private[graft] def weightBag(sk: DataFrame, keys: Seq[String]): DataFrame =
+    sk.groupBy((keys :+ "v").map(col): _*).agg(sum(col("w")).as("w"))
+
+  /** Attach a per-key summary to `df`. For `Nil` the summary is ONE row,
+    * broadcast onto every row; otherwise an equi-join on the keys
+    * (|keys| summary rows — no scalar broadcast, no cross join). */
+  private def attach(df: DataFrame, small: DataFrame,
+                     keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) df.crossJoin(broadcast(small)) else df.join(small, keys)
+
+  /** Running weight in value order, per key — the cumulative rank over
+    * a summary-sized bag (for `Nil` a single-partition window, bounded
+    * by the summary, never the corpus). */
+  private def cumWeight(keys: Seq[String]): Column =
+    sum(col("w")).over(Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+  /** The cumulative-crossing pick over a (keys…, v, w) bag with one row
+    * per (keys, v): per key, each (name, p) pick is the first v whose
+    * cumulative weight crosses the ceil threshold `cum·100 ≥ _n·p`, and
+    * `total` names the key's weight sum when the caller reports it.
+    * One keyed window and one [[attach]] over summary-sized rows. */
+  private def percentilePicks(bag: DataFrame, keys: Seq[String],
+                              total: Option[String],
+                              picks: (String, Int)*): DataFrame = {
+    val ks = keys.map(col)
+    val nTot = bag.groupBy(ks: _*).agg(sum(col("w")).as("_n"))
+    val aggs = total.map(n => first(col("_n")).as(n)).toSeq ++ picks.map {
+      case (name, p) =>
+        min(when(col("cum") * 100L >= col("_n") * p.toLong, col("v")))
+          .as(name)
+    }
+    attach(bag.withColumn("cum", cumWeight(keys)), nTot, keys)
+      .groupBy(ks: _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** GROUPED [[quantileSketch]] — one (keyCol, v, w) summary per key
-    * from ONE pass: the md5 bucket window partitions by (key, bucket),
-    * so per-key rank compaction runs key-parallel and the stored
-    * summary is ≤ |keys|·buckets·capacity rows. The per-key rank-error
-    * bound, merge law (bag union PER KEY), and determinism are the
-    * global sketch's, key by key — this is the "p99 latency per
-    * service / tokens per language" serving table, with NO per-key
-    * sort of the fact stream anywhere. */
-  def quantileSketchByKey(df: DataFrame, keyCol: String, idCol: String,
-                          valueCol: String, buckets: Int = 16,
-                          capacity: Int = 64): DataFrame = {
-    val perBk = Window.partitionBy(col(keyCol), col("_bk"))
-    val w = perBk.orderBy(col(valueCol), col(idCol))
-    df.select(col(keyCol), col(idCol), col(valueCol))
-      .withColumn("_bk",
-        graft.llm.Corpus.hashU32(col(idCol), "qk:") % buckets)
-      .withColumn("_rn", row_number().over(w).cast("long"))
-      .withColumn("_nb", count(lit(1)).over(perBk))
-      .withColumn("_step", expr(s"(_nb + ${capacity - 1}) div $capacity"))
-      .filter(expr("(_rn - 1) % _step = 0"))
-      .select(col(keyCol), col(valueCol).as("v"),
-        least(col("_step"), col("_nb") - col("_rn") + 1L).as("w"))
-  }
-
-  /** Per-key p50/p90/p99 + totals from a grouped (key, v, w) sketch:
-    * the [[quantileSketchReport]] cumulative-crossing pick with every
-    * stage KEYED — the totals attach by an equi-join on the key, not a
-    * scalar broadcast, so the report is one keyed window + one keyed
-    * join over summary-sized rows. */
-  def quantileReportByKey(sketch: DataFrame, keyCol: String): DataFrame = {
-    val byV = sketch.groupBy(col(keyCol), col("v"))
-      .agg(sum(col("w")).as("w"))
-    val wc = Window.partitionBy(col(keyCol)).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nTot = byV.groupBy(col(keyCol)).agg(sum(col("w")).as("_n"))
-    byV.withColumn("cum", sum(col("w")).over(wc))
-      .join(nTot, Seq(keyCol))
-      .groupBy(col(keyCol))
-      .agg(first(col("_n")).as("n_total"),
-        min(when(col("cum") * 100L >= col("_n") * 50L, col("v")))
-          .as("p50_v"),
-        min(when(col("cum") * 100L >= col("_n") * 90L, col("v")))
-          .as("p90_v"),
-        min(when(col("cum") * 100L >= col("_n") * 99L, col("v")))
-          .as("p99_v"))
-  }
+  /** p50/p90/p99 + total (`n_total`) per key from a (keys…, v, w)
+    * sketch: the [[percentilePicks]] crossing over the summary-sized
+    * weighted bag. */
+  def quantileReport(sketch: DataFrame, keys: Seq[String]): DataFrame =
+    percentilePicks(weightBag(sketch, keys), keys, Some("n_total"),
+      "p50_v" -> 50, "p90_v" -> 90, "p99_v" -> 99)
 
   /** Robust per-key anomaly scores — median/MAD instead of q169's
     * mean/variance, so a day of spikes cannot drag its own baseline:
     * per-key median and MAD (median absolute deviation) are BOTH served
-    * from [[quantileSketchByKey]] summaries (two grouped sketch passes,
+    * from keyed [[quantileSketch]] summaries (two grouped sketch passes,
     * zero per-key sorts of the fact stream — the statistic the
     * classical form computes with two total orders per key), then
     * every row scores `robust_ppm = |x − med| · 674500 div max(MAD, 1)`
@@ -1764,15 +1741,14 @@ object RelationalQueries {
   def robustAnomalies(df: DataFrame, keyCol: String, idCol: String,
                       valueCol: String,
                       thresholdPpm: Long = 3500000L): DataFrame = {
-    val med = quantileReportByKey(
-        quantileSketchByKey(df, keyCol, idCol, valueCol), keyCol)
+    val keys = Seq(keyCol)
+    val med = quantileReport(quantileSketch(df, keys, idCol, valueCol), keys)
       .select(col(keyCol), col("p50_v").as("med_v"))
-    val dev = df.join(broadcast(med), Seq(keyCol))
+    val dev = df.join(broadcast(med), keys)
       .withColumn("_dev", abs(col(valueCol) - col("med_v")))
-    val mad = quantileReportByKey(
-        quantileSketchByKey(dev, keyCol, idCol, "_dev"), keyCol)
+    val mad = quantileReport(quantileSketch(dev, keys, idCol, "_dev"), keys)
       .select(col(keyCol), col("p50_v").as("mad_v"))
-    dev.join(broadcast(mad), Seq(keyCol))
+    dev.join(broadcast(mad), keys)
       .withColumn("robust_ppm",
         expr("(_dev * 674500L) div greatest(mad_v, 1L)"))
       .withColumn("is_anomaly",
@@ -1781,166 +1757,88 @@ object RelationalQueries {
         col("mad_v"), col("robust_ppm"), col("is_anomaly"))
   }
 
-  /** [[mergeQuantileIndex]] for grouped sketches: bag union PER KEY. */
-  def mergeQuantileIndexByKey(batchSketch: DataFrame, keyCol: String,
-                              dir: String): Unit = {
-    val stored = batchSketch.sparkSession.read.parquet(dir)
-    val merged = stored.unionByName(batchSketch)
-      .groupBy(col(keyCol), col("v")).agg(sum(col("w")).as("w"))
-    graft.sources.ShardStore.overwriteAtomic(merged, dir)
-  }
-
-  /** Persist a (v, w) quantile sketch — the sign-once index form for
-    * unbounded-domain distributions. */
-  def writeQuantileIndex(sketch: DataFrame, dir: String): Unit =
-    sketch.write.mode("overwrite").parquet(dir)
-
   /** Merge a new batch's sketch into a stored quantile index: bag union
-    * (equal values collapse by weight addition — harmless to ranks).
-    * NOT idempotent — a replaying caller ledgers batches or uses the
-    * batch_id-sharded streaming form. Rank errors ADD per merged batch
-    * (≤ buckets + N_i/capacity each — the GK merge law). */
-  def mergeQuantileIndex(batchSketch: DataFrame, dir: String): Unit = {
+    * per key (equal values collapse by weight addition — harmless to
+    * ranks). NOT idempotent — a replaying caller ledgers batches or
+    * uses the batch_id-sharded streaming form. Rank errors ADD per
+    * merged batch (≤ buckets + N_i/capacity each — the GK merge law). */
+  def mergeQuantileIndex(batchSketch: DataFrame, keys: Seq[String],
+                         dir: String): Unit = {
     val stored = batchSketch.sparkSession.read.parquet(dir)
-    val merged = stored.unionByName(batchSketch)
-      .groupBy(col("v")).agg(sum(col("w")).as("w"))
-    graft.sources.ShardStore.overwriteAtomic(merged, dir)
+    graft.sources.ShardStore.overwriteAtomic(
+      weightBag(stored.unionByName(batchSketch), keys), dir)
   }
 
-  /** Deterministic recompaction of a (v, w) sketch to ≤ `capacity` + 1
-    * rows — the size bound when many batches merge: global value order
-    * over the SUMMARY (reporting-sized, never the corpus), keep each
-    * row whose weight span covers a multiple of `step = ceil(W /
-    * capacity)` plus the max row, re-weighting each survivor with the
-    * cumulative span since the previous survivor (weights still sum to
-    * W exactly; adds ≤ step rank error once). */
-  def compactQuantileSketch(sk: DataFrame, capacity: Int = 1024): DataFrame = {
-    val byV = sk.groupBy(col("v")).agg(sum(col("w")).as("w"))
-    val wc = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = byV.agg(sum(col("w")).as("_W"))
-    byV.withColumn("_cum", sum(col("w")).over(wc))
-      .crossJoin(broadcast(tot))
-      .withColumn("_step", expr(s"(_W + ${capacity - 1}) div $capacity"))
-      .filter(expr("(_cum - 1) div _step > (_cum - w - 1) div _step") ||
-        col("_cum") === col("_W"))
-      .withColumn("_pc", lag(col("_cum"), 1).over(Window.orderBy(col("v"))))
-      .select(col("v"), (col("_cum") - coalesce(col("_pc"), lit(0L))).as("w"))
-  }
-
-  /** [[compactQuantileSketch]] PER KEY — the size bound for the grouped
-    * index ([[mergeQuantileIndexByKey]] accumulates per-key bags with
-    * none): the same survivor rule (rows whose weight span crosses a
-    * step multiple, plus each key's max row) and re-weighting, with
-    * every window KEYED — per-key weights still sum to that key's W
-    * exactly and the one-step rank-error addition applies key by key.
-    * Summary-sized throughout: |keys|·capacity rows in, ≤ |keys|·
-    * (capacity+1) out, no unpartitioned window anywhere. */
-  def compactQuantileSketchByKey(sk: DataFrame, keyCol: String,
-                                 capacity: Int = 1024): DataFrame = {
-    val byV = sk.groupBy(col(keyCol), col("v")).agg(sum(col("w")).as("w"))
-    val wc = Window.partitionBy(col(keyCol)).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = byV.groupBy(col(keyCol)).agg(sum(col("w")).as("_W"))
-    byV.withColumn("_cum", sum(col("w")).over(wc))
-      .join(tot, Seq(keyCol))
+  /** Deterministic recompaction of a (keys…, v, w) sketch to ≤
+    * `capacity` + 1 rows per key — the size bound when many batches
+    * merge: value order per key over the SUMMARY (reporting-sized,
+    * never the corpus), keep each row whose weight span covers a
+    * multiple of `step = ceil(W / capacity)` plus the key's max row,
+    * re-weighting each survivor with the cumulative span since the
+    * previous survivor (each key's weights still sum to its W exactly;
+    * adds ≤ step rank error once, key by key). */
+  def compactQuantileSketch(sk: DataFrame, keys: Seq[String],
+                            capacity: Int = 1024): DataFrame = {
+    val ks = keys.map(col)
+    val byV = weightBag(sk, keys)
+    val tot = byV.groupBy(ks: _*).agg(sum(col("w")).as("_W"))
+    attach(byV.withColumn("_cum", cumWeight(keys)), tot, keys)
       .withColumn("_step", expr(s"(_W + ${capacity - 1}) div $capacity"))
       .filter(expr("(_cum - 1) div _step > (_cum - w - 1) div _step") ||
         col("_cum") === col("_W"))
       .withColumn("_pc", lag(col("_cum"), 1)
-        .over(Window.partitionBy(col(keyCol)).orderBy(col("v"))))
-      .select(col(keyCol), col("v"),
-        (col("_cum") - coalesce(col("_pc"), lit(0L))).as("w"))
+        .over(Window.partitionBy(ks: _*).orderBy(col("v"))))
+      .select(ks :+ col("v") :+
+        (col("_cum") - coalesce(col("_pc"), lit(0L))).as("w"): _*)
   }
 
   /** Quantile NORMALIZATION off a [[quantileSketch]] summary — the
     * map-only percentile-rank feature transform: every row gets
     * `rank_ppm = ⌊Σ_{v_i ≤ v} w_i · 10⁶ / N⌋`, its approximate
-    * percentile in the sketch's distribution. The summary collapses to
-    * ONE broadcast row — the sorted (v, cum) pairs packed as an
-    * `asof_probe` timeline (the X170 device) — and the per-row lookup
-    * is the codegen'd BINARY SEARCH, O(log summary) per row: the first
-    * cut of this operator ran an `aggregate(filter(...))` HOF per row
-    * and probed LINEAR (9.8 s → 100 s at 10×, the interpreted-HOF trap
-    * the cube note documents); the asof form probes 1.6 s → 3.0 s.
-    * NO global sort and NO percent_rank window anywhere — the
-    * classical percentile feature needs a total order of the corpus,
-    * this needs one broadcast and a map. Rank error inherits the
-    * sketch bound; integer-exact, so an external engine replays every
-    * rank. */
-  def quantileNormalize(df: DataFrame, valueCol: String,
+    * percentile in its key's distribution. Each key's summary collapses
+    * to ONE row — the sorted (v, cum) pairs packed as an `asof_probe`
+    * timeline (the X170 device) — that [[attach]] puts beside the
+    * key's rows, and the per-row lookup is the codegen'd BINARY SEARCH,
+    * O(log summary) per row: the first cut of this operator ran an
+    * `aggregate(filter(...))` HOF per row and probed LINEAR (9.8 s →
+    * 100 s at 10×, the interpreted-HOF trap the cube note documents);
+    * the asof form probes 1.6 s → 3.0 s. NO sort of the facts and NO
+    * percent_rank window anywhere — the classical percentile feature
+    * needs a total order of the corpus, this needs one summary per key
+    * and a map. Rank error inherits the sketch bound; integer-exact,
+    * so an external engine replays every rank. */
+  def quantileNormalize(df: DataFrame, keys: Seq[String], valueCol: String,
                         sketch: DataFrame): DataFrame = {
     graft.functions.NativeExpressions.register(df.sparkSession)
-    val byV = sketch.groupBy(col("v")).agg(sum(col("w")).as("w"))
-    // ≤ buckets·capacity rows — the single-partition window is
-    // summary-bounded, the quantileSketchReport shape.
-    val wc = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val summary = byV.withColumn("_cum", sum(col("w")).over(wc))
+    val summary = weightBag(sketch, keys)
+      .withColumn("_cum", cumWeight(keys))
+      .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(col("v").as("_t"),
           col("_cum").as("_v")))).as("_tl"),
         sum(col("w")).as("_n"))
-    df.crossJoin(broadcast(summary))
+    attach(df, summary, keys)
       .withColumn("rank_ppm", expr(
         s"coalesce(asof_probe(_tl, cast($valueCol as bigint)), 0L)" +
           " * 1000000L div _n"))
       .drop("_tl", "_n")
   }
 
-  /** [[quantileNormalize]] PER KEY — the per-language/per-service
-    * percentile feature: each key's (v, w) summary packs into ITS OWN
-    * sorted `asof_probe` timeline (≤ buckets·capacity entries), rows
-    * join their key's summary by an ordinary keyed equi-join (|keys|
-    * summary rows — no scalar broadcast, no cross join), and the
-    * per-row rank lookup stays the codegen'd binary search. NO per-key
-    * total order of the fact stream anywhere — the window that builds
-    * each cum table is keyed and summary-sized. */
-  def quantileNormalizeByKey(df: DataFrame, keyCol: String,
-                             valueCol: String,
-                             sketch: DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(df.sparkSession)
-    val byV = sketch.groupBy(col(keyCol), col("v"))
-      .agg(sum(col("w")).as("w"))
-    val wc = Window.partitionBy(col(keyCol)).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val summary = byV.withColumn("_cum", sum(col("w")).over(wc))
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(col("v").as("_t"),
-          col("_cum").as("_v")))).as("_tl"),
-        sum(col("w")).as("_n"))
-    df.join(summary, Seq(keyCol))
-      .withColumn("rank_ppm", expr(
-        s"coalesce(asof_probe(_tl, cast($valueCol as bigint)), 0L)" +
-          " * 1000000L div _n"))
-      .drop("_tl", "_n")
-  }
-
-  /** Percentile WINSORIZATION per key off a [[quantileSketchByKey]]
+  /** Percentile WINSORIZATION per key off a keyed [[quantileSketch]]
     * summary — the outlier-clipping feature prep (clip each value into
-    * its key's [p`lowPct`, p`highPct`] band): both bounds come from the
-    * sketch's cumulative-crossing pick (the [[quantileReportByKey]]
-    * rule at arbitrary percentiles), attach by a broadcastable |keys|-
-    * row join, and the clip is one map — no per-key sort of the facts,
-    * rank error inherits the sketch bound. Output adds
-    * (lo_v, hi_v, clipped). */
+    * its key's [p`lowPct`, p`highPct`] band): both bounds are
+    * [[percentilePicks]] at arbitrary percentiles, attach by a
+    * broadcastable |keys|-row join, and the clip is one map — no
+    * per-key sort of the facts, rank error inherits the sketch bound.
+    * Output adds (lo_v, hi_v, clipped). */
   def winsorizeByKey(df: DataFrame, keyCol: String, valueCol: String,
                      sketch: DataFrame, lowPct: Int = 1,
                      highPct: Int = 99): DataFrame = {
     require(0 <= lowPct && lowPct < highPct && highPct <= 100,
       s"bad percentile band [$lowPct, $highPct]")
-    val byV = sketch.groupBy(col(keyCol), col("v"))
-      .agg(sum(col("w")).as("w"))
-    val wc = Window.partitionBy(col(keyCol)).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nTot = byV.groupBy(col(keyCol)).agg(sum(col("w")).as("_n"))
-    val bounds = byV.withColumn("_cum", sum(col("w")).over(wc))
-      .join(nTot, Seq(keyCol))
-      .groupBy(col(keyCol))
-      .agg(min(when(col("_cum") * 100L >= col("_n") * lowPct, col("v")))
-          .as("lo_v"),
-        min(when(col("_cum") * 100L >= col("_n") * highPct, col("v")))
-          .as("hi_v"))
-    df.join(broadcast(bounds), Seq(keyCol))
+    val keys = Seq(keyCol)
+    val bounds = percentilePicks(weightBag(sketch, keys), keys, None,
+      "lo_v" -> lowPct, "hi_v" -> highPct)
+    df.join(broadcast(bounds), keys)
       .withColumn("clipped",
         greatest(col("lo_v"), least(col("hi_v"), col(valueCol))))
   }

@@ -1018,13 +1018,16 @@ object EventsStream {
       graft.llm.Corpus.mgFold(_, m))
 
   /** Maintain a sharded QUANTILE-sketch index from a stream: each
-    * micro-batch compacts to its own (v, w) summary
-    * ([[graft.operators.RelationalQueries.quantileSketch]]) landing in
-    * a `batch_id=` partition — sketch merge is bag union (weights add),
-    * NOT idempotent, so the [[writeHistShard]] dynamic-partition
-    * overwrite is again the replay guard. */
-  def quantileIndexSink(stream: DataFrame, idCol: String, valueCol: String,
-                        dir: String, checkpointLoc: String,
+    * micro-batch compacts to its own (keys…, v, w) summary
+    * ([[graft.operators.RelationalQueries.quantileSketch]]; `Nil` keys
+    * for one global sketch, otherwise one per key — the per-key
+    * latency/size dashboard) landing in a `batch_id=` partition —
+    * sketch merge is bag union (weights add), NOT idempotent, so the
+    * [[writeHistShard]] dynamic-partition overwrite is again the replay
+    * guard. Served mid-stream by [[quantileFromShards]] +
+    * [[graft.operators.RelationalQueries.quantileReport]]. */
+  def quantileIndexSink(stream: DataFrame, keys: Seq[String], idCol: String,
+                        valueCol: String, dir: String, checkpointLoc: String,
                         buckets: Int = 16, capacity: Int = 64,
                         autoCompact: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -1032,79 +1035,34 @@ object EventsStream {
       .option("checkpointLocation", checkpointLoc)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         writeHistShard(graft.operators.RelationalQueries
-          .quantileSketch(batch, idCol, valueCol, buckets, capacity),
+          .quantileSketch(batch, keys, idCol, valueCol, buckets, capacity),
           id, dir)
         maybeCompact(batch.sparkSession, dir, autoCompact) {
-          compactQuantileIndexShards(batch.sparkSession, dir)
+          compactQuantileIndexShards(batch.sparkSession, dir, keys)
         }
       }
       .start()
 
   /** The merged quantile sketch from a sharded index — the weighted
-    * bag union of the per-batch summaries. Feeds
-    * [[graft.operators.RelationalQueries.quantileSketchReport]]. Reads
-    * the LIVE view — a [[compactQuantileIndexShards]] horizon is
-    * honored. */
+    * bag union, per key, of the per-batch summaries. Reads the LIVE
+    * view — a [[compactQuantileIndexShards]] horizon is honored. */
   def quantileFromShards(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): DataFrame =
-    graft.sources.ShardStore.live(spark, dir)
-      .groupBy(col("v")).agg(sum(col("w")).as("w"))
+                         dir: String, keys: Seq[String]): DataFrame =
+    graft.operators.RelationalQueries.weightBag(
+      graft.sources.ShardStore.live(spark, dir), keys)
 
   /** Fold all quantile-sketch shards into one base shard via the
     * deterministic recompaction
     * ([[graft.operators.RelationalQueries.compactQuantileSketch]]):
-    * the base is ≤ capacity+1 rows no matter how many batches folded,
-    * at one documented step of additional rank error per compaction. */
+    * the base is ≤ capacity+1 rows per key no matter how many batches
+    * folded, per-key weights preserved exactly, at one documented step
+    * of additional rank error per compaction. */
   def compactQuantileIndexShards(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, capacity: Int = 1024): Unit =
-    graft.sources.ShardStore.compact(spark, dir,
-      graft.operators.RelationalQueries.compactQuantileSketch(_, capacity))
-
-  /** Streaming maintenance of the GROUPED quantile index (the X205
-    * per-key sketch): each micro-batch compacts to its own (key, v, w)
-    * summary shard in a `batch_id=` partition under dynamic overwrite —
-    * bag union is not idempotent, so the X179 shard device again.
-    * Feeds per-key latency/size dashboards mid-stream via
-    * [[groupedQuantileFromShards]] +
-    * [[graft.operators.RelationalQueries.quantileReportByKey]]. */
-  def groupedQuantileIndexSink(stream: DataFrame, keyCol: String,
-                               idCol: String, valueCol: String,
-                               dir: String, checkpointLoc: String,
-                               buckets: Int = 16, capacity: Int = 64,
-                               autoCompact: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeHistShard(graft.operators.RelationalQueries
-          .quantileSketchByKey(batch, keyCol, idCol, valueCol,
-            buckets, capacity),
-          id, dir)
-        maybeCompact(batch.sparkSession, dir, autoCompact) {
-          compactGroupedQuantileIndexShards(batch.sparkSession, dir, keyCol)
-        }
-      }
-      .start()
-
-  /** The merged per-key sketch from a sharded grouped index — bag
-    * union PER KEY of the per-batch summaries. Reads the LIVE view —
-    * a [[compactGroupedQuantileIndexShards]] horizon is honored. */
-  def groupedQuantileFromShards(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, keyCol: String): DataFrame =
-    graft.sources.ShardStore.live(spark, dir)
-      .groupBy(col(keyCol), col("v")).agg(sum(col("w")).as("w"))
-
-  /** Fold all grouped-quantile shards into one base shard via the
-    * KEYED recompaction
-    * ([[graft.operators.RelationalQueries.compactQuantileSketchByKey]])
-    * — ≤ |keys|·(capacity+1) base rows, per-key weights preserved
-    * exactly. */
-  def compactGroupedQuantileIndexShards(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      keyCol: String, capacity: Int = 1024): Unit =
+                                 dir: String, keys: Seq[String],
+                                 capacity: Int = 1024): Unit =
     graft.sources.ShardStore.compact(spark, dir,
       graft.operators.RelationalQueries
-        .compactQuantileSketchByKey(_, keyCol, capacity))
+        .compactQuantileSketch(_, keys, capacity))
 
   /** Streaming vector ingest into a stream-built IVF index: centroids
     * are frozen once ([[graft.llm.Similarity.writeIvfCentroids]]); each

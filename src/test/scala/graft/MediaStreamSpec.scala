@@ -1089,8 +1089,8 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("gqsksink-ck").toString
     try {
       val mem = MemoryStream[(Long, String, Long)]
-      val q = graft.streaming.EventsStream.groupedQuantileIndexSink(
-        mem.toDF().toDF("id", "k", "v0"), "k", "id", "v0",
+      val q = graft.streaming.EventsStream.quantileIndexSink(
+        mem.toDF().toDF("id", "k", "v0"), Seq("k"), "id", "v0",
         dir = s"$dir/idx", checkpointLoc = ckpt, buckets = 4, capacity = 8)
       val b1 = (1 to 60).map(i => (i.toLong, if (i % 3 == 0) "a" else "b",
         (i * 37L) % 101))
@@ -1105,19 +1105,19 @@ class MediaStreamSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .groupBy(identity).view.mapValues(_.size).toMap
       val exp = bag(Seq(b1, b2).map(b =>
-        graft.operators.RelationalQueries.quantileSketchByKey(
-          b.toDF("id", "k", "v0"), "k", "id", "v0", 4, 8))
+        graft.operators.RelationalQueries.quantileSketch(
+          b.toDF("id", "k", "v0"), Seq("k"), "id", "v0", 4, 8))
         .reduce(_ unionByName _)
         .groupBy(col("k"), col("v")).agg(sum(col("w")).as("w")))
       assert(bag(graft.streaming.EventsStream
-        .groupedQuantileFromShards(spark, s"$dir/idx", "k")
+        .quantileFromShards(spark, s"$dir/idx", Seq("k"))
         .select(col("k"), col("v"), col("w"))) == exp)
       graft.streaming.EventsStream.writeHistShard(
-        graft.operators.RelationalQueries.quantileSketchByKey(
-          b2.toDF("id", "k", "v0"), "k", "id", "v0", 4, 8),
+        graft.operators.RelationalQueries.quantileSketch(
+          b2.toDF("id", "k", "v0"), Seq("k"), "id", "v0", 4, 8),
         batchId = 1L, dir = s"$dir/idx")
       assert(bag(graft.streaming.EventsStream
-        .groupedQuantileFromShards(spark, s"$dir/idx", "k")
+        .quantileFromShards(spark, s"$dir/idx", Seq("k"))
         .select(col("k"), col("v"), col("w"))) == exp,
         "replayed grouped quantile shard double-counted")
     } finally {
@@ -1281,7 +1281,7 @@ class MediaStreamSpec extends SparkSpec {
     try {
       val mem = MemoryStream[(Long, Long)]
       val q = graft.streaming.EventsStream.quantileIndexSink(
-        mem.toDF().toDF("id", "v0"), "id", "v0", dir = s"$dir/idx",
+        mem.toDF().toDF("id", "v0"), Nil, "id", "v0", dir = s"$dir/idx",
         checkpointLoc = ckpt, buckets = 4, capacity = 8)
       val b1 = (1 to 60).map(i => (i.toLong, (i * 37L) % 101))
       val b2 = (61 to 140).map(i => (i.toLong, (i * 37L) % 101))
@@ -1295,18 +1295,18 @@ class MediaStreamSpec extends SparkSpec {
         .view.mapValues(_.size).toMap
       val exp = bag(Seq(b1, b2).map(b =>
         graft.operators.RelationalQueries.quantileSketch(
-          b.toDF("id", "v0"), "id", "v0", 4, 8))
+          b.toDF("id", "v0"), Nil, "id", "v0", 4, 8))
         .reduce(_ unionByName _)
         .groupBy(col("v")).agg(sum(col("w")).as("w")))
       assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/idx")) == exp)
+        .quantileFromShards(spark, s"$dir/idx", Nil)) == exp)
       // Weight total = rows ingested; replayed shard must not change it.
       graft.streaming.EventsStream.writeHistShard(
         graft.operators.RelationalQueries.quantileSketch(
-          b2.toDF("id", "v0"), "id", "v0", 4, 8),
+          b2.toDF("id", "v0"), Nil, "id", "v0", 4, 8),
         batchId = 1L, dir = s"$dir/idx")
       assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/idx")) == exp,
+        .quantileFromShards(spark, s"$dir/idx", Nil)) == exp,
         "replayed quantile shard double-counted")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -1463,63 +1463,67 @@ class MediaStreamSpec extends SparkSpec {
   test("shard compaction: quantile (global + grouped) folds through the " +
     "deterministic recompaction; weights preserved") {
     import spark.implicits._
+    import graft.operators.RelationalQueries.{compactQuantileSketch,
+      quantileSketch}
+    import graft.streaming.EventsStream.{compactQuantileIndexShards,
+      quantileFromShards, writeHistShard}
     val dir = java.nio.file.Files.createTempDirectory("qcompact").toString
     try {
       val bs = Seq(
         (1 to 60).map(i => (i.toLong, (i * 37L) % 101)),
         (61 to 140).map(i => (i.toLong, (i * 53L) % 101)),
         (141 to 200).map(i => (i.toLong, (i * 11L) % 101)))
-      bs.zipWithIndex.foreach { case (b, i) =>
-        graft.streaming.EventsStream.writeHistShard(
-          graft.operators.RelationalQueries.quantileSketch(
-            b.toDF("id", "v0"), "id", "v0", 4, 8),
-          batchId = i.toLong, dir = s"$dir/g")
-      }
+      val kb = bs.map(_.map { case (id, v) => (id % 3, id, v) })
+      // One global and one grouped (key = id % 3) shard per batch.
+      def writeShards(g: String, k: String): Unit =
+        bs.indices.foreach { i =>
+          writeHistShard(quantileSketch(bs(i).toDF("id", "v0"), Nil, "id",
+            "v0", 4, 8), batchId = i.toLong, dir = g)
+          writeHistShard(quantileSketch(kb(i).toDF("k", "id", "v0"),
+            Seq("k"), "id", "v0", 4, 8), batchId = i.toLong, dir = k)
+        }
+      writeShards(s"$dir/g", s"$dir/k")
       def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).groupBy(identity)
         .view.mapValues(_.size).toMap
-      val merged = graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/g")
+      val merged = quantileFromShards(spark, s"$dir/g", Nil)
       // The expected base = the SAME deterministic recompaction applied
       // to the merged bag in memory.
-      val expBase = bag(graft.operators.RelationalQueries
-        .compactQuantileSketch(merged, capacity = 16))
-      graft.streaming.EventsStream
-        .compactQuantileIndexShards(spark, s"$dir/g", capacity = 16)
-      assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/g")) == expBase)
+      val expBase = bag(compactQuantileSketch(merged, Nil, capacity = 16))
+      compactQuantileIndexShards(spark, s"$dir/g", Nil, capacity = 16)
+      assert(bag(quantileFromShards(spark, s"$dir/g", Nil)) == expBase)
       // Total weight (row count) survives compaction exactly.
-      val wSum = graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/g")
+      val wSum = quantileFromShards(spark, s"$dir/g", Nil)
         .agg(sum(col("w"))).collect()(0).getLong(0)
       assert(wSum == bs.map(_.size).sum)
       // Grouped form: per-key recompaction, per-key weights exact.
-      val kb = bs.map(_.map { case (id, v) => (id % 3, id, v) })
-      kb.zipWithIndex.foreach { case (b, i) =>
-        graft.streaming.EventsStream.writeHistShard(
-          graft.operators.RelationalQueries.quantileSketchByKey(
-            b.toDF("k", "id", "v0"), "k", "id", "v0", 4, 8),
-          batchId = i.toLong, dir = s"$dir/k")
-      }
-      val mergedK = graft.streaming.EventsStream
-        .groupedQuantileFromShards(spark, s"$dir/k", "k")
+      val mergedK = quantileFromShards(spark, s"$dir/k", Seq("k"))
       def kbag(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(identity).view.mapValues(_.size).toMap
-      val expK = kbag(graft.operators.RelationalQueries
-        .compactQuantileSketchByKey(mergedK, "k", capacity = 16))
-      graft.streaming.EventsStream
-        .compactGroupedQuantileIndexShards(spark, s"$dir/k", "k",
-          capacity = 16)
-      assert(kbag(graft.streaming.EventsStream
-        .groupedQuantileFromShards(spark, s"$dir/k", "k")) == expK)
-      val perKey = graft.streaming.EventsStream
-        .groupedQuantileFromShards(spark, s"$dir/k", "k")
+      val expK = kbag(compactQuantileSketch(mergedK, Seq("k"),
+        capacity = 16))
+      compactQuantileIndexShards(spark, s"$dir/k", Seq("k"), capacity = 16)
+      assert(kbag(quantileFromShards(spark, s"$dir/k", Seq("k"))) == expK)
+      val perKey = quantileFromShards(spark, s"$dir/k", Seq("k"))
         .groupBy(col("k")).agg(sum(col("w")).as("w")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val expPerKey = kb.flatten.groupBy(_._1)
         .view.mapValues(_.size.toLong).toMap
       assert(perKey == expPerKey, "per-key weights drifted in compaction")
+      // Both folds again on a fresh dir under reliable checkpoints:
+      // ShardStore.compact's lineage cut then writes checkpoint files
+      // instead of local blocks, and the folded bags must not change.
+      val (relBase, relK) = withReliableCheckpoints {
+        writeShards(s"$dir/rg", s"$dir/rk")
+        compactQuantileIndexShards(spark, s"$dir/rg", Nil, capacity = 16)
+        compactQuantileIndexShards(spark, s"$dir/rk", Seq("k"),
+          capacity = 16)
+        (bag(quantileFromShards(spark, s"$dir/rg", Nil)),
+          kbag(quantileFromShards(spark, s"$dir/rk", Seq("k"))))
+      }
+      assert(relBase == expBase && relK == expK,
+        "reliable-checkpoint compaction diverged from the local one")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -350,31 +350,6 @@ class RelationalQueriesSpec extends SparkSpec {
     assert(got.values.sum <= 3000000000L)
   }
 
-  /** Runs `body` with a checkpoint dir set on the context: every
-    * iterative operator's lineage cut then switches from executor-local
-    * blocks to RELIABLE checkpoint files (graft.Checkpoints) — the
-    * cluster fault-tolerance form. Asserts that files were actually
-    * written, then clears the dir so later suites keep the default
-    * local form. */
-  private def withReliableCheckpoints[A](body: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val sc = spark.sparkContext
-    sc.setCheckpointDir(dir)
-    try {
-      val result = body
-      // The reliable path actually ran: checkpoint files exist.
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-      assert(wrote > 0, "no reliable checkpoint files written")
-      result
-    } finally {
-      val f = sc.getClass.getDeclaredField("checkpointDir")
-      f.setAccessible(true)
-      f.set(sc, None)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
   test("pagerank: reliable-checkpoint escape hatch produces identical ranks") {
     import spark.implicits._
     // Results must be bit-identical to the local form.
@@ -1149,7 +1124,7 @@ class RelationalQueriesSpec extends SparkSpec {
     val b3 = Seq(105L, 990L)
     val dir = java.nio.file.Files.createTempDirectory("histidx").toString
     try {
-      RelationalQueries.writeHistIndex(bins(b1), dir)
+      bins(b1).write.mode("overwrite").parquet(dir)
       RelationalQueries.mergeHistIndex(bins(b2), dir)
       RelationalQueries.mergeHistIndex(bins(b3), dir)
       def asMap(d: org.apache.spark.sql.DataFrame) =
@@ -1363,20 +1338,29 @@ class RelationalQueriesSpec extends SparkSpec {
       (1 to 500).map(i => ((i + 10000).toLong, "b", i.toLong * 3))
     val df = rows.toDF("id", "k", "v0")
     val halves = Seq(df.filter($"id" % 2 === 0), df.filter($"id" % 2 =!= 0))
+    val keys = Seq("k")
     val sks = halves.map(h =>
-      RelationalQueries.quantileSketchByKey(h, "k", "id", "v0"))
+      RelationalQueries.quantileSketch(h, keys, "id", "v0"))
+    // Determinism: a repartition-scrambled keyed build emits identical
+    // rows, as the global build does.
+    def kbag(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .groupBy(identity).view.mapValues(_.size).toMap
+    assert(kbag(RelationalQueries.quantileSketch(
+        halves.head.repartition(7, $"v0"), keys, "id", "v0"))
+      == kbag(sks(0)), "keyed sketch depends on partitioning")
     val dir = java.nio.file.Files.createTempDirectory("qskbykey").toString
     try {
-      RelationalQueries.writeQuantileIndex(sks(0), dir)
-      RelationalQueries.mergeQuantileIndexByKey(sks(1), "k", dir)
+      sks(0).write.mode("overwrite").parquet(dir)
+      RelationalQueries.mergeQuantileIndex(sks(1), keys, dir)
       def bag(d: org.apache.spark.sql.DataFrame) = d.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(bag(spark.read.parquet(dir).select($"k", $"v", $"w")) ==
         bag(sks.reduce(_ unionByName _).groupBy($"k", $"v")
           .agg(sum($"w").as("w")).select($"k", $"v", $"w")),
         "merged index diverged from the per-key bag union")
-      val rep = RelationalQueries.quantileReportByKey(
-          spark.read.parquet(dir), "k")
+      val rep = RelationalQueries.quantileReport(
+          spark.read.parquet(dir), keys)
         .collect().map(r => r.getString(0) -> r).toMap
       for ((k, n) <- Seq("a" -> 3000, "b" -> 500)) {
         assert(rep(k).getAs[Long]("n_total") == n.toLong,
@@ -1404,8 +1388,8 @@ class RelationalQueriesSpec extends SparkSpec {
     val vals = Seq(5L, 1L, 9L, 3L, 3L, 7L, 2L, 8L, 4L, 6L)
     val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("id", "v0")
-    val sk = RelationalQueries.quantileSketch(df, "id", "v0")
-    val got = RelationalQueries.quantileNormalize(df, "v0", sk)
+    val sk = RelationalQueries.quantileSketch(df, Nil, "id", "v0")
+    val got = RelationalQueries.quantileNormalize(df, Nil, "v0", sk)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rank_ppm"))
       .toMap
     val exp = vals.zipWithIndex.map { case (v, i) =>
@@ -1428,9 +1412,10 @@ class RelationalQueriesSpec extends SparkSpec {
       .toDF("id", "v0")
     val halves = Seq(data.filter($"id" % 2 === 0), data.filter($"id" % 2 =!= 0))
     val sk = halves.map(h =>
-        RelationalQueries.quantileSketch(h, "id", "v0", buckets, capacity))
+        RelationalQueries.quantileSketch(h, Nil, "id", "v0", buckets,
+          capacity))
       .reduce(_ unionByName _)
-    val rep = RelationalQueries.quantileSketchReport(sk).collect().head
+    val rep = RelationalQueries.quantileReport(sk, Nil).collect().head
     assert(rep.getAs[Long]("n_total") == n, "weights must sum to N")
     // Two merged batches: error <= 2 * (buckets + N_half/capacity).
     val err = 2 * (buckets + (n / 2) / capacity)
@@ -1448,21 +1433,39 @@ class RelationalQueriesSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(identity)
       .view.mapValues(_.size).toMap
     assert(bag(RelationalQueries.quantileSketch(
-        halves.head.repartition(7, $"v0"), "id", "v0", buckets, capacity))
+        halves.head.repartition(7, $"v0"), Nil, "id", "v0", buckets,
+        capacity))
       == bag(RelationalQueries.quantileSketch(
-        halves.head, "id", "v0", buckets, capacity)))
+        halves.head, Nil, "id", "v0", buckets, capacity)))
     // Compaction: <= capacity + 1 rows, total weight preserved, and the
     // compacted report's p50 stays within one extra step of the bound.
-    val compact = RelationalQueries.compactQuantileSketch(sk, 128)
+    val compact = RelationalQueries.compactQuantileSketch(sk, Nil, 128)
     assert(compact.count() <= 129)
     assert(compact.agg(sum($"w")).as[Long].collect().head == n)
-    val rep2 = RelationalQueries.quantileSketchReport(compact)
+    val rep2 = RelationalQueries.quantileReport(compact, Nil)
       .collect().head
     val v2 = rep2.getAs[Long]("p50_v")
     val t2 = n / 2
     val e2 = err + (n + 127) / 128
     assert(values.count(_ < v2) <= t2 + e2 &&
       values.count(_ <= v2) >= t2 - e2)
+    // `Nil` is the keyed form under a constant key: with a key column
+    // `k` of one value, sketch bag, report, compaction and
+    // normalization all give the global results once `k` is dropped.
+    val one = Seq("k")
+    val keyed = halves.map(h => RelationalQueries.quantileSketch(
+        h.withColumn("k", lit("all")), one, "id", "v0", buckets, capacity))
+      .reduce(_ unionByName _)
+    assert(bag(keyed.drop("k")) == bag(sk))
+    assert(RelationalQueries.quantileReport(keyed, one).drop("k")
+      .collect().toSeq == Seq(rep))
+    assert(bag(RelationalQueries.compactQuantileSketch(keyed, one, 128)
+      .drop("k")) == bag(compact))
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", $"rank_ppm").as[(Long, Long)].collect().toMap
+    assert(ranks(RelationalQueries.quantileNormalize(
+        data.withColumn("k", lit("all")), one, "v0", keyed))
+      == ranks(RelationalQueries.quantileNormalize(data, Nil, "v0", sk)))
   }
 
   test("grouped quantile normalize: ranks come from the ROW'S key's " +
@@ -1474,9 +1477,9 @@ class RelationalQueriesSpec extends SparkSpec {
     val df = ((1 to 100).map(i => ("a", i.toLong, i.toLong)) ++
       (1 to 100).map(i => ("b", 200L + i, 999L + i)) ++
       Seq(("b", 999L, 50L))).toDF("k", "id", "v")
-    val sk = RelationalQueries.quantileSketchByKey(df, "k", "id", "v",
+    val sk = RelationalQueries.quantileSketch(df, Seq("k"), "id", "v",
       buckets = 4, capacity = 64)
-    val out = RelationalQueries.quantileNormalizeByKey(df, "k", "v", sk)
+    val out = RelationalQueries.quantileNormalize(df, Seq("k"), "v", sk)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
     val rankA50 = out.find(x => x._1 == "a" && x._2 == 50L).get._3
     val rankB50 = out.find(x => x._1 == "b" && x._2 == 999L).get._3
@@ -1495,7 +1498,7 @@ class RelationalQueriesSpec extends SparkSpec {
     val df = ((1 to 100).map(i => ("a", i.toLong, i.toLong)) ++
       Seq(("a", 900L, 10000L), ("a", 901L, -10000L)) ++
       (1 to 100).map(i => ("b", 200L + i, 999L + i))).toDF("k", "id", "v")
-    val sk = RelationalQueries.quantileSketchByKey(df, "k", "id", "v",
+    val sk = RelationalQueries.quantileSketch(df, Seq("k"), "id", "v",
       buckets = 4, capacity = 64)
     val out = RelationalQueries.winsorizeByKey(df, "k", "v", sk,
       lowPct = 5, highPct = 95)
