@@ -51,11 +51,30 @@ object Checkpoints {
     * `checkpoint()` then `count()` — the file write reads the persisted
     * blocks instead of computing the round again. */
   def cutEagerCounted[T](rdd: RDD[T]): (RDD[T], Long) = {
+    val (cut, n, _) = cutEagerCollecting(rdd, -1L)
+    (cut, n)
+  }
+
+  /** [[cutEagerCounted]] that also brings a small cut's rows back in the
+    * same job: each partition returns its count, and its rows when it
+    * holds at most `share` of them. The rows come back only if every
+    * partition's did, so the driver receives at most
+    * `share × partitions` rows and never a partial set. */
+  def cutEagerCollecting[T](rdd: RDD[T], share: Long)
+      : (RDD[T], Long, Option[Seq[T]]) = {
     if (reliable(rdd.sparkContext)) {
       rdd.persist(StorageLevel.MEMORY_AND_DISK)
       rdd.checkpoint()
     } else rdd.localCheckpoint()
-    (rdd, rdd.count())
+    val parts = rdd.sparkContext.runJob(rdd, (it: Iterator[T]) => {
+      val kept = scala.collection.mutable.ArrayBuffer.empty[T]
+      var n = 0L
+      it.foreach { x => n += 1; if (n <= share) kept += x }
+      (n, if (n <= share) Some(kept.toSeq) else None)
+    })
+    (rdd, parts.map(_._1).sum,
+      if (parts.forall(_._2.isDefined)) Some(parts.toSeq.flatMap(_._2.get))
+      else None)
   }
 
   /** Lazy lineage cut: materialized by the first action that touches it. */

@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.util.Try
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md). */
 object Tables {
@@ -18,7 +23,52 @@ object Tables {
     // below, which must stay at session build).
     graft.functions.NativeExpressions.register(spark)
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    * Spark's non-merging inference reads one footer (`_common_metadata`,
+    * else `_metadata`, else the first data file in path order) inside a
+    * Spark job; this reads the same footer on the driver, takes the
+    * schema as Spark does (the row-metadata key a Spark writer stores,
+    * else the session's `ParquetToSparkSchemaConverter`) and passes it
+    * to `spark.read.schema`. Partition columns still come from the
+    * directory names. A path without data files and a schema-merging
+    * session take the plain read, so Spark raises its own errors (e.g.
+    * the `UNABLE_TO_INFER_SCHEMA` that [[graft.sources.ShardStore.live]]
+    * serves from its anchor). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val summaries = Seq("_common_metadata", "_metadata")
+    // Spark's listing hides `_` and `.` names, except the summary files
+    // and partition directories, and in-flight `._COPYING_` files.
+    def hidden(n: String) = !summaries.exists(n.startsWith) &&
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_"))
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(st => hidden(st.getPath.getName))
+      .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    val files =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+          !fs.exists(root)) Nil
+      else leaves(root).sortBy(_.getPath.toString)
+    val data = files.filterNot(st => summaries.contains(st.getPath.getName))
+    if (data.isEmpty) spark.read.parquet(path)
+    else {
+      val footer = summaries.flatMap(n => files.find(_.getPath.getName == n))
+        .headOption.getOrElse(data.head)
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(footer, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+      val schema = Option(meta.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(js => Try(DataType.fromJson(js).asInstanceOf[StructType]).toOption)
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+      spark.read.schema(schema).parquet(path)
+    }
   }
 
   /** The driver regenerates testdata between rounds and the `ts` physical
@@ -32,7 +82,7 @@ object Tables {
     * visible fraction of rows.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val tsFixed = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

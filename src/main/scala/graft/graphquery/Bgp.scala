@@ -164,16 +164,21 @@ object Bgp {
     * job.)
     *
     * Driver finish: when round 0's count shows at most one partition's
-    * rows (the 10,000-row step below), the closure is collected, and
-    * the remaining rounds run on the driver over an in-memory set —
+    * rows (the 10,000-row step below), the closure is taken to the
+    * driver, and the remaining rounds run over an in-memory set —
     * closure ∪ closure⨝closure, deduplicated — with the RDD round's
     * null rules, fixpoint test and `maxRounds` counter. A driver round
     * that would grow the set past the step is dropped, and the last
     * complete round is handed back to the RDD loop, which goes on with
     * the same counter; so driver memory stays within one partition's
     * rows, and the result is row-identical to the all-RDD run, whether
-    * it converged or stopped at `maxRounds`. The choice rests on the
-    * row count only, never on the partition count, so it does not
+    * it converged or stopped at `maxRounds`. Round 0's job brings the
+    * rows back with the counts when every partition holds at most its
+    * share of the step (step ÷ partitions), so the driver never
+    * receives more than one step's rows; a closure within the step but
+    * skewed past a share is collected by one more job, and a closure
+    * above the step starts no job beyond round 0's. The choice rests on
+    * the row count only, never on the partition count, so it does not
     * depend on `local[n]` or `spark.sql.shuffle.partitions`.
     *
     * The partition count follows the closure's size: one partition per
@@ -254,17 +259,20 @@ object Bgp {
     val src = in.rdd
     var part =
       new SourcePartitioner(math.max(1, math.min(cap, src.getNumPartitions)))
-    var (acc, size) = Checkpoints.cutEagerCounted(dedupe(src.map { r =>
+    // Round 0's one job cuts, counts and, when every partition holds at
+    // most its share of the step, brings the rows back with the counts.
+    var (acc, size, kept) = Checkpoints.cutEagerCollecting(dedupe(src.map { r =>
       if (keyed) ((r.getString(0), r.getString(1), r.getString(2)), null)
       else (("", r.getString(0), r.getString(1)), null): ClosurePair
-    }.partitionBy(part), part))
+    }.partitionBy(part), part), rowsPerPartition / part.numPartitions)
     // A closure only grows, so only round 0 can find it within one
     // partition's rows: it then finishes on the driver, until a round
     // would outgrow the step and hands its input back to the RDD loop.
     var local =
       if (size > rowsPerPartition) None
       else {
-        val rows = mutable.HashSet.from(acc.keys.collect())
+        val rows = mutable.HashSet.from(
+          kept.map(_.map(_._1)).getOrElse(acc.keys.collect().toSeq))
         acc.unpersist(blocking = false)
         Some(rows)
       }

@@ -224,7 +224,7 @@ object DeltaStore {
     val exists =
       if (v == 0L) graft.sources.ShardStore.existsRecovered(spark, path)
       else fsOf(spark, dir).exists(new Path(path))
-    if (exists) spark.read.parquet(path).select(QuadCols.map(col): _*)
+    if (exists) graft.Tables.parquet(spark, path).select(QuadCols.map(col): _*)
     else emptyQuads(spark)
   }
 
@@ -328,20 +328,7 @@ object DeltaStore {
     * rewrite). Same grammar, validation, sequencing, and SILENT
     * semantics as [[Sparql.update]]. */
   def update(spark: SparkSession, dir: String, text: String): Unit = {
-    val ops = Sparql.parseUpdate(text)
-    // Same all-or-nothing static validation as the administrative path.
-    ops.foreach {
-      case InsertData(q) => Sparql.groundRows(q)
-      case DeleteData(q) => Sparql.groundRows(q)
-      case DeleteWhere(p) => Sparql.quadTemplate(p)
-      case Modify(del, ins, where, _, _, _) =>
-        require(del.nonEmpty || ins.nonEmpty,
-          "modify needs a DELETE or INSERT template")
-        require(where.nonEmpty, "modify needs a non-empty WHERE")
-        if (del.nonEmpty) Sparql.quadTemplate(del)
-        if (ins.nonEmpty) Sparql.quadTemplate(ins)
-      case _: Load | _: Clear | _: Create | _: GraphXfer => ()
-    }
+    val ops = Sparql.validatedOps(text)
     val lock = Sparql.storeLocks.computeIfAbsent(
       new Path(dir).toString,
       _ => new java.util.concurrent.locks.ReentrantLock)
@@ -358,15 +345,8 @@ object DeltaStore {
           if (st.getPath.getName.startsWith("_tmp_")) fs.delete(st.getPath, true)
         }
         ops.foreach { op =>
-          val silent = op match {
-            case Load(_, _, s) => s
-            case Clear(_, s, _) => s
-            case Create(_, s) => s
-            case GraphXfer(_, _, _, s) => s
-            case _ => false
-          }
           try commitOne(spark, dir, op, token)
-          catch { case _: Exception if silent => () }
+          catch { case _: Exception if Sparql.silentOf(op) => () }
           // Keep the lease fresh across a long script: one rewrite per
           // committed statement, so the TTL bounds writer SILENCE, not
           // script length.
@@ -383,29 +363,31 @@ object DeltaStore {
   private def commitOne(spark: SparkSession, dir: String,
                         op: UpdateOp, token: String): Unit = {
     val cur = folded(spark, dir)
-    val none = emptyQuads(spark)
     val noClear = Seq.empty[(String, Option[String])]
-    // clears: ("graph", Some(iri)) | ("default"|"named"|"all", None) —
-    // each ONE op=2 row in the delta, never a store-sized tombstone
-    // set (the O(statement) contract holds for CLEAR/DROP too; the
-    // adds of COPY/MOVE are O(source graph), which is the data
-    // actually moving).
-    val (adds, dels, clears): (DataFrame, DataFrame,
+    // touched: the statement's quads flagged `_add` (Sparql.touched /
+    // Sparql.templateQuads); clears: ("graph", Some(iri)) |
+    // ("default"|"named"|"all", None) — each ONE op=2 row in the delta,
+    // never a store-sized tombstone set (the O(statement) contract
+    // holds for CLEAR/DROP too; the adds of COPY/MOVE are O(source
+    // graph), which is the data actually moving).
+    val (touched, clears): (DataFrame,
         Seq[(String, Option[String])]) = op match {
-      case InsertData(q) => (Sparql.groundQuads(spark, q), none, noClear)
-      case DeleteData(q) => (none, Sparql.groundQuads(spark, q), noClear)
-      case DeleteWhere(p) => (none, Sparql.deleteWhereQuads(cur, p), noClear)
+      case InsertData(q) =>
+        (Sparql.touched(Sparql.groundQuads(spark, q), add = true), noClear)
+      case DeleteData(q) =>
+        (Sparql.touched(Sparql.groundQuads(spark, q), add = false), noClear)
+      case DeleteWhere(p) =>
+        (Sparql.templateQuads(Sparql.whereSolutions(cur, p),
+          Seq(p -> false)), noClear)
       case Modify(del, ins, where, u, un, wg) =>
         // Both templates instantiate from the SAME pre-update
-        // solutions; within one delta the fold ranks add over
-        // tombstone — the delete-before-insert survival rule.
-        (if (ins.isEmpty) none
-         else Sparql.instantiateQuads(cur, where, ins, u, un, wg),
-         if (del.isEmpty) none
-         else Sparql.instantiateQuads(cur, where, del, u, un, wg),
-         noClear)
+        // solutions, compiled once; within one delta the fold ranks add
+        // over tombstone — the delete-before-insert survival rule.
+        (Sparql.templateQuads(Sparql.whereSolutions(cur, where, u, un, wg),
+          Seq(del -> false, ins -> true), wg), noClear)
       case Load(doc, into, _) =>
-        (Sparql.loadQuads(spark, doc, into), none, noClear)
+        (Sparql.touched(Sparql.loadQuads(spark, doc, into), add = true),
+          noClear)
       case Clear(target, silent, drop) =>
         val scope = target match {
           case OneGraph(i) =>
@@ -417,7 +399,7 @@ object DeltaStore {
           case AllNamed => ("named", None)
           case AllGraphs => ("all", None)
         }
-        (none, none, Seq(scope))
+        (Sparql.touched(emptyQuads(spark), add = false), Seq(scope))
       case Create(g, silent) =>
         if (!silent)
           require(cur.filter(col("g") <=> lit(g)).isEmpty,
@@ -434,15 +416,13 @@ object DeltaStore {
           if (silent) return
           else sys.error(s"$kind: no graph <${src.get}> in store")
         }
-        val relabeled = srcRows.withColumn("g",
+        val relabeled = Sparql.touched(srcRows.withColumn("g",
           dst.map(i => lit(i).cast("string"))
-            .getOrElse(lit(null).cast("string")))
-          .select(QuadCols.map(col): _*)
+            .getOrElse(lit(null).cast("string"))), add = true)
         kind match {
-          case "ADD" => (relabeled, none, noClear)
-          case "COPY" => (relabeled, none, Seq(scopeOf(dst)))
-          case "MOVE" =>
-            (relabeled, none, Seq(scopeOf(dst), scopeOf(src)))
+          case "ADD" => (relabeled, noClear)
+          case "COPY" => (relabeled, Seq(scopeOf(dst)))
+          case "MOVE" => (relabeled, Seq(scopeOf(dst), scopeOf(src)))
           case other => sys.error(s"unknown transfer $other")
         }
     }
@@ -466,9 +446,8 @@ object DeltaStore {
     val clearRows = spark.createDataFrame(
       clears.map { case (scope, g) => org.apache.spark.sql.Row(
         g.orNull, scope, null, null, null, null, null, 2) }.asJava, opSchema)
-    val rows = adds.select(QuadCols.map(col): _*).withColumn("op", lit(1))
-      .unionByName(dels.select(QuadCols.map(col): _*)
-        .withColumn("op", lit(0)))
+    val rows = touched.select(QuadCols.map(col) :+
+        when(col("_add"), lit(1)).otherwise(lit(0)).as("op"): _*)
       .unionByName(clearRows)
     rows.write.mode("overwrite").parquet(tmp.toString)
     // Publish gate: the lease must still be ours — a writer whose

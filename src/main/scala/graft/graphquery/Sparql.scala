@@ -1857,24 +1857,49 @@ object Sparql {
   def parseUpdate(text: String): Seq[UpdateOp] =
     new P(tokenize(text)).parseUpdateOps()
 
+  /** [[parseUpdate]] with EVERY operation's structure validated before
+    * the first commit, on both update paths: the subset's restrictions
+    * (ground DATA, quad-pattern-only DELETE WHERE) are driver-checkable,
+    * so a request that is going to fail on op N fails before op 1
+    * mutates the store. (A DELETE WHERE whose variables fail to bind
+    * still surfaces at apply time; that depends on the store.) */
+  private[graphquery] def validatedOps(text: String): Seq[UpdateOp] = {
+    val ops = parseUpdate(text)
+    ops.foreach {
+      case InsertData(quads) => groundRows(quads)
+      case DeleteData(quads) => groundRows(quads)
+      case DeleteWhere(pats) => quadTemplate(pats)
+      case Modify(del, ins, where, _, _, _) =>
+        require(del.nonEmpty || ins.nonEmpty,
+          "modify needs a DELETE or INSERT template")
+        require(where.nonEmpty, "modify needs a non-empty WHERE")
+        if (del.nonEmpty) quadTemplate(del)
+        if (ins.nonEmpty) quadTemplate(ins)
+      case _: Load | _: Clear | _: Create | _: GraphXfer => () // parse-valid
+    }
+    ops
+  }
+
+  /** §3.2: a SILENT graph-management op that fails is a no-op. */
+  private[graphquery] def silentOf(op: UpdateOp): Boolean = op match {
+    case Load(_, _, s) => s
+    case Clear(_, s, _) => s
+    case Create(_, s) => s
+    case GraphXfer(_, _, _, s) => s
+    case _ => false
+  }
+
   /** Minimal SPARQL UPDATE (SPARQL 1.1 Update §3.1) against a parquet
     * QUAD STORE in [[Bgp.dataset]]'s layout (g null = default graph)
     * — the mutation surface the read-side quad inputs invite:
     *
-    *  - `INSERT DATA { triples [GRAPH <iri> { triples }] }` — ground
-    *    quads union in under RDF set semantics (already-present quads
-    *    do not duplicate).
-    *  - `DELETE DATA { … }` — ground quads anti-join out; absent quads
-    *    no-op per the spec.
+    *  - `INSERT DATA { triples [GRAPH <iri> { triples }] }` and
+    *    `DELETE DATA { … }` — ground quads; absent deletes no-op.
     *  - `DELETE WHERE { quad patterns }` — the pattern is both WHERE
-    *    and template: solutions compile through the [[select]]
-    *    machinery (GRAPH <iri>/GRAPH ?g scoping included), each quad
-    *    pattern instantiates per solution exactly like CONSTRUCT, and
-    *    the instantiated quads anti-join out of the store.
+    *    and template.
     *  - `DELETE {tpl} INSERT {tpl} WHERE {pat}` (§3.1.3 modify, either
     *    template optional) — both templates instantiate against the
-    *    PRE-update store's solutions; deletes apply before inserts,
-    *    so a quad matched by both survives, per the spec.
+    *    PRE-update store's solutions.
     *  - Graph management (§3.2): `LOAD [SILENT] <doc> [INTO GRAPH <g>]`
     *    (the doc read by the DISTRIBUTED N-Triples/N-Quads source —
     *    a 100 TB dump parallelizes, it does not stream through the
@@ -1885,6 +1910,18 @@ object Sparql {
     *    dst`. SILENT converts any op failure (absent doc, malformed
     *    statement, missing graph) into success-with-no-change; the
     *    atomic-swap commit guarantees "no change" exactly.
+    *
+    * Every add/delete form (the three above, LOAD and ADD) is one law
+    * over the statement's quads `dels` and `adds`:
+    * `next = (cur ⋉̸ (dels ∪ adds)) ∪ distinct(adds)` — set semantics,
+    * deletes before inserts (a quad in both survives), and the law
+    * [[DeltaStore]] folds a statement's delta with. The WHERE compiles
+    * through the [[select]] machinery (GRAPH <iri>/GRAPH ?g scoping
+    * included) once per statement, each template quad instantiates per
+    * solution like CONSTRUCT, and the store is scanned once with only
+    * the touched quads broadcast ([[fold]]), so one statement touches at
+    * most what a broadcast holds; bulk removals belong to CLEAR/DROP or
+    * [[DeltaStore]]. CLEAR/DROP, COPY and MOVE are graph filters.
     *
     * `;`-separated operations apply sequentially, each seeing its
     * predecessor's effect, and the REQUEST commits once through
@@ -1915,26 +1952,7 @@ object Sparql {
     * QuadPattern), with plain-IRI or variable predicates. */
   def update(spark: org.apache.spark.sql.SparkSession, storeDir: String,
              text: String, partitionBy: Seq[String] = Nil): Unit = {
-    val ops = parseUpdate(text)
-    // Validate EVERY operation's structure before the first commit:
-    // all the subset's restrictions (ground DATA, quad-pattern-only
-    // DELETE WHERE) are driver-checkable, so a request that is going
-    // to fail on op N must fail before op 1 mutates the store —
-    // all-or-nothing for statically ill-formed input. (A DELETE WHERE
-    // whose variables fail to bind still surfaces at apply time; that
-    // depends on the compiled store, not the statement.)
-    ops.foreach {
-      case InsertData(quads) => groundRows(quads)
-      case DeleteData(quads) => groundRows(quads)
-      case DeleteWhere(pats) => quadTemplate(pats)
-      case Modify(del, ins, where, _, _, _) =>
-        require(del.nonEmpty || ins.nonEmpty,
-          "modify needs a DELETE or INSERT template")
-        require(where.nonEmpty, "modify needs a non-empty WHERE")
-        if (del.nonEmpty) quadTemplate(del)
-        if (ins.nonEmpty) quadTemplate(ins)
-      case _: Load | _: Clear | _: Create | _: GraphXfer => () // parse-valid
-    }
+    val ops = validatedOps(text)
     // Serialize same-JVM updates per store; concurrent cross-process
     // updates on one store are NOT supported (single-writer, the same
     // contract every overwriteAtomic-maintained index documents) —
@@ -1943,31 +1961,11 @@ object Sparql {
       new org.apache.hadoop.fs.Path(storeDir).toString,
       _ => new java.util.concurrent.locks.ReentrantLock)
     lock.lock()
-    // One store rewrite per REQUEST, not per operation (a `;`-sequence
-    // used to pay a full read + partitioned-parquet swap per op): the
-    // ops chain in memory — each op still sees its predecessor's
-    // effect, and each op's result materializes EAGERLY at its own
-    // boundary (cutEager — executor-local blocks, or the session's
-    // reliable checkpoint dir) so a runtime failure (absent LOAD doc,
-    // §3.2 graph errors, surfacing lazily or not) is attributed to
-    // exactly the op that caused it, with SILENT still turning that op
-    // alone into a no-op — and only the FINAL state commits through
-    // the overwriteAtomic swap. Atomicity is strengthened, not
-    // weakened: a loud mid-sequence runtime failure now leaves the
-    // store at the PRE-REQUEST state (the statically-validated
-    // all-or-nothing contract above, extended to runtime failures)
-    // instead of at op N−1, and one complete copy of the store still
-    // exists on disk at every instant. Intermediate states were never
-    // observable through this serialized single-writer path. A
-    // single-op request keeps the original read→apply→swap shape, so
-    // the common administrative call is byte-for-byte unchanged.
-    def silentOf(op: UpdateOp): Boolean = op match {
-      case Load(_, _, s) => s
-      case Clear(_, s, _) => s
-      case Create(_, s) => s
-      case GraphXfer(_, _, _, s) => s
-      case _ => false
-    }
+    // One store rewrite per REQUEST: the ops chain in memory, each
+    // op's result cut EAGERLY at its own boundary so a runtime failure
+    // is attributed to the op that caused it (and SILENT makes that op
+    // alone a no-op); a loud failure leaves the store at the
+    // pre-request state. A single-op request swaps directly.
     try {
       var cur = readQuadStore(spark, storeDir)
       var mutated = false
@@ -2008,31 +2006,24 @@ object Sparql {
   /** One update operation's resulting store (administrative path —
     * the caller rewrites the store with the result). Returns `cur` BY
     * REFERENCE (eq) for provable no-ops so the caller can skip the
-    * rewrite. */
+    * rewrite. Every add/delete form is one [[fold]] of its touched
+    * quads. */
   private def applyOp(spark: org.apache.spark.sql.SparkSession,
                       cur: DataFrame, op: UpdateOp): DataFrame = op match {
     case InsertData(quads) =>
-      val nq = groundQuads(spark, quads)
-      cur.unionByName(antiQuads(nq, cur))
+      fold(cur, touched(groundQuads(spark, quads), add = true))
     case DeleteData(quads) =>
-      antiQuads(cur, groundQuads(spark, quads))
+      fold(cur, touched(groundQuads(spark, quads), add = false))
     case DeleteWhere(pats) =>
-      antiQuads(cur, deleteWhereQuads(cur, pats))
+      fold(cur, templateQuads(whereSolutions(cur, pats), Seq(pats -> false)))
     case Modify(del, ins, where, u, un, wg) =>
       // §3.1.3: BOTH templates instantiate against the PRE-update
-      // store's solutions; deletes apply before inserts (so a quad
-      // both deleted and re-inserted survives). USING/USING NAMED
-      // scope only the WHERE's dataset.
-      val afterDel =
-        if (del.isEmpty) cur
-        else antiQuads(cur, instantiateQuads(cur, where, del, u, un, wg))
-      if (ins.isEmpty) afterDel
-      else afterDel.unionByName(
-        antiQuads(instantiateQuads(cur, where, ins, u, un, wg), afterDel))
-
+      // store's solutions, compiled once; USING/USING NAMED scope only
+      // the WHERE's dataset.
+      fold(cur, templateQuads(whereSolutions(cur, where, u, un, wg),
+        Seq(del -> false, ins -> true), wg))
     case Load(doc, into, _) =>
-      val incoming = loadQuads(spark, doc, into)
-      cur.unionByName(antiQuads(incoming, cur))
+      fold(cur, touched(loadQuads(spark, doc, into), add = true))
     case Clear(target, silent, drop) =>
       target match {
         case OneGraph(i) =>
@@ -2073,7 +2064,7 @@ object Sparql {
             dst.map(i => lit(i).cast("string"))
               .getOrElse(lit(null).cast("string")))
           kind match {
-            case "ADD" => cur.unionByName(antiQuads(relabeled, cur))
+            case "ADD" => fold(cur, touched(relabeled, add = true))
             case "COPY" => cur.filter(!inSide(dst)).unionByName(relabeled)
             case "MOVE" =>
               cur.filter(!inSide(dst) && !inSide(src)).unionByName(relabeled)
@@ -2082,6 +2073,19 @@ object Sparql {
         }
       }
   }
+
+  /** The update law of [[update]]: the store minus every touched quad,
+    * plus the distinct adds; `touched` carries an `_add` flag. The store
+    * is scanned once, on the probe side of a broadcast anti-join; the
+    * broadcast and the adds' dedupe are independent query stages, which
+    * adaptive execution runs side by side. */
+  private def fold(cur: DataFrame, touched: DataFrame): DataFrame =
+    antiQuads(cur, broadcast(touched)).unionByName(
+      touched.filter(col("_add")).select(QuadCols.map(col): _*).distinct())
+
+  /** `quads` in canonical column order, flagged as adds or deletes. */
+  private[graphquery] def touched(quads: DataFrame, add: Boolean): DataFrame =
+    quads.select(QuadCols.map(col) :+ lit(add).as("_add"): _*)
 
   /** LOAD's document scan: a `file:` IRI maps to its filesystem path;
     * any other scheme (hdfs:, s3a:, …) passes through to the Hadoop
@@ -2119,7 +2123,7 @@ object Sparql {
   private def readQuadStore(spark: org.apache.spark.sql.SparkSession,
                             dir: String): DataFrame =
     if (graft.sources.ShardStore.existsRecovered(spark, dir))
-      spark.read.parquet(dir).select(QuadCols.map(col): _*)
+      graft.Tables.parquet(spark, dir).select(QuadCols.map(col): _*)
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       quadSchema)
@@ -2135,11 +2139,12 @@ object Sparql {
   }
 
   /** A DATA block's ground quads as a DataFrame (driver-built — the
-    * block is literal update text, bounded by the statement size). */
+    * block is literal update text, bounded by the statement size),
+    * deduplicated on the driver. */
   private[graphquery] def groundQuads(spark: org.apache.spark.sql.SparkSession,
                           pats: Seq[Pattern]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(groundRows(pats).asJava, quadSchema).distinct()
+    spark.createDataFrame(groundRows(pats).distinct.asJava, quadSchema)
   }
 
   /** The ground-quad rows of a DATA block — also the STRUCTURAL
@@ -2198,31 +2203,34 @@ object Sparql {
     quadPats
   }
 
-  /** Instantiate a quad TEMPLATE once per solution of `where` over the
-    * store — the CONSTRUCT projection generalized with a graph slot
-    * (bare = default graph, GRAPH <iri> = that graph, GRAPH ?g = the
-    * solution's binding). Shared by DELETE WHERE (template == pattern)
-    * and the §3.1.3 modify form's two templates. */
-  private[graphquery] def instantiateQuads(store: DataFrame, where: Seq[Pattern],
-                               tpl: Seq[Pattern],
+  /** The solutions of an update's WHERE over the store, compiled once
+    * and shared by every template of the statement. USING / USING NAMED
+    * build the dataset the WHERE matches against exactly as FROM / FROM
+    * NAMED do ([[scope]]); absent, the WHERE sees the store's own
+    * default/named split — except under WITH, whose graph substitutes
+    * for the default graph on the WHERE side (a USING clause overrides
+    * WITH for the WHERE, per §3.1.3). */
+  private[graphquery] def whereSolutions(store: DataFrame, where: Seq[Pattern],
                                using: Seq[String] = Nil,
                                usingNamed: Seq[String] = Nil,
                                withGraph: Option[String] = None): DataFrame = {
-    val quadPats = quadTemplate(tpl)
-    // USING / USING NAMED build the dataset the WHERE matches against
-    // exactly as FROM / FROM NAMED do ([[scope]]); absent, the WHERE
-    // sees the store's own default/named split — except under WITH,
-    // whose graph substitutes for the default graph on the WHERE side
-    // (a USING clause overrides WITH for the WHERE, per §3.1.3). The
-    // TEMPLATE always applies to the store, with WITH's graph as the
-    // bare template quads' destination.
     val (scoped, namedView) = scope(using, usingNamed, store)
     val dfltView = withGraph match {
       case Some(wg) if using.isEmpty && usingNamed.isEmpty =>
         store.filter(col("g") <=> lit(wg)).drop("g")
       case _ => scoped
     }
-    val sol = compileGroup(where, dfltView, namedView)
+    compileGroup(where, dfltView, namedView)
+  }
+
+  /** Instantiate quad TEMPLATES per solution, like CONSTRUCT with a
+    * graph slot (bare = default graph, or WITH's graph; GRAPH <iri>;
+    * GRAPH ?g = the binding) and an `_add` flag per template. All
+    * template quads are structs of ONE projection of `sol`, exploded,
+    * so the WHERE runs once; quads with an unbound s, p or o drop. */
+  private[graphquery] def templateQuads(sol: DataFrame,
+                               templates: Seq[(Seq[Pattern], Boolean)],
+                               withGraph: Option[String] = None): DataFrame = {
     val cols = sol.columns.toSet
     val nullStr = lit(null).cast("string")
     def bound(x: String, pos: String): Column = {
@@ -2230,10 +2238,11 @@ object Sparql {
         s"UPDATE template $pos variable ?$x is not bound by the WHERE")
       col(x)
     }
-    val parts = quadPats.map { case (gt, Triple(ts, tv, to)) =>
+    val quads = for {
+      (tpl, add) <- templates
+      (gt, Triple(ts, tv, to)) <- quadTemplate(tpl)
+    } yield {
       val gc = gt match {
-        // Bare template quads land in WITH's graph when present
-        // (§3.1.3), else the default graph.
         case None => withGraph.map(wg => lit(wg).cast("string"))
           .getOrElse(nullStr)
         case Some(I(iri)) => lit(iri).cast("string")
@@ -2264,19 +2273,15 @@ object Sparql {
             dt.map(d => lit(d).cast("string")).getOrElse(nullStr))
         case _: FTerm => sys.error("bad UPDATE template object")
       }
-      sol.select(gc.as("g"), sc.cast("string").as("s"),
-          pc.cast("string").as("p"), oc.cast("string").as("o"),
-          oIri.as("oIsIri"), oLang.as("oLang"), oDt.as("oDatatype"))
-        .filter(col("s").isNotNull && col("p").isNotNull &&
-          col("o").isNotNull)
+      struct(gc.as("g"), sc.cast("string").as("s"),
+        pc.cast("string").as("p"), oc.cast("string").as("o"),
+        oIri.as("oIsIri"), oLang.as("oLang"), oDt.as("oDatatype"),
+        lit(add).as("_add"))
     }
-    require(parts.nonEmpty, "empty UPDATE quad template")
-    parts.reduce(_ unionByName _).distinct()
+    require(quads.nonEmpty, "empty UPDATE quad template")
+    sol.select(explode(array(quads: _*)).as("_q")).select(col("_q.*"))
+      .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull)
   }
-
-  private[graphquery] def deleteWhereQuads(store: DataFrame,
-                               pats: Seq[Pattern]): DataFrame =
-    instantiateQuads(store, pats, pats)
 
   /** Compile + run a CONSTRUCT: returns the constructed graph as a
     * canonical-schema triples DataFrame (s, p, o, oIsIri, oLang,

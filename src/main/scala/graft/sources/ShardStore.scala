@@ -84,7 +84,7 @@ object ShardStore {
     * LATER crashed compaction is negative (not `> h`) and not `b`. */
   def live(spark: SparkSession, dir: String): DataFrame = {
     val df =
-      try spark.read.parquet(dir)
+      try graft.Tables.parquet(spark, dir)
       catch {
         // A table whose every shard was retired ([[graft.llm.Corpus]]
         // deleteDocs taking down the last doc) has no data files left
@@ -98,7 +98,7 @@ object ShardStore {
               e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
               e.getMessage.contains("Unable to infer schema")) &&
             fsOf(spark, dir).exists(new Path(dir, "_schema")) =>
-            return spark.read.parquet(s"$dir/_schema").where(lit(false))
+            return graft.Tables.parquet(spark, s"$dir/_schema").where(lit(false))
       }
     readMeta(spark, dir) match {
       case Some(Meta(h, b)) if df.columns.contains("batch_id") =>
@@ -378,7 +378,7 @@ object ShardStore {
       math.max(1L, (bytes + targetBytes - 1) / targetBytes),
       if (partitionKeep.isEmpty) 1L else leafDirs.toLong).toInt
     if (nBefore <= targetFiles) return None
-    val df = spark.read.parquet(dir)
+    val df = graft.Tables.parquet(spark, dir)
     val packed =
       if (partitionKeep.isEmpty) df.repartition(targetFiles)
       else df.repartition(targetFiles,

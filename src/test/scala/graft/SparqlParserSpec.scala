@@ -1163,6 +1163,16 @@ class SparqlParserSpec extends SparkSpec {
       s"IRI-only DESCRIBE grew a join:\n$iriPlan")
   }
 
+  /** [[Sparql.update]], then the store must still be a set: the
+    * `Set`-valued assertions of the update tests cannot see a
+    * duplicated row. */
+  private def updateSet(dir: String, text: String): Unit = {
+    Sparql.update(spark, dir, text)
+    val store = spark.read.parquet(dir)
+    assert(store.count() == store.distinct().count(),
+      s"the store holds a duplicated quad after: $text")
+  }
+
   test("SPARQL UPDATE: set-semantics INSERT DATA (store bootstrap " +
     "included), no-op absent DELETE DATA, DELETE WHERE as its own " +
     "template with GRAPH ?g binding the doomed quads' graph slot") {
@@ -1175,7 +1185,7 @@ class SparqlParserSpec extends SparkSpec {
       .map(_.toSeq.mkString(",")).toSet
     try {
       // Bootstrap: INSERT DATA on an absent store creates it.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA {
           |  <urn:i/a> <urn:p/k> "v"@en .
           |  GRAPH <urn:d/1> { <urn:i/a> <urn:p/k> <urn:i/b> .
@@ -1187,14 +1197,14 @@ class SparqlParserSpec extends SparkSpec {
         "urn:d/1,urn:i/b,urn:p/k,urn:i/c"))
       // RDF set semantics: replaying the same INSERT adds nothing —
       // and a mixed op only lands the genuinely new quad.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA { <urn:i/a> <urn:p/k> "v"@en .
           |  GRAPH <urn:d/2> { <urn:i/x> <urn:p/n> "7" . } }""".stripMargin)
       assert(all() == s0 + "urn:d/2,urn:i/x,urn:p/n,7",
         "re-inserted quad duplicated or new quad dropped")
       // DELETE DATA: absent quads no-op (wrong graph, wrong lang),
       // present ground quads go — in one ;-sequenced statement.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """DELETE DATA { GRAPH <urn:d/2> { <urn:i/a> <urn:p/k> <urn:i/b> . } } ;
           |DELETE DATA { <urn:i/a> <urn:p/k> "v" . } ;
           |DELETE DATA { GRAPH <urn:d/2> { <urn:i/x> <urn:p/n> "7" . } }"""
@@ -1204,25 +1214,25 @@ class SparqlParserSpec extends SparkSpec {
       // DELETE WHERE: the pattern is its own template; GRAPH ?g
       // instantiates the doomed quads under their OWN graph, and the
       // default-graph row (never matched by GRAPH ?g) survives.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         "DELETE WHERE { GRAPH ?g { ?s <urn:p/k> ?o . } }")
       assert(all() == Set("null,urn:i/a,urn:p/k,v"),
         "DELETE WHERE over GRAPH ?g missed a graph or hit the default")
       // And the bare-pattern form scopes to the default graph only.
-      Sparql.update(spark, dir, "DELETE WHERE { ?s ?p ?o . }")
+      updateSet(dir, "DELETE WHERE { ?s ?p ?o . }")
       assert(all().isEmpty)
       // STRICT sequencing: a missing ';' between ops must error loudly
       // (a lax parser would commit the first op and silently drop the
       // rest — e.g. the DELETE half of a patch), and the error must
       // arrive BEFORE anything commits.
       val s1 = all()
-      intercept[RuntimeException] { Sparql.update(spark, dir,
+      intercept[RuntimeException] { updateSet(dir,
         """INSERT DATA { <urn:i/q> <urn:p/k> "x" . }
           |DELETE DATA { <urn:i/q> <urn:p/k> "x" . }""".stripMargin) }
       assert(all() == s1, "malformed update mutated the store")
       // ALL-OR-NOTHING static validation: op 2 is ill-formed (variable
       // in DATA), so op 1 must not have committed either.
-      intercept[RuntimeException] { Sparql.update(spark, dir,
+      intercept[RuntimeException] { updateSet(dir,
         """INSERT DATA { <urn:i/q> <urn:p/k> "x" . } ;
           |DELETE DATA { <urn:i/q> ?p "x" . }""".stripMargin) }
       assert(all() == s1,
@@ -1242,14 +1252,14 @@ class SparqlParserSpec extends SparkSpec {
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
       .map(_.toSeq.mkString(",")).toSet
     try {
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA { GRAPH <urn:d/1> {
           |  <urn:i/a> <urn:p/state> "old" .
           |  <urn:i/b> <urn:p/state> "old" .
           |  <urn:i/b> <urn:p/keep> "yes" . } }""".stripMargin)
       // Rewrite every state=old to state=new in one modify: both
       // templates see the same pre-update solution set.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """DELETE { GRAPH <urn:d/1> { ?s <urn:p/state> "old" . } }
           |INSERT { GRAPH <urn:d/1> { ?s <urn:p/state> "new" .
           |                           ?s <urn:p/audited> "true" . } }
@@ -1264,7 +1274,7 @@ class SparqlParserSpec extends SparkSpec {
         "modify did not rewrite exactly the matched quads")
       // Delete-before-insert: a quad matched by BOTH templates
       // survives (the spec's ordering rule).
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """DELETE { GRAPH <urn:d/1> { ?s <urn:p/keep> ?v . } }
           |INSERT { GRAPH <urn:d/1> { ?s <urn:p/keep> ?v . } }
           |WHERE { GRAPH <urn:d/1> { ?s <urn:p/keep> ?v . } }"""
@@ -1272,14 +1282,14 @@ class SparqlParserSpec extends SparkSpec {
       assert(all().contains("urn:d/1,urn:i/b,urn:p/keep,yes"),
         "delete-then-insert dropped a quad both templates matched")
       // INSERT-only modify mints into ANOTHER graph from bindings.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT { GRAPH <urn:d/log> { ?s <urn:p/seen> "1" . } }
           |WHERE { GRAPH <urn:d/1> { ?s <urn:p/audited> "true" . } }"""
           .stripMargin)
       assert(all().count(_.startsWith("urn:d/log,")) == 2)
       // DELETE-only modify: WHERE joins two patterns, template deletes
       // only one of them.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """DELETE { GRAPH <urn:d/1> { ?s <urn:p/audited> "true" . } }
           |WHERE { GRAPH <urn:d/1> { ?s <urn:p/audited> "true" .
           |                          ?s <urn:p/keep> "yes" . } }"""
@@ -1290,7 +1300,7 @@ class SparqlParserSpec extends SparkSpec {
       // Static validation: a template var the WHERE does not bind
       // errors before anything commits.
       val s0 = all()
-      intercept[RuntimeException] { Sparql.update(spark, dir,
+      intercept[RuntimeException] { updateSet(dir,
         """INSERT DATA { <urn:i/x> <urn:p/k> "v" . } ;
           |DELETE { GRAPH <urn:d/1> { ?s ?p ?o . } } WHERE { }"""
           .stripMargin) }
@@ -1328,7 +1338,7 @@ class SparqlParserSpec extends SparkSpec {
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
       .map(_.toSeq.mkString(",")).toSet
     try {
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA {
           |  <urn:i/a> <urn:p/keep> "1" .
           |  <urn:i/b> <urn:p/keep> "1" .
@@ -1339,7 +1349,7 @@ class SparqlParserSpec extends SparkSpec {
       // USING <src1>: the WHERE's bare pattern reads src1 as its
       // default graph — only ?s=a binds; the DELETE template hits the
       // STORE's default graph.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """DELETE { ?s <urn:p/keep> "1" . }
           |USING <urn:d/src1>
           |WHERE { ?s <urn:p/flag> "x" . }""".stripMargin)
@@ -1347,14 +1357,14 @@ class SparqlParserSpec extends SparkSpec {
         "urn:d/src1,urn:i/a,urn:p/flag", "urn:d/src2,urn:i/b,urn:p/flag"))
       // Replacement semantics: with a clause present, the store's real
       // default graph is INVISIBLE to a bare WHERE pattern.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT { ?s <urn:p/u> "y" . }
           |USING <urn:d/src1>
           |WHERE { ?s <urn:p/keep> "1" . }""".stripMargin)
       assert(all().size == 4, "bare WHERE saw the store's default graph " +
         "despite a USING clause")
       // USING NAMED <src2>: GRAPH ?g can only see src2.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """DELETE { ?s <urn:p/keep> "1" . }
           |USING NAMED <urn:d/src2>
           |WHERE { GRAPH ?g { ?s <urn:p/flag> "x" . } }""".stripMargin)
@@ -1374,7 +1384,7 @@ class SparqlParserSpec extends SparkSpec {
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
       .map(_.toSeq.mkString(",")).toSet
     try {
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA {
           |  <urn:i/a> <urn:p/keep> "1" .
           |  GRAPH <urn:d/w> { <urn:i/a> <urn:p/keep> "1" .
@@ -1382,30 +1392,30 @@ class SparqlParserSpec extends SparkSpec {
           |  GRAPH <urn:d/o> { <urn:i/a> <urn:p/sel> "y" . } }""".stripMargin)
       // WHERE's bare pattern reads <urn:d/w>; the bare DELETE template
       // removes from <urn:d/w> — the REAL default graph's copy stays.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """WITH <urn:d/w>
           |DELETE { ?s <urn:p/keep> "1" . }
           |WHERE { ?s <urn:p/flag> "x" . }""".stripMargin)
       assert(all() == Set("null,urn:i/a,urn:p/keep",
         "urn:d/w,urn:i/a,urn:p/flag", "urn:d/o,urn:i/a,urn:p/sel"))
       // WITH + INSERT: the minted quad lands IN <urn:d/w>.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """WITH <urn:d/w>
           |INSERT { ?s <urn:p/new> "n" . }
           |WHERE { ?s <urn:p/flag> "x" . }""".stripMargin)
       assert(all().contains("urn:d/w,urn:i/a,urn:p/new"))
       // USING overrides the WHERE side (reads <urn:d/o>), while the
       // template still lands in WITH's graph.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """WITH <urn:d/w>
           |INSERT { ?s <urn:p/viaUsing> "u" . }
           |USING <urn:d/o>
           |WHERE { ?s <urn:p/sel> "y" . }""".stripMargin)
       assert(all().contains("urn:d/w,urn:i/a,urn:p/viaUsing"))
       // WITH on non-modify forms is a loud parse error.
-      intercept[RuntimeException] { Sparql.update(spark, dir,
+      intercept[RuntimeException] { updateSet(dir,
         "WITH <urn:d/w> INSERT DATA { <urn:i/z> <urn:p/k> \"v\" . }") }
-      intercept[RuntimeException] { Sparql.update(spark, dir,
+      intercept[RuntimeException] { updateSet(dir,
         "WITH <urn:d/w> CLEAR DEFAULT") }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
@@ -1426,16 +1436,16 @@ class SparqlParserSpec extends SparkSpec {
       "<urn:i/a> <urn:p/k> \"v\"@en .",
       "<urn:i/b> <urn:p/k> <urn:i/c> <urn:d/src> ."))
     try {
-      Sparql.update(spark, dir,
+      updateSet(dir,
         "INSERT DATA { <urn:i/seed> <urn:p/k> \"s\" . }")
       val seed = all()
       // LOAD keeps the document's own graph labels (N-Quads).
-      Sparql.update(spark, dir, s"LOAD <file:$doc>")
+      updateSet(dir, s"LOAD <file:$doc>")
       assert(all() == seed + "null,urn:i/a,urn:p/k,v" +
         "urn:d/src,urn:i/b,urn:p/k,urn:i/c")
       // INTO GRAPH overrides every statement's graph slot; replaying
       // the same doc into a new graph adds only the rehomed copies.
-      Sparql.update(spark, dir, s"LOAD <file:$doc> INTO GRAPH <urn:d/in>")
+      updateSet(dir, s"LOAD <file:$doc> INTO GRAPH <urn:d/in>")
       assert(all() == seed + "null,urn:i/a,urn:p/k,v" +
         "urn:d/src,urn:i/b,urn:p/k,urn:i/c" +
         "urn:d/in,urn:i/a,urn:p/k,v" + "urn:d/in,urn:i/b,urn:p/k,urn:i/c")
@@ -1443,10 +1453,10 @@ class SparqlParserSpec extends SparkSpec {
       // swallowed under SILENT.
       val before = all()
       intercept[Exception] {
-        Sparql.update(spark, dir, s"LOAD <file:$root/absent.nq>")
+        updateSet(dir, s"LOAD <file:$root/absent.nq>")
       }
       assert(all() == before, "failed LOAD mutated the store")
-      Sparql.update(spark, dir, s"LOAD SILENT <file:$root/absent.nq>")
+      updateSet(dir, s"LOAD SILENT <file:$root/absent.nq>")
       assert(all() == before)
       // Blank nodes are DOCUMENT-scoped: the same _:b1 label in two
       // loaded documents skolemizes to two distinct resources.
@@ -1456,7 +1466,7 @@ class SparqlParserSpec extends SparkSpec {
         "_:b1 <urn:p/bn> \"a\" ."))
       java.nio.file.Files.write(docB, java.util.Arrays.asList(
         "_:b1 <urn:p/bn> \"b\" ."))
-      Sparql.update(spark, dir, s"LOAD <file:$docA> ; LOAD <file:$docB>")
+      updateSet(dir, s"LOAD <file:$docA> ; LOAD <file:$docB>")
       val bnSubjects = Sparql.select(spark.read.parquet(dir),
         "SELECT ?s WHERE { ?s <urn:p/bn> ?o . }")
         .collect().map(_.getString(0)).toSet
@@ -1464,7 +1474,7 @@ class SparqlParserSpec extends SparkSpec {
         s"cross-document blank nodes conflated: $bnSubjects")
       // Re-LOADing the same document stays set-idempotent.
       val n = all().size
-      Sparql.update(spark, dir, s"LOAD <file:$docA>")
+      updateSet(dir, s"LOAD <file:$docA>")
       assert(all().size == n, "re-LOAD duplicated skolemized quads")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
@@ -1479,32 +1489,32 @@ class SparqlParserSpec extends SparkSpec {
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
       .map(_.toSeq.mkString(",")).toSet
     try {
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA { <urn:i/d0> <urn:p/k> "v" .
           |  GRAPH <urn:d/1> { <urn:i/a> <urn:p/k> "1" . }
           |  GRAPH <urn:d/2> { <urn:i/b> <urn:p/k> "2" . } }""".stripMargin)
       // CREATE: implicit graphs — error only when it already exists.
-      Sparql.update(spark, dir, "CREATE GRAPH <urn:d/new>")
+      updateSet(dir, "CREATE GRAPH <urn:d/new>")
       intercept[Exception] {
-        Sparql.update(spark, dir, "CREATE GRAPH <urn:d/1>")
+        updateSet(dir, "CREATE GRAPH <urn:d/1>")
       }
-      Sparql.update(spark, dir, "CREATE SILENT GRAPH <urn:d/1>")
+      updateSet(dir, "CREATE SILENT GRAPH <urn:d/1>")
       // CLEAR GRAPH removes exactly that graph's quads.
-      Sparql.update(spark, dir, "CLEAR GRAPH <urn:d/1>")
+      updateSet(dir, "CLEAR GRAPH <urn:d/1>")
       assert(all() == Set("null,urn:i/d0", "urn:d/2,urn:i/b"))
       // CLEAR of a now-absent graph errors, unless SILENT.
       intercept[Exception] {
-        Sparql.update(spark, dir, "CLEAR GRAPH <urn:d/1>")
+        updateSet(dir, "CLEAR GRAPH <urn:d/1>")
       }
-      Sparql.update(spark, dir, "DROP SILENT GRAPH <urn:d/1>")
+      updateSet(dir, "DROP SILENT GRAPH <urn:d/1>")
       // CLEAR DEFAULT leaves named graphs; DROP ALL empties the store
       // but keeps it servable.
-      Sparql.update(spark, dir, "CLEAR DEFAULT")
+      updateSet(dir, "CLEAR DEFAULT")
       assert(all() == Set("urn:d/2,urn:i/b"))
-      Sparql.update(spark, dir, "DROP ALL")
+      updateSet(dir, "DROP ALL")
       assert(all().isEmpty)
       // CLEAR NAMED: rebuild, then only the default survives.
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA { <urn:i/d0> <urn:p/k> "v" .
           |  GRAPH <urn:d/1> { <urn:i/a> <urn:p/k> "1" . } } ;
           |CLEAR NAMED""".stripMargin)
@@ -1523,34 +1533,34 @@ class SparqlParserSpec extends SparkSpec {
         "{ GRAPH ?g { ?s ?p ?o } } }").collect()
       .map(_.toSeq.mkString(",")).toSet
     try {
-      Sparql.update(spark, dir,
+      updateSet(dir,
         """INSERT DATA { <urn:i/d> <urn:p/k> "d" .
           |  GRAPH <urn:d/1> { <urn:i/a> <urn:p/k> "1" .
           |                    <urn:i/d> <urn:p/k> "d" . }
           |  GRAPH <urn:d/2> { <urn:i/b> <urn:p/k> "2" . } }""".stripMargin)
       // ADD DEFAULT TO <d/2>: merge (set semantics — the shared quad
       // does not duplicate when re-added).
-      Sparql.update(spark, dir, "ADD DEFAULT TO GRAPH <urn:d/2>")
+      updateSet(dir, "ADD DEFAULT TO GRAPH <urn:d/2>")
       assert(all() == Set("null,urn:i/d,d", "urn:d/1,urn:i/a,1",
         "urn:d/1,urn:i/d,d", "urn:d/2,urn:i/b,2", "urn:d/2,urn:i/d,d"))
-      Sparql.update(spark, dir, "ADD DEFAULT TO GRAPH <urn:d/2>")
+      updateSet(dir, "ADD DEFAULT TO GRAPH <urn:d/2>")
       assert(all().size == 5, "re-ADD duplicated quads")
       // COPY replaces the destination wholesale.
-      Sparql.update(spark, dir, "COPY GRAPH <urn:d/1> TO GRAPH <urn:d/2>")
+      updateSet(dir, "COPY GRAPH <urn:d/1> TO GRAPH <urn:d/2>")
       assert(all() == Set("null,urn:i/d,d", "urn:d/1,urn:i/a,1",
         "urn:d/1,urn:i/d,d", "urn:d/2,urn:i/a,1", "urn:d/2,urn:i/d,d"))
       // MOVE: source gone, destination replaced; GRAPH keyword is
       // optional on either side per the grammar.
-      Sparql.update(spark, dir, "MOVE <urn:d/1> TO DEFAULT")
+      updateSet(dir, "MOVE <urn:d/1> TO DEFAULT")
       assert(all() == Set("null,urn:i/a,1", "null,urn:i/d,d",
         "urn:d/2,urn:i/a,1", "urn:d/2,urn:i/d,d"))
       // Self-transfer: explicit no-op, even for a missing graph.
-      Sparql.update(spark, dir, "MOVE GRAPH <urn:d/9> TO GRAPH <urn:d/9>")
+      updateSet(dir, "MOVE GRAPH <urn:d/9> TO GRAPH <urn:d/9>")
       // Absent named source errors (default-graph source never does).
       intercept[Exception] {
-        Sparql.update(spark, dir, "COPY GRAPH <urn:d/9> TO DEFAULT")
+        updateSet(dir, "COPY GRAPH <urn:d/9> TO DEFAULT")
       }
-      Sparql.update(spark, dir, "COPY SILENT GRAPH <urn:d/9> TO DEFAULT")
+      updateSet(dir, "COPY SILENT GRAPH <urn:d/9> TO DEFAULT")
       assert(all() == Set("null,urn:i/a,1", "null,urn:i/d,d",
         "urn:d/2,urn:i/a,1", "urn:d/2,urn:i/d,d"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
@@ -1570,6 +1580,50 @@ class SparqlParserSpec extends SparkSpec {
       ("urn:x/3", "urn:p/name", "urn:other/3", true, null, null),
       ("urn:x/3", "urn:p/size", "big", false, null, null))
       .toDF("s", "p", "o", "oIsIri", "oLang", "oDatatype")
+  }
+
+  test("SPARQL UPDATE over a store holding a duplicated quad: INSERT " +
+    "DATA and modify give DeltaStore's fold of the same statements") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("sparqldup")
+    val admin = s"$root/admin"
+    val delta = s"$root/delta"
+    val quadSchema = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructField("g",
+        org.apache.spark.sql.types.StringType) +:
+        graft.rdf.Turtle.schema.fields)
+    def quad(s: String, p: String, o: String) =
+      org.apache.spark.sql.Row("urn:d/1", s, p, o, false, null, null)
+    val seed = spark.createDataFrame(Seq("a" -> "state" -> "old",
+        "b" -> "keep" -> "yes", "c" -> "note" -> "x")
+      .flatMap { case ((s, p), o) =>
+        Seq.fill(2)(quad(s"urn:i/$s", s"urn:p/$p", o)) }.asJava, quadSchema)
+    seed.write.parquet(admin)
+    seed.write.parquet(s"$delta/base")
+    def bag(df: DataFrame): Seq[String] =
+      df.select("g", "s", "p", "o", "oIsIri", "oLang", "oDatatype")
+        .collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    try {
+      Seq(
+        """INSERT DATA { GRAPH <urn:d/1> { <urn:i/b> <urn:p/keep> "yes" .
+          |                                <urn:i/d> <urn:p/note> "y" . } }"""
+          .stripMargin,
+        """DELETE { GRAPH <urn:d/1> { ?s <urn:p/state> "old" . } }
+          |INSERT { GRAPH <urn:d/1> { ?s <urn:p/state> "new" .
+          |                           ?s <urn:p/keep> "yes" . } }
+          |WHERE { GRAPH <urn:d/1> { ?s <urn:p/state> "old" . } }"""
+          .stripMargin).foreach { u =>
+        Sparql.update(spark, admin, u)
+        graft.graphquery.DeltaStore.update(spark, delta, u)
+        assert(bag(spark.read.parquet(admin)) ==
+          bag(graft.graphquery.DeltaStore.serve(spark, delta)), u)
+      }
+      // A re-added quad keeps one copy; an untouched duplicate stays.
+      val after = bag(spark.read.parquet(admin))
+      assert(after.count(_ == "urn:d/1,urn:i/b,urn:p/keep,yes,false,null,null") == 1)
+      assert(after.count(_ == "urn:d/1,urn:i/c,urn:p/note,x,false,null,null") == 2)
+      assert(after.count(_.contains("urn:p/state,old")) == 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("X260 arithmetic: precedence, parens, unary minus, division; " +

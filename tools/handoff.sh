@@ -19,27 +19,34 @@
 #                            annotations ride the artifact).
 #   5. PlanDump            — condensed physical-plan snapshot of the
 #                            flagship queries, for the plan-shape diff.
+#   6. perfbench build     — compiles src/main with the benchmark's
+#                            harness the way perfbench/run.py does, so a
+#                            source change that breaks the benchmark
+#                            build fails here.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.01}
 
-echo "== 1/5 sbt test (all suites)"
+echo "== 1/6 sbt test (all suites)"
 sbt -batch test
 
-echo "== 2/5 correctness: Verify dump + DuckDB oracle replay at $SF"
+echo "== 2/6 correctness: Verify dump + DuckDB oracle replay at $SF"
 rm -rf /tmp/graft_handoff_verify
 sbt -batch "runMain graft.Verify $SF /tmp/graft_handoff_verify"
 python3 tools/check.py /tmp/graft_handoff_verify "$SF"
 
-echo "== 3/5 SURVEY inventory vs code"
+echo "== 3/6 SURVEY inventory vs code"
 python3 tools/coverage_check.py
 
-echo "== 4/5 bench (one JSON line must start at column 0)"
+echo "== 4/6 bench (one JSON line must start at column 0)"
 SPARK_GRAFT_SF_DIR="$SF" sbt -batch "runMain graft.Bench" \
   | grep -E '^\{' | tail -1
 
-echo "== 5/5 plan snapshot"
+echo "== 5/6 plan snapshot"
 sbt -batch "runMain graft.PlanDump" > /tmp/graft_handoff_plans.txt
 echo "plans at /tmp/graft_handoff_plans.txt"
+
+echo "== 6/6 perfbench build (program + harness)"
+python3 perfbench/build.py
 
 echo "HANDOFF GREEN"
