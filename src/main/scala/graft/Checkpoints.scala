@@ -12,10 +12,10 @@ import org.apache.spark.storage.StorageLevel
   * state, or the plan grows one join+aggregate per round and the
   * optimizer re-walks the whole history each time. The DataFrame forms
   * (`cut*`, `cutEagerObserved`) serve the DataFrame loops; the RDD form
-  * `cutEagerCounted` serves the closure's round 0 and, above one
+  * `cutEagerCollecting` serves the closure's round 0 and, above one
   * partition's rows, its rounds, held as a co-partitioned pair RDD so a
   * round is one job (a smaller closure finishes on the driver, with no
-  * cut after round 0).
+  * cut after round 0), and the touched quads of a SPARQL update.
   *
   * Default is `localCheckpoint` — executor-local blocks, free of a
   * distributed filesystem, exactly right on local[n] and fine on a
@@ -32,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   * fixpoint loops both ways and compares).
   *
   * Cost note for the reliable form: `Dataset.checkpoint` computes the
-  * plan once more when writing the files (`cutEagerCounted` persists
+  * plan once more when writing the files (`cutEagerCollecting` persists
   * first, so its write re-reads blocks instead) — on a real cluster
   * prefer a fast DFS path and expect roughly 2× the per-round cost of
   * the local form. That is the standard Spark trade, not a property of
@@ -44,22 +44,16 @@ object Checkpoints {
   private def reliable(df: DataFrame): Boolean =
     reliable(df.sparkSession.sparkContext)
 
-  /** Eager cut of an RDD, returned with its row count: the count is
-    * both the round's convergence scalar and the action that
-    * materializes the cut, so a round costs one job. Local:
-    * `localCheckpoint()` then `count()`. Reliable: `persist`,
-    * `checkpoint()` then `count()` — the file write reads the persisted
-    * blocks instead of computing the round again. */
-  def cutEagerCounted[T](rdd: RDD[T]): (RDD[T], Long) = {
-    val (cut, n, _) = cutEagerCollecting(rdd, -1L)
-    (cut, n)
-  }
-
-  /** [[cutEagerCounted]] that also brings a small cut's rows back in the
-    * same job: each partition returns its count, and its rows when it
-    * holds at most `share` of them. The rows come back only if every
+  /** Eager cut of an RDD, returned with its row count and, when small,
+    * its rows, all from the one job that materializes the cut: the
+    * count is a loop round's convergence scalar. Each partition returns
+    * its count, and its rows when it holds at most `share` of them
+    * (`share` 0 keeps none). The rows come back only if every
     * partition's did, so the driver receives at most
-    * `share × partitions` rows and never a partial set. */
+    * `share × partitions` rows and never a partial set. Local:
+    * `localCheckpoint()` then the job. Reliable: `persist`,
+    * `checkpoint()` then the job — the file write reads the persisted
+    * blocks instead of computing the rows again. */
   def cutEagerCollecting[T](rdd: RDD[T], share: Long)
       : (RDD[T], Long, Option[Seq[T]]) = {
     if (reliable(rdd.sparkContext)) {

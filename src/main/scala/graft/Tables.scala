@@ -33,10 +33,14 @@ object Tables {
     * schema as Spark does (the row-metadata key a Spark writer stores,
     * else the session's `ParquetToSparkSchemaConverter`) and passes it
     * to `spark.read.schema`. Partition columns still come from the
-    * directory names. A path without data files and a schema-merging
-    * session take the plain read, so Spark raises its own errors (e.g.
-    * the `UNABLE_TO_INFER_SCHEMA` that [[graft.sources.ShardStore.live]]
-    * serves from its anchor). */
+    * directory names, and the table is listed once, by Spark. The
+    * footer is found by a depth-first walk in path order that lists
+    * only the directories on the way to the first data file; summary
+    * files are looked for at the root, where parquet writers put them.
+    * A path without data files, an unreadable footer and a
+    * schema-merging session take the plain read, so Spark raises its
+    * own errors (e.g. the `UNABLE_TO_INFER_SCHEMA` that
+    * [[graft.sources.ShardStore.live]] serves from its anchor). */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
@@ -47,28 +51,34 @@ object Tables {
     def hidden(n: String) = !summaries.exists(n.startsWith) &&
       ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
         n.endsWith("._COPYING_"))
-    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+    // A directory sorts as `name/`, so the walk meets files in the
+    // order of their full path strings.
+    def listed(p: Path) = fs.listStatus(p).toSeq
       .filterNot(st => hidden(st.getPath.getName))
-      .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
-    val files =
-      if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
-          !fs.exists(root)) Nil
-      else leaves(root).sortBy(_.getPath.toString)
-    val data = files.filterNot(st => summaries.contains(st.getPath.getName))
-    if (data.isEmpty) spark.read.parquet(path)
-    else {
-      val footer = summaries.flatMap(n => files.find(_.getPath.getName == n))
-        .headOption.getOrElse(data.head)
-      val meta = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(footer, conf),
-        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
-      val schema = Option(meta.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .flatMap(js => Try(DataType.fromJson(js).asInstanceOf[StructType]).toOption)
-        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(meta.getSchema))
-      spark.read.schema(schema).parquet(path)
-    }
+      .sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else ""))
+    def firstData(kids: Seq[FileStatus]): Option[FileStatus] = kids.iterator
+      .filterNot(st => summaries.contains(st.getPath.getName))
+      .flatMap(st =>
+        if (st.isDirectory) firstData(listed(st.getPath)) else Some(st))
+      .nextOption()
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else Try {
+        val top = listed(root)
+        firstData(top).map { data =>
+          val footer = summaries.flatMap(n => top.find(_.getPath.getName == n))
+            .headOption.getOrElse(data)
+          val meta = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(footer, conf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+          Option(meta.getKeyValueMetaData
+              .get("org.apache.spark.sql.parquet.row.metadata"))
+            .flatMap(js => Try(DataType.fromJson(js).asInstanceOf[StructType]).toOption)
+            .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+              .convert(meta.getSchema))
+        }
+      }.toOption.flatten
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 
   /** The driver regenerates testdata between rounds and the `ts` physical

@@ -155,8 +155,8 @@ object Bgp {
     * narrow dependency — and shuffle the new pairs by source; (3) union
     * closure and new pairs partition by partition (co-partitioned, so
     * no shuffle), dedupe each partition in Spark's spillable map, and
-    * cut the lineage with [[graft.Checkpoints.cutEagerCounted]], whose
-    * `count()` is the convergence scalar — the count is the job's own
+    * cut the lineage with [[graft.Checkpoints.cutEagerCollecting]], whose
+    * row count is the convergence scalar — the count is the job's own
     * action, so no `observe` metric and no second execution is needed.
     * Round 0 is one job over the input edges: shuffle by source, dedupe,
     * cut. (A DataFrame join→union→distinct round runs as 3–5 jobs,
@@ -287,8 +287,8 @@ object Bgp {
       val doubled = left.join(right, part)
         .map { case ((k, _), (s, o)) => ((k, s, o), null): ClosurePair }
         .partitionBy(part)
-      val (next, n) = Checkpoints.cutEagerCounted(
-        dedupe(cur.union(doubled), part))
+      val (next, n, _) = Checkpoints.cutEagerCollecting(
+        dedupe(cur.union(doubled), part), 0L)
       acc.unpersist(blocking = false)
       acc = next
       n

@@ -224,7 +224,7 @@ object DeltaStore {
     val exists =
       if (v == 0L) graft.sources.ShardStore.existsRecovered(spark, path)
       else fsOf(spark, dir).exists(new Path(path))
-    if (exists) graft.Tables.parquet(spark, path).select(QuadCols.map(col): _*)
+    if (exists) Sparql.readQuads(spark, path)
     else emptyQuads(spark)
   }
 
@@ -378,13 +378,14 @@ object DeltaStore {
         (Sparql.touched(Sparql.groundQuads(spark, q), add = false), noClear)
       case DeleteWhere(p) =>
         (Sparql.templateQuads(Sparql.whereSolutions(cur, p),
-          Seq(p -> false)), noClear)
+          Seq(p -> false)).distinct(), noClear)
       case Modify(del, ins, where, u, un, wg) =>
         // Both templates instantiate from the SAME pre-update
         // solutions, compiled once; within one delta the fold ranks add
-        // over tombstone — the delete-before-insert survival rule.
+        // over tombstone — the delete-before-insert survival rule. One
+        // delta row per distinct touched quad, not per solution.
         (Sparql.templateQuads(Sparql.whereSolutions(cur, where, u, un, wg),
-          Seq(del -> false, ins -> true), wg), noClear)
+          Seq(del -> false, ins -> true), wg).distinct(), noClear)
       case Load(doc, into, _) =>
         (Sparql.touched(Sparql.loadQuads(spark, doc, into), add = true),
           noClear)

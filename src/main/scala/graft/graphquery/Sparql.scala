@@ -1915,13 +1915,15 @@ object Sparql {
     * over the statement's quads `dels` and `adds`:
     * `next = (cur ⋉̸ (dels ∪ adds)) ∪ distinct(adds)` — set semantics,
     * deletes before inserts (a quad in both survives), and the law
-    * [[DeltaStore]] folds a statement's delta with. The WHERE compiles
-    * through the [[select]] machinery (GRAPH <iri>/GRAPH ?g scoping
-    * included) once per statement, each template quad instantiates per
-    * solution like CONSTRUCT, and the store is scanned once with only
-    * the touched quads broadcast ([[fold]]), so one statement touches at
-    * most what a broadcast holds; bulk removals belong to CLEAR/DROP or
-    * [[DeltaStore]]. CLEAR/DROP, COPY and MOVE are graph filters.
+    * [[DeltaStore]] folds a statement's delta with ([[fold]]). The
+    * WHERE compiles through the [[select]] machinery (GRAPH <iri>/GRAPH
+    * ?g scoping included) once per statement, and each template quad
+    * instantiates per solution like CONSTRUCT. The touched quads are
+    * computed once, in one job; a set that fits a broadcast comes back
+    * to the driver deduplicated ([[foldInstantiated]]), and the store is
+    * scanned once more as the probe side of the anti-join. DATA blocks
+    * are driver-built; LOAD's document and ADD's source graph never pass
+    * through the driver. CLEAR/DROP, COPY and MOVE are graph filters.
     *
     * `;`-separated operations apply sequentially, each seeing its
     * predecessor's effect, and the REQUEST commits once through
@@ -2011,19 +2013,20 @@ object Sparql {
   private def applyOp(spark: org.apache.spark.sql.SparkSession,
                       cur: DataFrame, op: UpdateOp): DataFrame = op match {
     case InsertData(quads) =>
-      fold(cur, touched(groundQuads(spark, quads), add = true))
+      fold(cur, touched(groundQuads(spark, quads), add = true), local = true)
     case DeleteData(quads) =>
-      fold(cur, touched(groundQuads(spark, quads), add = false))
+      fold(cur, touched(groundQuads(spark, quads), add = false), local = true)
     case DeleteWhere(pats) =>
-      fold(cur, templateQuads(whereSolutions(cur, pats), Seq(pats -> false)))
+      foldInstantiated(cur,
+        templateQuads(whereSolutions(cur, pats), Seq(pats -> false)))
     case Modify(del, ins, where, u, un, wg) =>
       // §3.1.3: BOTH templates instantiate against the PRE-update
       // store's solutions, compiled once; USING/USING NAMED scope only
       // the WHERE's dataset.
-      fold(cur, templateQuads(whereSolutions(cur, where, u, un, wg),
+      foldInstantiated(cur, templateQuads(whereSolutions(cur, where, u, un, wg),
         Seq(del -> false, ins -> true), wg))
     case Load(doc, into, _) =>
-      fold(cur, touched(loadQuads(spark, doc, into), add = true))
+      fold(cur, touched(loadQuads(spark, doc, into), add = true), local = false)
     case Clear(target, silent, drop) =>
       target match {
         case OneGraph(i) =>
@@ -2064,7 +2067,7 @@ object Sparql {
             dst.map(i => lit(i).cast("string"))
               .getOrElse(lit(null).cast("string")))
           kind match {
-            case "ADD" => fold(cur, touched(relabeled, add = true))
+            case "ADD" => fold(cur, touched(relabeled, add = true), local = false)
             case "COPY" => cur.filter(!inSide(dst)).unionByName(relabeled)
             case "MOVE" =>
               cur.filter(!inSide(dst) && !inSide(src)).unionByName(relabeled)
@@ -2075,13 +2078,44 @@ object Sparql {
   }
 
   /** The update law of [[update]]: the store minus every touched quad,
-    * plus the distinct adds; `touched` carries an `_add` flag. The store
-    * is scanned once, on the probe side of a broadcast anti-join; the
-    * broadcast and the adds' dedupe are independent query stages, which
-    * adaptive execution runs side by side. */
-  private def fold(cur: DataFrame, touched: DataFrame): DataFrame =
-    antiQuads(cur, broadcast(touched)).unionByName(
-      touched.filter(col("_add")).select(QuadCols.map(col): _*).distinct())
+    * plus the distinct adds; `touched` carries an `_add` flag. The join
+    * carries no hint. A `local` touched set is driver-built and already
+    * deduplicated; its statistics are exact, so Spark broadcasts it when
+    * it fits `spark.sql.autoBroadcastJoinThreshold`. A distributed one
+    * (LOAD's document, ADD's source graph, a large instantiation) joins
+    * as Spark plans it from its statistics, and never passes through
+    * the driver. */
+  private def fold(cur: DataFrame, touched: DataFrame,
+                   local: Boolean): DataFrame = {
+    val adds = touched.filter(col("_add")).select(QuadCols.map(col): _*)
+    antiQuads(cur, touched).unionByName(if (local) adds else adds.distinct())
+  }
+
+  /** [[fold]] of a template form's touched quads, computed once: one
+    * job cuts them and, when they fit a broadcast at Spark's size
+    * estimate of a driver-built relation (a row's default size plus 8
+    * bytes against `spark.sql.autoBroadcastJoinThreshold`), brings them
+    * back in that job. The driver so holds at most that many rows, about
+    * 80,000 quads under the default 10 MB threshold, and none when
+    * broadcasts are off. They fold as a deduplicated local set; larger
+    * sets fold from the cut. */
+  private def foldInstantiated(cur: DataFrame, touched: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val spark = cur.sparkSession
+    val rdd = touched.rdd
+    val fits = spark.sessionState.conf.autoBroadcastJoinThreshold /
+      (8 + touched.schema.defaultSize)
+    val (cut, _, kept) = graft.Checkpoints.cutEagerCollecting(
+      rdd, fits / math.max(1, rdd.getNumPartitions))
+    kept match {
+      case Some(rows) =>
+        cut.unpersist(blocking = false)
+        fold(cur, spark.createDataFrame(rows.distinct.asJava, touched.schema),
+          local = true)
+      case None =>
+        fold(cur, spark.createDataFrame(cut, touched.schema), local = false)
+    }
+  }
 
   /** `quads` in canonical column order, flagged as adds or deletes. */
   private[graphquery] def touched(quads: DataFrame, add: Boolean): DataFrame =
@@ -2120,13 +2154,19 @@ object Sparql {
     * empty dataset (INSERT DATA bootstraps it). Routes through
     * [[graft.sources.ShardStore.existsRecovered]] so a crashed
     * previous update is healed before reading. */
-  private def readQuadStore(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): DataFrame =
-    if (graft.sources.ShardStore.existsRecovered(spark, dir))
-      graft.Tables.parquet(spark, dir).select(QuadCols.map(col): _*)
+  private[graft] def readQuadStore(spark: org.apache.spark.sql.SparkSession,
+                                   dir: String): DataFrame =
+    if (graft.sources.ShardStore.existsRecovered(spark, dir)) readQuads(spark, dir)
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       quadSchema)
+
+  /** Quad parquet files (a flat or `g`-partitioned store, a delta
+    * base) read with [[quadSchema]], the one schema every store is
+    * written with: no footer read and no schema-inference job. */
+  private[graphquery] def readQuads(spark: org.apache.spark.sql.SparkSession,
+                                    path: String): DataFrame =
+    spark.read.schema(quadSchema).parquet(path).select(QuadCols.map(col): _*)
 
   /** Rows of `left` matching NO `right` quad — null-safe on every
     * column (absent lang/datatype and the default graph's null g all

@@ -806,7 +806,7 @@ object RdfQueries {
           |  ?s <urn:p/rehomed> "true" . } }
           |WHERE { GRAPH <urn:graph/cust> {
           |  ?s <urn:p/inNation> <urn:g/nation/5> . } }""".stripMargin)
-      graft.Tables.parquet(s, store)
+      graft.graphquery.Sparql.readQuadStore(s, store)
         .select(NTriples.quadLine(col("s"), col("p"), col("o"),
           col("oIsIri"), col("oLang"), col("oDatatype"), col("g"))
           .as("line"))
@@ -1124,7 +1124,7 @@ object RdfQueries {
            |ADD GRAPH <urn:graph/loaded> TO DEFAULT ;
            |MOVE GRAPH <urn:graph/geo> TO GRAPH <urn:graph/geo2> ;
            |DROP GRAPH <urn:graph/loaded>""".stripMargin)
-      graft.Tables.parquet(s, store)
+      graft.graphquery.Sparql.readQuadStore(s, store)
         .select(NTriples.quadLine(col("s"), col("p"), col("o"),
           col("oIsIri"), col("oLang"), col("oDatatype"), col("g"))
           .as("line"))
@@ -1168,7 +1168,7 @@ object RdfQueries {
           |    ?s ?p ?o .
           |  }
           |}""".stripMargin)
-      graft.Tables.parquet(s, store)
+      graft.graphquery.Sparql.readQuadStore(s, store)
         .select(NTriples.quadLine(col("s"), col("p"), col("o"),
           col("oIsIri"), col("oLang"), col("oDatatype"), col("g"))
           .as("line"))

@@ -376,7 +376,7 @@ class RelationalQueriesSpec extends SparkSpec {
     import spark.implicits._
     // Each of these loops reads its convergence scalar from its round's
     // eager cut — the row count of the closure's RDD cut
-    // (Checkpoints.cutEagerCounted), `observe` metrics for the other two
+    // (Checkpoints.cutEagerCollecting), `observe` metrics for the other two
     // (Checkpoints.cutEagerObserved). Under reliable checkpoints the
     // scalar must come out the same, or a loop stops early or late.
     // This 60-pair closure finishes on the driver after round 0, so

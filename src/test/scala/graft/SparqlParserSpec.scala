@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 import graft.graphquery.{Bgp, Sparql}
 import graft.rdf.{DerivedGraph => G}
@@ -1623,6 +1624,83 @@ class SparqlParserSpec extends SparkSpec {
       assert(after.count(_ == "urn:d/1,urn:i/b,urn:p/keep,yes,false,null,null") == 1)
       assert(after.count(_ == "urn:d/1,urn:i/c,urn:p/note,x,false,null,null") == 2)
       assert(after.count(_.contains("urn:p/state,old")) == 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
+  test("SPARQL UPDATE above the broadcast threshold: LOAD, ADD and a " +
+    "modify fold with no broadcast and give the store they give below it") {
+    val root = java.nio.file.Files.createTempDirectory("sparqlbig")
+    val doc = root.resolve("dump.nt")
+    java.nio.file.Files.write(doc, (0 until 400).map(i =>
+      s"<urn:i/$i> <urn:p/k> \"value number $i of the loaded document\" .")
+      .asJava)
+    val statements = Seq(s"LOAD <file:$doc>",
+      "ADD DEFAULT TO GRAPH <urn:d/copy>",
+      """DELETE { ?s <urn:p/k> ?o . } INSERT { ?s <urn:p/seen> ?o . }
+        |WHERE { ?s <urn:p/k> ?o . }""".stripMargin)
+    // The executed plan of every store commit (the write into the
+    // `__tmp` swap directory).
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    d: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains("__tmp")) plans.add(p)
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    def run(dir: String): Seq[String] = {
+      statements.foreach(updateSet(dir, _))
+      spark.read.parquet(dir).collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    }
+    try {
+      val below = run(s"$root/below")
+      assert(below.size == 800 &&
+        below.count(_.startsWith("urn:d/copy,")) == 400 &&
+        below.count(_.startsWith("null,")) == 400 &&
+        below.forall(q => q.startsWith("urn:d/copy,") == q.contains(",urn:p/k,")))
+      // 1 KB: less than the document, the source graph and the touched
+      // quads of the modify.
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+      spark.listenerManager.register(listener)
+      val above =
+        try run(s"$root/above")
+        finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      assert(above == below)
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (plans.size < statements.size && System.nanoTime < deadline)
+        Thread.sleep(50)
+      assert(plans.size == statements.size)
+      plans.asScala.foreach(p =>
+        assert(!p.contains("Broadcast"), s"a broadcast above the threshold:\n$p"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+
+  test("DeltaStore writes one delta row per distinct touched quad, not " +
+    "one per WHERE solution") {
+    val root = java.nio.file.Files.createTempDirectory("deltadedupe")
+    val dir = s"$root/store"
+    try {
+      graft.graphquery.DeltaStore.update(spark, dir,
+        """INSERT DATA { <urn:i/a> <urn:p/state> "old" .
+          |  <urn:i/a> <urn:p/x> "1" . <urn:i/a> <urn:p/y> "2" .
+          |  <urn:i/b> <urn:p/state> "old" . <urn:i/b> <urn:p/x> "3" . }"""
+          .stripMargin)
+      // Five solutions, two subjects: two tombstones and two adds.
+      graft.graphquery.DeltaStore.update(spark, dir,
+        """DELETE { ?s <urn:p/state> "old" . } INSERT { ?s <urn:p/state> "new" . }
+          |WHERE { ?s ?p ?o . }""".stripMargin)
+      val deltas = spark.read.parquet(s"$dir/delta")
+      val last = deltas.agg(max("delta_id")).head.get(0)
+      val rows = deltas.filter(col("delta_id") === last).drop("delta_id")
+      assert(rows.count() == 4 && rows.distinct().count() == 4)
+      assert(graft.graphquery.DeltaStore.serve(spark, dir)
+        .filter(col("p") === "urn:p/state").select("o")
+        .collect().map(_.getString(0)).toSeq == Seq("new", "new"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 

@@ -64,6 +64,14 @@ class TablesSpec extends SparkSpec {
       quads.repartition(2).write.partitionBy("g").parquet(s"$root/byGraph")
       matchesInference(s"$root/flat")
       matchesInference(s"$root/byGraph")
+      // One schema per partition directory: the footer must be the
+      // first data file in path order, where `k=1-x/` sorts before
+      // `k=1/` and `k=10/`.
+      quads.select("g", "s").write.parquet(s"$root/order/k=1")
+      quads.select("g", "o").write.parquet(s"$root/order/k=1-x")
+      quads.select("g", "p").write.parquet(s"$root/order/k=10")
+      matchesInference(s"$root/order")
+      assert(Tables.parquet(spark, s"$root/order").columns.toSeq == Seq("g", "o", "k"))
       assert(Tables.parquet(spark, s"$root/byGraph").columns.last == "g")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
