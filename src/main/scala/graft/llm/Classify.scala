@@ -196,8 +196,8 @@ object Classify {
               (s"$dir/weights", s"$dir/consts")
           }
       }
-    val c = spark.read.parquet(constsDir).head
-    NbModel(spark.read.parquet(weightsDir),
+    val c = graft.Tables.parquet(spark, constsDir).head
+    NbModel(graft.Tables.parquet(spark, weightsDir),
       c.getAs[Long]("perTokenBias"), c.getAs[Long]("prior"))
   }
 

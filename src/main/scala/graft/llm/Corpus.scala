@@ -185,7 +185,9 @@ object Corpus {
     * row: sum per key (addition is the merge), take the top m+1 real
     * keys, subtract the (m+1)-th count, fold it into the spill row.
     * A summary of summaries is itself a summary — the law ShardStore
-    * compaction and [[mgFromShards]] both lean on. */
+    * compaction and [[mgFromShards]] both lean on. Counts add, so it is
+    * NOT idempotent: a stream lands `batch_id=` shards
+    * ([[graft.sources.ShardStore.writeShard]]). */
   def mgFold(counts: DataFrame, m: Int = 64): DataFrame = {
     val summed = counts.groupBy(col("key")).agg(sum(col("n")).as("n"))
     val base = summed.filter(col("key") === MgSpillKey)
@@ -205,7 +207,7 @@ object Corpus {
   }
 
   /** Serve the heavy hitters from a `batch_id=`-sharded MG index
-    * ([[graft.streaming.EventsStream.mgIndexSink]]): sum the live
+    * ([[graft.streaming.EventsStream.shardSink]]): sum the live
     * shards per key, one final [[mgFold]] reduction, and report
     * (key, est_n, err_bound) — est ≤ true ≤ est + err_bound for every
     * reported key, and every key with true count > err_bound appears.
@@ -633,45 +635,23 @@ object Corpus {
       .withColumnRenamed("_draw", "draw")
   }
 
-  /** Persist a [[bottomK]] per-stratum sample as a sign-once index —
-    * the living eval-set: the stored rows ARE the sample (payload
-    * columns included), and [[upsertBottomKIndex]] keeps it current as
-    * the corpus grows without ever re-reading what was already
-    * sampled. */
-  def writeBottomKIndex(docs: DataFrame, keyCol: String,
-                        stratumCol: String, k: Int, dir: String,
-                        salt: String = "bk:"): Unit =
-    bottomK(docs, keyCol, stratumCol, k, salt)
-      .write.mode("overwrite").parquet(dir)
-
-  /** Merge a new batch into a stored bottom-k sample index: the batch
-    * samples ALONE (one batch-sized window), unions with the ≤ k·|strata|
-    * stored rows, dedups on the key (a replayed row re-draws the SAME
-    * md5 ticket), and re-ranks per stratum — bottomK(A ∪ B) =
-    * bottomK(bottomK(A) ∪ bottomK(B)), the KMV merge law with payload
-    * rows attached. IDEMPOTENT under at-least-once replay — no batch
-    * ledger, the [[upsertKmvIndex]] argument verbatim — and the
-    * overwrite is the tmp-write + rename swap (one complete copy on
-    * disk at every instant). Handles the first batch (no index yet). */
-  def upsertBottomKIndex(batch: DataFrame, keyCol: String,
-                         stratumCol: String, k: Int, dir: String,
-                         salt: String = "bk:"): Unit = {
-    val spark = batch.sparkSession
-    // Recover a half-swapped previous overwrite before deciding
-    // merge-vs-initialize — a bare exists() would read the crash
-    // window as "no index yet" and drop the accumulated sample.
-    if (graft.sources.ShardStore.existsRecovered(spark, dir)) {
-      val stored = spark.read.parquet(dir)
-      val bs = bottomK(batch, keyCol, stratumCol, k, salt)
+  /** The bottom-k merge law over stored ∪ batch samples ([[bottomK]]
+    * rows, payload columns included): dedup on (stratum, key) — a
+    * replayed row re-draws the SAME md5 ticket — then re-rank per
+    * stratum, since bottomK(A ∪ B) = bottomK(bottomK(A) ∪ bottomK(B)),
+    * the KMV law with payload rows attached. The stored rows ARE the
+    * sample: the living eval-set grows without re-reading what was
+    * already sampled. Idempotent, so at-least-once delivery needs no
+    * ledger ([[graft.sources.ShardStore.upsert]]). */
+  def bottomKMerge(keyCol: String, stratumCol: String,
+                   k: Int): graft.sources.ShardStore.Idempotent =
+    graft.sources.ShardStore.Idempotent { rows =>
       val w = Window.partitionBy(col(stratumCol))
         .orderBy(col("draw").asc, col(keyCol).asc)
-      val merged = stored.unionByName(bs)
-        .dropDuplicates(stratumCol, keyCol)
+      rows.dropDuplicates(stratumCol, keyCol)
         .withColumn("pick_rank", row_number().over(w).cast("long"))
         .filter(col("pick_rank") <= k)
-      graft.sources.ShardStore.overwriteAtomic(merged, dir)
-    } else writeBottomKIndex(batch, keyCol, stratumCol, k, dir, salt)
-  }
+    }
 
   /** Deterministic WEIGHTED sampling without replacement — the
     * Efraimidis–Spirakis (2006) priority draw, the weighted complement
@@ -869,8 +849,8 @@ object Corpus {
   def surprisalAgainstVocab(newDocs: DataFrame, idCol: String,
                             textCol: String, dir: String): DataFrame = {
     val spark = newDocs.sparkSession
-    val vocab = spark.read.parquet(s"$dir/vocab")
-    val total = spark.read.parquet(s"$dir/total")
+    val vocab = graft.Tables.parquet(spark, s"$dir/vocab")
+    val total = graft.Tables.parquet(spark, s"$dir/total")
     val perDoc = newDocs
       .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("_t"))
       .groupBy(col(idCol), col("_t")).agg(count(lit(1)).as("_n_dt"))
@@ -1172,16 +1152,7 @@ object Corpus {
     def write(df: DataFrame, parts: Seq[String], path: String): Unit =
       if (truncate)
         df.write.mode("overwrite").partitionBy(parts: _*).parquet(path)
-      else {
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val old = spark.conf.getOption(key)
-        spark.conf.set(key, "dynamic")
-        try df.write.mode("overwrite").partitionBy(parts: _*).parquet(path)
-        finally old match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
+      else graft.sources.ShardStore.overwritePartitions(df, path, parts)
     // Write order is load-bearing: STATS LAST, as the batch's commit
     // record. A batch id present in `stats/` proves its postings and
     // docs writes completed (a crash mid-batch leaves no stats shard,
@@ -1256,8 +1227,9 @@ object Corpus {
       writeSearchIndexShard(batch, idCol, textCol, dir, batchId, buckets)
       // Sign the batch's ids into the gate for future upserts (set union
       // — idempotent under replay).
-      upsertBloomIndex(batch.select(col(idCol).as("_id")), "_id",
-        s"$dir/docs_bloom", mBits = DocsBloomBits)
+      graft.sources.ShardStore.upsert(bloomPositions(
+        batch.select(col(idCol).as("_id")), "_id", mBits = DocsBloomBits),
+        s"$dir/docs_bloom", bloomMerge)
     }
   }
 
@@ -1418,11 +1390,11 @@ object Corpus {
     // costs one exact probe; a miss is impossible.
     val bloomDir = s"$dir/docs_bloom"
     if (!graft.sources.ShardStore.existsRecovered(spark, bloomDir))
-      writeBloomIndex(
-        graft.sources.ShardStore.live(spark, s"$dir/docs")
-          .select(col("_id")), "_id", bloomDir, mBits = DocsBloomBits)
+      bloomPositions(graft.sources.ShardStore.live(spark, s"$dir/docs")
+          .select(col("_id")), "_id", mBits = DocsBloomBits)
+        .write.mode("overwrite").parquet(bloomDir)
     val batchIds = graft.Checkpoints.cutEager(
-      bloomProbe(spark.read.parquet(bloomDir), batchIds0, "_id",
+      bloomProbe(graft.Tables.parquet(spark, bloomDir), batchIds0, "_id",
         mBits = DocsBloomBits)
         .filter(col("bloom_positive") === 1L)
         .select(col("_id")))
@@ -1918,62 +1890,23 @@ object Corpus {
       .filter(col("kmv_rank") <= k)
   }
 
-  /** Persist a [[kmvSketch]] as a parquet k-slot table (stratum, h) —
-    * the sign-once discipline (`writeDedupIndex`/`writeIvfIndex`) for
-    * cardinality sketches: the corpus is hashed ONCE; later batches
-    * merge via [[mergeKmvIndex]] and dashboards estimate via
-    * [[readKmvIndex]] without ever re-reading indexed data. The table
-    * is ≤ k·|strata| rows at any corpus size.
-    */
-  def writeKmvIndex(df: DataFrame, keyCol: String, stratumCol: String,
-                    k: Int, dir: String, salt: String = "kmv:",
-                    saltBuckets: Int = 16): Unit =
-    kmvSketch(df, keyCol, stratumCol, k, salt, saltBuckets)
-      .select(col("stratum"), col("h"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** Merge a NEW batch into a stored KMV index: sketch the batch alone
-    * (one pass over the batch, nothing else read), union with the
-    * stored k-slots, keep the k smallest distinct per stratum. EXACTLY
-    * the sketch of the concatenated corpora — KMV is mergeable because
-    * the global k-smallest of A∪B is contained in (A's k-smallest) ∪
-    * (B's k-smallest): a hash outside a side's k-smallest has ≥ k
-    * smaller hashes on that side alone, so it cannot be in the global
-    * k-smallest. Estimates served from the merged index therefore
-    * hash-match a from-scratch sketch bit for bit (q189's gate).
-    */
-  def mergeKmvIndex(batch: DataFrame, keyCol: String, stratumCol: String,
-                    k: Int, dir: String, salt: String = "kmv:",
-                    saltBuckets: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    val stored = spark.read.parquet(dir).select(col("stratum"), col("h"))
-    val bsk = kmvSketch(batch, keyCol, stratumCol, k, salt, saltBuckets)
-      .select(col("stratum"), col("h"))
-    val w = Window.partitionBy(col("stratum")).orderBy(col("h").asc)
-    val merged = stored.unionByName(bsk).distinct()
-      .withColumn("_r", row_number().over(w)).filter(col("_r") <= k)
-      .drop("_r")
-    // ≤ k·|strata| rows; overwriteAtomic keeps a complete copy on disk
-    // at every instant (tmp-write + rename swap).
-    graft.sources.ShardStore.overwriteAtomic(merged, dir)
-  }
-
-  /** [[mergeKmvIndex]] that also handles the FIRST batch (no index on
-    * disk yet) — the form a streaming foreachBatch sink calls per
-    * micro-batch ([[graft.streaming.EventsStream.kmvIndexSink]]).
-    * Replay-safe WITHOUT a batch ledger: KMV merge is idempotent
-    * (re-merging a batch unions hashes already in the slots, and the
-    * k-smallest of X ∪ X is X), so an at-least-once retry leaves the
-    * index bit-identical. */
-  def upsertKmvIndex(batch: DataFrame, keyCol: String, stratumCol: String,
-                     k: Int, dir: String, salt: String = "kmv:",
-                     saltBuckets: Int = 16): Unit = {
-    // existsRecovered, not exists: restore a half-swapped overwrite
-    // before reading the window as "no index yet".
-    if (graft.sources.ShardStore.existsRecovered(batch.sparkSession, dir))
-      mergeKmvIndex(batch, keyCol, stratumCol, k, dir, salt, saltBuckets)
-    else writeKmvIndex(batch, keyCol, stratumCol, k, dir, salt, saltBuckets)
-  }
+  /** The KMV merge law over stored ∪ batch k-slots, the (stratum, h)
+    * columns of [[kmvSketch]]: the k smallest distinct hashes per
+    * stratum. EXACTLY the sketch of the concatenated corpora — the
+    * global k-smallest of A∪B is contained in (A's k-smallest) ∪ (B's
+    * k-smallest): a hash outside a side's k-smallest has ≥ k smaller
+    * hashes on that side alone. Estimates served from a merged index
+    * ([[readKmvIndex]]) hash-match a from-scratch sketch bit for bit
+    * (q189's gate); the slots are ≤ k·|strata| rows at any corpus size.
+    * Idempotent — the k-smallest of X ∪ X is X — so at-least-once
+    * delivery needs no ledger ([[graft.sources.ShardStore.upsert]]). */
+  def kmvMerge(k: Int): graft.sources.ShardStore.Idempotent =
+    graft.sources.ShardStore.Idempotent { rows =>
+      val w = Window.partitionBy(col("stratum")).orderBy(col("h").asc)
+      rows.distinct()
+        .withColumn("_r", row_number().over(w)).filter(col("_r") <= k)
+        .drop("_r")
+    }
 
   /** Stored KMV index with ranks restored — the same (stratum, h,
     * kmv_rank) relation [[kmvSketch]] emits, read from the k-slot
@@ -1981,7 +1914,7 @@ object Corpus {
   def readKmvIndex(spark: org.apache.spark.sql.SparkSession,
                    dir: String): DataFrame = {
     val w = Window.partitionBy(col("stratum")).orderBy(col("h").asc)
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .withColumn("kmv_rank", row_number().over(w).cast("long"))
   }
 
@@ -2020,37 +1953,17 @@ object Corpus {
       .agg(min(coalesce(col("n"), lit(0L))).as("est_n"))
   }
 
-  /** Persist a [[cmsBuild]] sketch as a parquet table — the sign-once
-    * index form for FREQUENCIES, completing the sketch-index family
-    * (KMV = distinct counts, histogram = distributions, CMS = per-key
-    * frequency over an unbounded key domain). The stored table is
-    * ≤ depth·width rows at ANY corpus size; a frequency monitor probes
-    * it ([[cmsEstimate]]) without ever re-reading the corpus. */
-  def writeCmsIndex(df: DataFrame, keyCol: String, dir: String,
-                    depth: Int = 4, width: Int = 256,
-                    salt: String = "cms"): Unit =
-    cmsBuild(df, keyCol, depth, width, salt)
-      .write.mode("overwrite").parquet(dir)
-
-  /** Merge a new batch into a stored CMS index: the batch is sketched
-    * alone (one aggregation of the batch — the corpus behind the index
-    * is never re-read) and cell counts ADD, which is the count-min merge
-    * law: cms(A) + cms(B) = cms(A ∪ B) cell for cell, so the merged
-    * index is BIT-IDENTICAL to a from-scratch sketch of everything
-    * ingested (q203's gate holds the merged index to q197's one-shot
-    * oracle). Addition is NOT idempotent — a replaying caller must
-    * ledger batches or use the batch_id-sharded streaming form
-    * ([[graft.streaming.EventsStream.cmsIndexSink]]). One aggregation
-    * over ≤ 2·depth·width rows; the tmp-write + rename swap keeps a
-    * complete copy on disk at every instant. */
-  def mergeCmsIndex(batch: DataFrame, keyCol: String, dir: String,
-                    depth: Int = 4, width: Int = 256,
-                    salt: String = "cms"): Unit = {
-    val stored = batch.sparkSession.read.parquet(dir)
-    val merged = stored.unionByName(cmsBuild(batch, keyCol, depth, width, salt))
-      .groupBy(col("r"), col("c")).agg(sum(col("n")).as("n"))
-    graft.sources.ShardStore.overwriteAtomic(merged, dir)
-  }
+  /** The count-min merge law over stored ∪ batch (r, c, n) cells:
+    * cell counts ADD, cms(A) + cms(B) = cms(A ∪ B) cell for cell, so a
+    * merged index is BIT-IDENTICAL to a from-scratch sketch of
+    * everything ingested (q203's gate holds it to q197's one-shot
+    * oracle). A stored index is ≤ depth·width rows at any corpus size;
+    * a frequency monitor probes it ([[cmsEstimate]]) without re-reading
+    * the corpus. Addition is NOT idempotent: a replaying caller
+    * ledgers batches or lands `batch_id=` shards
+    * ([[graft.sources.ShardStore.writeShard]]). */
+  val cmsMerge: graft.sources.ShardStore.Additive =
+    graft.sources.ShardStore.Additive.cellSum("r", "c")
 
   /** Bloom-filter SET-BIT table over a key column: each key sets k
     * md5-derived positions (`bf<i>:`, the q52 integer draw device) in a
@@ -2059,9 +1972,7 @@ object Corpus {
     * external engine. The relational form of the classical bitmap: a
     * (pos) row per set bit instead of a packed word, so building is one
     * map-side-combined distinct of the k-exploded input and MERGE is
-    * plain set union — idempotent, which is what makes the persisted
-    * form ([[writeBloomIndex]]) streaming-maintainable without a batch
-    * ledger ([[graft.streaming.EventsStream.bloomIndexSink]]).
+    * plain set union ([[bloomMerge]]).
     *
     * The 100 TB use is JOIN PRUNING / decontamination pre-filtering:
     * sign the small side (banned users, benchmark fingerprints, dim
@@ -2077,39 +1988,14 @@ object Corpus {
       }: _*)).as("pos"))
       .distinct()
 
-  /** Persist a Bloom set-bit table — the sign-once index form for
-    * MEMBERSHIP, extending the sketch-index family (KMV = distinct
-    * counts, histogram/quantile = distributions, CMS = frequencies,
-    * Bloom = set membership). */
-  def writeBloomIndex(df: DataFrame, keyCol: String, dir: String,
-                      k: Int = 4, mBits: Int = 65536,
-                      salt: String = "bf"): Unit =
-    bloomPositions(df, keyCol, k, mBits, salt)
-      .write.mode("overwrite").parquet(dir)
-
-  /** Merge a new key batch into a stored Bloom index: the batch sets
-    * its own bits ALONE (the indexed corpus is never re-read) and the
-    * stored set unions them — bloom(A) ∪ bloom(B) = bloom(A ∪ B)
-    * position for position, so the merged index is bit-identical to a
-    * from-scratch build of everything ingested. Union is IDEMPOTENT:
-    * at-least-once redelivery re-unions bits already present, so no
-    * ledger exists to corrupt. Handles the first batch (no index on
-    * disk yet), which is the form a foreachBatch sink calls. */
-  def upsertBloomIndex(batch: DataFrame, keyCol: String, dir: String,
-                       k: Int = 4, mBits: Int = 65536,
-                       salt: String = "bf"): Unit = {
-    val spark = batch.sparkSession
-    // existsRecovered, not exists: restore a half-swapped overwrite
-    // before reading the window as "no index yet".
-    if (graft.sources.ShardStore.existsRecovered(spark, dir)) {
-      val stored = spark.read.parquet(dir)
-      val merged = stored
-        .unionByName(bloomPositions(batch, keyCol, k, mBits, salt))
-        .distinct()
-      // ≤ mBits rows; tmp-write + rename swap — always a complete copy.
-      graft.sources.ShardStore.overwriteAtomic(merged, dir)
-    } else writeBloomIndex(batch, keyCol, dir, k, mBits, salt)
-  }
+  /** The Bloom merge law over stored ∪ batch set-bit rows: set union,
+    * bloom(A) ∪ bloom(B) = bloom(A ∪ B) position for position, so a
+    * merged index is bit-identical to a from-scratch build — the
+    * sign-once index form for MEMBERSHIP. Idempotent: a redelivered
+    * batch re-sets bits already set, so at-least-once delivery needs no
+    * ledger ([[graft.sources.ShardStore.upsert]]). */
+  val bloomMerge: graft.sources.ShardStore.Idempotent =
+    graft.sources.ShardStore.Idempotent(_.distinct())
 
   /** Membership probe against a Bloom set-bit table: each probe key
     * re-derives its k positions and is bloom-positive iff ALL k are
@@ -2201,7 +2087,7 @@ object Corpus {
     * a single time and never again (the sign-once contract applied to
     * the ingest gate): `windows/` holds the distinct window hashes
     * (the exact side), `bloom/` their set-bit table. Growing the
-    * benchmark is [[upsertBloomIndex]] on `bloom/` plus a distinct
+    * benchmark is a [[bloomMerge]] upsert on `bloom/` plus a distinct
     * union append on `windows/` — both set-law idempotent. */
   def writeDecontamIndex(bench: DataFrame, idCol: String, textCol: String,
                          dir: String, spanTokens: Int = 8, k: Int = 4,
@@ -2223,8 +2109,8 @@ object Corpus {
                     mBits: Int = 1 << 20): DataFrame = {
     val spark = corpus.sparkSession
     decontamCore(windowHashes(corpus, idCol, textCol, spanTokens),
-      spark.read.parquet(s"$dir/windows"),
-      spark.read.parquet(s"$dir/bloom"), idCol, k, mBits)
+      graft.Tables.parquet(spark, s"$dir/windows"),
+      graft.Tables.parquet(spark, s"$dir/bloom"), idCol, k, mBits)
   }
 
   /** Distributed BPE tokenizer TRAINING (Sennrich 2016 — the q118
@@ -2364,7 +2250,7 @@ object Corpus {
   def bpeEncodeIndexed(docs: DataFrame, idCol: String, textCol: String,
                        dir: String): DataFrame = {
     val spark = docs.sparkSession
-    val merges = spark.read.parquet(s"$dir/merges")
+    val merges = graft.Tables.parquet(spark, s"$dir/merges")
       .orderBy(col("round").asc).collect()
       .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq
     val dw = docs.select(col(idCol),

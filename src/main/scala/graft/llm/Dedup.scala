@@ -418,7 +418,7 @@ object Dedup {
       (s"${prefix}_bands", Seq("_band", "_bh"), s"$base/bands"))
       .foreach { case (table, keys, path) =>
         if (!spark.catalog.tableExists(table)) {
-          val schema = spark.read.parquet(path).schema
+          val schema = graft.Tables.parquet(spark, path).schema
           spark.sql(s"CREATE TABLE `$table` (${schema.toDDL}) " +
             "USING PARQUET " +
             s"CLUSTERED BY (${keys.map(k => s"`$k`").mkString(", ")}) " +

@@ -309,7 +309,7 @@ object Similarity {
   private def reconProbed(spark: org.apache.spark.sql.SparkSession,
                           dir: String, idCol: String,
                           cids: Array[Long]): DataFrame = {
-    val codebook = spark.read.parquet(s"$dir/codebook")
+    val codebook = graft.Tables.parquet(spark, s"$dir/codebook")
     graft.sources.ShardStore.live(spark, s"$dir/codes")
       .filter(col("_cid").isin(cids.toIndexedSeq: _*))
       .select(col(idCol).as("_vid"), col("_cid").cast("long").as("_cid"),
@@ -379,7 +379,7 @@ object Similarity {
                        dir: String): Unit = {
     val spark = batch.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
     nearest(batch, centroids, idCol, vecCol, "neighbor_id", "_v", "_cn2",
       keep = 1)
       .write.mode("append").partitionBy("_cid").parquet(s"$dir/lists")
@@ -408,19 +408,12 @@ object Similarity {
                     dir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
     val assigned = nearest(batch, centroids, idCol, vecCol,
         "neighbor_id", "_v", "_cn2", keep = 1)
       .withColumn("batch_id", lit(batchId))
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try assigned.write.mode("overwrite")
-      .partitionBy("batch_id", "_cid").parquet(s"$dir/lists")
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    graft.sources.ShardStore.overwritePartitions(assigned, s"$dir/lists",
+      Seq("batch_id", "_cid"))
   }
 
   /** ANN over a materialized [[writeIvfIndex]] index. The probed centroid
@@ -432,7 +425,7 @@ object Similarity {
                     dir: String, k: Int = 10, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
     val probed = nearest(queries, centroids, idCol, vecCol,
       "qid", "_qv", "_qn", keep = nprobe)
       .cutLineageEager() // probes are reused for the cid set + the join
@@ -806,7 +799,7 @@ object Similarity {
     // A fresh ingest session may not have run trainPq/pqKnnIndexed yet —
     // pqAssign's graft_dot must be registered here too.
     graft.functions.NativeExpressions.register(spark)
-    val codebook = spark.read.parquet(s"$dir/codebook")
+    val codebook = graft.Tables.parquet(spark, s"$dir/codebook")
     pqEncode(batch, idCol, vecCol, codebook, m, dim)
       .write.mode("append").parquet(s"$dir/codes")
   }
@@ -828,8 +821,8 @@ object Similarity {
                    dir: String, k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val codebook = spark.read.parquet(s"$dir/codebook")
-    val recon = spark.read.parquet(s"$dir/codes")
+    val codebook = graft.Tables.parquet(spark, s"$dir/codebook")
+    val recon = graft.Tables.parquet(spark, s"$dir/codes")
       .select(col(idCol).as("_vid"),
         posexplode(col("codes")).as(Seq("_sub", "_cid")))
       .join(broadcast(codebook), Seq("_sub", "_cid"))
@@ -897,23 +890,16 @@ object Similarity {
                       dim: Int = 64): Unit = {
     val spark = batch.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val codebook = spark.read.parquet(s"$dir/codebook")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
+    val codebook = graft.Tables.parquet(spark, s"$dir/codebook")
     val assigned = nearest(batch, centroids, idCol, vecCol,
         "_vid", "_av", "_an", keep = 1)
       .select(col("_vid").as(idCol), col("_cid"))
     val rows = pqEncode(batch, idCol, vecCol, codebook, m, dim)
       .join(assigned, Seq(idCol))
       .withColumn("batch_id", lit(batchId))
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try rows.write.mode("overwrite")
-      .partitionBy("batch_id", "_cid").parquet(s"$dir/codes")
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    graft.sources.ShardStore.overwritePartitions(rows, s"$dir/codes",
+      Seq("batch_id", "_cid"))
   }
 
   /** ANN over a materialized [[writeIvfPqIndex]] index — coarse probe →
@@ -938,7 +924,7 @@ object Similarity {
                       shortlist: Int = 50): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
     val probed = nearest(queries, centroids, idCol, vecCol,
       "qid", "_qv", "_qn", keep = nprobe)
       .cutLineageEager() // probes feed both the cid set and the join
@@ -993,7 +979,7 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
     val maxProbe = nprobes.max
     // nearest()'s probe pass with the probe RANK kept — the rank is
     // what lets one ADC pass serve every nprobe prefix.
@@ -1162,7 +1148,7 @@ object Similarity {
                                 nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.NativeExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = graft.Tables.parquet(spark, s"$dir/centroids")
     val probed = nearest(queries, centroids, idCol, vecCol,
       "qid", "_qv", "_qn", keep = nprobe)
       .cutLineageEager()

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables.t
+import graft.Tables.{parquet, t}
+import graft.sources.ShardStore
 import graft.llm.{Classify, Corpus, Dedup, Similarity, TextAnalysis => TA}
 
 /** LLM-training-data pipeline queries over `documents` / `embeddings`:
@@ -80,34 +81,50 @@ object LlmQueries {
     })
   }
 
-  /** Data-dir fingerprint for per-session index paths/markers (the
-    * q187/q218 build-if-absent discipline): two data dirs never share
-    * an index, and a fresh JVM (empty in-memory catalog) re-signs over
-    * stale files. */
-  private def dirKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
+  /** The directory of a registry row's stored index: the session
+    * warehouse, plus `name`, plus a key of the data dir, so two data
+    * dirs never share an index. */
+  private[graft] def indexDir(s: SparkSession, dir: String,
+                              name: String): String = {
+    val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(6)
+    s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + s"/${name}_$key"
+  }
 
-  /** q218/q238 share ONE persisted IVF+PQ index per data dir, built
-    * once per session behind a dir-keyed marker (the q187 discipline —
-    * bench rows measure SERVING; a fresh JVM re-signs over stale
-    * files; two data dirs never share an index). Both queries' DuckDB
-    * oracles hardcode exactly these parameters (%64 coarse seeds, %8
-    * PQ seeds, m=8, trainCap 256), so the build lives in one place. */
-  private def ivfPqIndexFor(s: SparkSession, dir: String): String = {
-    val key = dirKey(dir)
-    val idx = s.conf.get("spark.sql.warehouse.dir")
-      .stripSuffix("/") + s"/q218_ivfpq_$key"
-    val marker = s"q218idx_$key"
+  /** Build-if-absent: the [[indexDir]] index is built ONCE per session
+    * per data dir, and every later call (the bench's min-of-3, a
+    * dashboard's repeat) is the read-only serve, so a bench row
+    * measures the SERVING cost the sign-once contract advertises, not
+    * a per-call rebuild. The build keeps its own sbt gates. The marker
+    * is a temp view named after the directory: a fresh session (no
+    * temp views) re-signs over any stale files. Returns the directory. */
+  private def sessionIndex(s: SparkSession, dir: String, name: String)
+                          (build: String => Unit): String = {
+    val idx = indexDir(s, dir, name)
+    val marker = idx.substring(idx.lastIndexOf('/') + 1)
     if (!s.catalog.tableExists(marker)) {
-      Similarity.writeIvfPqIndex(t(s, dir, "embeddings"), "vec_id",
-        "embedding", idx, m = 8, dim = 64, centroidEvery = 64,
-        pqCentroidEvery = 8, trainCap = 256)
+      build(idx)
       s.emptyDataFrame.createOrReplaceTempView(marker)
     }
     idx
   }
+
+  /** q218/q238 share ONE persisted IVF+PQ index per data dir
+    * ([[sessionIndex]]). Both queries' DuckDB oracles hardcode exactly
+    * these parameters (%64 coarse seeds, %8 PQ seeds, m=8, trainCap
+    * 256), so the build lives in one place. */
+  private def ivfPqIndexFor(s: SparkSession, dir: String): String =
+    sessionIndex(s, dir, "q218_ivfpq") { idx =>
+      Similarity.writeIvfPqIndex(t(s, dir, "embeddings"), "vec_id",
+        "embedding", idx, m = 8, dim = 64, centroidEvery = 64,
+        pqCentroidEvery = 8, trainCap = 256)
+    }
+
+  /** The stored KMV k-slots of an events slice: [[Corpus.kmvSketch]]'s
+    * (stratum, h) columns, the layout [[Corpus.kmvMerge]] folds. */
+  private def kmvSlots(ev: DataFrame): DataFrame =
+    Corpus.kmvSketch(ev, "user_id", "event_type", 64).drop("kmv_rank")
 
   /** Dup-injected corpus shared by the SimHash-family gates (q51, q55,
     * q70, q73): every 20th doc gains an exact copy (+1000000), every
@@ -201,22 +218,15 @@ object LlmQueries {
     // index alone — the band self-join is bucket-local (zero exchanges,
     // LlmSpec plan assert) and the corpus text is never re-read. The
     // index stores the same bands/sketches as q33, so the verified pair
-    // set is identical.
-    // Build-if-absent split (r13 advice): the index is signed ONCE per
-    // session — the first call builds it, every later call (bench's
-    // min-of-3, a dashboard's repeat) is the READ-ONLY probe, so the
-    // bench row measures serving cost, which is the number the
-    // sign-once contract advertises. The build itself keeps its own
-    // sbt gate (LlmSpec "corpus-self near-dups from the index alone").
-    // The prefix is keyed by the data dir: two dirs can never share a
-    // stale index, and a fresh JVM (empty in-memory catalog) always
-    // re-signs over the old files.
+    // set is identical. Signed once per session ([[sessionIndex]]); the
+    // build keeps its own sbt gate (LlmSpec "corpus-self near-dups from
+    // the index alone"). The index's table prefix is its directory name.
     "q187_neardup_indexed" -> { (s, dir) =>
-      val prefix = "q187idx_" + dirKey(dir)
-      if (!s.catalog.tableExists(s"${prefix}_bands"))
+      val idx = sessionIndex(s, dir, "q187idx") { idx =>
         Dedup.writeDedupIndex(t(s, dir, "documents"), "doc_id", "text",
-          prefix)
-      Dedup.indexNearDups(s, prefix)
+          idx.substring(idx.lastIndexOf('/') + 1), dir = Some(idx))
+      }
+      Dedup.indexNearDups(s, idx.substring(idx.lastIndexOf('/') + 1))
     },
 
     // 32-bit SimHash signature per document (relational pipeline).
@@ -912,13 +922,13 @@ object LlmQueries {
     "q226_bottomk_index" -> { (s, dir) =>
       import s.implicits._
       val d = t(s, dir, "documents").select($"doc_id", $"lang")
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q226_bk"
-      Corpus.writeBottomKIndex(d.filter($"doc_id" % 2 === 0),
-        "doc_id", "lang", k = 20, idx)
-      Corpus.upsertBottomKIndex(d.filter($"doc_id" % 2 =!= 0),
-        "doc_id", "lang", k = 20, idx)
-      s.read.parquet(idx)
+      val idx = indexDir(s, dir, "q226_bk")
+      Corpus.bottomK(d.filter($"doc_id" % 2 === 0), "doc_id", "lang", k = 20)
+        .write.mode("overwrite").parquet(idx)
+      ShardStore.upsert(Corpus.bottomK(d.filter($"doc_id" % 2 =!= 0),
+        "doc_id", "lang", k = 20), idx,
+        Corpus.bottomKMerge("doc_id", "lang", 20))
+      parquet(s, idx)
         .select($"doc_id", $"lang", $"draw", $"pick_rank")
     },
 
@@ -949,15 +959,14 @@ object LlmQueries {
       import s.implicits._
       val toks = t(s, dir, "documents")
         .select($"doc_id", explode(TA.tokens($"text")).as("token"))
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q229_mg"
+      val idx = indexDir(s, dir, "q229_mg")
       val fs = new org.apache.hadoop.fs.Path(idx)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(idx), true)
-      graft.streaming.EventsStream.writeHistShard(
+      ShardStore.writeShard(
         Corpus.mgSummary(toks.filter($"doc_id" % 2 === 0), "token", 32),
         batchId = 0L, dir = idx)
-      graft.streaming.EventsStream.writeHistShard(
+      ShardStore.writeShard(
         Corpus.mgSummary(toks.filter($"doc_id" % 2 =!= 0), "token", 32),
         batchId = 1L, dir = idx)
       Corpus.mgFromShards(s, idx, 32).withColumnRenamed("key", "token")
@@ -1330,26 +1339,17 @@ object LlmQueries {
     // ONLY its three terms' buckets + the 1-row stats shards. Oracle is
     // q164's corpus-scan BM25 verbatim — served scores must be
     // bit-equal to the scan because every integer (tf, dl, df, N, T)
-    // is the same wherever it is read from.
-    // Build-if-absent split (r21, the q187/q218 discipline): the two
-    // posting shards are signed ONCE per session behind a dir-keyed
-    // marker — the bench's min-of-3 and any repeat call measure the
-    // SERVING cost the sign-once contract advertises, not a per-call
-    // re-tokenization of the corpus. The build itself keeps its own
-    // sbt gates (LlmSpec's search-index truncate/append/merge laws).
+    // is the same wherever it is read from. Signed once per session
+    // ([[sessionIndex]]); the build keeps its own sbt gates (LlmSpec's
+    // search-index truncate/append/merge laws).
     "q211_bm25_indexed" -> { (s, dir) =>
       import s.implicits._
       val docs = t(s, dir, "documents").select($"doc_id", $"text")
-      val key = dirKey(dir)
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + s"/q211_search_$key"
-      val marker = s"q211idx_$key"
-      if (!s.catalog.tableExists(marker)) {
+      val idx = sessionIndex(s, dir, "q211_search") { idx =>
         Corpus.writeSearchIndexShard(docs.filter($"doc_id" % 2 === 0),
           "doc_id", "text", idx, batchId = 0L, truncate = true)
         Corpus.writeSearchIndexShard(docs.filter($"doc_id" % 2 =!= 0),
           "doc_id", "text", idx, batchId = 1L)
-        s.emptyDataFrame.createOrReplaceTempView(marker)
       }
       Corpus.bm25FromIndex(s, idx, "doc_id",
         terms = Seq("spark", "merge", "vector"), topK = 20)
@@ -1524,12 +1524,11 @@ object LlmQueries {
       val ev = t(s, dir, "events")
         .filter($"event_type".isin("view", "purchase"))
         .select($"event_type", $"user_id", $"event_id")
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q189_kmv"
-      Corpus.writeKmvIndex(ev.filter($"event_id" % 2 === 0),
-        "user_id", "event_type", 64, idx)
-      Corpus.mergeKmvIndex(ev.filter($"event_id" % 2 =!= 0),
-        "user_id", "event_type", 64, idx)
+      val idx = indexDir(s, dir, "q189_kmv")
+      kmvSlots(ev.filter($"event_id" % 2 === 0))
+        .write.mode("overwrite").parquet(idx)
+      ShardStore.upsert(kmvSlots(ev.filter($"event_id" % 2 =!= 0)), idx,
+        Corpus.kmvMerge(64))
       kmvSetops(Corpus.readKmvIndex(s, idx), 64)
     },
 
@@ -1559,19 +1558,15 @@ object LlmQueries {
     // ODD docs then encode under the stored merges — distinct words
     // re-segment by the canonical greedy application (identical for
     // seen and unseen words), one pass per merge, never per occurrence.
-    // Oracle: the training replay restricted to even docs + the same
-    // merge application chained over the odd vocabulary.
+    // Trained once per session ([[sessionIndex]]). Oracle: the training
+    // replay restricted to even docs + the same merge application
+    // chained over the odd vocabulary.
     "q231_bpe_indexed" -> { (s, dir) =>
       import s.implicits._
       val d = t(s, dir, "documents")
-      val key = dirKey(dir)
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + s"/q231_bpe_$key"
-      val marker = s"q231bpe_$key"
-      if (!s.catalog.tableExists(marker)) {
+      val idx = sessionIndex(s, dir, "q231_bpe") { idx =>
         Corpus.writeBpeModel(d.filter($"doc_id" % 2 === 0), "text",
           idx, rounds = 3)
-        s.emptyDataFrame.createOrReplaceTempView(marker)
       }
       Corpus.bpeEncodeIndexed(d.filter($"doc_id" % 2 =!= 0),
         "doc_id", "text", idx)
@@ -1603,36 +1598,32 @@ object LlmQueries {
     // The oracle is the two single-shot replays cross-joined — exact
     // because KMV merge closure and histogram addition make the merged
     // indexes bit-identical to from-scratch builds.
-    // Build-if-absent split (r21, the q187/q218 discipline): both
-    // indexes are written+merged ONCE per session behind a dir-keyed
-    // marker — "after ingest, reports never touch raw events" is the
-    // contract, so the bench row measures the REPORT (k·|strata| + bins
-    // rows), not a per-call re-ingest. The ingest/merge laws keep their
-    // own gates (q175/q176/q189/q191 and LlmSpec's KMV merge cases).
+    // Both indexes are written+merged once per session ([[sessionIndex]]):
+    // "after ingest, reports never touch raw events" is the contract, so
+    // the bench row measures the REPORT (k·|strata| + bins rows). The
+    // ingest/merge laws keep their own gates (q175/q176/q189/q191 and
+    // LlmSpec's KMV merge cases).
     "q200_index_dashboard" -> { (s, dir) =>
       import s.implicits._
       val ev = t(s, dir, "events")
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
-      val key = dirKey(dir)
-      val (kmvDir, histDir) = (s"$wh/q200_kmv_$key", s"$wh/q200_hist_$key")
-      val marker = s"q200idx_$key"
-      if (!s.catalog.tableExists(marker)) {
+      val kmvDir = sessionIndex(s, dir, "q200_kmv") { idx =>
         val evk = ev.filter($"event_type".isin("view", "purchase"))
           .select($"event_type", $"user_id", $"event_id")
-        Corpus.writeKmvIndex(evk.filter($"event_id" % 2 === 0),
-          "user_id", "event_type", 64, kmvDir)
-        Corpus.mergeKmvIndex(evk.filter($"event_id" % 2 =!= 0),
-          "user_id", "event_type", 64, kmvDir)
+        kmvSlots(evk.filter($"event_id" % 2 === 0))
+          .write.mode("overwrite").parquet(idx)
+        ShardStore.upsert(kmvSlots(evk.filter($"event_id" % 2 =!= 0)), idx,
+          Corpus.kmvMerge(64))
+      }
+      val histDir = sessionIndex(s, dir, "q200_hist") { idx =>
         RelationalQueries.eventValueBins(ev.filter($"event_id" % 2 === 0))
-          .write.mode("overwrite").parquet(histDir)
-        RelationalQueries.mergeHistIndex(
+          .write.mode("overwrite").parquet(idx)
+        ShardStore.merge(
           RelationalQueries.eventValueBins(ev.filter($"event_id" % 2 =!= 0)),
-          histDir)
-        s.emptyDataFrame.createOrReplaceTempView(marker)
+          idx, RelationalQueries.histMerge)
       }
       kmvSetops(Corpus.readKmvIndex(s, kmvDir), 64)
         .crossJoin(broadcast(RelationalQueries.histQuantileReport(
-          s.read.parquet(histDir))))
+          parquet(s, histDir))))
     },
 
     // Count-min sketch frequency estimates vs exact truth: per-user
@@ -1666,11 +1657,12 @@ object LlmQueries {
     "q203_cms_index" -> { (s, dir) =>
       import s.implicits._
       val ev = t(s, dir, "events").select($"event_id", $"user_id")
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q203_cms"
-      Corpus.writeCmsIndex(ev.filter($"event_id" % 2 === 0), "user_id", idx)
-      Corpus.mergeCmsIndex(ev.filter($"event_id" % 2 =!= 0), "user_id", idx)
-      val cms = s.read.parquet(idx)
+      val idx = indexDir(s, dir, "q203_cms")
+      Corpus.cmsBuild(ev.filter($"event_id" % 2 === 0), "user_id")
+        .write.mode("overwrite").parquet(idx)
+      ShardStore.merge(Corpus.cmsBuild(ev.filter($"event_id" % 2 =!= 0),
+        "user_id"), idx, Corpus.cmsMerge)
+      val cms = parquet(s, idx)
       val probeKeys = ev.select($"user_id")
         .filter($"user_id" % 7 === 0).distinct()
       val est = Corpus.cmsEstimate(cms, probeKeys, "user_id",
@@ -1695,13 +1687,13 @@ object LlmQueries {
     "q209_bloom_index" -> { (s, dir) =>
       import s.implicits._
       val ords = t(s, dir, "orders").select($"o_orderkey", $"o_custkey")
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q209_bloom"
-      Corpus.writeBloomIndex(ords.filter($"o_orderkey" % 2 === 0),
-        "o_custkey", idx)
-      Corpus.upsertBloomIndex(ords.filter($"o_orderkey" % 2 =!= 0),
-        "o_custkey", idx)
-      val bloom = s.read.parquet(idx)
+      val idx = indexDir(s, dir, "q209_bloom")
+      Corpus.bloomPositions(ords.filter($"o_orderkey" % 2 === 0), "o_custkey")
+        .write.mode("overwrite").parquet(idx)
+      ShardStore.upsert(Corpus.bloomPositions(
+        ords.filter($"o_orderkey" % 2 =!= 0), "o_custkey"), idx,
+        Corpus.bloomMerge)
+      val bloom = parquet(s, idx)
       val probed = Corpus.bloomProbe(bloom,
         t(s, dir, "customer").select($"c_custkey"), "c_custkey")
       val members = ords.select($"o_custkey".as("c_custkey")).distinct()

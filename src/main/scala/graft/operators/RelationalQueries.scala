@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables.t
+import graft.Tables.{parquet, t}
+import graft.sources.ShardStore
 import graft.Exact._
 
 /** Core relational operator surface (SURVEY.md §2.3-2.6): scans with
@@ -1454,12 +1455,12 @@ object RelationalQueries {
     "q191_hist_merged" -> { (s, dir) =>
       import s.implicits._
       val ev = t(s, dir, "events")
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q191_hist"
+      val idx = LlmQueries.indexDir(s, dir, "q191_hist")
       eventValueBins(ev.filter($"event_id" % 2 === 0))
         .write.mode("overwrite").parquet(idx)
-      mergeHistIndex(eventValueBins(ev.filter($"event_id" % 2 =!= 0)), idx)
-      histQuantileReport(s.read.parquet(idx))
+      ShardStore.merge(eventValueBins(ev.filter($"event_id" % 2 =!= 0)),
+        idx, histMerge)
+      histQuantileReport(parquet(s, idx))
     },
 
     // Unbounded-domain quantiles from the PERSISTED, MERGED
@@ -1475,13 +1476,12 @@ object RelationalQueries {
       import s.implicits._
       val ev = t(s, dir, "events")
         .select($"event_id", (dec($"value") * 100).cast("long").as("_cents"))
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q206_qsk"
+      val idx = LlmQueries.indexDir(s, dir, "q206_qsk")
       quantileSketch(ev.filter($"event_id" % 2 === 0), Nil, "event_id",
         "_cents").write.mode("overwrite").parquet(idx)
-      mergeQuantileIndex(quantileSketch(ev.filter($"event_id" % 2 =!= 0),
-        Nil, "event_id", "_cents"), Nil, idx)
-      quantileReport(s.read.parquet(idx), Nil)
+      ShardStore.merge(quantileSketch(ev.filter($"event_id" % 2 =!= 0),
+        Nil, "event_id", "_cents"), idx, quantileMerge(Nil))
+      quantileReport(parquet(s, idx), Nil)
     },
 
     // q213's percentile feature PER KEY: each event_type's sketch packs
@@ -1551,14 +1551,13 @@ object RelationalQueries {
       import s.implicits._
       val ev = t(s, dir, "events").select($"event_id", $"event_type",
         (dec($"value") * 100).cast("long").as("_cents"))
-      val idx = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/q214_qsk"
+      val idx = LlmQueries.indexDir(s, dir, "q214_qsk")
       val keys = Seq("event_type")
       quantileSketch(ev.filter($"event_id" % 2 === 0), keys, "event_id",
         "_cents").write.mode("overwrite").parquet(idx)
-      mergeQuantileIndex(quantileSketch(ev.filter($"event_id" % 2 =!= 0),
-        keys, "event_id", "_cents"), keys, idx)
-      quantileReport(s.read.parquet(idx), keys)
+      ShardStore.merge(quantileSketch(ev.filter($"event_id" % 2 =!= 0),
+        keys, "event_id", "_cents"), idx, quantileMerge(keys))
+      quantileReport(parquet(s, idx), keys)
     },
 
     // Robust per-key anomaly flags: sketch-served median + MAD per
@@ -1617,18 +1616,13 @@ object RelationalQueries {
       .drop("_day_cents")
   }
 
-  /** Merge a new batch's (bin, n) histogram into a stored index: bin
-    * counts ADD, so unlike a sketch the merge is EXACT — the merged
-    * index equals the from-scratch histogram of the concatenated data
-    * bit for bit (q191's gate reuses q176's single-shot oracle). One
-    * aggregation over ≤2·|bins| rows; the tmp-write + rename swap keeps
-    * a complete copy on disk at every instant. */
-  def mergeHistIndex(batchBins: DataFrame, dir: String): Unit = {
-    val stored = batchBins.sparkSession.read.parquet(dir)
-    val merged = stored.unionByName(batchBins)
-      .groupBy(col("bin")).agg(sum(col("n")).as("n"))
-    graft.sources.ShardStore.overwriteAtomic(merged, dir)
-  }
+  /** The histogram merge law over stored ∪ batch (bin, n) rows: bin
+    * counts ADD, so unlike a sketch the merge is EXACT — a merged index
+    * equals the from-scratch histogram of the concatenated data bit for
+    * bit (q191's gate reuses q176's single-shot oracle). Addition is NOT
+    * idempotent: a replaying caller ledgers batches or lands `batch_id=`
+    * shards ([[ShardStore.writeShard]]). */
+  val histMerge: ShardStore.Additive = ShardStore.Additive.cellSum("bin")
 
   /** Deterministic mergeable QUANTILE sketch (GK/KLL family) — the
     * unbounded-domain companion the histogram index cannot be: rank
@@ -1682,7 +1676,7 @@ object RelationalQueries {
   /** A (keys…, v, w) sketch with equal values collapsed per key by
     * weight addition — harmless to ranks, and the bag union that
     * merges sketches. */
-  private[graft] def weightBag(sk: DataFrame, keys: Seq[String]): DataFrame =
+  private def weightBag(sk: DataFrame, keys: Seq[String]): DataFrame =
     sk.groupBy((keys :+ "v").map(col): _*).agg(sum(col("w")).as("w"))
 
   /** Attach a per-key summary to `df`. For `Nil` the summary is ONE row,
@@ -1757,17 +1751,14 @@ object RelationalQueries {
         col("mad_v"), col("robust_ppm"), col("is_anomaly"))
   }
 
-  /** Merge a new batch's sketch into a stored quantile index: bag union
-    * per key (equal values collapse by weight addition — harmless to
-    * ranks). NOT idempotent — a replaying caller ledgers batches or
-    * uses the batch_id-sharded streaming form. Rank errors ADD per
-    * merged batch (≤ buckets + N_i/capacity each — the GK merge law). */
-  def mergeQuantileIndex(batchSketch: DataFrame, keys: Seq[String],
-                         dir: String): Unit = {
-    val stored = batchSketch.sparkSession.read.parquet(dir)
-    graft.sources.ShardStore.overwriteAtomic(
-      weightBag(stored.unionByName(batchSketch), keys), dir)
-  }
+  /** The quantile merge law over stored ∪ batch (keys…, v, w) sketches:
+    * bag union per key ([[weightBag]] — equal values collapse by weight
+    * addition, harmless to ranks). Rank errors ADD per merged batch
+    * (≤ buckets + N_i/capacity each — the GK merge law). Weights add,
+    * so it is NOT idempotent: a replaying caller ledgers batches or
+    * lands `batch_id=` shards ([[ShardStore.writeShard]]). */
+  def quantileMerge(keys: Seq[String]): ShardStore.Additive =
+    ShardStore.Additive(weightBag(_, keys))
 
   /** Deterministic recompaction of a (keys…, v, w) sketch to ≤
     * `capacity` + 1 rows per key — the size bound when many batches
@@ -2164,37 +2155,21 @@ object RelationalQueries {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val existing =
       if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-        spark.read.parquet(logPath).filter(col("_bkt").isin(touched: _*))
+        parquet(spark, logPath).filter(col("_bkt").isin(touched: _*))
       else b.limit(0)
     val mergedLog = graft.Checkpoints.cutEager(
       existing.unionByName(b).dropDuplicates(keyCol, tsCol, tieCol))
-    writePartitionOverwrite(mergedLog, "_bkt", logPath)
+    ShardStore.overwritePartitions(mergedLog, logPath, Seq("_bkt"))
     val hist = scd2(mergedLog, keyCol, tsCol, tieCol, valCol)
       .withColumn("_bkt", pmod(hash(col(keyCol)), lit(buckets)))
-    writePartitionOverwrite(hist, "_bkt", s"$dir/history")
+    ShardStore.overwritePartitions(hist, s"$dir/history", Seq("_bkt"))
   }
 
   /** The maintained SCD2 dimension (same relation as [[scd2]] over the
     * full log) — feeds the q198 [[pitJoin]] directly. */
   def readScd2Index(spark: org.apache.spark.sql.SparkSession,
                     dir: String): DataFrame =
-    spark.read.parquet(s"$dir/history").drop("_bkt")
-
-  /** Dynamic-partition overwrite of exactly the partitions present in
-    * `df` — the exactly-once device shared with the streaming shard
-    * writers ([[graft.streaming.EventsStream.writeHistShard]]). */
-  private def writePartitionOverwrite(df: DataFrame, partCol: String,
-                                      path: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    parquet(spark, s"$dir/history").drop("_bkt")
 
   /** Theil–Sen robust trend estimator over an ordered integer series
     * (day, value): the MEDIAN of all pairwise slopes — outlier days

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * The shard device is replay-safe but READ-side unbounded: a week-old
   * stream serves every dashboard read over one partition per micro-batch
-  * ever run (`cmsFromShards` reads ≤ |batches|·d·w rows; the search
+  * ever run (a CMS serve reads ≤ |batches|·d·w rows; the search
   * index lists |batches| stats files). [[compact]] closes that decay
   * while PRESERVING the replay algebra:
   *
@@ -57,6 +57,77 @@ object ShardStore {
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A sketch family's merge law: it folds the stored rows ∪ a batch's
+    * rows (both in the index's own layout) into the index's rows, so the
+    * merged index equals a from-scratch build of everything ingested
+    * (Agarwal et al., "Mergeable Summaries"). Its type says how a
+    * replayed batch is survived. An IDEMPOTENT law (k smallest distinct,
+    * set union, key dedup) re-folds rows it already holds to the same
+    * index: at-least-once delivery is safe, and [[upsert]] serves it. */
+  final case class Idempotent(law: DataFrame => DataFrame)
+      extends (DataFrame => DataFrame) {
+    def apply(rows: DataFrame): DataFrame = law(rows)
+  }
+
+  /** A merge law that ADDS counts: a batch folded twice counts twice.
+    * Replay-safe only in the `batch_id=` shard form ([[writeShard]]: a
+    * replay overwrites its own shard) or behind a ledger of merged
+    * batches; [[merge]] folds one batch into an atomic index. */
+  final case class Additive(law: DataFrame => DataFrame)
+      extends (DataFrame => DataFrame) {
+    def apply(rows: DataFrame): DataFrame = law(rows)
+  }
+
+  object Additive {
+    /** The count-per-cell law: `n` sums over the `cells` columns. */
+    def cellSum(cells: String*): Additive =
+      Additive(_.groupBy(cells.map(col): _*).agg(sum(col("n")).as("n")))
+  }
+
+  /** Fold `batch` into the atomic index at `dir` under an additive law,
+    * through the [[overwriteAtomic]] swap. The index must exist. A
+    * half-swapped one (absent, a copy at `__old` or `__tmp`) fails the
+    * read here and is left as it is: the recovered copy may already
+    * hold this batch, and folding it again would count it twice. */
+  def merge(batch: DataFrame, dir: String, law: Additive): Unit =
+    fold(batch, dir, law)
+
+  /** Fold `batch` into the atomic index at `dir` under an idempotent
+    * law. A half-swapped index is recovered first ([[existsRecovered]]);
+    * a missing one is initialized with `batch` itself. */
+  def upsert(batch: DataFrame, dir: String, law: Idempotent): Unit =
+    if (existsRecovered(batch.sparkSession, dir)) fold(batch, dir, law)
+    else batch.write.mode("overwrite").parquet(dir)
+
+  private def fold(batch: DataFrame, dir: String,
+                   law: DataFrame => DataFrame): Unit =
+    overwriteAtomic(
+      law(graft.Tables.parquet(batch.sparkSession, dir).unionByName(batch)),
+      dir)
+
+  /** Land one micro-batch's rows in its own `batch_id=<id>` shard under
+    * dynamic partition overwrite: a replayed batch overwrites exactly its
+    * own shard, so additive laws never double-count under at-least-once
+    * delivery, with no ledger. Schema-agnostic. */
+  def writeShard(rows: DataFrame, batchId: Long, dir: String): Unit =
+    overwritePartitions(rows.withColumn("batch_id", lit(batchId)), dir,
+      Seq("batch_id"))
+
+  /** Overwrite exactly the partitions (by `partitionBy`) that `df` holds,
+    * leaving the table's other partitions as they are. */
+  def overwritePartitions(df: DataFrame, dir: String,
+                          partitionBy: Seq[String]): Unit = {
+    val spark = df.sparkSession
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "dynamic")
+    try df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dir)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 
   /** The live marker (largest horizon) of a sharded table, if any. */
   def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
@@ -280,15 +351,7 @@ object ShardStore {
       .filter(col("batch_id").cast("long") <= hNew)
     val folded = graft.Checkpoints.cutEager(
       fold(cur.drop("batch_id")).withColumn("batch_id", lit(bNew)))
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try folded.write.mode("overwrite")
-      .partitionBy("batch_id" +: extraPartCols: _*).parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    overwritePartitions(folded, dir, "batch_id" +: extraPartCols)
     // Marker AFTER the base is durable, BEFORE the stale deletes.
     val fs = fsOf(spark, dir)
     fs.mkdirs(new Path(dir, "_meta"))

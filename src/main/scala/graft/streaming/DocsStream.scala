@@ -100,16 +100,17 @@ object DocsStream {
   def scoreStream(docs: DataFrame, textCol: String, dir: String,
                   vocabCap: Int = 1 << 16): DataFrame = {
     val spark = docs.sparkSession
-    val total = spark.read.parquet(s"$dir/total")
+    val total = graft.Tables.parquet(spark, s"$dir/total")
       .collect()(0).getAs[Long]("_tot")
     // floor(log2(q)) for q >= 1, the driver-side twin of the batch
     // form's length(bin(q)) - 1.
     def flog2(q: Long): Int = 63 - java.lang.Long.numberOfLeadingZeros(q)
     val oovBand = flog2(total) + 1
-    val bandByToken: Map[String, Int] = spark.read.parquet(s"$dir/vocab")
-      .orderBy(col("_c").desc, col("_t").asc).limit(vocabCap)
-      .collect().map(r =>
-        r.getAs[String]("_t") -> flog2(total / r.getAs[Long]("_c"))).toMap
+    val bandByToken: Map[String, Int] =
+      graft.Tables.parquet(spark, s"$dir/vocab")
+        .orderBy(col("_c").desc, col("_t").asc).limit(vocabCap)
+        .collect().map(r =>
+          r.getAs[String]("_t") -> flog2(total / r.getAs[Long]("_c"))).toMap
     val toks = TextAnalysis.tokens(col(textCol))
     val bands = transform(toks, t =>
       coalesce(element_at(typedLit(bandByToken), t), lit(oovBand)))

@@ -787,53 +787,45 @@ object EventsStream {
   // a stream keeps the dashboard tables current instead of a scheduled
   // batch job, with replay-safety matched to each index's algebra.
 
-  /** Maintain a persisted KMV sketch index from a stream: each
-    * micro-batch is sketched alone and merged into the k-slot table
-    * ([[graft.llm.Corpus.upsertKmvIndex]]). At-least-once is ENOUGH here
-    * — KMV merge is idempotent — so no batch ledger is kept. */
-  def kmvIndexSink(events: DataFrame, keyCol: String, stratumCol: String,
-                   k: Int, dir: String, checkpointLoc: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.Corpus.upsertKmvIndex(batch, keyCol, stratumCol, k, dir)
-      }
-      .start()
-
-  /** Maintain a persisted bottom-k SAMPLE index (the living eval-set)
-    * from a stream: each micro-batch samples alone and merges by the
-    * bottomK(A∪B) = bottomK(bottomK(A)∪bottomK(B)) law
-    * ([[graft.llm.Corpus.upsertBottomKIndex]]). At-least-once is
-    * ENOUGH — a replayed row re-draws the same md5 ticket and dedups
-    * on the key, so no batch ledger is kept (the KMV argument with
-    * payload rows attached). */
-  def bottomKSampleSink(stream: DataFrame, keyCol: String,
-                        stratumCol: String, k: Int, dir: String,
-                        checkpointLoc: String)
+  /** Maintain an atomic sketch index from a stream: `build` reduces each
+    * micro-batch alone (a KMV k-slot table, a bottom-k sample, a Bloom
+    * set-bit table) and [[graft.sources.ShardStore.upsert]] folds it
+    * into the stored index under the family's idempotent law, so
+    * at-least-once delivery is enough and no batch ledger is kept. */
+  def upsertSink(stream: DataFrame, dir: String, checkpointLoc: String)
+                (build: DataFrame => DataFrame,
+                 law: graft.sources.ShardStore.Idempotent)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointLoc)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.Corpus.upsertBottomKIndex(batch, keyCol, stratumCol,
-          k, dir)
+        graft.sources.ShardStore.upsert(build(batch), dir, law)
       }
       .start()
 
-  /** Maintain a persisted Bloom membership index from a stream: each
-    * micro-batch sets its own bits alone and unions them into the
-    * stored set-bit table ([[graft.llm.Corpus.upsertBloomIndex]]).
-    * At-least-once is ENOUGH — set union is idempotent, bits re-set
-    * are bits unchanged — so no batch ledger is kept (the KMV
-    * replay-safety argument, verbatim). */
-  def bloomIndexSink(stream: DataFrame, keyCol: String, dir: String,
-                     checkpointLoc: String, k: Int = 4,
-                     mBits: Int = 65536)
+  /** Maintain a `batch_id=`-sharded index from a stream: `build`
+    * reduces each micro-batch alone (a histogram, a count-min sketch, a
+    * Misra-Gries or quantile summary, a log) and its rows land in the
+    * batch's own shard ([[graft.sources.ShardStore.writeShard]]), so a
+    * replayed batch overwrites exactly itself — the replay guard the
+    * additive laws need. Served by the family's law over
+    * [[graft.sources.ShardStore.live]]. With `autoCompact > 0`, once
+    * more than that many stream shards are live the sink folds them
+    * under `fold` ([[graft.sources.ShardStore.compactIfNeeded]]): one
+    * directory listing per micro-batch below the threshold, the fold
+    * amortized to 1/autoCompact of itself per batch above it. */
+  def shardSink(stream: DataFrame, dir: String, checkpointLoc: String,
+                autoCompact: Int = 0)
+               (build: DataFrame => DataFrame,
+                fold: DataFrame => DataFrame = identity)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.llm.Corpus.upsertBloomIndex(batch, keyCol, dir, k, mBits)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        graft.sources.ShardStore.writeShard(build(batch), id, dir)
+        if (autoCompact > 0) graft.sources.ShardStore.compactIfNeeded(
+          batch.sparkSession, dir, autoCompact, fold)
+        ()
       }
       .start()
 
@@ -871,199 +863,6 @@ object EventsStream {
       }
       .start()
 
-  /** One micro-batch's histogram shard: the batch's (bin, n) rows land
-    * in the `batch_id=<id>` partition under DYNAMIC partition overwrite,
-    * so a REPLAYED batch overwrites exactly its own partition — counts
-    * add across batches but never double under at-least-once retries
-    * (exactly-once without a ledger; histogram addition, unlike KMV, is
-    * not idempotent). Shards stay ≤|bins| rows each and compact with
-    * [[graft.sources.Layout.writeCompacted]] when the partition count
-    * grows. */
-  def writeHistShard(bins: DataFrame, batchId: Long, dir: String): Unit = {
-    val spark = bins.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try bins.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(dir)
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Maintain a sharded histogram index from a stream: `binsOf` reduces
-    * each micro-batch to its (bin, n) rows, [[writeHistShard]] lands
-    * them exactly-once. */
-  /** The sharded sinks' `autoCompact` knob: when `maxShards > 0` and
-    * the live stream-shard count at `dir` exceeds it, run `doCompact`
-    * — the trigger the compaction lifecycle was otherwise missing (a
-    * week-old stream would decay until an operator intervened). Below
-    * threshold the cost is one directory listing per micro-batch; at
-    * threshold the fold amortizes to 1/maxShards of itself per batch. */
-  private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, maxShards: Int)
-                          (doCompact: => Unit): Unit =
-    if (maxShards > 0 && graft.sources.ShardStore
-        .aboveShardThreshold(spark, dir, maxShards))
-      doCompact
-
-  def histIndexSink(stream: DataFrame, binsOf: DataFrame => DataFrame,
-                    dir: String, checkpointLoc: String,
-                    autoCompact: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeHistShard(binsOf(batch), id, dir)
-        maybeCompact(batch.sparkSession, dir, autoCompact) {
-          compactHistIndex(batch.sparkSession, dir)
-        }
-      }
-      .start()
-
-  /** The merged histogram from a sharded index: one aggregation over
-    * ≤|batches|·|bins| stored rows — equal to the one-shot histogram of
-    * everything ingested (bin counts add exactly). Reads the LIVE view
-    * ([[graft.sources.ShardStore.live]]) so a [[compactHistIndex]]
-    * horizon is honored and replayed pre-horizon shards are dropped. */
-  def histFromShards(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): DataFrame =
-    graft.sources.ShardStore.live(spark, dir)
-      .groupBy(col("bin")).agg(sum(col("n")).as("n"))
-
-  /** Fold all histogram shards to one base shard (bin counts add) —
-    * [[graft.sources.ShardStore.compact]] under the histogram merge
-    * law. Serving cost and file count stop growing with stream
-    * lifetime; a replayed pre-horizon batch re-lands its partition but
-    * is dropped by the read-side horizon instead of double-counting. */
-  def compactHistIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Unit =
-    graft.sources.ShardStore.compact(spark, dir,
-      _.groupBy(col("bin")).agg(sum(col("n")).as("n")))
-
-  /** Maintain a sharded COUNT-MIN index from a stream — the frequency
-    * monitor's steady state: each micro-batch is sketched alone
-    * ([[graft.llm.Corpus.cmsBuild]] — one aggregation of the batch,
-    * never a corpus re-read) and its ≤ depth·width (r, c, n) rows land
-    * in their own `batch_id=` partition via [[writeHistShard]] (the
-    * writer is schema-agnostic: it stamps the batch id and
-    * dynamic-partition-overwrites, which is exactly the replay guard
-    * CMS needs — cell addition, like histogram addition and unlike KMV
-    * union, is NOT idempotent, so a replayed batch must overwrite its
-    * own shard rather than merge again). */
-  def cmsIndexSink(stream: DataFrame, keyCol: String, dir: String,
-                   checkpointLoc: String, depth: Int = 4, width: Int = 256,
-                   salt: String = "cms", autoCompact: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeHistShard(
-          graft.llm.Corpus.cmsBuild(batch, keyCol, depth, width, salt),
-          id, dir)
-        maybeCompact(batch.sparkSession, dir, autoCompact) {
-          compactCmsIndex(batch.sparkSession, dir)
-        }
-      }
-      .start()
-
-  /** The merged CMS from a sharded index: one aggregation over
-    * ≤ |batches|·depth·width stored rows, bit-identical to the one-shot
-    * sketch of everything ingested (cell counts add exactly). Feeds
-    * [[graft.llm.Corpus.cmsEstimate]]. Reads the LIVE view — a
-    * [[compactCmsIndex]] horizon is honored. */
-  def cmsFromShards(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): DataFrame =
-    graft.sources.ShardStore.live(spark, dir)
-      .groupBy(col("r"), col("c")).agg(sum(col("n")).as("n"))
-
-  /** Fold all CMS shards to one base shard (cell counts add — the
-    * cms(A)+cms(B)=cms(A∪B) merge law, so the compacted sketch is
-    * bit-identical to the uncompacted sum). */
-  def compactCmsIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    graft.sources.ShardStore.compact(spark, dir,
-      _.groupBy(col("r"), col("c")).agg(sum(col("n")).as("n")))
-
-  /** Maintain a sharded MERGEABLE Misra-Gries heavy-hitters index from
-    * a stream: each micro-batch reduces to its own ≤ m+1-row summary
-    * ([[graft.llm.Corpus.mgSummary]] — exact batch counts minus the
-    * (m+1)-th largest, spill mass carried as a reserved-key ROW so the
-    * merge law is pure addition) landing in a `batch_id=` partition
-    * under dynamic overwrite. [[graft.llm.Corpus.mgFromShards]] serves
-    * (key, est_n, err_bound) mid-stream with the mergeable-summaries
-    * guarantee intact: est ≤ true ≤ est + err_bound, and every key
-    * with true count > err_bound is reported. */
-  def mgIndexSink(stream: DataFrame, keyCol: String, dir: String,
-                  checkpointLoc: String, m: Int = 64, autoCompact: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeHistShard(graft.llm.Corpus.mgSummary(batch, keyCol, m),
-          id, dir)
-        maybeCompact(batch.sparkSession, dir, autoCompact) {
-          compactMgIndex(batch.sparkSession, dir, m)
-        }
-      }
-      .start()
-
-  /** Fold all MG shards into one base summary — a summary of summaries
-    * is itself a summary ([[graft.llm.Corpus.mgFold]]), so serving
-    * bounds survive compaction unchanged. */
-  def compactMgIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, m: Int = 64): Unit =
-    graft.sources.ShardStore.compact(spark, dir,
-      graft.llm.Corpus.mgFold(_, m))
-
-  /** Maintain a sharded QUANTILE-sketch index from a stream: each
-    * micro-batch compacts to its own (keys…, v, w) summary
-    * ([[graft.operators.RelationalQueries.quantileSketch]]; `Nil` keys
-    * for one global sketch, otherwise one per key — the per-key
-    * latency/size dashboard) landing in a `batch_id=` partition —
-    * sketch merge is bag union (weights add), NOT idempotent, so the
-    * [[writeHistShard]] dynamic-partition overwrite is again the replay
-    * guard. Served mid-stream by [[quantileFromShards]] +
-    * [[graft.operators.RelationalQueries.quantileReport]]. */
-  def quantileIndexSink(stream: DataFrame, keys: Seq[String], idCol: String,
-                        valueCol: String, dir: String, checkpointLoc: String,
-                        buckets: Int = 16, capacity: Int = 64,
-                        autoCompact: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeHistShard(graft.operators.RelationalQueries
-          .quantileSketch(batch, keys, idCol, valueCol, buckets, capacity),
-          id, dir)
-        maybeCompact(batch.sparkSession, dir, autoCompact) {
-          compactQuantileIndexShards(batch.sparkSession, dir, keys)
-        }
-      }
-      .start()
-
-  /** The merged quantile sketch from a sharded index — the weighted
-    * bag union, per key, of the per-batch summaries. Reads the LIVE
-    * view — a [[compactQuantileIndexShards]] horizon is honored. */
-  def quantileFromShards(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, keys: Seq[String]): DataFrame =
-    graft.operators.RelationalQueries.weightBag(
-      graft.sources.ShardStore.live(spark, dir), keys)
-
-  /** Fold all quantile-sketch shards into one base shard via the
-    * deterministic recompaction
-    * ([[graft.operators.RelationalQueries.compactQuantileSketch]]):
-    * the base is ≤ capacity+1 rows per key no matter how many batches
-    * folded, per-key weights preserved exactly, at one documented step
-    * of additional rank error per compaction. */
-  def compactQuantileIndexShards(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, keys: Seq[String],
-                                 capacity: Int = 1024): Unit =
-    graft.sources.ShardStore.compact(spark, dir,
-      graft.operators.RelationalQueries
-        .compactQuantileSketch(_, keys, capacity))
-
   /** Streaming vector ingest into a stream-built IVF index: centroids
     * are frozen once ([[graft.llm.Similarity.writeIvfCentroids]]); each
     * micro-batch assigns map-only against them and lands its list rows
@@ -1080,9 +879,9 @@ object EventsStream {
       .option("checkpointLocation", checkpointLoc)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.llm.Similarity.writeIvfShard(batch, idCol, vecCol, dir, id)
-        maybeCompact(batch.sparkSession, s"$dir/lists", autoCompact) {
+        if (autoCompact > 0 && graft.sources.ShardStore.aboveShardThreshold(
+            batch.sparkSession, s"$dir/lists", autoCompact))
           graft.llm.Similarity.compactIvfShards(batch.sparkSession, dir)
-        }
       }
       .start()
 
@@ -1091,23 +890,17 @@ object EventsStream {
     * counts ([[graft.llm.Corpus.decontamProbe]] — only the batch is
     * hashed, the benchmark side is the signed index) and the admission
     * log lands in a `batch_id=` partition under dynamic overwrite, so
-    * a replayed batch overwrites exactly its own rows. Downstream
+    * a replayed batch overwrites exactly its own rows ([[shardSink]];
+    * `autoCompact` re-lands the log rows in one base shard). Downstream
     * curation filters the log; the benchmark corpus is never re-read. */
   def decontamSink(docs: DataFrame, idCol: String, textCol: String,
                    idxDir: String, outDir: String, checkpointLoc: String,
                    spanTokens: Int = 8, k: Int = 4, mBits: Int = 1 << 20,
                    autoCompact: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeHistShard(graft.llm.Corpus.decontamProbe(batch, idCol,
-          textCol, idxDir, spanTokens, k, mBits), id, outDir)
-        maybeCompact(batch.sparkSession, outDir, autoCompact) {
-          compactDecontamLog(batch.sparkSession, outDir)
-        }
-      }
-      .start()
+    shardSink(docs, outDir, checkpointLoc, autoCompact)(
+      graft.llm.Corpus.decontamProbe(_, idCol, textCol, idxDir, spanTokens,
+        k, mBits))
 
   /** Streaming classifier gate: each micro-batch of documents scores
     * against a [[graft.llm.Classify.saveModel]]-persisted NB model
@@ -1121,37 +914,22 @@ object EventsStream {
                    modelDir: String, outDir: String, checkpointLoc: String,
                    autoCompact: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointLoc)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // Model loads PER BATCH, deliberately: a once-at-start load
-        // would pin the weights parquet's file listing for the
-        // stream's lifetime, so an operator republishing the model
-        // would crash the stream on swept paths instead of being
-        // picked up. The per-batch cost is one pointer read + a
-        // one-row consts read — noise against any real micro-batch —
-        // and a republish is picked up at the next batch boundary.
-        // saveModel publishes weights+consts as ONE immutable version
-        // dir behind a single _model_v pointer flip, so a load racing
-        // a republish reads a consistent generation by construction
-        // (and the one-version sweep grace keeps the just-superseded
-        // files intact for a load already past the pointer).
-        val m = graft.llm.Classify.loadModel(batch.sparkSession, modelDir)
-        writeHistShard(
-          graft.llm.Classify.nbScore(batch, idCol, textCol, m), id, outDir)
-        maybeCompact(batch.sparkSession, outDir, autoCompact) {
-          graft.sources.ShardStore.compact(batch.sparkSession, outDir)
-        }
-      }
-      .start()
-
-  /** Fold the [[decontamSink]] admission log's shards into one base
-    * shard (identity fold — the log rows just re-land) so a long-lived
-    * ingest gate's log stays one-partition-plus-live instead of one
-    * partition per micro-batch ever run. */
-  def compactDecontamLog(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Unit =
-    graft.sources.ShardStore.compact(spark, dir)
+    shardSink(docs, outDir, checkpointLoc, autoCompact) { batch =>
+      // Model loads PER BATCH, deliberately: a once-at-start load
+      // would pin the weights parquet's file listing for the
+      // stream's lifetime, so an operator republishing the model
+      // would crash the stream on swept paths instead of being
+      // picked up. The per-batch cost is one pointer read + a
+      // one-row consts read — noise against any real micro-batch —
+      // and a republish is picked up at the next batch boundary.
+      // saveModel publishes weights+consts as ONE immutable version
+      // dir behind a single _model_v pointer flip, so a load racing
+      // a republish reads a consistent generation by construction
+      // (and the one-version sweep grace keeps the just-superseded
+      // files intact for a load already past the pointer).
+      graft.llm.Classify.nbScore(batch, idCol, textCol,
+        graft.llm.Classify.loadModel(batch.sparkSession, modelDir))
+    }
 
   /** Maintain the q151/q198 SCD2 dimension from a CDC change stream:
     * each micro-batch upserts the bucket-partitioned change log and

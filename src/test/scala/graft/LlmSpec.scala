@@ -1924,9 +1924,13 @@ class LlmSpec extends SparkSpec {
       r.map(i => ("s" + (i % 3), i.toLong)).toDF("st", "key"))
     val dir = java.nio.file.Files.createTempDirectory("kmvidx").toString
     try {
-      Corpus.writeKmvIndex(batches(0), "key", "st", k = 12, dir)
-      Corpus.mergeKmvIndex(batches(1), "key", "st", k = 12, dir)
-      Corpus.mergeKmvIndex(batches(2), "key", "st", k = 12, dir)
+      def slots(b: org.apache.spark.sql.DataFrame) =
+        Corpus.kmvSketch(b, "key", "st", k = 12).drop("kmv_rank")
+      slots(batches(0)).write.mode("overwrite").parquet(dir)
+      graft.sources.ShardStore.upsert(slots(batches(1)), dir,
+        Corpus.kmvMerge(12))
+      graft.sources.ShardStore.upsert(slots(batches(2)), dir,
+        Corpus.kmvMerge(12))
       def asSet(d: org.apache.spark.sql.DataFrame) = d
         .select(col("stratum"), col("h"), col("kmv_rank"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -1949,9 +1953,11 @@ class LlmSpec extends SparkSpec {
       r.map(i => (i % 37).toLong).toDF("key"))
     val dir = java.nio.file.Files.createTempDirectory("cmsidx").toString
     try {
-      Corpus.writeCmsIndex(batches(0), "key", dir, depth = 3, width = 16)
-      Corpus.mergeCmsIndex(batches(1), "key", dir, depth = 3, width = 16)
-      Corpus.mergeCmsIndex(batches(2), "key", dir, depth = 3, width = 16)
+      def cms(b: org.apache.spark.sql.DataFrame) =
+        Corpus.cmsBuild(b, "key", depth = 3, width = 16)
+      cms(batches(0)).write.mode("overwrite").parquet(dir)
+      graft.sources.ShardStore.merge(cms(batches(1)), dir, Corpus.cmsMerge)
+      graft.sources.ShardStore.merge(cms(batches(2)), dir, Corpus.cmsMerge)
       def cells(d: org.apache.spark.sql.DataFrame) = d.collect()
         .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
       val merged = cells(spark.read.parquet(dir)
@@ -2604,6 +2610,26 @@ class LlmSpec extends SparkSpec {
     assert(run(16) == exp, "saturated-filter run diverged from exact")
   }
 
+  test("session index: q211 and q231 serve a second call in the " +
+    "session from the stored index without rewriting it") {
+    Seq("q211_bm25_indexed" -> "q211_search", "q231_bpe_indexed" -> "q231_bpe")
+      .foreach { case (q, name) =>
+        def rows() = LlmQueries.queries(q)(spark, sf).collect()
+          .map(_.toSeq.mkString("|")).sorted.toSeq
+        val first = rows()
+        val idx = new java.io.File(new org.apache.hadoop.fs.Path(
+          LlmQueries.indexDir(spark, sf, name)).toUri.getPath)
+        def stamps() = org.apache.commons.io.FileUtils
+          .listFiles(idx, null, true).toArray
+          .map { case f: java.io.File => f.getPath -> f.lastModified }.toMap
+        val built = stamps()
+        assert(built.nonEmpty, s"$q left no index at $idx")
+        val second = rows()
+        assert(stamps() == built, s"$q rewrote its session index")
+        assert(second == first, s"$q served different rows")
+      }
+  }
+
   test("bloom index: no false negatives ever, forced false positive " +
     "under a tiny bit domain, write+merge equals one-shot") {
     import spark.implicits._
@@ -2611,10 +2637,11 @@ class LlmSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("bloomidx").toString
     try {
       // Split with overlap: merge must union, not double or drop.
-      Corpus.writeBloomIndex(members.filter(col("key") <= 25), "key", dir,
-        k = 3, mBits = 64)
-      Corpus.upsertBloomIndex(members.filter(col("key") >= 20), "key", dir,
-        k = 3, mBits = 64)
+      Corpus.bloomPositions(members.filter(col("key") <= 25), "key",
+        k = 3, mBits = 64).write.mode("overwrite").parquet(dir)
+      graft.sources.ShardStore.upsert(Corpus.bloomPositions(
+        members.filter(col("key") >= 20), "key", k = 3, mBits = 64), dir,
+        Corpus.bloomMerge)
       def bits(d: org.apache.spark.sql.DataFrame) =
         d.select(col("pos")).as[Long].collect().toSet
       assert(bits(spark.read.parquet(dir)) ==

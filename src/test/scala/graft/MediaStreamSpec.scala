@@ -843,9 +843,11 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("kmvsink-ck").toString
     try {
       val mem = MemoryStream[(String, Long)]
-      val q = graft.streaming.EventsStream.kmvIndexSink(
-        mem.toDF().toDF("st", "key"), "key", "st", k = 8,
-        dir = s"$dir/idx", checkpointLoc = ckpt)
+      def kmvSlots(b: org.apache.spark.sql.DataFrame) =
+        graft.llm.Corpus.kmvSketch(b, "key", "st", k = 8).drop("kmv_rank")
+      val q = graft.streaming.EventsStream.upsertSink(
+        mem.toDF().toDF("st", "key"), s"$dir/idx", ckpt)(
+        kmvSlots, graft.llm.Corpus.kmvMerge(8))
       mem.addData((1 to 30).map(i => ("a", i.toLong)): _*)
       q.processAllAvailable()
       mem.addData((21 to 60).map(i => ("a", i.toLong)) ++
@@ -863,9 +865,9 @@ class MediaStreamSpec extends SparkSpec {
       assert(fromStream == oneShot)
       // At-least-once replay: upserting an already-merged batch is a
       // no-op on the slots (KMV merge idempotence).
-      graft.llm.Corpus.upsertKmvIndex(
-        (21 to 60).map(i => ("a", i.toLong)).toDF("st", "key"),
-        "key", "st", k = 8, s"$dir/idx")
+      graft.sources.ShardStore.upsert(
+        kmvSlots((21 to 60).map(i => ("a", i.toLong)).toDF("st", "key")),
+        s"$dir/idx", graft.llm.Corpus.kmvMerge(8))
       assert(slots(graft.llm.Corpus.readKmvIndex(spark, s"$dir/idx"))
         == oneShot, "replayed merge changed the slots")
     } finally {
@@ -882,9 +884,10 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("bksink-ck").toString
     try {
       val mem = MemoryStream[(String, Long)]
-      val q = graft.streaming.EventsStream.bottomKSampleSink(
-        mem.toDF().toDF("st", "key"), "key", "st", k = 5,
-        dir = s"$dir/idx", checkpointLoc = ckpt)
+      val q = graft.streaming.EventsStream.upsertSink(
+        mem.toDF().toDF("st", "key"), s"$dir/idx", ckpt)(
+        graft.llm.Corpus.bottomK(_, "key", "st", k = 5),
+        graft.llm.Corpus.bottomKMerge("key", "st", 5))
       val b1 = (1 to 30).map(i => ("a", i.toLong))
       val b2 = (31 to 80).map(i => ("a", i.toLong)) ++
         (1 to 3).map(i => ("b", i.toLong))
@@ -904,8 +907,9 @@ class MediaStreamSpec extends SparkSpec {
       // Short stratum keeps everything it has.
       assert(fromStream.count(_._1 == "b") == 3)
       // At-least-once replay: same md5 tickets, key-dedup → no-op.
-      graft.llm.Corpus.upsertBottomKIndex(b2.toDF("st", "key"),
-        "key", "st", k = 5, s"$dir/idx")
+      graft.sources.ShardStore.upsert(graft.llm.Corpus.bottomK(
+        b2.toDF("st", "key"), "key", "st", k = 5), s"$dir/idx",
+        graft.llm.Corpus.bottomKMerge("key", "st", 5))
       assert(picks(spark.read.parquet(s"$dir/idx")) == oneShot,
         "replayed batch changed the sample")
     } finally {
@@ -962,9 +966,10 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("bloomsink-ck").toString
     try {
       val mem = MemoryStream[Long]
-      val q = graft.streaming.EventsStream.bloomIndexSink(
-        mem.toDF().toDF("key"), "key", dir = s"$dir/idx",
-        checkpointLoc = ckpt, k = 4, mBits = 1024)
+      val q = graft.streaming.EventsStream.upsertSink(
+        mem.toDF().toDF("key"), s"$dir/idx", ckpt)(
+        graft.llm.Corpus.bloomPositions(_, "key", k = 4, mBits = 1024),
+        graft.llm.Corpus.bloomMerge)
       mem.addData(1L to 30L: _*)
       q.processAllAvailable()
       mem.addData(21L to 60L: _*) // overlap so the union is exercised
@@ -978,8 +983,9 @@ class MediaStreamSpec extends SparkSpec {
       assert(fromStream == oneShot, "streamed bits diverged from one-shot")
       // At-least-once replay: re-upserting a merged batch re-sets bits
       // already set — the index is bit-stable (set-union idempotence).
-      graft.llm.Corpus.upsertBloomIndex(
-        (21L to 60L).toDF("key"), "key", s"$dir/idx", k = 4, mBits = 1024)
+      graft.sources.ShardStore.upsert(graft.llm.Corpus.bloomPositions(
+        (21L to 60L).toDF("key"), "key", k = 4, mBits = 1024), s"$dir/idx",
+        graft.llm.Corpus.bloomMerge)
       assert(bits(spark.read.parquet(s"$dir/idx")) == oneShot,
         "replayed merge changed the set bits")
     } finally {
@@ -999,8 +1005,8 @@ class MediaStreamSpec extends SparkSpec {
         .groupBy(col("bin")).agg(count(lit(1)).as("n"))
     try {
       val mem = MemoryStream[Long]
-      val q = graft.streaming.EventsStream.histIndexSink(
-        mem.toDF().toDF("v"), bins, dir = s"$dir/idx", checkpointLoc = ckpt)
+      val q = graft.streaming.EventsStream.shardSink(
+        mem.toDF().toDF("v"), s"$dir/idx", ckpt)(bins)
       mem.addData(101L, 150L, 250L, 310L)
       q.processAllAvailable()
       mem.addData(120L, 255L, 255L, 990L)
@@ -1011,15 +1017,16 @@ class MediaStreamSpec extends SparkSpec {
       val exp = asMap(bins(
         Seq(101L, 150L, 250L, 310L, 120L, 255L, 255L, 990L).toDF("v")))
       val got = asMap(
-        graft.streaming.EventsStream.histFromShards(spark, s"$dir/idx"))
+        graft.operators.RelationalQueries.histMerge(
+        graft.sources.ShardStore.live(spark, s"$dir/idx")))
       assert(got == exp, s"got $got vs $exp")
       // Replay batch 1's shard (same batch_id): dynamic partition
       // overwrite replaces it in place — totals unchanged.
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         bins(Seq(120L, 255L, 255L, 990L).toDF("v")), batchId = 1L,
         dir = s"$dir/idx")
-      assert(asMap(graft.streaming.EventsStream
-        .histFromShards(spark, s"$dir/idx")) == exp,
+      assert(asMap(graft.operators.RelationalQueries.histMerge(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))) == exp,
         "replayed shard double-counted")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -1089,9 +1096,10 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("gqsksink-ck").toString
     try {
       val mem = MemoryStream[(Long, String, Long)]
-      val q = graft.streaming.EventsStream.quantileIndexSink(
-        mem.toDF().toDF("id", "k", "v0"), Seq("k"), "id", "v0",
-        dir = s"$dir/idx", checkpointLoc = ckpt, buckets = 4, capacity = 8)
+      val q = graft.streaming.EventsStream.shardSink(
+        mem.toDF().toDF("id", "k", "v0"), s"$dir/idx", ckpt)(
+        graft.operators.RelationalQueries.quantileSketch(_, Seq("k"), "id",
+          "v0", 4, 8))
       val b1 = (1 to 60).map(i => (i.toLong, if (i % 3 == 0) "a" else "b",
         (i * 37L) % 101))
       val b2 = (61 to 140).map(i => (i.toLong, if (i % 3 == 0) "a" else "b",
@@ -1109,15 +1117,15 @@ class MediaStreamSpec extends SparkSpec {
           b.toDF("id", "k", "v0"), Seq("k"), "id", "v0", 4, 8))
         .reduce(_ unionByName _)
         .groupBy(col("k"), col("v")).agg(sum(col("w")).as("w")))
-      assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/idx", Seq("k"))
+      assert(bag(graft.operators.RelationalQueries.quantileMerge(Seq("k"))(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))
         .select(col("k"), col("v"), col("w"))) == exp)
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.operators.RelationalQueries.quantileSketch(
           b2.toDF("id", "k", "v0"), Seq("k"), "id", "v0", 4, 8),
         batchId = 1L, dir = s"$dir/idx")
-      assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/idx", Seq("k"))
+      assert(bag(graft.operators.RelationalQueries.quantileMerge(Seq("k"))(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))
         .select(col("k"), col("v"), col("w"))) == exp,
         "replayed grouped quantile shard double-counted")
     } finally {
@@ -1211,7 +1219,7 @@ class MediaStreamSpec extends SparkSpec {
         spanTokens = 4, k = 2, mBits = 256))
       assert(got == exp, s"streamed admission log diverged:\n$got\n$exp")
       // Replayed batch: its shard overwrites itself.
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.llm.Corpus.decontamProbe(b2.toDF("doc_id", "text"),
           "doc_id", "text", s"$dir/idx", spanTokens = 4, k = 2,
           mBits = 256), batchId = 1L, dir = s"$dir/log")
@@ -1258,7 +1266,7 @@ class MediaStreamSpec extends SparkSpec {
         graft.llm.Classify.loadModel(spark, s"$dir/model")))
       assert(got == exp, s"streamed score log diverged:\n$got\n$exp")
       // Replayed batch: its shard overwrites itself, no duplicates.
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.llm.Classify.nbScore(b2.toDF("doc_id", "text"),
           "doc_id", "text",
           graft.llm.Classify.loadModel(spark, s"$dir/model")),
@@ -1280,9 +1288,10 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("qsksink-ck").toString
     try {
       val mem = MemoryStream[(Long, Long)]
-      val q = graft.streaming.EventsStream.quantileIndexSink(
-        mem.toDF().toDF("id", "v0"), Nil, "id", "v0", dir = s"$dir/idx",
-        checkpointLoc = ckpt, buckets = 4, capacity = 8)
+      val q = graft.streaming.EventsStream.shardSink(
+        mem.toDF().toDF("id", "v0"), s"$dir/idx", ckpt)(
+        graft.operators.RelationalQueries.quantileSketch(_, Nil, "id", "v0",
+          4, 8))
       val b1 = (1 to 60).map(i => (i.toLong, (i * 37L) % 101))
       val b2 = (61 to 140).map(i => (i.toLong, (i * 37L) % 101))
       mem.addData(b1: _*)
@@ -1298,15 +1307,15 @@ class MediaStreamSpec extends SparkSpec {
           b.toDF("id", "v0"), Nil, "id", "v0", 4, 8))
         .reduce(_ unionByName _)
         .groupBy(col("v")).agg(sum(col("w")).as("w")))
-      assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/idx", Nil)) == exp)
+      assert(bag(graft.operators.RelationalQueries.quantileMerge(Nil)(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))) == exp)
       // Weight total = rows ingested; replayed shard must not change it.
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.operators.RelationalQueries.quantileSketch(
           b2.toDF("id", "v0"), Nil, "id", "v0", 4, 8),
         batchId = 1L, dir = s"$dir/idx")
-      assert(bag(graft.streaming.EventsStream
-        .quantileFromShards(spark, s"$dir/idx", Nil)) == exp,
+      assert(bag(graft.operators.RelationalQueries.quantileMerge(Nil)(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))) == exp,
         "replayed quantile shard double-counted")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -1322,9 +1331,9 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("cmssink-ck").toString
     try {
       val mem = MemoryStream[Long]
-      val q = graft.streaming.EventsStream.cmsIndexSink(
-        mem.toDF().toDF("key"), "key", dir = s"$dir/idx",
-        checkpointLoc = ckpt, depth = 3, width = 16)
+      val q = graft.streaming.EventsStream.shardSink(
+        mem.toDF().toDF("key"), s"$dir/idx", ckpt)(
+        graft.llm.Corpus.cmsBuild(_, "key", depth = 3, width = 16))
       val b1 = (1 to 40).map(i => (i % 11).toLong)
       val b2 = (20 to 90).map(i => (i % 11).toLong)
       mem.addData(b1: _*)
@@ -1337,16 +1346,16 @@ class MediaStreamSpec extends SparkSpec {
       val exp = cells(graft.llm.Corpus.cmsBuild(
         (b1 ++ b2).toDF("key"), "key", depth = 3, width = 16)
         .select(col("r"), col("c"), col("n")))
-      assert(cells(graft.streaming.EventsStream
-        .cmsFromShards(spark, s"$dir/idx")) == exp)
+      assert(cells(graft.llm.Corpus.cmsMerge(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))) == exp)
       // At-least-once replay of batch 1's shard: dynamic partition
       // overwrite replaces it in place — cell counts unchanged (the
       // replay guard CMS addition needs, unlike KMV's idempotent union).
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.llm.Corpus.cmsBuild(b2.toDF("key"), "key",
           depth = 3, width = 16), batchId = 1L, dir = s"$dir/idx")
-      assert(cells(graft.streaming.EventsStream
-        .cmsFromShards(spark, s"$dir/idx")) == exp,
+      assert(cells(graft.llm.Corpus.cmsMerge(
+        graft.sources.ShardStore.live(spark, s"$dir/idx"))) == exp,
         "replayed cms shard double-counted")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -1371,9 +1380,9 @@ class MediaStreamSpec extends SparkSpec {
         (1 to 600 / j).map(i => s"k$j"))
       val b1 = wave(1); val b2 = wave(2) ++ (1 to 40).map(i => s"rare$i")
       val mem = MemoryStream[String]
-      val q = graft.streaming.EventsStream.mgIndexSink(
-        mem.toDF().toDF("key"), "key", dir = s"$dir/idx",
-        checkpointLoc = ckpt, m = 8)
+      val q = graft.streaming.EventsStream.shardSink(
+        mem.toDF().toDF("key"), s"$dir/idx", ckpt)(
+        graft.llm.Corpus.mgSummary(_, "key", 8), graft.llm.Corpus.mgFold(_, 8))
       mem.addData(b1: _*)
       q.processAllAvailable()
       mem.addData(b2: _*)
@@ -1395,12 +1404,13 @@ class MediaStreamSpec extends SparkSpec {
       truth.filter(_._2 > err).keys.foreach(k =>
         assert(reported(k), s"heavy key $k (n=${truth(k)}) missing, err $err"))
       // Replayed batch overwrites its own shard — serve unchanged.
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.llm.Corpus.mgSummary(b2.toDF("key"), "key", 8),
         batchId = 1L, dir = s"$dir/idx")
       assert(served().toSet == rows0.toSet, "replayed shard drifted")
       // Compaction: a summary of summaries is a summary — same serve.
-      graft.streaming.EventsStream.compactMgIndex(spark, s"$dir/idx", 8)
+      graft.sources.ShardStore.compact(spark, s"$dir/idx",
+        graft.llm.Corpus.mgFold(_, 8))
       assert(served().toSet == rows0.toSet, "compaction changed serving")
       assert(batchDirs(s"$dir/idx").size == 1)
     } finally {
@@ -1419,30 +1429,31 @@ class MediaStreamSpec extends SparkSpec {
         (20 to 90).map(i => (i % 11).toLong),
         (5 to 55).map(i => (i % 7).toLong))
       bs.zipWithIndex.foreach { case (b, i) =>
-        graft.streaming.EventsStream.writeHistShard(
+        graft.sources.ShardStore.writeShard(
           graft.llm.Corpus.cmsBuild(b.toDF("key"), "key",
             depth = 3, width = 16), batchId = i.toLong, dir = s"$dir/idx")
       }
-      def cells() = graft.streaming.EventsStream
-        .cmsFromShards(spark, s"$dir/idx").collect()
+      def cells() = graft.llm.Corpus.cmsMerge(
+        graft.sources.ShardStore.live(spark, s"$dir/idx")).collect()
         .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
       val exp = cells()
       assert(batchDirs(s"$dir/idx").size == 3)
-      graft.streaming.EventsStream.compactCmsIndex(spark, s"$dir/idx")
+      graft.sources.ShardStore.compact(spark, s"$dir/idx",
+        graft.llm.Corpus.cmsMerge)
       assert(cells() == exp, "compacted CMS diverges from the shard sum")
       assert(batchDirs(s"$dir/idx") == Seq("batch_id=-4"),
         s"fold did not collapse: ${batchDirs(s"$dir/idx")}")
       // At-least-once replay of a PRE-HORIZON batch: its partition
       // re-lands (the sink is untouched) but the live view drops it —
       // the marker upgrades "overwrite yourself" to "or be ignored".
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.llm.Corpus.cmsBuild(bs(1).toDF("key"), "key",
           depth = 3, width = 16), batchId = 1L, dir = s"$dir/idx")
       assert(batchDirs(s"$dir/idx").size == 2)
       assert(cells() == exp, "replayed pre-horizon shard double-counted")
       // A genuinely NEW batch keeps counting.
       val b3 = (100 to 160).map(i => (i % 13).toLong)
-      graft.streaming.EventsStream.writeHistShard(
+      graft.sources.ShardStore.writeShard(
         graft.llm.Corpus.cmsBuild(b3.toDF("key"), "key",
           depth = 3, width = 16), batchId = 3L, dir = s"$dir/idx")
       val exp4 = graft.llm.Corpus.cmsBuild(
@@ -1452,7 +1463,8 @@ class MediaStreamSpec extends SparkSpec {
       assert(cells() == exp4)
       // Second compaction folds base + new shard, sweeps the dead
       // replayed partition, and stays bit-identical.
-      graft.streaming.EventsStream.compactCmsIndex(spark, s"$dir/idx")
+      graft.sources.ShardStore.compact(spark, s"$dir/idx",
+        graft.llm.Corpus.cmsMerge)
       assert(cells() == exp4)
       assert(batchDirs(s"$dir/idx") == Seq("batch_id=-5"))
     } finally {
@@ -1465,8 +1477,9 @@ class MediaStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.RelationalQueries.{compactQuantileSketch,
       quantileSketch}
-    import graft.streaming.EventsStream.{compactQuantileIndexShards,
-      quantileFromShards, writeHistShard}
+    import graft.sources.ShardStore.{compact, live, writeShard}
+    def mergedShards(dir: String, keys: Seq[String]) =
+      graft.operators.RelationalQueries.quantileMerge(keys)(live(spark, dir))
     val dir = java.nio.file.Files.createTempDirectory("qcompact").toString
     try {
       val bs = Seq(
@@ -1477,35 +1490,36 @@ class MediaStreamSpec extends SparkSpec {
       // One global and one grouped (key = id % 3) shard per batch.
       def writeShards(g: String, k: String): Unit =
         bs.indices.foreach { i =>
-          writeHistShard(quantileSketch(bs(i).toDF("id", "v0"), Nil, "id",
+          writeShard(quantileSketch(bs(i).toDF("id", "v0"), Nil, "id",
             "v0", 4, 8), batchId = i.toLong, dir = g)
-          writeHistShard(quantileSketch(kb(i).toDF("k", "id", "v0"),
+          writeShard(quantileSketch(kb(i).toDF("k", "id", "v0"),
             Seq("k"), "id", "v0", 4, 8), batchId = i.toLong, dir = k)
         }
       writeShards(s"$dir/g", s"$dir/k")
       def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).groupBy(identity)
         .view.mapValues(_.size).toMap
-      val merged = quantileFromShards(spark, s"$dir/g", Nil)
+      val merged = mergedShards(s"$dir/g", Nil)
       // The expected base = the SAME deterministic recompaction applied
       // to the merged bag in memory.
       val expBase = bag(compactQuantileSketch(merged, Nil, capacity = 16))
-      compactQuantileIndexShards(spark, s"$dir/g", Nil, capacity = 16)
-      assert(bag(quantileFromShards(spark, s"$dir/g", Nil)) == expBase)
+      compact(spark, s"$dir/g", compactQuantileSketch(_, Nil, capacity = 16))
+      assert(bag(mergedShards(s"$dir/g", Nil)) == expBase)
       // Total weight (row count) survives compaction exactly.
-      val wSum = quantileFromShards(spark, s"$dir/g", Nil)
+      val wSum = mergedShards(s"$dir/g", Nil)
         .agg(sum(col("w"))).collect()(0).getLong(0)
       assert(wSum == bs.map(_.size).sum)
       // Grouped form: per-key recompaction, per-key weights exact.
-      val mergedK = quantileFromShards(spark, s"$dir/k", Seq("k"))
+      val mergedK = mergedShards(s"$dir/k", Seq("k"))
       def kbag(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(identity).view.mapValues(_.size).toMap
       val expK = kbag(compactQuantileSketch(mergedK, Seq("k"),
         capacity = 16))
-      compactQuantileIndexShards(spark, s"$dir/k", Seq("k"), capacity = 16)
-      assert(kbag(quantileFromShards(spark, s"$dir/k", Seq("k"))) == expK)
-      val perKey = quantileFromShards(spark, s"$dir/k", Seq("k"))
+      compact(spark, s"$dir/k",
+        compactQuantileSketch(_, Seq("k"), capacity = 16))
+      assert(kbag(mergedShards(s"$dir/k", Seq("k"))) == expK)
+      val perKey = mergedShards(s"$dir/k", Seq("k"))
         .groupBy(col("k")).agg(sum(col("w")).as("w")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val expPerKey = kb.flatten.groupBy(_._1)
@@ -1516,11 +1530,12 @@ class MediaStreamSpec extends SparkSpec {
       // instead of local blocks, and the folded bags must not change.
       val (relBase, relK) = withReliableCheckpoints {
         writeShards(s"$dir/rg", s"$dir/rk")
-        compactQuantileIndexShards(spark, s"$dir/rg", Nil, capacity = 16)
-        compactQuantileIndexShards(spark, s"$dir/rk", Seq("k"),
-          capacity = 16)
-        (bag(quantileFromShards(spark, s"$dir/rg", Nil)),
-          kbag(quantileFromShards(spark, s"$dir/rk", Seq("k"))))
+        compact(spark, s"$dir/rg",
+          compactQuantileSketch(_, Nil, capacity = 16))
+        compact(spark, s"$dir/rk",
+          compactQuantileSketch(_, Seq("k"), capacity = 16))
+        (bag(mergedShards(s"$dir/rg", Nil)),
+          kbag(mergedShards(s"$dir/rk", Seq("k"))))
       }
       assert(relBase == expBase && relK == expK,
         "reliable-checkpoint compaction diverged from the local one")
@@ -1562,7 +1577,7 @@ class MediaStreamSpec extends SparkSpec {
   test("shard store crash windows: unmarked orphan base dropped from " +
     "the live view; idle compact sweeps stale partitions") {
     import spark.implicits._
-    val ES = graft.streaming.EventsStream
+    val SS = graft.sources.ShardStore
     val dir = java.nio.file.Files.createTempDirectory("orphan").toString
     try {
       val bs = Seq(
@@ -1571,8 +1586,9 @@ class MediaStreamSpec extends SparkSpec {
       def hist(b: Seq[Long]) = b.toDF("v")
         .groupBy(($"v" % 4).as("bin")).agg(count(lit(1)).as("n"))
       bs.zipWithIndex.foreach { case (b, i) =>
-        ES.writeHistShard(hist(b), batchId = i.toLong, dir = s"$dir/idx") }
-      def served() = ES.histFromShards(spark, s"$dir/idx").collect()
+        SS.writeShard(hist(b), batchId = i.toLong, dir = s"$dir/idx") }
+      def served() = graft.operators.RelationalQueries.histMerge(
+        SS.live(spark, s"$dir/idx")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val exp = hist(bs.flatten).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1581,22 +1597,24 @@ class MediaStreamSpec extends SparkSpec {
       // and the _meta marker: a negative base partition exists with NO
       // marker pointing at it. The live view must drop it — negative
       // ids are reserved for bases — or every folded row double-counts.
-      ES.writeHistShard(hist(bs.flatten), batchId = -3L, dir = s"$dir/idx")
+      SS.writeShard(hist(bs.flatten), batchId = -3L, dir = s"$dir/idx")
       assert(batchDirs(s"$dir/idx").toSet ==
         Set("batch_id=0", "batch_id=1", "batch_id=-3"))
       assert(served() == exp, "unmarked orphan base double-counted")
       // The re-run compaction folds the SAME live view and commits the
       // marker; serving is unchanged and the orphan id is reused.
-      ES.compactHistIndex(spark, s"$dir/idx")
+      SS.compact(spark, s"$dir/idx",
+        graft.operators.RelationalQueries.histMerge)
       assert(served() == exp)
       assert(batchDirs(s"$dir/idx") == Seq("batch_id=-3"))
       // A replayed pre-horizon batch re-lands its (dead) partition.
       // An idle compact — nothing new to fold — must still sweep it:
       // the crash-window storage-leak contract.
-      ES.writeHistShard(hist(bs(0)), batchId = 0L, dir = s"$dir/idx")
+      SS.writeShard(hist(bs(0)), batchId = 0L, dir = s"$dir/idx")
       assert(batchDirs(s"$dir/idx").toSet ==
         Set("batch_id=0", "batch_id=-3"))
-      ES.compactHistIndex(spark, s"$dir/idx")
+      SS.compact(spark, s"$dir/idx",
+        graft.operators.RelationalQueries.histMerge)
       assert(batchDirs(s"$dir/idx") == Seq("batch_id=-3"),
         "idle compact did not sweep the stale partition")
       assert(served() == exp)
@@ -1621,14 +1639,16 @@ class MediaStreamSpec extends SparkSpec {
       val b1 = (1L to 30L).map(k => ("a", k)) ++
         (1L to 3L).map(k => ("b", k))
       val b2 = (31L to 60L).map(k => ("a", k))
-      C.upsertBottomKIndex(b1.toDF("st", "key"), "key", "st", k = 5, dir)
+      graft.sources.ShardStore.upsert(C.bottomK(b1.toDF("st", "key"), "key",
+        "st", k = 5), dir, C.bottomKMerge("key", "st", 5))
       // Crash between overwriteAtomic's two renames: target gone, the
       // accumulated copy stranded at __old. The next upsert must
       // RESTORE and merge — not read "no index yet" and reinit from
       // the batch alone (which would also delete __old at cleanup).
       assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
         new org.apache.hadoop.fs.Path(dir + "__old")))
-      C.upsertBottomKIndex(b2.toDF("st", "key"), "key", "st", k = 5, dir)
+      graft.sources.ShardStore.upsert(C.bottomK(b2.toDF("st", "key"), "key",
+        "st", k = 5), dir, C.bottomKMerge("key", "st", 5))
       val expected = C.bottomK((b1 ++ b2).toDF("st", "key"),
         "key", "st", k = 5).select($"st", $"key").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
@@ -1646,6 +1666,62 @@ class MediaStreamSpec extends SparkSpec {
       assert(graft.sources.ShardStore.recoverOverwrite(spark, dir))
       assert(picks() == s12, "complete __tmp copy not restored")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__tmp")))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+  }
+
+  test("atomic merge crash window: an additive merge into a half-swapped " +
+    "index fails and keeps __old; an idempotent upsert recovers to the " +
+    "uninterrupted result") {
+    import spark.implicits._
+    val C = graft.llm.Corpus
+    val SS = graft.sources.ShardStore
+    val root = java.nio.file.Files.createTempDirectory("mergecrash").toString
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    try {
+      // Additive (CMS): target gone, the accumulated copy at __old. A
+      // recovered swap may already hold the batch, so the merge must
+      // not guess — it fails, and __old stays for an operator.
+      def cms(keys: Seq[Long]) = C.cmsBuild(keys.toDF("key"), "key",
+        depth = 3, width = 16)
+      def cells(d: org.apache.spark.sql.DataFrame) = d
+        .select(col("r"), col("c"), col("n")).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val b1 = (1L to 40L).map(_ % 11)
+      val cmsDir = s"$root/cms"
+      cms(b1).write.mode("overwrite").parquet(cmsDir)
+      assert(fs.rename(path(cmsDir), path(cmsDir + "__old")))
+      intercept[org.apache.spark.sql.AnalysisException] {
+        SS.merge(cms((20L to 90L).map(_ % 11)), cmsDir, C.cmsMerge)
+      }
+      assert(!fs.exists(path(cmsDir)))
+      assert(cells(spark.read.parquet(cmsDir + "__old")) == cells(cms(b1)),
+        "the stranded copy was touched")
+      // Idempotent (KMV): the same crash window, and the one where the
+      // new copy completed at __tmp. The upsert recovers and merges;
+      // the slots equal the uninterrupted run's.
+      def kmv(keys: Seq[Long]) = C.kmvSketch(keys.map(k => ("a", k))
+        .toDF("st", "key"), "key", "st", k = 8).drop("kmv_rank")
+      def slots(dir: String) = spark.read.parquet(dir).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      val (k1, k2, k3) = (1L to 30L, 21L to 60L, 55L to 90L)
+      val clean = s"$root/kmv_clean"
+      kmv(k1).write.mode("overwrite").parquet(clean)
+      SS.upsert(kmv(k2), clean, C.kmvMerge(8))
+      SS.upsert(kmv(k3), clean, C.kmvMerge(8))
+      val crashed = s"$root/kmv_crashed"
+      kmv(k1).write.mode("overwrite").parquet(crashed)
+      assert(fs.rename(path(crashed), path(crashed + "__old")))
+      SS.upsert(kmv(k2), crashed, C.kmvMerge(8))
+      assert(fs.rename(path(crashed), path(crashed + "__tmp")))
+      SS.upsert(kmv(k3), crashed, C.kmvMerge(8))
+      assert(slots(crashed) == slots(clean),
+        "recovered upserts diverged from the uninterrupted run")
+      assert(!fs.exists(path(crashed + "__old")) &&
+        !fs.exists(path(crashed + "__tmp")))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     }
@@ -1725,9 +1801,10 @@ class MediaStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("autocomp-ck").toString
     try {
       val mem = MemoryStream[Long]
-      val q = ES.histIndexSink(mem.toDF().toDF("v"),
+      val q = ES.shardSink(mem.toDF().toDF("v"), s"$dir/idx", s"$ckpt/a",
+        autoCompact = 2)(
         b => b.groupBy(($"v" % 4).as("bin")).agg(count(lit(1)).as("n")),
-        s"$dir/idx", s"$ckpt/a", autoCompact = 2)
+        graft.operators.RelationalQueries.histMerge)
       val bs = Seq(
         (1 to 40).map(_.toLong), (20 to 90).map(_.toLong),
         (5 to 55).map(_.toLong), (100 to 130).map(_.toLong))
@@ -1747,7 +1824,8 @@ class MediaStreamSpec extends SparkSpec {
       assert(graft.sources.ShardStore.readMeta(spark, s"$dir/idx") == m)
       assert(batchDirs(s"$dir/idx").toSet ==
         Set(s"batch_id=${m.get.base}", "batch_id=3"))
-      val served = ES.histFromShards(spark, s"$dir/idx").collect()
+      val served = graft.operators.RelationalQueries.histMerge(
+        graft.sources.ShardStore.live(spark, s"$dir/idx")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val exp = bs.flatten.toDF("v")
         .groupBy(($"v" % 4).as("bin")).agg(count(lit(1)).as("n"))
@@ -1967,8 +2045,7 @@ class MediaStreamSpec extends SparkSpec {
       def quadServe() = graft.graphquery.DeltaStore
         .serve(spark, s"$dir/stores/quads").collect().map(_.toSeq).toSet
       // Family 3: flat batch_id-sharded store (5 shards).
-      (0L until 5L).foreach(i => graft.streaming.EventsStream
-        .writeHistShard(Seq((i, i * 10)).toDF("k", "v"), i,
+      (0L until 5L).foreach(i => SS.writeShard(Seq((i, i * 10)).toDF("k", "v"), i,
           s"$dir/stores/hist"))
       def histRows() = SS.live(spark, s"$dir/stores/hist")
         .select("k", "v").collect().map(_.toSeq).toSet

@@ -1125,8 +1125,10 @@ class RelationalQueriesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("histidx").toString
     try {
       bins(b1).write.mode("overwrite").parquet(dir)
-      RelationalQueries.mergeHistIndex(bins(b2), dir)
-      RelationalQueries.mergeHistIndex(bins(b3), dir)
+      graft.sources.ShardStore.merge(bins(b2), dir,
+        RelationalQueries.histMerge)
+      graft.sources.ShardStore.merge(bins(b3), dir,
+        RelationalQueries.histMerge)
       def asMap(d: org.apache.spark.sql.DataFrame) =
         d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(asMap(spark.read.parquet(dir)) == asMap(bins(b1 ++ b2 ++ b3)))
@@ -1352,7 +1354,8 @@ class RelationalQueriesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("qskbykey").toString
     try {
       sks(0).write.mode("overwrite").parquet(dir)
-      RelationalQueries.mergeQuantileIndex(sks(1), keys, dir)
+      graft.sources.ShardStore.merge(sks(1), dir,
+        RelationalQueries.quantileMerge(keys))
       def bag(d: org.apache.spark.sql.DataFrame) = d.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(bag(spark.read.parquet(dir).select($"k", $"v", $"w")) ==

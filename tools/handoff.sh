@@ -7,6 +7,11 @@
 #   SF=/root/testdata/sf0.001 bash tools/handoff.sh   # faster smoke
 #
 # Stages:
+#   0. single read path    — fails when src/main reads parquet with a
+#                            bare `.read.parquet(` outside Tables.scala
+#                            and the probe mains: every other read goes
+#                            through `Tables.parquet`, which starts no
+#                            schema-inference job (seconds).
 #   1. sbt test            — all suites, incl. the Maintenance.runAll
 #                            janitor pass over a mixed five-store tree
 #                            (MediaStreamSpec) and the store-lifecycle
@@ -26,6 +31,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.01}
+
+echo "== 0/6 single parquet read path (Tables.parquet)"
+if grep -rn --include='*.scala' '\.read\.parquet(' src/main \
+    | grep -v -e '^src/main/scala/graft/Tables\.scala:' \
+      -e '^src/main/scala/graft/\(Scale\|Index\|Candidate\)Probe\.scala:'
+then
+  echo "src/main reads parquet outside Tables.parquet (lines above)"
+  exit 1
+fi
 
 echo "== 1/6 sbt test (all suites)"
 sbt -batch test
