@@ -496,7 +496,7 @@ object Dedup {
     * bucket layout — Spark validates the bucket spec, so the
     * candidate-join stays one batch-side exchange. NOT idempotent
     * (append duplicates rows); a replaying caller must dedup upstream or
-    * ledger batch ids (the `writeHistShard` pattern).
+    * ledger batch ids (the `ShardStore.writeShard` pattern).
     */
   def appendDedupIndex(docs: DataFrame, idCol: String, textCol: String,
                        prefix: String, buckets: Int = 32): Unit = {

@@ -1752,7 +1752,7 @@ object RelationalQueries {
   }
 
   /** The quantile merge law over stored ∪ batch (keys…, v, w) sketches:
-    * bag union per key ([[weightBag]] — equal values collapse by weight
+    * bag union per key (`weightBag` — equal values collapse by weight
     * addition, harmless to ranks). Rank errors ADD per merged batch
     * (≤ buckets + N_i/capacity each — the GK merge law). Weights add,
     * so it is NOT idempotent: a replaying caller ledgers batches or
