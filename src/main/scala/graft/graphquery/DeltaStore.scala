@@ -1,8 +1,9 @@
 package graft.graphquery
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The WRITE-HEAVY SPARQL UPDATE path — the delta-staged layout the
   * administrative path ([[Sparql.update]]) prices itself against.
@@ -48,19 +49,19 @@ import org.apache.spark.sql.functions._
   * it by executing a pre-compaction plan after the compact.
   *
   * Single-writer per store, ENFORCED (not just documented): same-JVM
-  * writers serialize on `Sparql.storeLocks`; cross-process writers on
+  * writers serialize on `Sparql.withStoreLock`; cross-process writers on
   * the `_writer` TTL lease ([[writerLeaseTtlMs]]) — the id allocation
   * (`max + 1`) is the collision point the lease closes. Concurrent
   * serves are safe given compactions spaced further apart than the
   * longest-running query (the deferred-vacuum retention contract).
-  * DELETE WHERE / modify / CLEAR / ADD/COPY/MOVE compile their
-  * solutions against the CURRENT folded view, so tombstones are exact
-  * quads — the fold never re-runs a pattern.
+  * A statement's delta is [[Sparql.statementDelta]], the interpretation
+  * the administrative path applies: DELETE WHERE / modify / CLEAR /
+  * CREATE / ADD/COPY/MOVE match against the CURRENT folded view, so
+  * tombstones are exact quads — the fold never re-runs a pattern.
   */
 object DeltaStore {
 
-  import Sparql.{QuadCols, UpdateOp, InsertData, DeleteData, DeleteWhere,
-    Modify, Load, Clear, Create, GraphXfer, OneGraph, DefaultGraph,
+  import Sparql.{QuadCols, UpdateOp, GraphTarget, OneGraph, DefaultGraph,
     AllNamed, AllGraphs}
 
   private def fsOf(spark: SparkSession, dir: String) =
@@ -68,7 +69,7 @@ object DeltaStore {
 
   // ---------------------------------------- cross-process writer lease
   // The same discipline the search index's `_writing` staging lease
-  // proved (Corpus.scala): the in-JVM storeLocks mutex cannot see a
+  // proved (Corpus.scala): the in-JVM store lock cannot see a
   // second PROCESS, and two processes allocating `max + 1` ids would
   // stage into the SAME `_tmp_<id>` dir — corruption, not just a lost
   // race. The `_writer` lease makes the single-writer contract
@@ -173,10 +174,15 @@ object DeltaStore {
       fs.delete(leasePath(dir), false)
   }
 
-  private def emptyQuads(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      Sparql.quadSchema)
+  /** Runs `body(token)` as the store's one writer: under the same-JVM
+    * store lock and the cross-process lease, released even on failure. */
+  private def asWriter(spark: SparkSession, dir: String)
+                      (body: String => Unit): Unit =
+    Sparql.withStoreLock(dir) {
+      val token = acquireLease(spark, dir)
+      try body(token)
+      finally releaseLease(spark, dir, token)
+    }
 
   // ------------------------------------------------- versioned base
   // The base is VERSIONED (`base` = version 0, the init/legacy layout;
@@ -225,7 +231,7 @@ object DeltaStore {
       if (v == 0L) graft.sources.ShardStore.existsRecovered(spark, path)
       else fsOf(spark, dir).exists(new Path(path))
     if (exists) Sparql.readQuads(spark, path)
-    else emptyQuads(spark)
+    else Sparql.emptyQuads(spark)
   }
 
   /** Committed delta ids, ascending (dir listing — `_tmp_*` orphans
@@ -240,6 +246,23 @@ object DeltaStore {
       .sorted
   }
 
+  private val deltaSchema = StructType(
+    Sparql.quadSchema.fields :+ StructField("op", IntegerType))
+
+  /** A graph cover's on-disk scope name, in the `s` slot of its op-2
+    * row (a named graph's IRI goes in `g`). */
+  private def scopeName(t: GraphTarget): String = t match {
+    case OneGraph(_) => "graph"
+    case DefaultGraph => "default"
+    case AllNamed => "named"
+    case AllGraphs => "all"
+  }
+
+  private def coverOf(scope: String, g: String): GraphTarget =
+    Seq(OneGraph(g), DefaultGraph, AllNamed, AllGraphs)
+      .find(scopeName(_) == scope)
+      .getOrElse(sys.error(s"unknown cover scope $scope"))
+
   private def deltaDf(spark: SparkSession, dir: String, above: Long,
                       upTo: Option[Long]): Option[DataFrame] = {
     val ids = deltaIds(spark, dir).filter(_ > above)
@@ -247,8 +270,8 @@ object DeltaStore {
     if (live.isEmpty) None
     // Read the delta dirs explicitly (basePath recovers delta_id as a
     // column) so a compact's horizon is exact even if new deltas land
-    // between the listing and the read.
-    else Some(spark.read.option("basePath", s"$dir/delta")
+    // between the listing and the read; the fixed schema reads no footer.
+    else Some(spark.read.schema(deltaSchema).option("basePath", s"$dir/delta")
       .parquet(live.map(i => s"$dir/delta/delta_id=$i"): _*))
   }
 
@@ -294,17 +317,10 @@ object DeltaStore {
         // (cov folds to the -1 literal).
         val gops = d.filter(col("op") === 2)
           .select(col("s"), col("g"), col("delta_id").cast("long"))
-          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val cov: Column = gops.foldLeft(lit(-1L)) {
-          case (acc, (scope, g, id)) =>
-            val covers = scope match {
-              case "all" => lit(true)
-              case "named" => col("g").isNotNull
-              case "default" => col("g").isNull
-              case "graph" => col("g") <=> lit(g)
-              case other => sys.error(s"unknown cover scope $other")
-            }
-            greatest(acc, when(covers, lit(id)).otherwise(lit(-1L)))
+          .collect().map(r => (coverOf(r.getString(0), r.getString(1)),
+            r.getLong(2)))
+        val cov: Column = gops.foldLeft(lit(-1L)) { case (acc, (t, id)) =>
+          greatest(acc, when(Sparql.covered(t), lit(id)).otherwise(lit(-1L)))
         }
         val last = qops.groupBy(QuadCols.map(col): _*)
           .agg(max(struct(col("delta_id").cast("long").as("delta_id"),
@@ -329,135 +345,70 @@ object DeltaStore {
     * semantics as [[Sparql.update]]. */
   def update(spark: SparkSession, dir: String, text: String): Unit = {
     val ops = Sparql.validatedOps(text)
-    val lock = Sparql.storeLocks.computeIfAbsent(
-      new Path(dir).toString,
-      _ => new java.util.concurrent.locks.ReentrantLock)
-    lock.lock()
-    try {
-      val token = acquireLease(spark, dir)
-      try {
-        val fs = fsOf(spark, dir)
-        val root = new Path(s"$dir/delta")
-        fs.mkdirs(root)
-        // Sweep crashed writers' invisible staging dirs (ours is the
-        // only live lease — anything staged belongs to a dead writer).
-        fs.listStatus(root).foreach { st =>
-          if (st.getPath.getName.startsWith("_tmp_")) fs.delete(st.getPath, true)
-        }
-        ops.foreach { op =>
-          try commitOne(spark, dir, op, token)
-          catch { case _: Exception if Sparql.silentOf(op) => () }
-          // Keep the lease fresh across a long script: one rewrite per
-          // committed statement, so the TTL bounds writer SILENCE, not
-          // script length.
-          refreshLease(spark, dir, token)
-        }
-      } finally releaseLease(spark, dir, token)
-    } finally lock.unlock()
+    asWriter(spark, dir) { token =>
+      val fs = fsOf(spark, dir)
+      val root = new Path(s"$dir/delta")
+      fs.mkdirs(root)
+      // Sweep crashed writers' invisible staging dirs (ours is the
+      // only live lease — anything staged belongs to a dead writer).
+      fs.listStatus(root).foreach { st =>
+        if (st.getPath.getName.startsWith("_tmp_")) fs.delete(st.getPath, true)
+      }
+      ops.foreach { op =>
+        try commitOne(spark, dir, op, token)
+        catch { case _: Exception if Sparql.silentOf(op) => () }
+        // Keep the lease fresh across a long script: one rewrite per
+        // committed statement, so the TTL bounds writer SILENCE, not
+        // script length.
+        refreshLease(spark, dir, token)
+      }
+    }
   }
 
-  /** One statement → one (adds, tombstones) delta dir. The current
-    * folded view compiles the statement's patterns, so each statement
-    * sees its predecessors' effects exactly like the administrative
-    * path. */
+  /** One statement → one delta dir holding [[Sparql.statementDelta]]:
+    * its touched quads as op 1/0 rows and each graph cover as ONE op-2
+    * row, never a store-sized tombstone set (the O(statement) contract
+    * holds for CLEAR/DROP too; the adds of COPY/MOVE are O(source
+    * graph), which is the data actually moving). The folded view is
+    * built only for the statements that match against it, so each sees
+    * its predecessors' effects exactly like the administrative path. A
+    * provable no-op commits nothing. */
   private def commitOne(spark: SparkSession, dir: String,
-                        op: UpdateOp, token: String): Unit = {
-    val cur = folded(spark, dir)
-    val noClear = Seq.empty[(String, Option[String])]
-    // touched: the statement's quads flagged `_add` (Sparql.touched /
-    // Sparql.templateQuads); clears: ("graph", Some(iri)) |
-    // ("default"|"named"|"all", None) — each ONE op=2 row in the delta,
-    // never a store-sized tombstone set (the O(statement) contract
-    // holds for CLEAR/DROP too; the adds of COPY/MOVE are O(source
-    // graph), which is the data actually moving).
-    val (touched, clears): (DataFrame,
-        Seq[(String, Option[String])]) = op match {
-      case InsertData(q) =>
-        (Sparql.touched(Sparql.groundQuads(spark, q), add = true), noClear)
-      case DeleteData(q) =>
-        (Sparql.touched(Sparql.groundQuads(spark, q), add = false), noClear)
-      case DeleteWhere(p) =>
-        (Sparql.templateQuads(Sparql.whereSolutions(cur, p),
-          Seq(p -> false)).distinct(), noClear)
-      case Modify(del, ins, where, u, un, wg) =>
-        // Both templates instantiate from the SAME pre-update
-        // solutions, compiled once; within one delta the fold ranks add
-        // over tombstone — the delete-before-insert survival rule. One
-        // delta row per distinct touched quad, not per solution.
-        (Sparql.templateQuads(Sparql.whereSolutions(cur, where, u, un, wg),
-          Seq(del -> false, ins -> true), wg).distinct(), noClear)
-      case Load(doc, into, _) =>
-        (Sparql.touched(Sparql.loadQuads(spark, doc, into), add = true),
-          noClear)
-      case Clear(target, silent, drop) =>
-        val scope = target match {
-          case OneGraph(i) =>
-            if (!silent)
-              require(!cur.filter(col("g") <=> lit(i)).isEmpty,
-                s"${if (drop) "DROP" else "CLEAR"} GRAPH: no graph <$i> in store")
-            ("graph", Some(i))
-          case DefaultGraph => ("default", None)
-          case AllNamed => ("named", None)
-          case AllGraphs => ("all", None)
-        }
-        (Sparql.touched(emptyQuads(spark), add = false), Seq(scope))
-      case Create(g, silent) =>
-        if (!silent)
-          require(cur.filter(col("g") <=> lit(g)).isEmpty,
-            s"CREATE GRAPH: graph <$g> already exists")
-        return // nothing to commit
-      case GraphXfer(kind, src, dst, silent) =>
-        if (src == dst) return
-        def inSide(r: Option[String]) =
-          r.map(i => col("g") <=> lit(i)).getOrElse(col("g").isNull)
-        def scopeOf(r: Option[String]) =
-          r.map(i => ("graph", Some(i))).getOrElse(("default", None))
-        val srcRows = cur.filter(inSide(src))
-        if (src.isDefined && srcRows.isEmpty) {
-          if (silent) return
-          else sys.error(s"$kind: no graph <${src.get}> in store")
-        }
-        val relabeled = Sparql.touched(srcRows.withColumn("g",
-          dst.map(i => lit(i).cast("string"))
-            .getOrElse(lit(null).cast("string"))), add = true)
-        kind match {
-          case "ADD" => (relabeled, noClear)
-          case "COPY" => (relabeled, Seq(scopeOf(dst)))
-          case "MOVE" => (relabeled, Seq(scopeOf(dst), scopeOf(src)))
-          case other => sys.error(s"unknown transfer $other")
-        }
+                        op: UpdateOp, token: String): Unit =
+    Sparql.statementDelta(spark, folded(spark, dir), op).foreach { d =>
+      // One delta row per distinct touched quad, not per solution;
+      // within one delta the fold ranks add over tombstone — the
+      // delete-before-insert survival rule.
+      val quads =
+        if (d.built == Sparql.Instantiated) d.touched.distinct() else d.touched
+      val fs = fsOf(spark, dir)
+      // Monotonic ids across compactions: folded deltas eventually
+      // delete, but the horizon marker keeps their ids retired forever —
+      // id reuse would let a fresh delta fall inside the next compact's
+      // deferred-delete range before surviving a grace cycle.
+      val id = math.max(deltaIds(spark, dir).lastOption.getOrElse(-1L),
+        readHorizon(spark, dir)) + 1
+      // Token-suffixed staging: even if two processes ever reached here
+      // with the same id (a lease-takeover race), their staging dirs
+      // cannot collide and the loser's PUBLISH rename fails loudly on
+      // the existing target.
+      val tmp = new Path(s"$dir/delta/_tmp_${id}_$token")
+      val fin = new Path(s"$dir/delta/delta_id=$id")
+      import scala.jdk.CollectionConverters._
+      val coverRows = spark.createDataFrame(d.covers.map { t =>
+        Row(t match { case OneGraph(i) => i; case _ => null }, scopeName(t),
+          null, null, null, null, null, 2) }.asJava, deltaSchema)
+      val rows = quads.select(QuadCols.map(col) :+
+          when(col("_add"), lit(1)).otherwise(lit(0)).as("op"): _*)
+        .unionByName(coverRows)
+      rows.write.mode("overwrite").parquet(tmp.toString)
+      // Publish gate: the lease must still be ours — a writer whose
+      // lease was swept as stale (paused past the TTL) aborts HERE with
+      // only an invisible staging dir on disk, never a half-trusted
+      // delta.
+      checkLease(spark, dir, token)
+      require(fs.rename(tmp, fin), s"delta publish rename failed: $fin")
     }
-    val fs = fsOf(spark, dir)
-    // Monotonic ids across compactions: folded deltas eventually
-    // delete, but the horizon marker keeps their ids retired forever —
-    // id reuse would let a fresh delta fall inside the next compact's
-    // deferred-delete range before surviving a grace cycle.
-    val id = math.max(deltaIds(spark, dir).lastOption.getOrElse(-1L),
-      readHorizon(spark, dir)) + 1
-    // Token-suffixed staging: even if two processes ever reached here
-    // with the same id (a lease-takeover race), their staging dirs
-    // cannot collide and the loser's PUBLISH rename fails loudly on
-    // the existing target.
-    val tmp = new Path(s"$dir/delta/_tmp_${id}_$token")
-    val fin = new Path(s"$dir/delta/delta_id=$id")
-    import scala.jdk.CollectionConverters._
-    val opSchema = org.apache.spark.sql.types.StructType(
-      Sparql.quadSchema.fields :+ org.apache.spark.sql.types.StructField(
-        "op", org.apache.spark.sql.types.IntegerType))
-    val clearRows = spark.createDataFrame(
-      clears.map { case (scope, g) => org.apache.spark.sql.Row(
-        g.orNull, scope, null, null, null, null, null, 2) }.asJava, opSchema)
-    val rows = touched.select(QuadCols.map(col) :+
-        when(col("_add"), lit(1)).otherwise(lit(0)).as("op"): _*)
-      .unionByName(clearRows)
-    rows.write.mode("overwrite").parquet(tmp.toString)
-    // Publish gate: the lease must still be ours — a writer whose
-    // lease was swept as stale (paused past the TTL) aborts HERE with
-    // only an invisible staging dir on disk, never a half-trusted
-    // delta.
-    checkLease(spark, dir, token)
-    require(fs.rename(tmp, fin), s"delta publish rename failed: $fin")
-  }
 
   private def horizonPath(dir: String) = new Path(s"$dir/_horizon")
 
@@ -506,17 +457,8 @@ object DeltaStore {
     * store may retain one superseded base version until the next
     * compaction with actual work. */
   def compact(spark: SparkSession, dir: String,
-              partitionBy: Seq[String] = Nil): Unit = {
-    val lock = Sparql.storeLocks.computeIfAbsent(
-      new Path(dir).toString,
-      _ => new java.util.concurrent.locks.ReentrantLock)
-    lock.lock()
-    try {
-      val token = acquireLease(spark, dir)
-      try compactLocked(spark, dir, partitionBy, token)
-      finally releaseLease(spark, dir, token)
-    } finally lock.unlock()
-  }
+              partitionBy: Seq[String] = Nil): Unit =
+    asWriter(spark, dir)(compactLocked(spark, dir, partitionBy, _))
 
   private def compactLocked(spark: SparkSession, dir: String,
                             partitionBy: Seq[String],

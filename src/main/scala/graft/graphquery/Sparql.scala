@@ -1889,6 +1889,102 @@ object Sparql {
     case _ => false
   }
 
+  /** How a statement's touched quads were built, which picks the fold
+    * that applies them: a DATA block deduplicated on the driver,
+    * templates over a WHERE's solutions, or a distributed source. */
+  private[graphquery] sealed trait Built
+  private[graphquery] case object DriverBuilt extends Built
+  private[graphquery] case object Instantiated extends Built
+  private[graphquery] case object Distributed extends Built
+
+  /** One statement's effect on a quad store: `touched` quads flagged
+    * `_add`, the graphs it clears (`covers`), and how `touched` was
+    * built. Only COPY and MOVE carry both: their adds land in a graph
+    * the same statement covers. */
+  private[graphquery] final case class StatementDelta(
+      touched: DataFrame, covers: Seq[GraphTarget], built: Built)
+
+  private[graphquery] def covered(t: GraphTarget): Column = t match {
+    case OneGraph(i) => col("g") <=> lit(i)
+    case DefaultGraph => col("g").isNull
+    case AllNamed => col("g").isNotNull
+    case AllGraphs => lit(true)
+  }
+
+  /** The one interpretation of an [[UpdateOp]], shared by [[update]]
+    * and [[DeltaStore]]: the statement's delta, or None for a provable
+    * no-op (CREATE, a same-graph transfer, a SILENT transfer from an
+    * absent graph). Every §3.2 existence probe and its error is here.
+    * `cur`, the store before the statement, is evaluated at most once,
+    * and only by the forms that match against it: DATA and LOAD never
+    * build it. */
+  private[graphquery] def statementDelta(spark: org.apache.spark.sql.SparkSession,
+                                         cur: => DataFrame,
+                                         op: UpdateOp): Option[StatementDelta] = {
+    def side(r: Option[String]): GraphTarget =
+      r.map(OneGraph(_)).getOrElse(DefaultGraph)
+    op match {
+      case InsertData(quads) => Some(StatementDelta(
+        touched(groundQuads(spark, quads), add = true), Nil, DriverBuilt))
+      case DeleteData(quads) => Some(StatementDelta(
+        touched(groundQuads(spark, quads), add = false), Nil, DriverBuilt))
+      case DeleteWhere(pats) => Some(StatementDelta(
+        templateQuads(whereSolutions(cur, pats), Seq(pats -> false)),
+        Nil, Instantiated))
+      case Modify(del, ins, where, u, un, wg) =>
+        // §3.1.3: BOTH templates instantiate against the PRE-update
+        // store's solutions, compiled once; USING/USING NAMED scope only
+        // the WHERE's dataset.
+        Some(StatementDelta(templateQuads(whereSolutions(cur, where, u, un, wg),
+          Seq(del -> false, ins -> true), wg), Nil, Instantiated))
+      case Load(doc, into, _) => Some(StatementDelta(
+        touched(loadQuads(spark, doc, into), add = true), Nil, Distributed))
+      case Clear(target, silent, drop) =>
+        // §3.2.2/§3.2.4: CLEAR/DROP of an absent named graph is an
+        // error unless SILENT. One limit-1 existence probe.
+        target match {
+          case OneGraph(i) if !silent =>
+            require(!cur.filter(covered(target)).isEmpty,
+              s"${if (drop) "DROP" else "CLEAR"} GRAPH: no graph <$i> in store")
+          case _ => ()
+        }
+        Some(StatementDelta(touched(emptyQuads(spark), add = false),
+          Seq(target), DriverBuilt))
+      case Create(g, silent) =>
+        // Graphs exist implicitly in a quad table; CREATE only enforces
+        // the §3.2.3 already-exists error (non-silent).
+        if (!silent)
+          require(cur.filter(covered(OneGraph(g))).isEmpty,
+            s"CREATE GRAPH: graph <$g> already exists")
+        None
+      case GraphXfer(_, src, dst, _) if src == dst =>
+        None // §3.2.5-7: same-graph transfer is a no-op
+      case GraphXfer(kind, src, dst, silent) =>
+        val srcRows = cur.filter(covered(side(src)))
+        // An absent named SOURCE graph fails the operation: loudly by
+        // default, as a WHOLE-OP no-op under SILENT — proceeding with
+        // an empty source would still clear the destination (COPY/
+        // MOVE), which is exactly what SILENT must not do. The default
+        // graph always exists (possibly empty), so src=None skips the
+        // probe.
+        if (src.isDefined && srcRows.isEmpty) {
+          if (silent) None
+          else sys.error(s"$kind: no graph <${src.get}> in store")
+        } else {
+          val relabeled = touched(srcRows.withColumn("g",
+            dst.map(i => lit(i).cast("string"))
+              .getOrElse(lit(null).cast("string"))), add = true)
+          val covers = kind match {
+            case "ADD" => Nil
+            case "COPY" => Seq(side(dst))
+            case "MOVE" => Seq(side(dst), side(src))
+            case other => sys.error(s"unknown transfer $other")
+          }
+          Some(StatementDelta(relabeled, covers, Distributed))
+        }
+    }
+  }
+
   /** Minimal SPARQL UPDATE (SPARQL 1.1 Update §3.1) against a parquet
     * QUAD STORE in [[Bgp.dataset]]'s layout (g null = default graph)
     * — the mutation surface the read-side quad inputs invite:
@@ -1911,8 +2007,10 @@ object Sparql {
     *    statement, missing graph) into success-with-no-change; the
     *    atomic-swap commit guarantees "no change" exactly.
     *
-    * Every add/delete form (the three above, LOAD and ADD) is one law
-    * over the statement's quads `dels` and `adds`:
+    * Each statement is interpreted once, by [[statementDelta]], the
+    * interpretation [[DeltaStore]] writes as a delta. A delta without
+    * graph covers (the three forms above, LOAD and ADD) is one law over
+    * the statement's quads `dels` and `adds`:
     * `next = (cur ⋉̸ (dels ∪ adds)) ∪ distinct(adds)` — set semantics,
     * deletes before inserts (a quad in both survives), and the law
     * [[DeltaStore]] folds a statement's delta with ([[fold]]). The
@@ -1923,7 +2021,9 @@ object Sparql {
     * to the driver deduplicated ([[foldInstantiated]]), and the store is
     * scanned once more as the probe side of the anti-join. DATA blocks
     * are driver-built; LOAD's document and ADD's source graph never pass
-    * through the driver. CLEAR/DROP, COPY and MOVE are graph filters.
+    * through the driver. A delta with covers (CLEAR/DROP, COPY, MOVE)
+    * is a graph filter plus its adds: `cur.filter(!covered) ∪ adds`,
+    * with no anti-join, as those adds land only in covered graphs.
     *
     * `;`-separated operations apply sequentially, each seeing its
     * predecessor's effect, and the REQUEST commits once through
@@ -1938,7 +2038,7 @@ object Sparql {
     * `partitionBy = Seq("g")` keeps a graph-partitioned layout (and
     * GRAPH scoping partition-prunable) across updates.
     *
-    * Scale note (deliberate, documented): each operation rewrites the
+    * Scale note (deliberate, documented): each request rewrites the
     * store — the atomic-swap contract — so this is the
     * ADMINISTRATIVE update path (codelist loads, takedowns, catalog
     * patches), not a high-frequency write path; the write-heavy twin
@@ -1959,35 +2059,36 @@ object Sparql {
     // updates on one store are NOT supported (single-writer, the same
     // contract every overwriteAtomic-maintained index documents) —
     // two unserialized read-swap cycles would silently lose one delta.
-    val lock = storeLocks.computeIfAbsent(
-      new org.apache.hadoop.fs.Path(storeDir).toString,
-      _ => new java.util.concurrent.locks.ReentrantLock)
-    lock.lock()
     // One store rewrite per REQUEST: the ops chain in memory, each
     // op's result cut EAGERLY at its own boundary so a runtime failure
     // is attributed to the op that caused it (and SILENT makes that op
     // alone a no-op); a loud failure leaves the store at the
     // pre-request state. A single-op request swaps directly.
-    try {
+    withStoreLock(storeDir) {
       var cur = readQuadStore(spark, storeDir)
       var mutated = false
       ops.foreach { op =>
-        try {
-          val next = applyOp(spark, cur, op)
-          // `next eq cur` marks a provable no-op (CREATE, self-ADD):
-          // skip the materialization entirely.
-          if (!(next eq cur)) {
-            val shaped = next.select(QuadCols.map(col): _*)
-            // A single-op request swaps directly (overwriteAtomic is
-            // its materializing action, exactly the pre-batching
-            // shape); sequence ops cut lineage eagerly instead.
-            if (ops.sizeIs == 1)
-              graft.sources.ShardStore.overwriteAtomic(
-                shaped, storeDir, partitionBy)
-            else {
-              cur = graft.Checkpoints.cutEager(shaped)
-              mutated = true
+        try statementDelta(spark, cur, op).foreach { d =>
+          val next =
+            if (d.covers.nonEmpty)
+              cur.filter(!d.covers.map(covered).reduce(_ || _))
+                .unionByName(d.touched.filter(col("_add"))
+                  .select(QuadCols.map(col): _*))
+            else d.built match {
+              case DriverBuilt => fold(cur, d.touched, local = true)
+              case Instantiated => foldInstantiated(cur, d.touched)
+              case Distributed => fold(cur, d.touched, local = false)
             }
+          val shaped = next.select(QuadCols.map(col): _*)
+          // A single-op request swaps directly (overwriteAtomic is
+          // its materializing action, exactly the pre-batching
+          // shape); sequence ops cut lineage eagerly instead.
+          if (ops.sizeIs == 1)
+            graft.sources.ShardStore.overwriteAtomic(
+              shaped, storeDir, partitionBy)
+          else {
+            cur = graft.Checkpoints.cutEager(shaped)
+            mutated = true
           }
         } catch {
           // §3.2: SILENT graph-management ops always succeed — a
@@ -2002,79 +2103,7 @@ object Sparql {
       if (mutated)
         graft.sources.ShardStore.overwriteAtomic(
           cur.select(QuadCols.map(col): _*), storeDir, partitionBy)
-    } finally lock.unlock()
-  }
-
-  /** One update operation's resulting store (administrative path —
-    * the caller rewrites the store with the result). Returns `cur` BY
-    * REFERENCE (eq) for provable no-ops so the caller can skip the
-    * rewrite. Every add/delete form is one [[fold]] of its touched
-    * quads. */
-  private def applyOp(spark: org.apache.spark.sql.SparkSession,
-                      cur: DataFrame, op: UpdateOp): DataFrame = op match {
-    case InsertData(quads) =>
-      fold(cur, touched(groundQuads(spark, quads), add = true), local = true)
-    case DeleteData(quads) =>
-      fold(cur, touched(groundQuads(spark, quads), add = false), local = true)
-    case DeleteWhere(pats) =>
-      foldInstantiated(cur,
-        templateQuads(whereSolutions(cur, pats), Seq(pats -> false)))
-    case Modify(del, ins, where, u, un, wg) =>
-      // §3.1.3: BOTH templates instantiate against the PRE-update
-      // store's solutions, compiled once; USING/USING NAMED scope only
-      // the WHERE's dataset.
-      foldInstantiated(cur, templateQuads(whereSolutions(cur, where, u, un, wg),
-        Seq(del -> false, ins -> true), wg))
-    case Load(doc, into, _) =>
-      fold(cur, touched(loadQuads(spark, doc, into), add = true), local = false)
-    case Clear(target, silent, drop) =>
-      target match {
-        case OneGraph(i) =>
-          // §3.2.2/§3.2.4: CLEAR/DROP of an absent named graph is an
-          // error unless SILENT. One limit-1 existence probe.
-          if (!silent)
-            require(!cur.filter(col("g") <=> lit(i)).isEmpty,
-              s"${if (drop) "DROP" else "CLEAR"} GRAPH: no graph <$i> in store")
-          cur.filter(!(col("g") <=> lit(i)))
-        case DefaultGraph => cur.filter(col("g").isNotNull)
-        case AllNamed => cur.filter(col("g").isNull)
-        case AllGraphs => cur.limit(0)
-      }
-    case Create(g, silent) =>
-      // Graphs exist implicitly in a quad table; CREATE only enforces
-      // the §3.2.3 already-exists error (non-silent).
-      if (!silent)
-        require(cur.filter(col("g") <=> lit(g)).isEmpty,
-          s"CREATE GRAPH: graph <$g> already exists")
-      cur
-    case GraphXfer(kind, src, dst, silent) =>
-      if (src == dst) cur // §3.2.5-7: same-graph transfer is a no-op
-      else {
-        def inSide(r: Option[String]): Column =
-          r.map(i => col("g") <=> lit(i)).getOrElse(col("g").isNull)
-        val srcRows = cur.filter(inSide(src))
-        // An absent named SOURCE graph fails the operation: loudly by
-        // default, as a WHOLE-OP no-op under SILENT — proceeding with
-        // an empty source would still clear the destination (COPY/
-        // MOVE), which is exactly what SILENT must not do. The default
-        // graph always exists (possibly empty), so src=None skips the
-        // probe.
-        if (src.isDefined && srcRows.isEmpty) {
-          if (silent) cur
-          else sys.error(s"$kind: no graph <${src.get}> in store")
-        } else {
-          val relabeled = srcRows.withColumn("g",
-            dst.map(i => lit(i).cast("string"))
-              .getOrElse(lit(null).cast("string")))
-          kind match {
-            case "ADD" => fold(cur, touched(relabeled, add = true), local = false)
-            case "COPY" => cur.filter(!inSide(dst)).unionByName(relabeled)
-            case "MOVE" =>
-              cur.filter(!inSide(dst) && !inSide(src)).unionByName(relabeled)
-            case other => sys.error(s"unknown transfer $other")
-          }
-        }
-      }
+    }
   }
 
   /** The update law of [[update]]: the store minus every touched quad,
@@ -2118,7 +2147,7 @@ object Sparql {
   }
 
   /** `quads` in canonical column order, flagged as adds or deletes. */
-  private[graphquery] def touched(quads: DataFrame, add: Boolean): DataFrame =
+  private def touched(quads: DataFrame, add: Boolean): DataFrame =
     quads.select(QuadCols.map(col) :+ lit(add).as("_add"): _*)
 
   /** LOAD's document scan: a `file:` IRI maps to its filesystem path;
@@ -2127,7 +2156,7 @@ object Sparql {
     * the parse. `INTO GRAPH <g>` rehomes EVERY loaded statement into
     * the destination graph (the document is loaded "into that graph",
     * §3.2.1 — quad labels in an N-Quads document are overridden). */
-  private[graphquery] def loadQuads(spark: org.apache.spark.sql.SparkSession,
+  private def loadQuads(spark: org.apache.spark.sql.SparkSession,
                         doc: String, into: Option[String]): DataFrame = {
     val path =
       if (doc.startsWith("file:")) new java.net.URI(doc).getPath
@@ -2147,8 +2176,18 @@ object Sparql {
     homed.select(QuadCols.map(col): _*)
   }
 
-  private[graphquery] val storeLocks = new java.util.concurrent.ConcurrentHashMap[
+  private val storeLocks = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.locks.ReentrantLock]()
+
+  /** Runs `body` holding the store's same-JVM writer lock: both update
+    * paths and [[DeltaStore.compact]] serialize on it. */
+  private[graphquery] def withStoreLock[T](dir: String)(body: => T): T = {
+    val lock = storeLocks.computeIfAbsent(
+      new org.apache.hadoop.fs.Path(dir).toString,
+      _ => new java.util.concurrent.locks.ReentrantLock)
+    lock.lock()
+    try body finally lock.unlock()
+  }
 
   /** The store as a canonical quad DataFrame; an absent store is the
     * empty dataset (INSERT DATA bootstraps it). Routes through
@@ -2157,9 +2196,11 @@ object Sparql {
   private[graft] def readQuadStore(spark: org.apache.spark.sql.SparkSession,
                                    dir: String): DataFrame =
     if (graft.sources.ShardStore.existsRecovered(spark, dir)) readQuads(spark, dir)
-    else spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      quadSchema)
+    else emptyQuads(spark)
+
+  private[graphquery] def emptyQuads(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), quadSchema)
 
   /** Quad parquet files (a flat or `g`-partitioned store, a delta
     * base) read with [[quadSchema]], the one schema every store is
@@ -2181,7 +2222,7 @@ object Sparql {
   /** A DATA block's ground quads as a DataFrame (driver-built — the
     * block is literal update text, bounded by the statement size),
     * deduplicated on the driver. */
-  private[graphquery] def groundQuads(spark: org.apache.spark.sql.SparkSession,
+  private def groundQuads(spark: org.apache.spark.sql.SparkSession,
                           pats: Seq[Pattern]): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(groundRows(pats).distinct.asJava, quadSchema)
@@ -2250,10 +2291,10 @@ object Sparql {
     * default/named split — except under WITH, whose graph substitutes
     * for the default graph on the WHERE side (a USING clause overrides
     * WITH for the WHERE, per §3.1.3). */
-  private[graphquery] def whereSolutions(store: DataFrame, where: Seq[Pattern],
-                               using: Seq[String] = Nil,
-                               usingNamed: Seq[String] = Nil,
-                               withGraph: Option[String] = None): DataFrame = {
+  private def whereSolutions(store: DataFrame, where: Seq[Pattern],
+                             using: Seq[String] = Nil,
+                             usingNamed: Seq[String] = Nil,
+                             withGraph: Option[String] = None): DataFrame = {
     val (scoped, namedView) = scope(using, usingNamed, store)
     val dfltView = withGraph match {
       case Some(wg) if using.isEmpty && usingNamed.isEmpty =>
@@ -2268,9 +2309,9 @@ object Sparql {
     * GRAPH ?g = the binding) and an `_add` flag per template. All
     * template quads are structs of ONE projection of `sol`, exploded,
     * so the WHERE runs once; quads with an unbound s, p or o drop. */
-  private[graphquery] def templateQuads(sol: DataFrame,
-                               templates: Seq[(Seq[Pattern], Boolean)],
-                               withGraph: Option[String] = None): DataFrame = {
+  private def templateQuads(sol: DataFrame,
+                            templates: Seq[(Seq[Pattern], Boolean)],
+                            withGraph: Option[String] = None): DataFrame = {
     val cols = sol.columns.toSet
     val nullStr = lit(null).cast("string")
     def bound(x: String, pos: String): Column = {

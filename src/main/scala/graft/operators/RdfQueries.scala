@@ -1102,7 +1102,7 @@ object RdfQueries {
     // default-graph copy made by ADD survives, proving ADD copies
     // rather than aliases. Final state renders through the q239
     // N-Quads path; the oracle replays the whole sequence as set
-    // algebra (notes under NULL g, cust untouched, geo relabeled).
+    // algebra.
     "q246_sparql_graph_mgmt" -> { (s, dir) =>
       val root = new org.apache.hadoop.fs.Path(
         s"/tmp/graft_q246_${math.abs(dir.hashCode)}")
@@ -1136,9 +1136,9 @@ object RdfQueries {
     // graph, @lang + ^^typed literals), DELETE DATA (one ground quad),
     // and DELETE WHERE (the pattern is its own template — a two-step
     // within-GRAPH join erasing every triple of nation-7 customers).
-    // Each op commits through the overwriteAtomic swap (one complete
-    // copy on disk at every instant); the final store renders through
-    // the proven q239 N-Quads path. Oracle: DuckDB replays the three
+    // The request commits once through the overwriteAtomic swap (one
+    // complete copy on disk at every instant); the final store renders
+    // through the proven q239 N-Quads path. Oracle: DuckDB replays the three
     // ops as set algebra over the same derived graphs.
     "q242_sparql_update" -> { (s, dir) =>
       val root = new org.apache.hadoop.fs.Path(

@@ -182,21 +182,52 @@ class DeltaStoreSpec extends SparkSpec {
 
   test("SILENT ops no-op without poisoning the delta sequence; loud " +
     "ops fail without committing a delta") {
-    val (_, delta, root) = bothPaths(Seq(script1))
+    val (admin, delta, root) = bothPaths(Seq(script1))
     val served = rows(DeltaStore.serve(spark, delta))
     def nDeltas = new java.io.File(s"$delta/delta").listFiles()
       .count(_.getName.startsWith("delta_id="))
+    // The administrative store's files: a request that rewrote the
+    // store would leave new part-file names here.
+    def adminFiles = new java.io.File(admin).list().toSet
     val n0 = nDeltas
-    DeltaStore.update(spark, delta,
-      "LOAD SILENT <file:/nonexistent/doc.nq> ; " +
-        "COPY SILENT GRAPH <urn:d/9> TO DEFAULT ; " +
-        "CREATE SILENT GRAPH <urn:d/1>")
-    assert(rows(DeltaStore.serve(spark, delta)) == served)
-    assert(nDeltas == n0, "silent no-ops committed deltas")
-    intercept[Exception] {
-      DeltaStore.update(spark, delta, "CLEAR GRAPH <urn:d/9>")
+    val files0 = adminFiles
+    def unchanged(u: String): Unit = {
+      assert(rows(DeltaStore.serve(spark, delta)) == served, u)
+      assert(rows(spark.read.parquet(admin)) == served, u)
     }
-    assert(nDeltas == n0, "failed op committed a delta")
+    val silent =
+      "LOAD SILENT <file:/nonexistent/doc.nq> ; " +
+        "ADD SILENT GRAPH <urn:d/9> TO DEFAULT ; " +
+        "COPY SILENT GRAPH <urn:d/9> TO DEFAULT ; " +
+        "MOVE SILENT GRAPH <urn:d/9> TO GRAPH <urn:d/1> ; " +
+        "CREATE SILENT GRAPH <urn:d/1>"
+    Sparql.update(spark, admin, silent)
+    DeltaStore.update(spark, delta, silent)
+    unchanged(silent)
+    assert(nDeltas == n0, "silent no-ops committed deltas")
+    assert(adminFiles == files0, "silent no-ops rewrote the store")
+    // A SILENT DROP of an absent graph changes no contents on either
+    // path (the delta path records its O(1) graph cover).
+    Sparql.update(spark, admin, "DROP SILENT GRAPH <urn:d/9>")
+    DeltaStore.update(spark, delta, "DROP SILENT GRAPH <urn:d/9>")
+    unchanged("DROP SILENT GRAPH <urn:d/9>")
+    val n1 = nDeltas
+    val files1 = adminFiles
+    // Each loud form fails with the same message on both paths, and
+    // neither store changes.
+    Seq("CLEAR GRAPH <urn:d/9>",
+      "DROP GRAPH <urn:d/9>",
+      "CREATE GRAPH <urn:d/1>",
+      "ADD GRAPH <urn:d/9> TO DEFAULT",
+      "COPY GRAPH <urn:d/9> TO DEFAULT",
+      "MOVE GRAPH <urn:d/9> TO GRAPH <urn:d/1>").foreach { u =>
+      val adminError = intercept[Exception](Sparql.update(spark, admin, u))
+      val deltaError = intercept[Exception](DeltaStore.update(spark, delta, u))
+      assert(adminError.getMessage == deltaError.getMessage, u)
+      unchanged(u)
+      assert(nDeltas == n1, s"failed op committed a delta: $u")
+      assert(adminFiles == files1, s"failed op rewrote the store: $u")
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 

@@ -7,11 +7,13 @@
 #   SF=/root/testdata/sf0.001 bash tools/handoff.sh   # faster smoke
 #
 # Stages:
-#   0. single read path    — fails when src/main reads parquet with a
-#                            bare `.read.parquet(` outside Tables.scala
+#   0. single read path    — fails when src/main reads parquet through
+#                            a `.read` chain with no `.schema(`, on one
+#                            line or across several, outside Tables.scala
 #                            and the probe mains: every other read goes
-#                            through `Tables.parquet`, which starts no
-#                            schema-inference job (seconds).
+#                            through `Tables.parquet` or passes a fixed
+#                            schema, so none starts a schema-inference
+#                            job (seconds).
 #   1. sbt test            — all suites, incl. the Maintenance.runAll
 #                            janitor pass over a mixed five-store tree
 #                            (MediaStreamSpec) and the store-lifecycle
@@ -33,11 +35,29 @@ cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.01}
 
 echo "== 0/6 single parquet read path (Tables.parquet)"
-if grep -rn --include='*.scala' '\.read\.parquet(' src/main \
-    | grep -v -e '^src/main/scala/graft/Tables\.scala:' \
-      -e '^src/main/scala/graft/\(Scale\|Index\|Candidate\)Probe\.scala:'
-then
-  echo "src/main reads parquet outside Tables.parquet (lines above)"
+# A `.read` chain (over any number of lines and `.option(…)` calls) that
+# reaches `.parquet(` without a `.schema(…)` starts a schema-inference
+# job; prints each one as file:line.
+if python3 - <<'PY'
+import glob, re, sys
+call = r"\s*\.\s*\w+\s*\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)"
+chain = re.compile(r"\.read(?!\w)((?:" + call + r")*?)\s*\.\s*parquet\s*\(")
+exempt = re.compile(r"src/main/scala/graft/(Tables|ScaleProbe|IndexProbe|CandidateProbe)\.scala$")
+hits = 0
+for f in sorted(glob.glob("src/main/**/*.scala", recursive=True)):
+    if exempt.search(f):
+        continue
+    text = open(f, encoding="utf-8").read()
+    for m in chain.finditer(text):
+        if not re.search(r"\.\s*schema\s*\(", m.group(1)):
+            line = text.count("\n", 0, m.start()) + 1
+            print(f"{f}:{line}: {text.splitlines()[line - 1].strip()}")
+            hits += 1
+sys.exit(1 if hits else 0)
+PY
+then :
+else
+  echo "src/main reads parquet without a schema outside Tables.parquet (lines above)"
   exit 1
 fi
 
